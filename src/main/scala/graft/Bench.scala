@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line with per-query wall times at the
   * env-selected scale factor.
@@ -38,20 +37,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val initParts = Tables.scaledInitialPartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initParts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    val spark = Session.local(Some(sfDir))
+    val initParts =
+      spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum").toInt
+    import Session.noop
     // Warm the JVM/codegen/string kernels and EVERY input table. Each
     // table warms inside its own try/catch: a broken loader must degrade
     // that table's queries to `errors` entries in the artifact, not kill

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dev tool: deterministic same-shaped testdata generator for scale
@@ -44,14 +44,7 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val sf = if (args.length > 1) args(1).toDouble else 1.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     import spark.implicits._
 
     val nCust = (150000 * sf).toLong

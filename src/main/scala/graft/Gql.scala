@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** GQL script runner — the CLI twin of the reference's regress harness
   * (/root/reference/test/regress.cpp:110-213): execute every statement in a
   * .gql file in order, print `[i]: <status>` per statement and result rows
@@ -12,14 +10,7 @@ object Gql {
     val script = java.nio.file.Files.readString(java.nio.file.Paths.get(args(0)))
     val root = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("gql-catalog").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val engine = new gql.GqlEngine(spark, root)
     engine.exec(script).zipWithIndex.foreach { case (r, i) =>

@@ -289,16 +289,8 @@ object ScaleProbe {
     // one family without re-timing all 44)
     val probes = if (args.length > 2) PROBES.filter(args(2).split(",").toSet)
                  else PROBES
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    val spark = Session.local(Some(sfDir))
+    import Session.noop
     noop(spark.range(1000).selectExpr("sum(id)").toDF())
 
     // cache key includes the SOURCE dir: a probe against a different SF
@@ -310,9 +302,9 @@ object ScaleProbe {
       if (!Files.exists(Paths.get(dir, "_built"))) build(spark, sfDir, m, dir)
       // SF-scaled AQE fan-out, re-pointed at THIS multiple's replica dir
       // (runtime SQLConf — the probe's whole point is partition posture
-      // that tracks input size; see Tables.scaledInitialPartitions)
+      // that tracks input size; see Session.scaledInitialPartitions)
       spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Tables.scaledInitialPartitions(dir, cpus.toInt).toString)
+        Session.scaledInitialPartitions(dir, Session.defaultCpus).toString)
       // warm every table through the noop sink (parquet footers + codegen)
       Seq("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "documents", "embeddings")
@@ -419,16 +411,8 @@ object PairScaleProbe {
                 else Seq(1, 16, 64)
     val probes = if (args.length > 2) PROBES.filter(args(2).split(",").toSet)
                  else PROBES
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    val spark = Session.local(Some(sfDir))
+    import Session.noop
     noop(spark.range(1000).selectExpr("sum(id)").toDF())
 
     val srcTag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
@@ -436,7 +420,7 @@ object PairScaleProbe {
       val dir = s"/tmp/graft_pair_v1_${srcTag}_$m"
       if (!Files.exists(Paths.get(dir, "_built"))) build(spark, sfDir, m, dir)
       spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Tables.scaledInitialPartitions(dir, cpus.toInt).toString)
+        Session.scaledInitialPartitions(dir, Session.defaultCpus).toString)
       Seq("customer", "documents", "embeddings", "nation")
         .foreach(t => noop(spark.read.parquet(s"$dir/$t.parquet")))
       val times = probes.map { name =>

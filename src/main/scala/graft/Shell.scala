@@ -2,7 +2,7 @@ package graft
 
 import java.io.PrintWriter
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Interactive GQL shell — tooling parity with the reference's line-editing
   * REPL (/root/reference/tool/gqlcmd.cpp: linenoise prompt, `.gql_history`
@@ -118,14 +118,7 @@ object Shell {
   def main(args: Array[String]): Unit = {
     val root = if (args.nonEmpty) args(0)
       else java.nio.file.Files.createTempDirectory("gql-catalog").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val engine = new gql.GqlEngine(spark, root)
     val out = new PrintWriter(System.out, true)

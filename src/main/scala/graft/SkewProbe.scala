@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew probe (dev tool, sibling of [[ScaleProbe]]): measure what salting
@@ -49,20 +49,12 @@ object SkewProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val mults = if (args.length > 1) args(1).split(",").map(_.toInt).toSeq
                 else Seq(1, 16, 64)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE's skew mitigation would partially rescue the unsalted run;
-      // disable it so the probe isolates what SALTING buys (PERF.md notes
-      // AQE skew-join as the complementary runtime net)
-      .config("spark.sql.adaptive.skewJoin.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    val spark = Session.local(Some(sfDir))
+    // AQE's skew mitigation would partially rescue the unsalted run;
+    // disable it so the probe isolates what SALTING buys (PERF.md notes
+    // AQE skew-join as the complementary runtime net)
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+    import Session.noop
     noop(spark.range(1000).selectExpr("sum(id)").toDF())
 
     val srcTag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
@@ -106,9 +98,8 @@ object SkewProbe {
         val t0 = System.nanoTime()
         noop(df)
         val wall = (System.nanoTime() - t0) / 1e9
-        // listener events are posted async (the bus-drain API is
-        // private[spark]); a short settle covers the post latency
-        Thread.sleep(1000)
+        // listener events are posted async: drain before reading
+        org.apache.spark.sql.graftbridge.ListenerBusBridge.drain(spark.sparkContext)
         val (mx, med) = stats.snapshot()
         (wall, mx, med)
       }

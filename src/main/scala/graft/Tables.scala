@@ -77,39 +77,4 @@ object Tables {
     if (withVec.schema("vec_id").dataType == LongType) withVec
     else withVec.withColumn("vec_id", col("vec_id").cast(LongType))
   }
-
-  /** AQE initial shuffle-partition count scaled with the SF dir's on-disk
-    * bytes. The fixed dev `shuffle.partitions = 32` was the one superlinear
-    * curve in the sf10 cold sweep (q_suffix_dup 12.1× for 10× data,
-    * PERF.md): an 83 M-gram shuffle over 32 reducers pays n·log n sort +
-    * spill per reducer as SF grows. On a real cluster partitions scale with
-    * input; this mirrors that by feeding
-    * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` — AQE then
-    * coalesces SMALL shuffles back down (parallelismFirst keeps the
-    * default-parallelism floor), so only the genuinely large exchanges fan
-    * out. ~32 MB of INPUT bytes per initial partition (shuffle volume
-    * runs 3–10× input for the gram/wedge families after the digest-key
-    * discipline, so this bounds reducers near the 100–300 MB cluster rule
-    * of thumb); floor = cpus (dev dirs keep today's exact plans and gate
-    * hashes), cap = 4096 (task-launch sanity). Measured at sf10
-    * (q_suffix_dup cold, same host, post-digest): 32 parts 54 s /
-    * 64 parts 69 s / 128 parts 103 s / 215 parts 74 s — local[32] pays
-    * scheduling overhead for extra reducers because one shared heap has
-    * no per-executor memory wall, so the target is set for the CLUSTER
-    * memory bound (5.6 GB gram shuffle at sf10 over 32 reducers is
-    * 175 MB each — fine; at sf100 it would be 1.75 GB each — OOM), not
-    * for local wall-clock. */
-  def scaledInitialPartitions(sfDir: String, cpus: Int): Int = {
-    import java.nio.file.{Files, Paths}
-    // dev A/B knob: pin the initial count regardless of input bytes
-    sys.env.get("SPARK_GRAFT_INIT_PARTS").foreach(v => return v.toInt)
-    val bytes =
-      try {
-        val s = Files.walk(Paths.get(sfDir))
-        try s.filter(p => Files.isRegularFile(p)).mapToLong(p => Files.size(p)).sum
-        finally s.close()
-      } catch { case _: Throwable => 0L }
-    val perPart = 32L << 20
-    math.min(4096L, math.max(cpus.toLong, (bytes + perPart - 1) / perPart)).toInt
-  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,20 +9,7 @@ object Verify {
     // the driver always runs the full set
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // SF-scaled AQE fan-out (PERF.md: q_suffix_dup's sf10 curve) —
-      // floor = cpus, so dev-SF dirs keep today's exact partitioning and
-      // gate hashes; only large dirs (sf1+) raise the initial count.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Tables.scaledInitialPartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Some(sfDir))
     new java.io.File(outDir).mkdirs()
     // q_mst's DuckDB oracle unrolls MST_ROUNDS Borůvka rounds (each with
     // MST_DOUBLE pointer doublings) — exact only while the co-purchase

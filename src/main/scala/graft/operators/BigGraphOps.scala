@@ -604,7 +604,7 @@ object BigGraphOps {
     * color) → remove confirmed SCCs; vertices left when the edge set
     * drains are singletons. Built to ANSWER the r10 verdict's "evaluate
     * retiring the GraphX RDD path for q_scc_big" — a measured comparison,
-    * not a guess (SccCompare + PERF.md row, SccDfSpec parity vs the gate).
+    * not a guess (PERF.md r11 row, SccDfSpec parity vs the gate).
     * Every inner fixpoint is count-probed on localCheckpoint'ed frames
     * (the iterative-loop rule); supersteps are node-keyed joins like
     * every DF graph gate here, so the comparison isolates exactly the

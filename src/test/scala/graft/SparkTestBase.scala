@@ -4,18 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   val sfDir = "/root/testdata/sf0.001"
+
+  lazy val spark: SparkSession = Session.local(Some(sfDir), cpus = 4)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.graph.GraphXBridge
 import graft.operators.BigGraphOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -45,5 +46,16 @@ class WccSpec extends AnyFunSuite {
     assert(byScc.forall(m => m.keys.map(wcc).toSet.size == 1))
     // weak components are at least as coarse
     assert(wcc.values.toSet.size <= scc.values.toSet.size)
+  }
+
+  test("GraphX connectedComponents equals ccTwoPhase on the co-purchase edges") {
+    val edges = BigGraphOps.sccEdges(spark, sfDir)
+    val gx = spark.createDataFrame(
+      GraphXBridge.fromLongEdgeDF(edges).connectedComponents().vertices)
+      .toDF("node", "wcc")
+    val df = BigGraphOps.ccTwoPhase(edges)
+    assert(df.count() > 0)
+    assert(gx.except(df).count() == 0, "rows only GraphX emits")
+    assert(df.except(gx).count() == 0, "rows only the two-phase CC emits")
   }
 }

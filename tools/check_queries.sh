@@ -2,11 +2,14 @@
 # Dev loop: verify + oracle-compare a SUBSET of queries at one SF.
 # Usage: tools/check_queries.sh <sfDir> <q1,q2,...>
 # Runs graft.Verify with the name filter, prunes oracle_sql.json to the
-# subset (compare.py iterates the json), then compare.py.
+# subset (compare.py iterates the json), then compare.py. The sbt log stays
+# in the temp dir; on failure its tail is printed.
 set -e
 SF="$1"; QS="$2"
 OUT=$(mktemp -d)
-sbt "runMain graft.Verify $SF $OUT $QS" >/dev/null 2>&1 || { echo "verify failed"; exit 1; }
+LOG="$OUT/verify.log"
+sbt "runMain graft.Verify $SF $OUT $QS" >"$LOG" 2>&1 || {
+  echo "verify failed (log: $LOG):"; tail -40 "$LOG"; exit 1; }
 python3 - "$OUT" "$QS" <<'EOF'
 import json, sys
 out, qs = sys.argv[1], set(sys.argv[2].split(","))
