@@ -90,12 +90,12 @@ object Bench {
     // costs (persisted stages built by whoever runs first, codegen JIT)
     // to different queries every round — per-query COLD times swung
     // 3–10× round-over-round (q_kcore_big 4.2↔20.6 s) with flat warm
-    // times. Alphabetical order pins the attribution: the first query
+    // times. SparkEntry.gates' name order pins the attribution: the first query
     // (by name) touching a shared persisted stage pays its build in the
     // cold column, and that assignment is stable across rounds. The cold
     // column therefore remains ORDER-DEPENDENT by design (a shared
     // stage's cost appears once, not per consumer) — see PERF.md.
-    val queryList = SparkEntry.queries.toSeq.sortBy(_._1)
+    val queryList = SparkEntry.gates.map(g => g.name -> g.run)
     var errorMsgs = Map.empty[String, String]
     // passTimes(p) = per-query seconds for pass p (-1 = threw this pass)
     val passTimes: Seq[Seq[(String, Double)]] = (1 to passes).map { pass =>

@@ -19,7 +19,7 @@ import org.apache.spark.sql.graftbridge.ListenerBusBridge
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq
+    val gates = if (args.length > 1) args.tail.toSeq.map(SparkEntry.gate) else SparkEntry.gates
     val spark = Session.local(Some(sfDir))
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -34,7 +34,7 @@ object Explain {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         if (te.taskInfo != null) taskMs.addAndGet(te.taskInfo.duration)
     })
-    names.foreach { n =>
+    gates.foreach { case operators.Gate(n, run, _) =>
       // time construction separately: statement-style entries (the GQL
       // mutation gates) do their writes eagerly while BUILDING the frame,
       // so exec-only timing would hide their real cost
@@ -42,7 +42,7 @@ object Explain {
         ListenerBusBridge.drain(spark.sparkContext)
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
         val tb = System.nanoTime()
-        val df = SparkEntry.queries(n)(spark, sfDir)
+        val df = run(spark, sfDir)
         val t0 = System.nanoTime()
         Session.noop(df)
         val t1 = System.nanoTime()

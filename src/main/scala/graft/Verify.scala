@@ -1,14 +1,17 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry gate's result → parquet, plus
+  * oracle_sql.json for the dumped gates, for the DuckDB oracle compare
+  * (`tools/compare.py`). Gates run in name order. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: comma-separated query names (dev iteration);
-    // the driver always runs the full set
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // optional third arg: comma-separated gate names (dev iteration);
+    // without it every gate runs. An unknown name fails here, before a
+    // session opens.
+    val gates =
+      if (args.length > 2) args(2).split(",").toSeq.distinct.map(SparkEntry.gate).sortBy(_.name)
+      else SparkEntry.gates
     val spark = Session.local(Some(sfDir))
     new java.io.File(outDir).mkdirs()
     // q_mst's DuckDB oracle unrolls MST_ROUNDS Borůvka rounds (each with
@@ -40,9 +43,7 @@ object Verify {
     // next use; values cannot change — persist is execution-transparent).
     val CLEAR_EVERY = 32
     var sinceClear = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    gates.foreach { case operators.Gate(name, fn, _) =>
       try {
         if (name == "q_mst") mstOracleBoundCheck()
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -65,8 +66,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = gates.map(g => s"${q(g.name)}: ${q(g.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -76,7 +76,7 @@ object GraftExtensions {
 
   /** TABLE functions — the whole gated pipeline surface (dedup clusters,
     * quality ensemble, BM25 top-k, drift panels, the graph ladder … every
-    * `SparkEntry.queries` report) from pure SQL:
+    * `SparkEntry.gates` report) from pure SQL:
     *
     * {{{
     *   SELECT * FROM graft_queries();                         -- the registry
@@ -101,10 +101,7 @@ object GraftExtensions {
             s"graft_query expects (name, sfDir), got ${args.length} arguments")
         val name = strArg("graft_query", args, 0)
         val dir = strArg("graft_query", args, 1)
-        val q = graft.SparkEntry.queries.getOrElse(name,
-          throw new IllegalArgumentException(
-            s"unknown graft query '$name' — SELECT * FROM graft_queries() lists the registry"))
-        q(SparkSession.active, dir).queryExecution.logical
+        graft.SparkEntry.gate(name).run(SparkSession.active, dir).queryExecution.logical
       }),
     (FunctionIdentifier("graft_queries"),
       new ExpressionInfo("graft.functions.GraftExtensions", null, "graft_queries",
@@ -115,8 +112,8 @@ object GraftExtensions {
           throw new IllegalArgumentException("graft_queries takes no arguments")
         val s = SparkSession.active
         import s.implicits._
-        graft.SparkEntry.queries.keys.toSeq.sorted
-          .map(n => (n, graft.SparkEntry.oracleSql.contains(n)))
+        // every Gate carries its oracle; the column stays for existing callers
+        graft.SparkEntry.gates.map(g => (g.name, true))
           .toDF("name", "has_oracle").queryExecution.logical
       }))
 

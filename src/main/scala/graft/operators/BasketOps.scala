@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Fns
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Market-basket / frequent-itemset analytics over the order⋈part
@@ -21,8 +20,6 @@ import org.apache.spark.sql.functions._
   * relational, scored by the published support/confidence/lift measures.
   */
 object BasketOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Minimum pair support and report size — fixed report-shape knobs
     * (the top-K report is what a production run materializes; the full
     * pair table is the intermediate). */
@@ -73,14 +70,10 @@ object BasketOps {
       .limit(TOPK)
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_itemsets" -> qItemsets,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
     // ground-truth pair generation by self-join (not the array mirror):
     // any correct pair expansion matches
-    "q_itemsets" ->
+    Gate("q_itemsets", qItemsets,
       s"""WITH items AS (
          |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
          |n AS (SELECT count(DISTINCT ok) AS n FROM items),
@@ -96,6 +89,6 @@ object BasketOps {
                "(CAST(i1.cnt AS DOUBLE) * CAST(i2.cnt AS DOUBLE))", 6)} AS lift
          |FROM pc JOIN ic i1 ON i1.pk = p1 JOIN ic i2 ON i2.pk = p2, n
          |WHERE pair_cnt >= $MIN_SUPPORT
-         |ORDER BY pair_cnt DESC, p1, p2 LIMIT $TOPK""".stripMargin,
+         |ORDER BY pair_cnt DESC, p1, p2 LIMIT $TOPK""".stripMargin),
   )
 }

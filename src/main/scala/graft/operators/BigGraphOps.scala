@@ -31,8 +31,6 @@ import org.apache.spark.storage.StorageLevel
   * concerns in the recursive oracle).
   */
 object BigGraphOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** BFS hop bound / Bellman-Ford relaxation rounds / PageRank iterations.
     * Bounded supersteps: the oracle enumerates paths of the same depth. */
   val BFS_HOPS = 6
@@ -1463,33 +1461,6 @@ object BigGraphOps {
     out
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_mst"             -> qMst,
-    "q_hyperanf"        -> qHyperAnf,
-    "q_betweenness_big" -> qBetweennessBig,
-    "q_katz"         -> qKatz,
-    "q_hits"         -> qHits,
-    "q_local_clustering" -> qLocalClustering,
-    "q_diameter"     -> qDiameter,
-    "q_assortativity" -> qAssortativity,
-    "q_link_predict" -> qLinkPredict,
-    "q_bfs_big"      -> qBfsBig,
-    "q_sssp_big"     -> qSsspBig,
-    "q_pagerank_big" -> qPagerankBig,
-    "q_ppr"          -> qPpr,
-    "q_walk_corpus"  -> qWalkCorpus,
-    "q_skipgram_pairs" -> qSkipgramPairs,
-    "q_node2vec"     -> qNode2vec,
-    "q_label_prop"   -> qLabelProp,
-    "q_scc_big"      -> qSccBig,
-    "q_wcc_big"      -> qWccBig,
-    "q_modularity"   -> qModularity,
-    "q_clustering_big" -> qClusteringBig,
-    "q_kcore_big"    -> qKcoreBig,
-    "q_harmonic_big" -> qHarmonicBig,
-    "q_truss"        -> qTruss,
-  )
-
   // ---- DuckDB oracles ------------------------------------------------------
 
   /** Shared CTE chain of the label-propagation oracle (edges, weighted
@@ -1692,19 +1663,19 @@ object BigGraphOps {
        |ORDER BY t""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q_hyperanf" -> sqlHyperAnf,
-    "q_betweenness_big" -> sqlBetweenness,
-    "q_katz" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("q_hyperanf", qHyperAnf, sqlHyperAnf),
+    Gate("q_betweenness_big", qBetweennessBig, sqlBetweenness),
+    Gate("q_katz", qKatz,
       s"""WITH $sqlEdges,
          |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
          |k0 AS (SELECT node, CAST(1 AS HUGEINT) AS score FROM nodes),
          |$sqlKatzRounds
          |SELECT node, CAST(score AS BIGINT) AS katz
-         |FROM k$KATZ_ITERS ORDER BY node""".stripMargin,
+         |FROM k$KATZ_ITERS ORDER BY node""".stripMargin),
     // assortativity: endpoint-degree Pearson over the symmetrized edges,
     // HUGEINT moments, one fixed double tree
-    "q_assortativity" -> {
+    Gate("q_assortativity", qAssortativity, {
       val D = (n: String) => s"CAST($n AS DOUBLE)"
       s"""WITH $sqlEdges,
          |und AS (SELECT src AS a, dst AS b FROM edges
@@ -1724,10 +1695,10 @@ object BigGraphOps {
                s"(${D("n_ends")} * ${D("syy")} - ${D("sy")} * ${D("sy")})), 0.0)", 6)}
          |    AS assortativity
          |FROM m""".stripMargin
-    },
+    }),
     // double sweep: two DS_HOPS-bounded recursive BFS unrolls, min-id
     // tie-breaks on both farthest picks
-    "q_diameter" ->
+    Gate("q_diameter", qDiameter,
       s"""WITH RECURSIVE $sqlEdges,
          |und AS (SELECT src AS a, dst AS b FROM edges
          |  UNION SELECT dst, src FROM edges),
@@ -1748,10 +1719,10 @@ object BigGraphOps {
          |SELECT (SELECT s FROM start) AS start,
          |  f1.n AS far1, CAST(f1.d AS INT) AS ecc1,
          |  f2.n AS far2, CAST(f2.d AS INT) AS diameter_lb
-         |FROM f1, f2""".stripMargin,
+         |FROM f1, f2""".stripMargin),
     // local clustering: definitional triangle join (each triangle once as
     // a<b<c), three-corner credit, integer ratio rounded once
-    "q_local_clustering" ->
+    Gate("q_local_clustering", qLocalClustering,
       s"""WITH $sqlEdges,
          |und AS (SELECT src AS n FROM edges UNION ALL SELECT dst FROM edges),
          |deg AS (SELECT n, count(*) AS deg FROM und GROUP BY 1),
@@ -1772,18 +1743,18 @@ object BigGraphOps {
              "(2.0::DOUBLE * CAST(coalesce(p.tri, 0) AS DOUBLE)) / " +
                "CAST(d.deg * (d.deg - 1) AS DOUBLE)", 6)} AS lcc
          |FROM deg d LEFT JOIN pn p ON p.n = d.n
-         |WHERE d.deg >= 2 ORDER BY node""".stripMargin,
-    "q_hits" ->
+         |WHERE d.deg >= 2 ORDER BY node""".stripMargin),
+    Gate("q_hits", qHits,
       s"""WITH $sqlEdges,
          |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
          |h0 AS (SELECT node, CAST(1 AS HUGEINT) AS h FROM nodes),
          |$sqlHitsRounds
          |SELECT h.node, CAST(h.h AS BIGINT) AS hub, CAST(a.a AS BIGINT) AS auth
          |FROM h$HITS_ITERS h JOIN a$HITS_ITERS a ON a.node = h.node
-         |ORDER BY h.node""".stripMargin,
+         |ORDER BY h.node""".stripMargin),
     // RA link prediction: wedge-joined candidates, existing edges removed,
     // 1/deg weights decimal-summed (IEEE-exact division on both engines)
-    "q_link_predict" ->
+    Gate("q_link_predict", qLinkPredict,
       s"""WITH $sqlEdges,
          |und AS (
          |  SELECT src AS a, dst AS b FROM edges
@@ -1804,19 +1775,19 @@ object BigGraphOps {
          |FROM cand JOIN deg ON deg.node = cand.mid
          |GROUP BY cand.a, cand.c
          |ORDER BY ra_score DESC, cand.a, cand.c
-         |LIMIT $LP_TOPK""".stripMargin,
+         |LIMIT $LP_TOPK""".stripMargin),
     // UNION (not UNION ALL) in the recursive terms: the chain DAG has
     // exponentially many paths, but the deduped (node, hop)/(node, cost,
     // depth) state space is linear in V × depth.
-    "q_bfs_big" ->
+    Gate("q_bfs_big", qBfsBig,
       s"""WITH RECURSIVE $sqlEdges,
          |walk(node, hop) AS (
          |  SELECT s, 0 FROM start
          |  UNION
          |  SELECT e.dst, w.hop + 1 FROM walk w JOIN edges e ON e.src = w.node
          |  WHERE w.hop < $BFS_HOPS)
-         |SELECT node, min(hop) AS hops FROM walk GROUP BY node ORDER BY node""".stripMargin,
-    "q_sssp_big" ->
+         |SELECT node, min(hop) AS hops FROM walk GROUP BY node ORDER BY node""".stripMargin),
+    Gate("q_sssp_big", qSsspBig,
       s"""WITH RECURSIVE $sqlEdges,
          |wedges AS (SELECT src, dst, 1 + (src + dst) % 3 AS w FROM edges),
          |walk(node, cost, depth) AS (
@@ -1825,11 +1796,11 @@ object BigGraphOps {
          |  SELECT e.dst, w.cost + e.w, w.depth + 1
          |  FROM walk w JOIN wedges e ON e.src = w.node
          |  WHERE w.depth < $SSSP_ROUNDS)
-         |SELECT node, min(cost) AS cost FROM walk GROUP BY node ORDER BY node""".stripMargin,
-    "q_label_prop" ->
+         |SELECT node, min(cost) AS cost FROM walk GROUP BY node ORDER BY node""".stripMargin),
+    Gate("q_label_prop", qLabelProp,
       s"""WITH $sqlLabelPropCtes
-         |SELECT node, lbl AS community FROM l$LP_ITERS ORDER BY node""".stripMargin,
-    "q_modularity" ->
+         |SELECT node, lbl AS community FROM l$LP_ITERS ORDER BY node""".stripMargin),
+    Gate("q_modularity", qModularity,
       s"""WITH $sqlLabelPropCtes,
          |comm AS (SELECT node, lbl AS community FROM l$LP_ITERS),
          |deg AS (SELECT a AS node, sum(w) AS deg FROM und GROUP BY 1),
@@ -1850,10 +1821,10 @@ object BigGraphOps {
              "CAST(coalesce(i.in_w, 0) AS DOUBLE) / m.m2 - " +
                "(CAST(t.tot_w AS DOUBLE) / m.m2) * (CAST(t.tot_w AS DOUBLE) / m.m2)", 6)} AS contrib
          |FROM tot t LEFT JOIN inw i ON i.community = t.community, m2t m
-         |ORDER BY t.community""".stripMargin,
+         |ORDER BY t.community""".stripMargin),
     // ground truth, not an algorithm mirror: full reachability closure,
     // mutual pairs, min-id per node — any correct SCC algorithm matches
-    "q_scc_big" ->
+    Gate("q_scc_big", qSccBig,
       """WITH RECURSIVE memb AS (
         |  SELECT DISTINCT date_diff('day', DATE '1992-01-01', o_orderdate) // 7 AS wk,
         |    o_orderpriority AS prio, o_custkey // 100 AS band, o_custkey AS ck
@@ -1876,10 +1847,10 @@ object BigGraphOps {
         |  FROM reach a JOIN reach b ON a.src = b.dst AND a.dst = b.src)
         |SELECT n.node, least(n.node, coalesce(min(m.v), n.node)) AS scc_id
         |FROM nodes n LEFT JOIN mutual m ON m.u = n.node
-        |GROUP BY n.node ORDER BY node""".stripMargin,
+        |GROUP BY n.node ORDER BY node""".stripMargin),
     // ground truth, not an algorithm mirror: undirected reachability
     // closure seeded with every node's own id, min label per node
-    "q_mst" -> {
+    Gate("q_mst", qMst, {
       // one unrolled Borůvka round: relabel → per-component min edge →
       // 2-cycle break → MST_DOUBLE pointer doublings → component relabel.
       // Every CTE referenced more than once is MATERIALIZED (the
@@ -1925,8 +1896,8 @@ object BigGraphOps {
          |$rounds,
          |mst AS (SELECT DISTINCT src, dst, w FROM ($picks))
          |SELECT src, dst, CAST(w AS BIGINT) AS w FROM mst ORDER BY src, dst""".stripMargin
-    },
-    "q_wcc_big" ->
+    }),
+    Gate("q_wcc_big", qWccBig,
       """WITH RECURSIVE memb AS (
         |  SELECT DISTINCT date_diff('day', DATE '1992-01-01', o_orderdate) // 7 AS wk,
         |    o_orderpriority AS prio, o_custkey // 100 AS band, o_custkey AS ck
@@ -1946,8 +1917,8 @@ object BigGraphOps {
         |  UNION
         |  SELECT u.b, r.l FROM reach r JOIN und u ON u.a = r.n)
         |SELECT n AS node, min(l) AS wcc_id FROM reach
-        |GROUP BY n ORDER BY node""".stripMargin,
-    "q_pagerank_big" -> {
+        |GROUP BY n ORDER BY node""".stripMargin),
+    Gate("q_pagerank_big", qPagerankBig, {
       val iters = (1 to PR_ITERS).map { i =>
         s"""r$i AS (
            |  SELECT n.node,
@@ -1969,17 +1940,17 @@ object BigGraphOps {
          |$iters
          |SELECT node, ${Fns.roundPSql("rank", 8)} AS pagerank
          |FROM r$PR_ITERS ORDER BY node""".stripMargin
-    },
+    }),
     // walk corpus: id-ordered adjacency index + hash-picked transitions,
     // WC_STEPS unrolled step CTEs, all-steps union (shared with skipgram)
-    "q_walk_corpus" ->
+    Gate("q_walk_corpus", qWalkCorpus,
       s"""WITH $sqlWalkCtes
          |SELECT start, wk, step, node FROM corpus
-         |ORDER BY start, wk, step""".stripMargin,
+         |ORDER BY start, wk, step""".stripMargin),
     // node2vec: uniform first step, then 2nd-order biased steps — integer
     // weight kernel cumulated over the id-ordered neighbor list, modular
     // pick; MATERIALIZED adjacency (referenced once per step)
-    "q_node2vec" -> {
+    Gate("q_node2vec", qNode2vec, {
       def h(t: Int) =
         s"CAST('0x' || substr(md5(start || ':' || wk || ':' || $t), 1, 8) AS BIGINT)"
       val steps = (2 to WC_STEPS).map { t =>
@@ -2022,20 +1993,20 @@ object BigGraphOps {
          |SELECT start, wk, CAST(0 AS INT) AS step, node FROM n0
          |UNION ALL $unions
          |ORDER BY start, wk, step""".stripMargin
-    },
+    }),
     // skip-gram pairs: walk-id-keyed self-join of the same corpus CTE
-    "q_skipgram_pairs" ->
+    Gate("q_skipgram_pairs", qSkipgramPairs,
       s"""WITH $sqlWalkCtes
          |SELECT a.node AS center, b.node AS context,
          |  CAST(count(*) AS BIGINT) AS cnt
          |FROM corpus a JOIN corpus b
          |  ON a.start = b.start AND a.wk = b.wk AND a.step <> b.step
          |  AND abs(a.step - b.step) <= $SG_WINDOW
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // personalized PageRank: qPagerankBig's unroll with seeded start and
     // seed-only restart; only positive-mass nodes (the seed's <=PR_ITERS-
     // hop out-neighborhood) are emitted
-    "q_ppr" -> {
+    Gate("q_ppr", qPpr, {
       val iters = (1 to PR_ITERS).map { i =>
         s"""p$i AS (
            |  SELECT n.node,
@@ -2061,14 +2032,14 @@ object BigGraphOps {
          |$iters
          |SELECT node, ${Fns.roundPSql("rank", 8)} AS ppr
          |FROM p$PR_ITERS WHERE rank > 0.0 ORDER BY node""".stripMargin
-    },
+    }),
     // exactly KCORE_ROUNDS unrolled peel rounds — see qKcoreBig's
     // early-break-is-identity argument for why this always matches.
     // MATERIALIZED is load-bearing: each round references the previous
     // survivor set twice, so DuckDB's default CTE inlining would expand
     // the tree 2^ROUNDS-fold (measured: "too many open files" at 12
     // rounds); materialization makes the unroll linear.
-    "q_truss" -> {
+    Gate("q_truss", qTruss, {
       val rounds = (1 to TRUSS_ROUNDS).map { i =>
         val p = i - 1
         s"""tri$i AS MATERIALIZED (
@@ -2093,8 +2064,8 @@ object BigGraphOps {
          |  SELECT a AS node FROM t$TRUSS_ROUNDS
          |  UNION ALL SELECT b FROM t$TRUSS_ROUNDS)
          |GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "q_kcore_big" -> {
+    }),
+    Gate("q_kcore_big", qKcoreBig, {
       val rounds = (1 to KCORE_ROUNDS).map { i =>
         s"""a$i AS MATERIALIZED (
            |  SELECT u.a AS node FROM und u
@@ -2111,8 +2082,8 @@ object BigGraphOps {
          |FROM und u
          |JOIN a$KCORE_ROUNDS x ON u.a = x.node JOIN a$KCORE_ROUNDS y ON u.b = y.node
          |GROUP BY 1 ORDER BY node""".stripMargin
-    },
-    "q_harmonic_big" ->
+    }),
+    Gate("q_harmonic_big", qHarmonicBig,
       s"""WITH RECURSIVE $sqlEdges,
          |und AS MATERIALIZED (
          |  SELECT src AS a, dst AS b FROM edges
@@ -2129,8 +2100,8 @@ object BigGraphOps {
          |dd AS (SELECT pvt, node, min(hop) AS d FROM walk GROUP BY 1, 2)
          |SELECT node, CAST(count(*) AS BIGINT) AS n_reached,
          |  ${Fns.roundPSql("CAST(sum(CAST(1.0::DOUBLE / d AS DECIMAL(18,12))) AS DOUBLE)", 6)} AS harmonic
-         |FROM dd WHERE d > 0 GROUP BY node ORDER BY node""".stripMargin,
-    "q_clustering_big" ->
+         |FROM dd WHERE d > 0 GROUP BY node ORDER BY node""".stripMargin),
+    Gate("q_clustering_big", qClusteringBig,
       s"""WITH $sqlEdges,
          |wedges AS (
          |  SELECT e1.src AS a, e2.dst AS c
@@ -2142,6 +2113,6 @@ object BigGraphOps {
          |SELECT wc.n_wedges, tri.n_triangles,
          |  ${Fns.roundPSql("CAST(tri.n_triangles AS DOUBLE) / wc.n_wedges", 6)}
          |    AS closure_rate
-         |FROM wc, tri""".stripMargin,
+         |FROM wc, tri""".stripMargin),
   )
 }

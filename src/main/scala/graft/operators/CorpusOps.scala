@@ -18,8 +18,6 @@ import org.apache.spark.storage.StorageLevel
   * whole-row movement is the per-doc final agg keyed by doc_id.
   */
 object CorpusOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Decontamination n-gram width. Published pipelines collide 8–13-gram
     * spans against benchmark text (GPT-3 appx. C flavor); the synthetic
     * corpus draws from a ~30-word vocabulary, so 3-grams are the width at
@@ -1182,34 +1180,6 @@ object CorpusOps {
       .orderBy("lang")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_oov_rate"      -> qOovRate,
-    "q_rake_keywords" -> qRakeKeywords,
-    "q_zipf_slope"    -> qZipfSlope,
-    "q_decontaminate" -> qDecontaminate,
-    "q_ngram_novelty" -> qNgramNovelty,
-    "q_good_turing"   -> qGoodTuring,
-    "q_cohens_kappa"  -> qCohensKappa,
-    "q_curation_funnel" -> qCurationFunnel,
-    "q_surprisal"     -> qSurprisal,
-    "q_bigram_surprisal" -> qBigramSurprisal,
-    "q_tfidf_terms"   -> qTfidfTerms,
-    "q_rollup_stats"  -> qRollupStats,
-    "q_pivot_langs"   -> qPivotLangs,
-    "q_group_normalize" -> qGroupNormalize,
-    "q_bloom_decontaminate" -> qBloomDecontaminate,
-    "q_bm25"          -> qBm25,
-    "q_inverted_index" -> qInvertedIndex,
-    "q_phrase_search" -> qPhraseSearch,
-    "q_backoff_lm"    -> qBackoffLm,
-    "q_kneser_ney"    -> qKneserNey,
-    "q_vocab_growth"  -> qVocabGrowth,
-    "q_pmi_collocations" -> qPmiCollocations,
-    "q_dsir_weights"  -> qDsirWeights,
-    "q_ess"           -> qEss,
-    "q_ppl_buckets"   -> qPplBuckets,
-  )
-
   // ---- DuckDB oracles ------------------------------------------------------
 
   private val sqlTokens = TextOps.sqlTokens
@@ -1243,8 +1213,8 @@ object CorpusOps {
        |      AS DECIMAL(28,18)) AS lt
        |  FROM ct FULL OUTER JOIN cr ON ct.f = cr.f CROSS JOIN tot)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q_phrase_search" -> {
+  val gates: Seq[Gate] = Seq(
+    Gate("q_phrase_search", qPhraseSearch, {
       // token-aligned positional scan: toks[i+1+j] must equal phrase[j]
       // for every j — counts overlapping matches exactly like the
       // position-adjacency join
@@ -1256,8 +1226,8 @@ object CorpusOps {
          |  WHERE $cond)
          |SELECT doc_id, count(*) AS n_matches, CAST(min(i) AS INT) AS first_pos
          |FROM m GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "q_oov_rate" ->
+    }),
+    Gate("q_oov_rate", qOovRate,
       s"""WITH t AS (
          |  SELECT doc_id, lang, ${DedupOps.sqlSplitOf("doc_id")} AS split,
          |    unnest($sqlTokensLower) AS w
@@ -1276,8 +1246,8 @@ object CorpusOps {
          |  coalesce(oov.oov_types, 0) AS oov_types,
          |  ${Fns.roundPSql(
              "CAST(coalesce(oov.oov_occ, 0) AS DOUBLE) / CAST(tot.n_occ AS DOUBLE)", 6)} AS oov_rate
-         |FROM tot LEFT JOIN oov USING (lang) ORDER BY 1""".stripMargin,
-    "q_rake_keywords" -> {
+         |FROM tot LEFT JOIN oov USING (lang) ORDER BY 1""".stripMargin),
+    Gate("q_rake_keywords", qRakeKeywords, {
       val stopList = RAKE_STOP.map(w => s"'$w'").mkString(", ")
       s"""WITH toks AS (SELECT doc_id, $sqlTokensLower AS ws FROM documents),
          |pos AS (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos, ws FROM toks),
@@ -1305,8 +1275,8 @@ object CorpusOps {
          |  ${Fns.roundPSql("CAST(max(sc) AS DOUBLE)", 6)} AS score
          |FROM phrases GROUP BY 1
          |ORDER BY score DESC, phrase LIMIT $RAKE_TOPK""".stripMargin
-    },
-    "q_zipf_slope" ->
+    }),
+    Gate("q_zipf_slope", qZipfSlope,
       s"""WITH t AS (SELECT unnest($sqlTokensLower) AS term FROM documents),
          |f AS (SELECT term, count(*) AS freq FROM t
          |      GROUP BY 1 ORDER BY freq DESC, term LIMIT $ZIPF_TOP),
@@ -1325,8 +1295,8 @@ object CorpusOps {
          |SELECT n AS n_terms,
          |  ${Fns.roundPSql("slope_raw", 6)} AS slope,
          |  ${Fns.roundPSql("(CAST(sy AS DOUBLE) - slope_raw * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)", 6)} AS intercept
-         |FROM s""".stripMargin,
-    "q_decontaminate" ->
+         |FROM s""".stripMargin),
+    Gate("q_decontaminate", qDecontaminate,
       s"""WITH toks AS (SELECT doc_id, ${TextOps.sqlWsTrim} AS t, $sqlTokens AS w FROM documents),
          |g AS (SELECT doc_id, list_distinct(CASE WHEN len(w) >= $DECON_K
          |    THEN list_transform(range(1, len(w) - ${DECON_K - 2}),
@@ -1339,8 +1309,8 @@ object CorpusOps {
          |SELECT t.doc_id, t.n_grams, COALESCE(h.n_hit, 0) AS n_hit,
          |  ${Fns.roundPSql("CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / t.n_grams", 4)} AS overlap_frac,
          |  (COALESCE(h.n_hit, 0) >= 1) AS contaminated
-         |FROM tot t LEFT JOIN hits h USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "q_good_turing" ->
+         |FROM tot t LEFT JOIN hits h USING (doc_id) ORDER BY doc_id""".stripMargin),
+    Gate("q_good_turing", qGoodTuring,
       s"""WITH toks AS (SELECT $sqlTokensLower AS w FROM documents),
          |g AS (SELECT unnest(list_transform(range(1, len(w) - ${GT_N - 2}),
          |    i -> array_to_string(w[i:i+${GT_N - 1}], ' '))) AS gr
@@ -1353,8 +1323,8 @@ object CorpusOps {
          |SELECT j.r, j.n_r, j.n_r1, t.n_tokens,
          |  ${Fns.roundPSql("CAST(j.r + 1 AS DOUBLE) * CAST(j.n_r1 AS DOUBLE) / CAST(j.n_r AS DOUBLE)", 6)} AS r_star,
          |  ${Fns.roundPSql("(CAST(j.r + 1 AS DOUBLE) * CAST(j.n_r1 AS DOUBLE) / CAST(j.n_r AS DOUBLE)) / CAST(t.n_tokens AS DOUBLE)", 9)} AS p_gt
-         |FROM j CROSS JOIN tot t ORDER BY r""".stripMargin,
-    "q_cohens_kappa" ->
+         |FROM j CROSS JOIN tot t ORDER BY r""".stripMargin),
+    Gate("q_cohens_kappa", qCohensKappa,
       s"""WITH x AS (SELECT (n_chars >= $KAPPA_CHARS) AS a,
          |    (len($sqlTokens) >= $KAPPA_TOKS) AS b FROM documents),
          |m AS (SELECT count(*) AS n,
@@ -1373,8 +1343,8 @@ object CorpusOps {
          |  ${Fns.roundPSql("po_raw", 6)} AS po,
          |  ${Fns.roundPSql("pe_raw", 6)} AS pe,
          |  ${Fns.roundPSql("(po_raw - pe_raw) / (1.0::DOUBLE - pe_raw)", 6)} AS kappa
-         |FROM q""".stripMargin,
-    "q_ngram_novelty" ->
+         |FROM q""".stripMargin),
+    Gate("q_ngram_novelty", qNgramNovelty,
       s"""WITH toks AS (SELECT doc_id, ${TextOps.sqlWsTrim} AS t, $sqlTokens AS w FROM documents),
          |g AS (SELECT doc_id, ${DedupOps.sqlSplitOf("doc_id")} AS split,
          |  list_distinct(CASE WHEN len(w) >= $NOV_N
@@ -1387,11 +1357,11 @@ object CorpusOps {
          |tot AS (SELECT doc_id, split, count(*) AS n_grams FROM hg GROUP BY 1, 2)
          |SELECT t.doc_id, t.split, t.n_grams, COALESCE(h.n_seen, 0) AS n_seen,
          |  ${Fns.roundPSql("1.0::DOUBLE - CAST(COALESCE(h.n_seen, 0) AS DOUBLE) / t.n_grams", 4)} AS novelty_frac
-         |FROM tot t LEFT JOIN hits h USING (doc_id) ORDER BY doc_id""".stripMargin,
+         |FROM tot t LEFT JOIN hits h USING (doc_id) ORDER BY doc_id""".stripMargin),
     // stage predicates copied verbatim from the q_gopher_rules /
     // q_dedup_exact / q_decontaminate / q_semantic_dedup oracles — the
     // funnel must count exactly what the constituent gates report
-    "q_curation_funnel" ->
+    Gate("q_curation_funnel", qCurationFunnel,
       s"""WITH RECURSIVE ${VectorOps.sqlSemDedupCtes},
          |gb AS (
          |  SELECT doc_id,
@@ -1440,8 +1410,8 @@ object CorpusOps {
          |  UNION ALL SELECT 3, 'exact_dedup', n3 FROM cn
          |  UNION ALL SELECT 4, 'decontaminated', n4 FROM cn
          |  UNION ALL SELECT 5, 'semantic_dedup', n5 FROM cn)
-         |ORDER BY stage""".stripMargin,
-    "q_surprisal" ->
+         |ORDER BY stage""".stripMargin),
+    Gate("q_surprisal", qSurprisal,
       s"""WITH t AS (SELECT doc_id, unnest($sqlTokensLower) AS w FROM documents),
          |c AS (SELECT w, count(*) AS c FROM t GROUP BY 1),
          |tot AS (SELECT CAST(sum(c) AS BIGINT) AS tot FROM c),
@@ -1450,8 +1420,8 @@ object CorpusOps {
          |  FROM t JOIN c USING (w) CROSS JOIN tot)
          |SELECT doc_id, count(*) AS n_tokens,
          |  ${Fns.roundPSql("CAST(sum(s) AS DOUBLE) / count(*)", 6)} AS mean_nll
-         |FROM sc GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "q_bigram_surprisal" ->
+         |FROM sc GROUP BY 1 ORDER BY doc_id""".stripMargin),
+    Gate("q_bigram_surprisal", qBigramSurprisal,
       s"""WITH tk AS (SELECT doc_id, $sqlTokensLower AS tk FROM documents),
          |b AS (SELECT doc_id, unnest(tk[1:len(tk)-1]) AS w1, unnest(tk[2:len(tk)]) AS w2
          |      FROM tk WHERE len(tk) >= 2),
@@ -1462,8 +1432,8 @@ object CorpusOps {
          |  FROM b JOIN cb USING (w1, w2) JOIN cp USING (w1))
          |SELECT doc_id, count(*) AS n_bigrams,
          |  ${Fns.roundPSql("CAST(sum(s) AS DOUBLE) / count(*)", 6)} AS mean_nll2
-         |FROM sc GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "q_tfidf_terms" ->
+         |FROM sc GROUP BY 1 ORDER BY doc_id""".stripMargin),
+    Gate("q_tfidf_terms", qTfidfTerms,
       s"""WITH t AS (SELECT doc_id, unnest($sqlTokensLower) AS term FROM documents),
          |tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY 1, 2),
          |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
@@ -1474,20 +1444,20 @@ object CorpusOps {
          |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
          |        ORDER BY tfidf DESC, term) AS rk FROM sc)
          |SELECT doc_id, term, tf, tfidf FROM r WHERE rk <= $TFIDF_TOP
-         |ORDER BY doc_id, term""".stripMargin,
-    "q_rollup_stats" ->
+         |ORDER BY doc_id, term""".stripMargin),
+    Gate("q_rollup_stats", qRollupStats,
       """SELECT
         |  CASE WHEN GROUPING(lang) = 1 THEN 'ALL'
         |       ELSE COALESCE(lang, '<null>') END AS lang,
         |  CASE WHEN GROUPING(source) = 1 THEN 'ALL'
         |       ELSE COALESCE(source, '<null>') END AS source,
         |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS tot_chars
-        |FROM documents GROUP BY ROLLUP(lang, source) ORDER BY 1, 2""".stripMargin,
-    "q_pivot_langs" ->
+        |FROM documents GROUP BY ROLLUP(lang, source) ORDER BY 1, 2""".stripMargin),
+    Gate("q_pivot_langs", qPivotLangs,
       s"""SELECT source,
          |${LANGS.map(l => s"  count(*) FILTER (WHERE lang = '$l') AS $l").mkString(",\n")}
-         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_bloom_decontaminate" -> {
+         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_bloom_decontaminate", qBloomDecontaminate, {
       def posRows(src: String, cols: String) = (0 until BLOOM_SEEDS).map { i =>
         s"SELECT $cols, CAST('0x' || substr(md5(gr || '_b$i'), 1, 8) AS BIGINT) % $BLOOM_M AS pos FROM $src"
       }.mkString("\n  UNION ALL ")
@@ -1515,8 +1485,8 @@ object CorpusOps {
          |  (COALESCE(e.n_hit, 0) >= 1) AS contaminated
          |FROM tot t LEFT JOIN maybe m USING (doc_id) LEFT JOIN exact e USING (doc_id)
          |ORDER BY t.doc_id""".stripMargin
-    },
-    "q_group_normalize" ->
+    }),
+    Gate("q_group_normalize", qGroupNormalize,
       // mean/variance staged exactly like the Spark side: exact integer
       // (sum, sumsq, n) per lang, then the identical double expressions.
       s"""WITH st AS (
@@ -1533,8 +1503,8 @@ object CorpusOps {
          |    THEN ${Fns.roundPSql("(d.n_chars - m.mean) / sqrt(m.vr)", 6)}
          |    ELSE NULL END AS z_chars
          |FROM documents d JOIN m USING (lang)
-         |ORDER BY d.doc_id""".stripMargin,
-    "q_bm25" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Gate("q_bm25", qBm25,
       // every float literal is ::DOUBLE — bare decimals are DECIMAL in
       // DuckDB and decimal division truncates (CLAUDE.md trap)
       s"""WITH t AS (SELECT doc_id, unnest($sqlTokensLower) AS term FROM documents),
@@ -1554,8 +1524,8 @@ object CorpusOps {
          |  FROM m JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN st)
          |SELECT doc_id, count(*) AS n_match,
          |  ${Fns.roundPSql("CAST(sum(s) AS DOUBLE)", 6)} AS score
-         |FROM sc GROUP BY 1 ORDER BY score DESC, doc_id LIMIT $BM25_TOP""".stripMargin,
-    "q_inverted_index" ->
+         |FROM sc GROUP BY 1 ORDER BY score DESC, doc_id LIMIT $BM25_TOP""".stripMargin),
+    Gate("q_inverted_index", qInvertedIndex,
       s"""WITH t AS (SELECT doc_id, unnest($sqlTokensLower) AS term FROM documents),
          |st AS (SELECT term, count(DISTINCT doc_id) AS df, count(*) AS tf_total
          |       FROM t GROUP BY 1),
@@ -1567,8 +1537,8 @@ object CorpusOps {
          |         array_to_string(list(CAST(doc_id AS VARCHAR) ORDER BY doc_id), ',') AS postings
          |       FROM cap WHERE rn <= $INV_TOP GROUP BY term)
          |SELECT st.term, st.df, st.tf_total, pl.postings
-         |FROM st JOIN pl USING (term) ORDER BY st.term""".stripMargin,
-    "q_backoff_lm" ->
+         |FROM st JOIN pl USING (term) ORDER BY st.term""".stripMargin),
+    Gate("q_backoff_lm", qBackoffLm,
       s"""WITH tk AS (SELECT doc_id, ${DedupOps.sqlSplitOf("doc_id")} AS split,
          |              $sqlTokensLower AS tk FROM documents),
          |tr AS (SELECT tk FROM tk WHERE split = 'train'),
@@ -1605,8 +1575,8 @@ object CorpusOps {
          |  CAST(count(*) FILTER (WHERE is_tri) AS BIGINT) AS n_tri,
          |  CAST(count(*) FILTER (WHERE is_bi) AS BIGINT) AS n_bi,
          |  ${Fns.roundPSql("CAST(sum(CAST(-ln(s) AS DECIMAL(28,18))) AS DOUBLE) / count(*)", 6)} AS mean_nll3
-         |FROM sc GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "q_kneser_ney" ->
+         |FROM sc GROUP BY 1 ORDER BY doc_id""".stripMargin),
+    Gate("q_kneser_ney", qKneserNey,
       s"""WITH tk AS (SELECT doc_id, ${DedupOps.sqlSplitOf("doc_id")} AS split,
          |              $sqlTokensLower AS tk FROM documents),
          |bg AS (SELECT unnest(tk[1:len(tk)-1]) AS w1, unnest(tk[2:len(tk)]) AS w2
@@ -1636,8 +1606,8 @@ object CorpusOps {
          |  CAST(count(*) FILTER (WHERE seen) AS BIGINT) AS n_seen,
          |  CAST(count(*) FILTER (WHERE has_ctx) AS BIGINT) AS n_ctx,
          |  ${Fns.roundPSql("CAST(sum(CAST(-ln(p) AS DECIMAL(28,18))) AS DOUBLE) / count(*)", 6)} AS mean_nll2
-         |FROM sc GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "q_vocab_growth" ->
+         |FROM sc GROUP BY 1 ORDER BY doc_id""".stripMargin),
+    Gate("q_vocab_growth", qVocabGrowth,
       s"""WITH t AS (SELECT
          |    CAST('0x' || substr(md5('vg_' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
          |      % $VG_TIERS AS tier,
@@ -1656,8 +1626,8 @@ object CorpusOps {
          |    AS BIGINT) AS cum_vocab
          |FROM tiers LEFT JOIN pos ON pos.tier = tiers.tier
          |LEFT JOIN vt ON vt.tier = tiers.tier
-         |ORDER BY tiers.tier""".stripMargin,
-    "q_pmi_collocations" ->
+         |ORDER BY tiers.tier""".stripMargin),
+    Gate("q_pmi_collocations", qPmiCollocations,
       s"""WITH tk AS (SELECT $sqlTokensLower AS tk FROM documents),
          |u AS (SELECT w, count(*) AS c
          |      FROM (SELECT unnest(tk) AS w FROM tk) GROUP BY 1),
@@ -1673,15 +1643,15 @@ object CorpusOps {
          |FROM cb JOIN u u1 ON u1.w = cb.w1 JOIN u u2 ON u2.w = cb.w2
          |CROSS JOIN nb CROSS JOIN nu
          |WHERE cb.cb >= $PMI_MIN_C
-         |ORDER BY pmi DESC, cb.w1, cb.w2 LIMIT $PMI_TOP""".stripMargin,
-    "q_dsir_weights" ->
+         |ORDER BY pmi DESC, cb.w1, cb.w2 LIMIT $PMI_TOP""".stripMargin),
+    Gate("q_dsir_weights", qDsirWeights,
       s"""WITH $sqlDsirCtes
          |SELECT doc_id, n_feats, logw, (logw > 0) AS keep FROM (
          |  SELECT doc_id, count(*) AS n_feats,
          |    ${Fns.roundPSql("CAST(sum(lt) AS DOUBLE)", 6)} AS logw
          |  FROM rawf JOIN ratios USING (f) GROUP BY 1)
-         |ORDER BY doc_id""".stripMargin,
-    "q_ess" ->
+         |ORDER BY doc_id""".stripMargin),
+    Gate("q_ess", qEss,
       s"""WITH $sqlDsirCtes,
          |perdoc AS MATERIALIZED (
          |  SELECT doc_id, ${Fns.roundPSql("CAST(sum(lt) AS DOUBLE)", 6)} AS logw
@@ -1695,8 +1665,8 @@ object CorpusOps {
          |e AS (SELECT n_docs, (swd * swd) / swwd AS ess0 FROM m)
          |SELECT n_docs, ${Fns.roundPSql("ess0", 6)} AS ess,
          |  ${Fns.roundPSql("ess0 / CAST(n_docs AS DOUBLE)", 6)} AS ess_frac
-         |FROM e""".stripMargin,
-    "q_ppl_buckets" ->
+         |FROM e""".stripMargin),
+    Gate("q_ppl_buckets", qPplBuckets,
       s"""WITH t AS (SELECT doc_id, unnest($sqlTokensLower) AS w FROM documents),
          |c AS (SELECT w, count(*) AS c FROM t GROUP BY 1),
          |tot AS (SELECT CAST(sum(c) AS BIGINT) AS tot FROM c),
@@ -1721,6 +1691,6 @@ object CorpusOps {
          |  CASE WHEN mean_nll <= b1 THEN 'head'
          |       WHEN mean_nll <= b2 THEN 'middle'
          |       ELSE 'tail' END AS bucket
-         |FROM sl JOIN bounds USING (lang) ORDER BY sl.doc_id""".stripMargin,
+         |FROM sl JOIN bounds USING (lang) ORDER BY sl.doc_id""".stripMargin),
   )
 }

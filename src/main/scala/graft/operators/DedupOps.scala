@@ -24,8 +24,6 @@ import org.apache.spark.sql.functions._
   * reproducible in the driver's DuckDB oracle.
   */
 object DedupOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Shingle size (words per shingle). */
   val K = 3
   /** Number of minhash functions = NUM_BANDS * ROWS_PER_BAND. */
@@ -1241,32 +1239,6 @@ object DedupOps {
           .as("containment"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_sorted_neighborhood" -> qSortedNeighborhood,
-    "q_entity_match"      -> qEntityMatch,
-    "q_group_k"           -> qGroupK,
-    "q_prefix_dup"        -> qPrefixDup,
-    "q_dedup_exact"       -> qDedupExact,
-    "q_minhash_dedup"     -> qMinhashDedup,
-    "q_fuzzy_decontaminate" -> qFuzzyDecontaminate,
-    "q_dedup_clusters"    -> qDedupClusters,
-    "q_stratified_sample" -> qStratifiedSample,
-    "q_uniform_k"         -> qUniformK,
-    "q_weighted_sample"   -> qWeightedSample,
-    "q_priority_sample"   -> qPrioritySample,
-    "q_corpus_mix"        -> qCorpusMix,
-    "q_temperature_sample" -> qTemperatureSample,
-    "q_jaccard_pairs"     -> qJaccardPairs,
-    "q_containment"       -> qContainment,
-    "q_lsh_quality"       -> qLshQuality,
-    "q_simhash"           -> qSimhash,
-    "q_hash_split"        -> qHashSplit,
-    "q_substring_dup"     -> qSubstringDup,
-    "q_suffix_dup"        -> qSuffixDup,
-    "q_paragraph_dedup"   -> qParagraphDedup,
-    "q_cdc_chunks"        -> qCdcChunks,
-  )
-
   // ---- DuckDB oracles ------------------------------------------------------
 
   private val sqlTokens = TextOps.sqlTokens
@@ -1325,11 +1297,11 @@ object DedupOps {
        |  JOIN sh sa ON sa.doc_id = p.doc_a
        |  JOIN sh sb ON sb.doc_id = p.doc_b)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
     // sorted neighborhood: same partitioned window + lead pairs, shared
     // shingle-Jaccard verify (regexp_replace needs the 'g' flag here —
     // DuckDB replaces only the first match by default)
-    "q_sorted_neighborhood" -> {
+    Gate("q_sorted_neighborhood", qSortedNeighborhood, {
       val leadCols = (1 until SN_W).map(i => s"lead(doc_id, $i) OVER w AS n$i")
         .mkString(", ")
       val leadList = (1 until SN_W).map(i => s"n$i").mkString("[", ", ", "]")
@@ -1355,15 +1327,15 @@ object DedupOps {
          |  JOIN sh sb ON sb.doc_id = p.doc_b)
          |SELECT doc_a, doc_b, ${Fns.roundPSql("jac", 4)} AS jaccard
          |FROM verified WHERE jac >= $SN_T ORDER BY doc_a, doc_b""".stripMargin
-    },
-    "q_dedup_exact" ->
+    }),
+    Gate("q_dedup_exact", qDedupExact,
       """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(lower(trim(text))) ORDER BY keep_id""".stripMargin,
-    "q_minhash_dedup" ->
+        |FROM documents GROUP BY md5(lower(trim(text))) ORDER BY keep_id""".stripMargin),
+    Gate("q_minhash_dedup", qMinhashDedup,
       s"""WITH $sqlVerifiedCtes
          |SELECT doc_a, doc_b, ${Fns.roundPSql("jac", 4)} AS jaccard
-         |FROM verified WHERE jac >= $THRESHOLD ORDER BY doc_a, doc_b""".stripMargin,
-    "q_fuzzy_decontaminate" ->
+         |FROM verified WHERE jac >= $THRESHOLD ORDER BY doc_a, doc_b""".stripMargin),
+    Gate("q_fuzzy_decontaminate", qFuzzyDecontaminate,
       s"""WITH $sqlBandCtes,
          |fpairs AS (
          |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1386,11 +1358,11 @@ object DedupOps {
          |  (COALESCE(h.n_match, 0) >= 1) AS fuzzy_contaminated
          |FROM documents d LEFT JOIN hits h USING (doc_id)
          |WHERE d.doc_id % $FUZZY_MOD <> 0
-         |ORDER BY d.doc_id""".stripMargin,
+         |ORDER BY d.doc_id""".stripMargin),
     // connected components over the verified pairs: `reach` floods every
     // label through the undirected edge set (UNION dedups the state space
     // to vertices × labels of one component), min(lbl) is the component id
-    "q_dedup_clusters" ->
+    Gate("q_dedup_clusters", qDedupClusters,
       s"""WITH RECURSIVE $sqlVerifiedCtes,
          |vp AS (SELECT doc_a, doc_b FROM verified WHERE jac >= $THRESHOLD),
          |edges AS (SELECT doc_a AS src, doc_b AS dst FROM vp
@@ -1404,14 +1376,14 @@ object DedupOps {
          |SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id,
          |  coalesce(cc.cluster_id, d.doc_id) = d.doc_id AS keep
          |FROM documents d LEFT JOIN cc ON d.doc_id = cc.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "q_stratified_sample" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Gate("q_stratified_sample", qStratifiedSample,
       s"""SELECT doc_id, source FROM documents
          |WHERE ${sqlHash32("'smp_' || CAST(doc_id AS VARCHAR)")} % 1000
          |  < CASE WHEN CAST(regexp_extract(source, '([0-9]+)$$', 1) AS INT) % 2 = 0
          |         THEN 300 ELSE 700 END
-         |ORDER BY doc_id""".stripMargin,
-    "q_entity_match" -> {
+         |ORDER BY doc_id""".stripMargin),
+    Gate("q_entity_match", qEntityMatch, {
       // the capped branch's twin: per pass, W-1 lead columns over the
       // (blk, key-prefix) window, unpivoted via UNION ALL
       def passCtes(tag: String, keyExpr: String): String = {
@@ -1453,8 +1425,8 @@ object DedupOps {
          |  FROM cand WHERE levenshtein(name_a, name_b) <= $ER_MAXDIST)
          |SELECT * FROM (SELECT * FROM sp UNION ALL SELECT * FROM bp)
          |ORDER BY blk, cust_a, cust_b""".stripMargin
-    },
-    "q_group_k" ->
+    }),
+    Gate("q_group_k", qGroupK,
       s"""WITH r AS (
          |  SELECT doc_id, source, lang,
          |    ${sqlHash32("'grp_' || CAST(doc_id AS VARCHAR)")} AS rank_h
@@ -1464,8 +1436,8 @@ object DedupOps {
          |    PARTITION BY source ORDER BY rank_h, doc_id) AS rn
          |  FROM r)
          |SELECT doc_id, source, lang, rank_h FROM w
-         |WHERE rn <= $GROUP_K ORDER BY source, rank_h, doc_id""".stripMargin,
-    "q_prefix_dup" ->
+         |WHERE rn <= $GROUP_K ORDER BY source, rank_h, doc_id""".stripMargin),
+    Gate("q_prefix_dup", qPrefixDup,
       s"""WITH p AS (
          |  SELECT doc_id,
          |    md5(array_to_string(string_split(text, ' ')[1 : $PREFIX_WORDS], ' '))
@@ -1474,12 +1446,12 @@ object DedupOps {
          |SELECT prefix_key, CAST(count(*) AS BIGINT) AS n_docs,
          |  min(doc_id) AS keeper
          |FROM p GROUP BY prefix_key HAVING count(*) >= 2
-         |ORDER BY prefix_key""".stripMargin,
-    "q_uniform_k" ->
+         |ORDER BY prefix_key""".stripMargin),
+    Gate("q_uniform_k", qUniformK,
       s"""SELECT doc_id, source,
          |  ${sqlHash32("'uni_' || CAST(doc_id AS VARCHAR)")} AS rank_h
-         |FROM documents ORDER BY rank_h, doc_id LIMIT $UNIFORM_K""".stripMargin,
-    "q_weighted_sample" ->
+         |FROM documents ORDER BY rank_h, doc_id LIMIT $UNIFORM_K""".stripMargin),
+    Gate("q_weighted_sample", qWeightedSample,
       s"""WITH t AS (
          |  SELECT doc_id, source, CAST(len(${TextOps.sqlTokens}) AS BIGINT) AS w,
          |    (CAST(${sqlHash32("'wes_' || CAST(doc_id AS VARCHAR)")} AS DOUBLE) + 0.5)
@@ -1487,8 +1459,8 @@ object DedupOps {
          |  FROM documents)
          |SELECT doc_id, source, w, ${Fns.roundPSql("ln(u) / CAST(w AS DOUBLE)", 6)} AS es_key
          |FROM t WHERE w > 0
-         |ORDER BY ln(u) / CAST(w AS DOUBLE) DESC, doc_id LIMIT $WEIGHTED_K""".stripMargin,
-    "q_priority_sample" ->
+         |ORDER BY ln(u) / CAST(w AS DOUBLE) DESC, doc_id LIMIT $WEIGHTED_K""".stripMargin),
+    Gate("q_priority_sample", qPrioritySample,
       s"""WITH pri AS (
          |  SELECT doc_id, source, n_chars,
          |    CAST(n_chars AS DOUBLE) /
@@ -1501,8 +1473,8 @@ object DedupOps {
          |SELECT doc_id, source, n_chars,
          |  ${Fns.roundPSql("priority", 4)} AS priority,
          |  ${Fns.roundPSql("greatest(CAST(n_chars AS DOUBLE), tau.tau)", 4)} AS est_w
-         |FROM r CROSS JOIN tau WHERE rk <= $PRI_K ORDER BY doc_id""".stripMargin,
-    "q_corpus_mix" ->
+         |FROM r CROSS JOIN tau WHERE rk <= $PRI_K ORDER BY doc_id""".stripMargin),
+    Gate("q_corpus_mix", qCorpusMix,
       s"""WITH t AS (
          |  SELECT doc_id, source, CAST(len(${TextOps.sqlTokens}) AS BIGINT) AS n_toks
          |  FROM documents),
@@ -1514,8 +1486,8 @@ object DedupOps {
          |WHERE CAST(${sqlHash32("'mix_' || CAST(doc_id AS VARCHAR)")} % $SAMPLE_SPACE
          |      AS DECIMAL(38,0)) * tot.n_src * ps.t_src * $MIX_DEN
          |  < CAST(tot.t_total AS DECIMAL(38,0)) * $MIX_NUM * $SAMPLE_SPACE
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_temperature_sample" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_temperature_sample", qTemperatureSample,
       s"""WITH t AS (
          |  SELECT doc_id, source, CAST(len(${TextOps.sqlTokens}) AS BIGINT) AS n_toks
          |  FROM documents),
@@ -1533,8 +1505,8 @@ object DedupOps {
          |FROM t JOIN rt USING (source)
          |WHERE ${sqlHash32("'tmp_' || CAST(doc_id AS VARCHAR)")} % $SAMPLE_SPACE
          |  < CAST(floor(rt.rate * $SAMPLE_SPACE) AS BIGINT)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_lsh_quality" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_lsh_quality", qLshQuality,
       // band CTEs already begin with the shared shingle CTE `sh`; the
       // PPJoin truth chain appends with t-prefixed names to avoid the
       // `pairs` collision
@@ -1572,8 +1544,8 @@ object DedupOps {
          |    ${Fns.roundPSql("CAST(n_hit AS DOUBLE) / CAST(n_true AS DOUBLE)", 4)} END AS recall,
          |  CASE WHEN n_cand > 0 THEN
          |    ${Fns.roundPSql("CAST(n_hit AS DOUBLE) / CAST(n_cand AS DOUBLE)", 4)} END AS precision
-         |FROM agg""".stripMargin,
-    "q_jaccard_pairs" ->
+         |FROM agg""".stripMargin),
+    Gate("q_jaccard_pairs", qJaccardPairs,
       s"""WITH $sqlShingles,
          |posting AS (SELECT doc_id, len(sh) AS sz, unnest(sh) AS g FROM sh),
          |dfreq AS (SELECT g, count(*) AS c FROM posting GROUP BY g),
@@ -1596,8 +1568,8 @@ object DedupOps {
          |  JOIN sh sa ON sa.doc_id = p.doc_a
          |  JOIN sh sb ON sb.doc_id = p.doc_b)
          |SELECT doc_a, doc_b, ${Fns.roundPSql("jac", 4)} AS jaccard
-         |FROM verified WHERE jac >= $JAC_T ORDER BY doc_a, doc_b""".stripMargin,
-    "q_containment" ->
+         |FROM verified WHERE jac >= $JAC_T ORDER BY doc_a, doc_b""".stripMargin),
+    Gate("q_containment", qContainment,
       s"""WITH $sqlShingles,
          |shf AS (SELECT doc_id, sh FROM sh WHERE len(sh) >= $CONT_MIN_SH),
          |posting AS (SELECT doc_id, len(sh) AS sz, unnest(sh) AS g FROM shf),
@@ -1623,8 +1595,8 @@ object DedupOps {
          |SELECT doc_a, doc_b,
          |  ${Fns.roundPSql("CAST(inter AS DOUBLE) / sz_a", 4)} AS containment
          |FROM verified WHERE inter * $CONT_T_DEN >= sz_a * $CONT_T_NUM
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "q_simhash" -> {
+         |ORDER BY doc_a, doc_b""".stripMargin),
+    Gate("q_simhash", qSimhash, {
       val bits = (0 until 16).map { b =>
         s"CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END)) > 0 THEN ${1L << b} ELSE 0 END"
       }.mkString("\n    + ")
@@ -1632,12 +1604,12 @@ object DedupOps {
          |hs AS (SELECT doc_id, list_transform(toks, t -> ${sqlHash32("t")}) AS hs FROM toks)
          |SELECT doc_id, CAST($bits AS BIGINT) AS simhash
          |FROM hs ORDER BY doc_id""".stripMargin
-    },
-    "q_hash_split" ->
+    }),
+    Gate("q_hash_split", qHashSplit,
       s"""SELECT source, ${sqlSplitOf("doc_id")} AS split,
          |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS tot_chars
-         |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_substring_dup" ->
+         |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Gate("q_substring_dup", qSubstringDup,
       s"""WITH wins AS (
          |  SELECT doc_id,
          |    unnest(list_transform(range(0, (n_chars - $SUB_W) // $SUB_S + 1),
@@ -1648,8 +1620,8 @@ object DedupOps {
          |  CAST(count(*) FILTER (WHERE d.w IS NOT NULL) AS BIGINT) AS n_dup,
          |  ${Fns.roundPSql("CAST(count(*) FILTER (WHERE d.w IS NOT NULL) AS DOUBLE) / count(*)", 4)} AS dup_frac
          |FROM wins LEFT JOIN dup d ON wins.w = d.w
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_suffix_dup" ->
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Gate("q_suffix_dup", qSuffixDup,
       s"""WITH grams AS (
          |  SELECT doc_id, j, md5(substr(text, CAST(j + 1 AS INT), $SUF_K)) AS h
          |  FROM (SELECT doc_id, text, unnest(range(n_chars - ${SUF_K - 1})) AS j
@@ -1671,8 +1643,8 @@ object DedupOps {
          |  coalesce(p.dup_chars, 0) AS dup_chars,
          |  ${Fns.roundPSql(s"CAST(coalesce(p.dup_chars, 0) AS DOUBLE) / d.n_chars", 4)} AS dup_frac
          |FROM documents d LEFT JOIN per_doc p USING (doc_id)
-         |WHERE d.n_chars >= $SUF_K ORDER BY d.doc_id""".stripMargin,
-    "q_paragraph_dedup" ->
+         |WHERE d.n_chars >= $SUF_K ORDER BY d.doc_id""".stripMargin),
+    Gate("q_paragraph_dedup", qParagraphDedup,
       s"""WITH words AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          |expl AS (SELECT doc_id, ws,
          |  unnest(range(CAST(ceil(len(ws) / $PARA_W.0) AS BIGINT))) AS i FROM words),
@@ -1685,8 +1657,8 @@ object DedupOps {
          |  CAST(count(DISTINCT CASE WHEN rec.keeper = paras.doc_id THEN rec.h END) AS BIGINT) AS n_kept,
          |  ${Fns.roundPSql(s"CAST(count(rec.keeper) AS DOUBLE) / count(*)", 4)} AS dup_para_frac
          |FROM paras LEFT JOIN rec ON paras.h = rec.h
-         |GROUP BY paras.doc_id ORDER BY paras.doc_id""".stripMargin,
-    "q_cdc_chunks" ->
+         |GROUP BY paras.doc_id ORDER BY paras.doc_id""".stripMargin),
+    Gate("q_cdc_chunks", qCdcChunks,
       s"""WITH bnd AS (
          |  SELECT doc_id, j
          |  FROM (SELECT doc_id, text, unnest(range(2, n_chars - ${CDC_W - 2})) AS j
@@ -1712,6 +1684,6 @@ object DedupOps {
          |  FROM ch LEFT JOIN dup USING (h) GROUP BY ch.doc_id)
          |SELECT p.doc_id, p.n_chunks, p.n_dup_chunks, p.dup_chars,
          |  ${Fns.roundPSql("CAST(p.dup_chars AS DOUBLE) / d.n_chars", 4)} AS dup_frac
-         |FROM per p JOIN documents d USING (doc_id) ORDER BY doc_id""".stripMargin,
+         |FROM per p JOIN documents d USING (doc_id) ORDER BY doc_id""".stripMargin),
   )
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Fns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,8 +19,6 @@ import org.apache.spark.sql.functions._
   * in-partition sort, no driver state. E12 entropy is two aggregations.
   */
 object EventOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Session gap for sessionization. */
   val GAP_MIN = 30
 
@@ -1464,45 +1462,6 @@ object EventOps {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_conformal" -> qConformal,
-    "q_mann_whitney" -> qMannWhitney,
-    "q_sax" -> qSax,
-    "q_kaplan_meier" -> qKaplanMeier,
-    "q_changepoint" -> qChangepoint,
-    "q_theil_sen"   -> qTheilSen,
-    "q_burstiness"  -> qBurstiness,
-    "q_cohort_ltv"  -> qCohortLtv,
-    "q_ab_test"     -> qAbTest,
-    "q_cuped"       -> qCuped,
-    "q_bootstrap_ci" -> qBootstrapCi,
-    "q_transitions" -> qTransitions,
-    "q_funnel_time" -> qFunnelTime,
-    "q_event_paths" -> qEventPaths,
-    "q_seasonal_error" -> qSeasonalError,
-    "q_holt_forecast" -> qHoltForecast,
-    "q_holt_winters" -> qHoltWinters,
-    "q_benford"    -> qBenford,
-    "q_wilson_ctr" -> qWilsonCtr,
-    "q_mad_outliers" -> qMadOutliers,
-    "q_cusum"      -> qCusum,
-    "q_autocorr"   -> qAutocorr,
-    "q_attribution" -> qAttribution,
-    "q_user_lag"   -> qUserLag,
-    "q_ewma"       -> qEwma,
-    "q_anomaly"    -> qAnomaly,
-    "q_sliding_features" -> qSlidingFeatures,
-    "q_regression" -> qRegression,
-    "q_window_agg" -> qWindowAgg,
-    "q_distinct_users" -> qDistinctUsers,
-    "q_info_gain" -> qInfoGain,
-    "q_window_top" -> qWindowTop,
-    "q_sessionize" -> qSessionize,
-    "q_entropy"    -> qEntropy,
-    "q_funnel"     -> qFunnel,
-    "q_retention"  -> qRetention,
-  )
-
   // ---- DuckDB oracles ------------------------------------------------------
   // DuckDB reads the nanos parquet natively; CAST to micros timestamp
   // matches Spark's div-1000 conversion (Tables.events).
@@ -1510,11 +1469,11 @@ object EventOps {
   private val sqlWs =
     "epoch(date_trunc('hour', CAST(ts AS TIMESTAMP)))::BIGINT"
 
-  val oracles: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
     // the b expression is repeated verbatim inside a (op-order identity:
     // Spark names the column and reuses it; the same deterministic tree
     // evaluates to the same double)
-    "q_conformal" ->
+    Gate("q_conformal", qConformal,
       s"""WITH e0 AS (
          |  SELECT event_type, event_id,
          |    CAST((epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS DOUBLE) AS x,
@@ -1552,8 +1511,8 @@ object EventOps {
          |  ${Fns.roundPSql("q.qh", 6)} AS qhat,
          |  ${Fns.roundPSql("CAST(tc.n_cov AS DOUBLE) / tc.n_test", 4)} AS coverage
          |FROM qh q JOIN ab USING (event_type) JOIN tc USING (event_type)
-         |ORDER BY event_type""".stripMargin,
-    "q_mann_whitney" ->
+         |ORDER BY event_type""".stripMargin),
+    Gate("q_mann_whitney", qMannWhitney,
       s"""WITH ev AS (
          |  SELECT event_type = 'purchase' AS isa, value AS v FROM events
          |  WHERE event_type IN ('purchase', 'click') AND value IS NOT NULL),
@@ -1585,8 +1544,8 @@ object EventOps {
          |  FROM ag)
          |SELECT na AS n_a, nb AS n_b, ua AS u_a,
          |  ${Fns.roundPSql("(ua - mu) / sqrt(va)", 6)} AS z
-         |FROM fx""".stripMargin,
-    "q_sax" ->
+         |FROM fx""".stripMargin),
+    Gate("q_sax", qSax,
       s"""WITH hourly AS (
          |  SELECT event_type,
          |    epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hr,
@@ -1617,8 +1576,8 @@ object EventOps {
          |  ${Fns.roundPSql("paa", 6)} AS paa, ${Fns.roundPSql("z", 6)} AS z,
          |  CASE WHEN z < -$SAX_BP THEN 'a' WHEN z < 0 THEN 'b'
          |       WHEN z < $SAX_BP THEN 'c' ELSE 'd' END AS sym
-         |FROM zz ORDER BY event_type, seg""".stripMargin,
-    "q_kaplan_meier" ->
+         |FROM zz ORDER BY event_type, seg""".stripMargin),
+    Gate("q_kaplan_meier", qKaplanMeier,
       s"""WITH sp AS (
          |  SELECT user_id,
          |    min(epoch_us(CAST(ts AS TIMESTAMP)) // $DAY_US) AS d0,
@@ -1649,8 +1608,8 @@ object EventOps {
          |SELECT dur AS t_days, n_risk, d AS d_events,
          |  ${Fns.roundPSql(
              "CASE WHEN d = n_risk THEN 0.0::DOUBLE ELSE exp(CAST(cl AS DOUBLE)) END", 6)} AS survival
-         |FROM cum ORDER BY t_days""".stripMargin,
-    "q_changepoint" ->
+         |FROM cum ORDER BY t_days""".stripMargin),
+    Gate("q_changepoint", qChangepoint,
       s"""WITH hourly AS (
          |  SELECT event_type, $sqlWs // 3600 AS hr,
          |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
@@ -1682,8 +1641,8 @@ object EventOps {
          |  ${Fns.roundPSql("sse", 4)} AS sse_best,
          |  ${Fns.roundPSql("s1d / kd", 4)} AS mean_left,
          |  ${Fns.roundPSql("(t1d - s1d) / rd", 4)} AS mean_right
-         |FROM best WHERE rn = 1 ORDER BY event_type""".stripMargin,
-    "q_theil_sen" ->
+         |FROM best WHERE rn = 1 ORDER BY event_type""".stripMargin),
+    Gate("q_theil_sen", qTheilSen,
       s"""WITH hourly AS (
          |  SELECT event_type, $sqlWs // 3600 AS hr, CAST(count(*) AS DOUBLE) AS c
          |  FROM events GROUP BY 1, 2),
@@ -1700,8 +1659,8 @@ object EventOps {
          |SELECT event_type, m AS n_pairs,
          |  ${Fns.roundPSql("sum(slope) / count(*)", 6)} AS ts_slope
          |FROM r WHERE rn = (m + 1) // 2 OR rn = m // 2 + 1
-         |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    "q_burstiness" ->
+         |GROUP BY 1, 2 ORDER BY 1""".stripMargin),
+    Gate("q_burstiness", qBurstiness,
       s"""WITH hourly AS (
          |  SELECT event_type, $sqlWs // 3600 AS hr, count(*) AS c
          |  FROM events GROUP BY 1, 2),
@@ -1720,8 +1679,8 @@ object EventOps {
          |SELECT event_type, n_hours,
          |  ${Fns.roundPSql("mean_c", 4)} AS mean_c,
          |  ${Fns.roundPSql("var_c / mean_c", 4)} AS fano
-         |FROM t ORDER BY 1""".stripMargin,
-    "q_cohort_ltv" ->
+         |FROM t ORDER BY 1""".stripMargin),
+    Gate("q_cohort_ltv", qCohortLtv,
       s"""WITH ev AS (
          |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // $WEEK_US AS wk, value
          |  FROM events),
@@ -1730,8 +1689,8 @@ object EventOps {
          |  count(DISTINCT e.user_id) AS n_users,
          |  CAST(sum(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
          |FROM ev e JOIN cohort c USING (user_id)
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_ab_test" ->
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Gate("q_ab_test", qAbTest,
       s"""WITH m AS (
          |  SELECT
          |    count(CASE WHEN user_id % 2 = 0 THEN 1 END) AS n0,
@@ -1756,8 +1715,8 @@ object EventOps {
          |  ${Fns.roundPSql("m0", 6)} AS mean0,
          |  ${Fns.roundPSql("m1", 6)} AS mean1,
          |  ${Fns.roundPSql("(m0 - m1) / sqrt(v0 / CAST(n0 AS DOUBLE) + v1 / CAST(n1 AS DOUBLE))", 4)} AS z
-         |FROM t""".stripMargin,
-    "q_cuped" ->
+         |FROM t""".stripMargin),
+    Gate("q_cuped", qCuped,
       s"""WITH ev AS (
          |  SELECT user_id, value,
          |    epoch_us(CAST(ts AS TIMESTAMP)) // $DAY_US AS di FROM events),
@@ -1817,8 +1776,8 @@ object EventOps {
          |  ${Fns.roundPSql("(my0 - my1) / sqrt(vy0 / CAST(n0 AS DOUBLE) + vy1 / CAST(n1 AS DOUBLE))", 4)} AS z_naive,
          |  ${Fns.roundPSql("(ma0 - ma1) / sqrt(va0 / CAST(n0 AS DOUBLE) + va1 / CAST(n1 AS DOUBLE))", 4)} AS z_cuped,
          |  ${Fns.roundPSql("1.0::DOUBLE - vyc / vy", 6)} AS var_reduction
-         |FROM t3""".stripMargin,
-    "q_bootstrap_ci" ->
+         |FROM t3""".stripMargin),
+    Gate("q_bootstrap_ci", qBootstrapCi,
       s"""WITH ev AS (SELECT event_id, value FROM events),
          |pt AS (SELECT count(*) AS n_events,
          |    sum(CAST(value AS DECIMAL(18,2))) AS sv FROM ev),
@@ -1860,8 +1819,8 @@ object EventOps {
          |  ${Fns.roundPSql("sqrt((CAST(smm AS DOUBLE) - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) / CAST(b_n AS DOUBLE)) / (CAST(b_n AS DOUBLE) - 1))", 6)} AS se,
          |  ${Fns.roundPSql("lo", 6)} AS ci_lo,
          |  ${Fns.roundPSql("hi", 6)} AS ci_hi
-         |FROM st CROSS JOIN pt""".stripMargin,
-    "q_transitions" ->
+         |FROM st CROSS JOIN pt""".stripMargin),
+    Gate("q_transitions", qTransitions,
       s"""WITH r AS (
          |  SELECT event_type, lead(event_type) OVER (
          |    PARTITION BY user_id ORDER BY ts, event_id) AS nxt
@@ -1871,8 +1830,8 @@ object EventOps {
          |t AS (SELECT cur, sum(cnt) AS tot FROM p GROUP BY 1)
          |SELECT p.cur, p.nxt, p.cnt,
          |  ${Fns.roundPSql("CAST(p.cnt AS DOUBLE) / CAST(t.tot AS DOUBLE)", 6)} AS prob
-         |FROM p JOIN t USING (cur) ORDER BY 1, 2""".stripMargin,
-    "q_funnel_time" ->
+         |FROM p JOIN t USING (cur) ORDER BY 1, 2""".stripMargin),
+    Gate("q_funnel_time", qFunnelTime,
       s"""WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
          |t1 AS (SELECT user_id, min(t) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1),
          |t2 AS (SELECT e.user_id, min(t) AS t2, min(t1) AS t1k FROM e JOIN t1 USING (user_id)
@@ -1886,8 +1845,8 @@ object EventOps {
          |SELECT 'click>purchase', count(*),
          |  ${Fns.roundPSql("sum(epoch_us(t3) - epoch_us(t2k))::DOUBLE / count(*) / 1e6", 3)}
          |FROM t3
-         |ORDER BY leg""".stripMargin,
-    "q_event_paths" ->
+         |ORDER BY leg""".stripMargin),
+    Gate("q_event_paths", qEventPaths,
       s"""WITH r AS (
          |  SELECT user_id, event_type,
          |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
@@ -1895,8 +1854,8 @@ object EventOps {
          |p AS (SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path
          |      FROM r WHERE rn <= $PATH_LEN GROUP BY 1)
          |SELECT path, count(*) AS n_users FROM p
-         |GROUP BY 1 ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
-    "q_seasonal_error" ->
+         |GROUP BY 1 ORDER BY n_users DESC, path LIMIT 20""".stripMargin),
+    Gate("q_seasonal_error", qSeasonalError,
       s"""WITH hourly AS (
          |  SELECT $sqlWs // 3600 AS hr, event_type,
          |         sum(CAST(value AS DECIMAL(18,6))) AS v
@@ -1906,12 +1865,12 @@ object EventOps {
          |    / 1000000 AS mae
          |FROM hourly a
          |JOIN hourly b ON a.event_type = b.event_type AND a.hr = b.hr + 24
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
     // Holt recurrence: the recursive CTE's expression trees repeat the
     // driver fold's literal op order exactly (f = l+b reused, lNew
     // repeated verbatim inside bNew), so every intermediate double is
     // bit-identical; base = state after step 1 with l0=y0, b0=y1-y0
-    "q_holt_forecast" -> {
+    Gate("q_holt_forecast", qHoltForecast, {
       val (a, a1, bc, b1) =
         (HOLT_ALPHA, 1 - HOLT_ALPHA, HOLT_BETA, 1 - HOLT_BETA)
       s"""WITH RECURSIVE
@@ -1948,12 +1907,12 @@ object EventOps {
          |  ${Fns.roundPSql("r.b", 6)} AS trend
          |FROM rec r JOIN ln USING (event_type)
          |WHERE r.i = ln.len - 1 ORDER BY r.event_type""".stripMargin
-    },
+    }),
     // Holt–Winters: same op-order-identity discipline as q_holt_forecast,
     // with the 24-slot seasonal state carried as a DOUBLE list updated one
     // slot per step; every expression tree repeats the driver fold's
     // literal op order (lNew's tree verbatim inside bNew and the s update)
-    "q_holt_winters" -> {
+    Gate("q_holt_winters", qHoltWinters, {
       val (a, a1, bc, b1, g, g1) = (HW_ALPHA, 1 - HW_ALPHA, HW_BETA,
         1 - HW_BETA, HW_GAMMA, 1 - HW_GAMMA)
       val m = HW_M
@@ -2006,10 +1965,10 @@ object EventOps {
          |FROM rec r JOIN ln USING (event_type)
          |WHERE r.i = ln.len - 1 AND ln.len > ${2 * m}
          |ORDER BY r.event_type""".stripMargin
-    },
+    }),
     // Benford: integer leading digit, literal-baked expectations, decimal-
     // summed chi-square terms
-    "q_benford" -> {
+    Gate("q_benford", qBenford, {
       val vals = BENFORD_P
         .map { case (dd, p) => s"($dd, $p::DOUBLE)" }.mkString(", ")
       s"""WITH q AS (
@@ -2039,10 +1998,10 @@ object EventOps {
          |  max(CASE WHEN digit = 1 THEN ${Fns.roundPSql(
              "CAST(obs AS DOUBLE) / CAST(n AS DOUBLE)", 6)} END) AS d1_share
          |FROM tv GROUP BY 1, 2 ORDER BY 1""".stripMargin
-    },
+    }),
     // Wilson bound: the identical double expression tree, z as the same
     // 1.96 literal, ranking on the rounded bound
-    "q_wilson_ctr" -> {
+    Gate("q_wilson_ctr", qWilsonCtr, {
       val n = "CAST(views + clicks AS DOUBLE)"
       val p = s"(CAST(clicks AS DOUBLE) / $n)"
       val z = "1.96::DOUBLE"
@@ -2060,10 +2019,10 @@ object EventOps {
          |  ${Fns.roundPSql(lb, 6)} AS wilson_lb
          |FROM a WHERE views + clicks > 0
          |ORDER BY wilson_lb DESC, hod""".stripMargin
-    },
+    }),
     // median/MAD: quantile_cont over centi-integers — (a+b)/2 is exact
     // IEEE, deviations are exact doubles, one threshold multiply
-    "q_mad_outliers" ->
+    Gate("q_mad_outliers", qMadOutliers,
       s"""WITH q AS (
          |  SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS xq
          |  FROM events),
@@ -2083,10 +2042,10 @@ object EventOps {
          |   WHERE d.event_type = m.event_type AND d.dev > 3.0::DOUBLE * a.mad)
          |    AS n_outliers
          |FROM med m JOIN mad a USING (event_type)
-         |ORDER BY m.event_type""".stripMargin,
+         |ORDER BY m.event_type""".stripMargin),
     // CUSUM via the prefix closed form: S = cum − min(0, running-min cum),
     // exact centi-integers end to end
-    "q_cusum" ->
+    Gate("q_cusum", qCusum,
       s"""WITH z AS (
          |  SELECT user_id, ts, event_id,
          |    CAST(floor(value * 100 + 0.5) AS BIGINT) - $CUSUM_MU - $CUSUM_K AS z
@@ -2106,9 +2065,9 @@ object EventOps {
          |SELECT user_id, count(*) AS n_events,
          |  CAST(max(s) AS BIGINT) AS max_s,
          |  count(CASE WHEN s > $CUSUM_H THEN 1 END) AS n_alarms
-         |FROM sv GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM sv GROUP BY 1 ORDER BY 1""".stripMargin),
     // autocorrelation: exact HUGEINT moments, one fixed double tree for r
-    "q_autocorr" -> {
+    Gate("q_autocorr", qAutocorr, {
       val D = (n: String) => s"CAST($n AS DOUBLE)"
       s"""WITH c AS (
          |  SELECT $sqlWs // 3600 AS hr, count(*) AS cnt
@@ -2127,10 +2086,10 @@ object EventOps {
                s"nullif(sqrt((${D("n_pairs")} * ${D("sxx")} - ${D("sx")} * ${D("sx")}) * " +
                s"(${D("n_pairs")} * ${D("syy")} - ${D("sy")} * ${D("sy")})), 0.0)", 6)} AS acf
          |FROM m ORDER BY lag""".stripMargin
-    },
+    }),
     // last-touch attribution, derived as the DEFINITIONAL ranked join
     // (candidate clicks ranked per purchase) rather than the window form
-    "q_attribution" ->
+    Gate("q_attribution", qAttribution,
       s"""WITH ev AS (
          |  SELECT user_id, event_type, event_id,
          |    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
@@ -2154,8 +2113,8 @@ object EventOps {
          |  ${Fns.roundPSql(
              "(CAST(sum(us - cus) AS DOUBLE) / CAST(count(cid) AS DOUBLE)) / 1000000.0",
              6)} AS avg_gap_s
-         |FROM att GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_user_lag" ->
+         |FROM att GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_user_lag", qUserLag,
       s"""SELECT event_id, user_id, value,
          |  lag(value, 1) OVER w AS prev_value,
          |  lead(value, 1) OVER w AS next_value,
@@ -2163,10 +2122,10 @@ object EventOps {
          |  ${Fns.roundPSql("cume_dist() OVER w", 6)} AS cume
          |FROM events
          |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         |ORDER BY event_id""".stripMargin,
+         |ORDER BY event_id""".stripMargin),
     // EWMA: value / 2^k is exact IEEE scaling; decimal-cast terms sum
     // order-independently (ties on ts broken by event_id on both sides)
-    "q_ewma" ->
+    Gate("q_ewma", qEwma,
       s"""WITH r AS (
          |  SELECT user_id, value,
          |    row_number() OVER (
@@ -2177,11 +2136,11 @@ object EventOps {
             s"CAST(sum(CASE WHEN k <= $EWMA_W THEN " +
               s"CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) << ($EWMA_W - k) " +
               s"END) AS DOUBLE) / CAST(${100L * (1L << EWMA_W)} AS DOUBLE)", 6)} AS ewma
-         |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_distinct_users" ->
+         |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Gate("q_distinct_users", qDistinctUsers,
       """SELECT event_type, count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_info_gain" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_info_gain", qInfoGain,
       s"""WITH j AS (
          |  SELECT event_type, CAST(value >= 50.0 AS INT) AS hi, count(*) AS cnt
          |  FROM events GROUP BY 1, 2),
@@ -2200,8 +2159,8 @@ object EventOps {
          |  SELECT CAST(sum(CAST((ttot::DOUBLE / total) * h_type
          |    AS DECIMAL(28,18))) AS DOUBLE) AS h_cond
          |  FROM ht, tot)
-         |SELECT ${Fns.roundPSql("h_label - h_cond", 6)} AS info_gain FROM hl, hc""".stripMargin,
-    "q_sliding_features" ->
+         |SELECT ${Fns.roundPSql("h_label - h_cond", 6)} AS info_gain FROM hl, hc""".stripMargin),
+    Gate("q_sliding_features", qSlidingFeatures,
       s"""WITH e AS (
          |  SELECT event_id, user_id, event_type, value,
          |    epoch_us(CAST(ts AS TIMESTAMP)) AS tsu
@@ -2216,20 +2175,20 @@ object EventOps {
          |    RANGE BETWEEN $FEAT_WINDOW_US PRECEDING AND 1 PRECEDING))
          |SELECT event_id, user_id, n_prev_1d,
          |  ${Fns.roundPSql("sum_prev", 6)} AS sum_prev_1d, max_prev_1d
-         |FROM w WHERE event_type = '$FEAT_LABEL' ORDER BY event_id""".stripMargin,
-    "q_window_agg" ->
+         |FROM w WHERE event_type = '$FEAT_LABEL' ORDER BY event_id""".stripMargin),
+    Gate("q_window_agg", qWindowAgg,
       s"""SELECT $sqlWs AS ws, event_type, count(*) AS cnt,
          |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-         |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin,
-    "q_window_top" ->
+         |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin),
+    Gate("q_window_top", qWindowTop,
       s"""WITH c AS (
          |  SELECT $sqlWs AS ws, event_type, count(*) AS cnt
          |  FROM events GROUP BY 1, 2),
          |r AS (SELECT ws, event_type, cnt,
          |  row_number() OVER (PARTITION BY ws ORDER BY cnt DESC, event_type ASC) AS rn
          |  FROM c)
-         |SELECT ws, event_type, cnt FROM r WHERE rn = 1 ORDER BY ws""".stripMargin,
-    "q_sessionize" ->
+         |SELECT ws, event_type, cnt FROM r WHERE rn = 1 ORDER BY ws""".stripMargin),
+    Gate("q_sessionize", qSessionize,
       s"""WITH l AS (
          |  SELECT user_id,
          |    CAST(ts AS TIMESTAMP) AS t,
@@ -2239,15 +2198,15 @@ object EventOps {
          |  CAST(sum(CASE WHEN prev_t IS NULL
          |        OR epoch_us(t) - epoch_us(prev_t) > ${GAP_MIN * 60L * 1000000L} THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
          |  count(*) AS n_events
-         |FROM l GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_entropy" ->
+         |FROM l GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Gate("q_entropy", qEntropy,
       s"""WITH c AS (SELECT event_type, count(*) AS cnt FROM events GROUP BY 1),
          |t AS (SELECT count(*) AS total FROM events),
          |p AS (SELECT cnt::DOUBLE / total AS p FROM c, t)
          |SELECT ${Fns.roundPSql(
                "CAST(sum(CAST(-p * log2(p) AS DECIMAL(28,18))) AS DOUBLE)", 6)} AS entropy
-         |FROM p""".stripMargin,
-    "q_anomaly" ->
+         |FROM p""".stripMargin),
+    Gate("q_anomaly", qAnomaly,
       s"""WITH st AS (
          |  SELECT event_type,
          |    CAST(count(*) AS DOUBLE) AS n,
@@ -2262,8 +2221,8 @@ object EventOps {
          |  CAST(sum(CASE WHEN abs(e.value - s2.mean) > $Z_T::DOUBLE * s2.std
          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
          |FROM events e JOIN s2 USING (event_type)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_regression" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_regression", qRegression,
       s"""WITH b AS (
          |  SELECT event_type,
          |    CAST((epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS DOUBLE) AS x,
@@ -2284,8 +2243,8 @@ object EventOps {
              "(sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n", 6)} AS intercept,
          |  ${Fns.roundPSql(
              "(n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))", 6)} AS pearson_r
-         |FROM m ORDER BY event_type""".stripMargin,
-    "q_funnel" ->
+         |FROM m ORDER BY event_type""".stripMargin),
+    Gate("q_funnel", qFunnel,
       """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
         |t1 AS (SELECT user_id, min(t) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1),
         |t2 AS (SELECT e.user_id, min(t) AS t2 FROM e JOIN t1 USING (user_id)
@@ -2295,8 +2254,8 @@ object EventOps {
         |SELECT 1 AS step, 'view' AS step_name, (SELECT count(*) FROM t1) AS n_users
         |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM t2)
         |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM t3)
-        |ORDER BY step""".stripMargin,
-    "q_retention" ->
+        |ORDER BY step""".stripMargin),
+    Gate("q_retention", qRetention,
       s"""WITH ud AS (SELECT DISTINCT user_id,
          |    epoch_us(CAST(ts AS TIMESTAMP)) // $DAY_US AS day_idx FROM events),
          |act AS (SELECT day_idx, count(*) AS n_active FROM ud GROUP BY 1),
@@ -2305,6 +2264,6 @@ object EventOps {
          |        GROUP BY 1)
          |SELECT act.day_idx, act.n_active, COALESCE(ret.n_retained, 0) AS n_retained,
          |  ${Fns.roundPSql("COALESCE(ret.n_retained, 0)::DOUBLE / act.n_active", 4)} AS retention_rate
-         |FROM act LEFT JOIN ret USING (day_idx) ORDER BY day_idx""".stripMargin,
+         |FROM act LEFT JOIN ret USING (day_idx) ORDER BY day_idx""".stripMargin),
   )
 }

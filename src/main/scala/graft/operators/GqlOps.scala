@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.Tables
 import graft.gql.GqlEngine
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Correctness-gated GQL end-to-end queries: each entry builds a graph in a
@@ -17,8 +17,6 @@ import org.apache.spark.sql.functions._
   * miniature — real bulk loads go straight to parquet via the catalog.
   */
 object GqlOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Read-only catalog shared by the pure-query entries: q_gql_filter /
     * q_gql_neighbors never mutate, so rebuilding the graph per invocation
     * (as a bench loop does) only re-measures catalog writes. q_gql_mutate
@@ -94,19 +92,12 @@ object GqlOps {
       .orderBy("a", "b", "c")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_gql_filter"    -> qGqlFilter,
-    "q_gql_neighbors" -> qGqlNeighbors,
-    "q_gql_mutate"    -> qGqlMutate,
-    "q_gql_motif"     -> qGqlMotif,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_gql_filter" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("q_gql_filter", qGqlFilter,
       """SELECT n_nationkey, n_name, n_regionkey FROM nation
         |WHERE n_regionkey BETWEEN 1 AND 3 AND n_nationkey > 5
-        |ORDER BY n_nationkey""".stripMargin,
-    "q_gql_neighbors" ->
+        |ORDER BY n_nationkey""".stripMargin),
+    Gate("q_gql_neighbors", qGqlNeighbors,
       """WITH ring AS (
         |  SELECT n_nationkey AS src,
         |    coalesce(lead(n_nationkey) OVER w,
@@ -116,12 +107,12 @@ object GqlOps {
         |SELECT DISTINCT n_nationkey FROM (
         |  SELECT dst AS n_nationkey FROM ring WHERE src = 3
         |  UNION ALL SELECT src FROM ring WHERE dst = 3)
-        |ORDER BY n_nationkey""".stripMargin,
-    "q_gql_mutate" ->
+        |ORDER BY n_nationkey""".stripMargin),
+    Gate("q_gql_mutate", qGqlMutate,
       """SELECT n_nationkey,
         |  CASE WHEN n_regionkey = 0 THEN 'RENAMED' ELSE n_name END AS n_name
-        |FROM nation WHERE n_regionkey <> 4 ORDER BY n_nationkey""".stripMargin,
-    "q_gql_motif" ->
+        |FROM nation WHERE n_regionkey <> 4 ORDER BY n_nationkey""".stripMargin),
+    Gate("q_gql_motif", qGqlMotif,
       """WITH ring AS (
         |  SELECT n_nationkey AS src,
         |    coalesce(lead(n_nationkey) OVER w,
@@ -130,6 +121,6 @@ object GqlOps {
         |  WINDOW w AS (PARTITION BY n_regionkey ORDER BY n_nationkey))
         |SELECT r1.src AS a, r1.dst AS b, r2.dst AS c
         |FROM ring r1 JOIN ring r2 ON r1.dst = r2.src
-        |ORDER BY a, b, c""".stripMargin,
+        |ORDER BY a, b, c""".stripMargin),
   )
 }

@@ -28,8 +28,6 @@ import org.apache.spark.sql.functions._
   * graph object, no collect.
   */
 object GraphOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Probe vertex for neighbor/walk queries. */
   val SRC_NATION = 3
   /** Walk bounds: BFS hop cap / Bellman-Ford relaxation rounds. */
@@ -211,16 +209,6 @@ object GraphOps {
       .orderBy("node")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_edge_scan" -> qEdgeScan,
-    "q_neighbors" -> qNeighbors,
-    "q_degree"    -> qDegree,
-    "q_bfs"       -> qBfs,
-    "q_sssp"      -> qSssp,
-    "q_pagerank"  -> qPagerank,
-    "q_scc"       -> qScc,
-  )
-
   // ---- DuckDB oracles ------------------------------------------------------
 
   private val sqlTrade =
@@ -240,18 +228,18 @@ object GraphOps {
        |    FROM trade)
        |  WHERE rn <= $TOP_PARTNERS)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q_edge_scan" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("q_edge_scan", qEdgeScan,
       s"""WITH $sqlTrade
-         |SELECT src, dst, cnt FROM trade WHERE src = $SRC_NATION ORDER BY dst""".stripMargin,
-    "q_neighbors" ->
+         |SELECT src, dst, cnt FROM trade WHERE src = $SRC_NATION ORDER BY dst""".stripMargin),
+    Gate("q_neighbors", qNeighbors,
       s"""WITH $sqlTrade
          |SELECT DISTINCT neighbor FROM (
          |  SELECT dst AS neighbor FROM trade WHERE src = $SRC_NATION
          |  UNION ALL
          |  SELECT src AS neighbor FROM trade WHERE dst = $SRC_NATION)
-         |WHERE neighbor <> $SRC_NATION ORDER BY neighbor""".stripMargin,
-    "q_degree" ->
+         |WHERE neighbor <> $SRC_NATION ORDER BY neighbor""".stripMargin),
+    Gate("q_degree", qDegree,
       s"""WITH $sqlTrade, $sqlTop
          |SELECT n.n_nationkey,
          |  coalesce(o.out_deg, 0) AS out_deg,
@@ -259,16 +247,16 @@ object GraphOps {
          |FROM nation n
          |LEFT JOIN (SELECT src, count(*) AS out_deg FROM top GROUP BY 1) o ON n.n_nationkey = o.src
          |LEFT JOIN (SELECT dst, count(*) AS in_deg FROM top GROUP BY 1) i ON n.n_nationkey = i.dst
-         |ORDER BY n.n_nationkey""".stripMargin,
-    "q_bfs" ->
+         |ORDER BY n.n_nationkey""".stripMargin),
+    Gate("q_bfs", qBfs,
       s"""WITH RECURSIVE $sqlTrade, $sqlTop,
          |walk(node, hop) AS (
          |  SELECT $SRC_NATION, 0
          |  UNION ALL
          |  SELECT t.dst, w.hop + 1 FROM walk w JOIN top t ON t.src = w.node
          |  WHERE w.hop < $MAX_HOPS)
-         |SELECT node, min(hop) AS hops FROM walk GROUP BY node ORDER BY node""".stripMargin,
-    "q_sssp" ->
+         |SELECT node, min(hop) AS hops FROM walk GROUP BY node ORDER BY node""".stripMargin),
+    Gate("q_sssp", qSssp,
       s"""WITH RECURSIVE $sqlTrade, $sqlTop,
          |walk(node, cost, depth) AS (
          |  SELECT $SRC_NATION, 0.0::DOUBLE, 0
@@ -277,8 +265,8 @@ object GraphOps {
          |  FROM walk w JOIN top t ON t.src = w.node
          |  WHERE w.depth < $SSSP_ROUNDS)
          |SELECT node, ${Fns.roundPSql("min(cost)", 8)} AS cost
-         |FROM walk GROUP BY node ORDER BY node""".stripMargin,
-    "q_scc" ->
+         |FROM walk GROUP BY node ORDER BY node""".stripMargin),
+    Gate("q_scc", qScc,
       s"""WITH RECURSIVE $sqlTrade, $sqlTop,
          |reach(src, dst) AS (
          |  SELECT n_nationkey, n_nationkey FROM nation
@@ -286,8 +274,8 @@ object GraphOps {
          |  SELECT r.src, t.dst FROM reach r JOIN top t ON t.src = r.dst)
          |SELECT a.src AS node, min(a.dst) AS scc_id
          |FROM reach a JOIN reach b ON a.src = b.dst AND a.dst = b.src
-         |GROUP BY a.src ORDER BY node""".stripMargin,
-    "q_pagerank" -> {
+         |GROUP BY a.src ORDER BY node""".stripMargin),
+    Gate("q_pagerank", qPagerank, {
       // 5 unrolled iterations via chained CTEs (r0..r5); contributions
       // decimal-summed exactly like the Spark side.
       val iters = (1 to PR_ITERS).map { i =>
@@ -307,6 +295,6 @@ object GraphOps {
          |$iters
          |SELECT node, ${Fns.roundPSql("rank", 8)} AS pagerank
          |FROM r$PR_ITERS ORDER BY node""".stripMargin
-    },
+    }),
   )
 }

@@ -20,8 +20,6 @@ import org.apache.spark.storage.StorageLevel
   * a non-doc key.
   */
 object ModelOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Winnowing k-gram width (token shingles) and window size — Schleimer,
     * Wilkerson & Aiken, "Winnowing: Local Algorithms for Document
     * Fingerprinting" (SIGMOD 2003). Any shared run of [[WIN_W]] + [[WIN_K]]
@@ -1016,23 +1014,6 @@ object ModelOps {
       .orderBy("brand")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_bradley_terry" -> qBradleyTerry,
-    "q_lr_quality"   -> qLrQuality,
-    "q_lr_metrics"   -> qLrMetrics,
-    "q_lr_calibration" -> qLrCalibration,
-    "q_nb_lang"      -> qNbLang,
-    "q_nb_metrics"   -> qNbMetrics,
-    "q_calibration"  -> qCalibration,
-    "q_isotonic"     -> qIsotonic,
-    "q_auc"          -> qAuc,
-    "q_winnow"       -> qWinnow,
-    "q_bpe_merges"   -> qBpeMerges,
-    "q_bpe_tokenize" -> qBpeTokenize,
-    "q_unigram_lm"   -> qUnigramLm,
-    "q_unigram_tokenize" -> qUnigramTokenize,
-  )
-
   // ---- DuckDB oracles ------------------------------------------------------
 
   private val sqlToksLower = TextOps.sqlTokensLower
@@ -1445,22 +1426,22 @@ object ModelOps {
        |  ${Fns.roundPSql("abs(mean_p - frac_pos)", 6)} AS gap
        |FROM r2 ORDER BY bucket""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q_bradley_terry" -> sqlBradleyTerry,
-    "q_lr_quality" -> sqlLrQuality,
-    "q_lr_metrics" -> sqlLrMetrics,
-    "q_lr_calibration" -> sqlLrCalibration,
-    "q_bpe_merges" -> bpeSql,
-    "q_bpe_tokenize" -> bpeTokenizeSql,
-    "q_unigram_lm" -> uniLmSql,
-    "q_unigram_tokenize" -> uniTokenizeSql,
-    "q_nb_lang" -> s"$sqlNbConfusion\nORDER BY 1, 2",
-    "q_calibration" -> sqlCalibration,
-    "q_isotonic" -> sqlIsotonic,
-    "q_auc" -> sqlAuc,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_bradley_terry", qBradleyTerry, sqlBradleyTerry),
+    Gate("q_lr_quality", qLrQuality, sqlLrQuality),
+    Gate("q_lr_metrics", qLrMetrics, sqlLrMetrics),
+    Gate("q_lr_calibration", qLrCalibration, sqlLrCalibration),
+    Gate("q_bpe_merges", qBpeMerges, bpeSql),
+    Gate("q_bpe_tokenize", qBpeTokenize, bpeTokenizeSql),
+    Gate("q_unigram_lm", qUnigramLm, uniLmSql),
+    Gate("q_unigram_tokenize", qUnigramTokenize, uniTokenizeSql),
+    Gate("q_nb_lang", qNbLang, s"$sqlNbConfusion\nORDER BY 1, 2"),
+    Gate("q_calibration", qCalibration, sqlCalibration),
+    Gate("q_isotonic", qIsotonic, sqlIsotonic),
+    Gate("q_auc", qAuc, sqlAuc),
     // metrics from the SAME confusion chain; one integer-operand division
     // per ratio, nullif for never-predicted classes
-    "q_nb_metrics" ->
+    Gate("q_nb_metrics", qNbMetrics,
       s"""WITH conf AS ($sqlNbConfusion),
          |cls AS (SELECT DISTINCT lang FROM conf),
          |tp AS (SELECT lang, sum(n) AS tp FROM conf WHERE lang = pred GROUP BY 1),
@@ -1482,8 +1463,8 @@ object ModelOps {
          |  ${Fns.roundPSql(
              "CAST(2 * tp AS DOUBLE) / nullif(CAST(2 * tp + fp + fn AS DOUBLE), 0.0)",
              6)} AS f1
-         |FROM m ORDER BY lang""".stripMargin,
-    "q_winnow" ->
+         |FROM m ORDER BY lang""".stripMargin),
+    Gate("q_winnow", qWinnow,
       s"""WITH tk AS (SELECT doc_id, $sqlToks AS w, $sqlWsTrim AS t FROM documents),
          |sh AS (SELECT doc_id, CASE WHEN len(w) >= $WIN_K
          |    THEN list_transform(range(1, len(w) - ${WIN_K - 2}),
@@ -1504,6 +1485,6 @@ object ModelOps {
          |  GROUP BY 1, 2, 3, 4 HAVING count(*) >= $WIN_MINSHARED)
          |SELECT doc_a, doc_b, n_shared, n_a, n_b,
          |  ${Fns.roundPSql("CAST(n_shared AS DOUBLE) / (n_a + n_b - n_shared)", 4)} AS overlap
-         |FROM pairs ORDER BY n_shared DESC, doc_a, doc_b""".stripMargin,
+         |FROM pairs ORDER BY n_shared DESC, doc_a, doc_b""".stripMargin),
   )
 }

@@ -32,8 +32,6 @@ import org.apache.spark.sql.functions._
   * columnar metadata path that never leaves codegen.
   */
 object MultimodalOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Image geometry: every payload renders as a [[MM_W]]-pixel-wide RGB
     * image, [[ROW_BYTES]] bytes per pixel row, zero-padded to whole rows. */
   val MM_W = 16
@@ -755,20 +753,6 @@ object MultimodalOps {
       .distinct()
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_mm_phash"    -> qMmPhash,
-    "q_phash_near"  -> qPhashNear,
-    "q_mm_video"    -> qMmVideo,
-    "q_mm_keyframes" -> qMmKeyframes,
-    "q_mm_meta"     -> qMmMeta,
-    "q_mm_features" -> qMmFeatures,
-    "q_mm_decode"   -> qMmDecode,
-    "q_mm_frames"   -> qMmFrames,
-    "q_mm_resize"   -> qMmResize,
-    "q_mm_audio"    -> qMmAudio,
-    "q_audio_features" -> qAudioFeatures,
-  )
-
   // ---- DuckDB oracles ------------------------------------------------------
   // The oracle derives every pixel value analytically from the text (byte
   // i of the raster is ord(text[i+1]) below the text length, 0 in the
@@ -776,10 +760,10 @@ object MultimodalOps {
   // char positions == byte positions (asserted per SF dir in the fixture
   // checks), and ord() over ASCII is the byte value.
 
-  val oracles: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
     // audio lane: samples, duration, peak, zero crossings, energy derived
     // analytically from the text bytes — no WAV container on this side
-    "q_mm_audio" ->
+    Gate("q_mm_audio", qMmAudio,
       s"""WITH b AS (
          |  SELECT doc_id,
          |    list_transform(range(1, length(text) + 1),
@@ -792,11 +776,11 @@ object MultimodalOps {
          |  CAST(len(list_filter(range(1, len(s)),
          |    i -> (s[i] >= 0) <> (s[i+1] >= 0))) AS BIGINT) AS zero_cross,
          |  CAST(coalesce(list_sum(list_transform(s, x -> CAST(x AS BIGINT) * x)), 0) AS BIGINT) AS energy
-         |FROM b ORDER BY doc_id""".stripMargin,
+         |FROM b ORDER BY doc_id""".stripMargin),
     // video clip: byte i (1-based, i <= rlen) of frame f is
     // ord(text[f*chunk + i]) when i <= chunk and in-range, else 0; frame -1
     // is black, so frame 0's motion equals its checksum
-    "q_mm_video" -> {
+    Gate("q_mm_video", qMmVideo, {
       def byteAt(frame: String) =
         s"""CASE WHEN i <= chunk AND $frame * chunk + i <= len
            |  THEN ord(text[CAST($frame * chunk + i AS INT)]) ELSE 0 END""".stripMargin
@@ -819,10 +803,10 @@ object MultimodalOps {
          |      CASE WHEN fr = 0 THEN 0 ELSE ${byteAt("(fr - 1)")} END))), 0) AS BIGINT)
          |    AS motion
          |FROM f ORDER BY doc_id, frame""".stripMargin
-    },
+    }),
     // keyframes: q_mm_video's analytic motion chain + the integer
     // cross-multiplied clip-mean threshold; frame 0 always kept
-    "q_mm_keyframes" -> {
+    Gate("q_mm_keyframes", qMmKeyframes, {
       def byteAt(frame: String) =
         s"""CASE WHEN i <= chunk AND $frame * chunk + i <= len
            |  THEN ord(text[CAST($frame * chunk + i AS INT)]) ELSE 0 END""".stripMargin
@@ -852,10 +836,10 @@ object MultimodalOps {
          |SELECT doc_id, frame, motion,
          |  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY frame) AS INT) AS kf_rank
          |FROM k ORDER BY doc_id, frame""".stripMargin
-    },
+    }),
     // short-time frames: slice the analytic sample list into 64-sample
     // runs; within-frame zero crossings only (adjacent pairs of the slice)
-    "q_audio_features" ->
+    Gate("q_audio_features", qAudioFeatures,
       s"""WITH b AS (
          |  SELECT doc_id,
          |    list_transform(range(1, length(text) + 1),
@@ -876,14 +860,14 @@ object MultimodalOps {
          |  CAST(coalesce(list_max(list_transform(fr, x -> abs(x))), 0) AS BIGINT) AS peak,
          |  CAST(len(list_filter(range(1, len(fr)),
          |    i -> (fr[i] >= 0) <> (fr[i+1] >= 0))) AS BIGINT) AS zero_cross
-         |FROM f ORDER BY doc_id, frame_id""".stripMargin,
-    "q_mm_meta" ->
+         |FROM f ORDER BY doc_id, frame_id""".stripMargin),
+    Gate("q_mm_meta", qMmMeta,
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  md5(text) AS digest,
         |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_mm_features" -> {
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Gate("q_mm_features", qMmFeatures, {
       // channel c sum = Σ ord(text[i]) over 1-based i with (i-1)%3 = c;
       // padding bytes are 0 so summing the text alone is the raster sum.
       def chanSum(c: Int) =
@@ -907,8 +891,8 @@ object MultimodalOps {
          |  ${mean("s2", "px")} AS f2,
          |  ${mean("s0 + s1 + s2", "nr")} AS f3
          |FROM s ORDER BY doc_id""".stripMargin
-    },
-    "q_mm_phash" ->
+    }),
+    Gate("q_mm_phash", qMmPhash,
       s"""WITH d AS (
          |  SELECT doc_id, text, length(text) AS n,
          |    ((length(text) + ${ROW_BYTES - 1}) // $ROW_BYTES) * $ROW_BYTES AS L
@@ -937,8 +921,8 @@ object MultimodalOps {
          |  FROM cs GROUP BY 1)
          |SELECT doc_id, CAST(coalesce(phash, 0) AS BIGINT) AS phash,
          |  CAST(coalesce(n_ones, 0) AS INT) AS n_ones
-         |FROM ph ORDER BY doc_id""".stripMargin,
-    "q_phash_near" -> {
+         |FROM ph ORDER BY doc_id""".stripMargin),
+    Gate("q_phash_near", qPhashNear, {
       // band h_k of the 64-block aHash, derived analytically (same raster
       // model as q_mm_phash's oracle: byte i = ord(text[i]) under the
       // length, 0 in the row padding); candidates from the same 4×16-bit
@@ -991,8 +975,8 @@ object MultimodalOps {
          |  FROM cand JOIN ph x ON cand.a = x.doc_id JOIN ph y ON cand.b = y.doc_id)
          |SELECT a, b, CAST(hm AS INT) AS hamming FROM ham
          |WHERE hm <= $PH64_RADIUS ORDER BY a, b""".stripMargin
-    },
-    "q_mm_decode" ->
+    }),
+    Gate("q_mm_decode", qMmDecode,
       s"""WITH d AS (
          |  SELECT doc_id, text, length(text) AS n,
          |    (length(text) + ${ROW_BYTES - 1}) // $ROW_BYTES AS h
@@ -1004,8 +988,8 @@ object MultimodalOps {
          |    i -> ord(text[i]))), 0) AS BIGINT) AS checksum,
          |  CAST(coalesce(list_sum(list_transform(range(1, n + 1),
          |    i -> i * ord(text[i]))), 0) AS BIGINT) AS wsum
-         |FROM d ORDER BY doc_id""".stripMargin,
-    "q_mm_frames" ->
+         |FROM d ORDER BY doc_id""".stripMargin),
+    Gate("q_mm_frames", qMmFrames,
       s"""WITH d AS (
          |  SELECT doc_id, text, length(text) AS n,
          |    (length(text) + ${ROW_BYTES - 1}) // $ROW_BYTES AS h
@@ -1022,8 +1006,8 @@ object MultimodalOps {
          |    j -> j * CASE WHEN frame_idx * $ROW_BYTES + j <= n
          |              THEN ord(text[CAST(frame_idx * $ROW_BYTES + j AS INT)])
          |              ELSE 0 END)), 0) AS BIGINT) AS frame_wsum
-         |FROM fr ORDER BY doc_id, frame_idx""".stripMargin,
-    "q_mm_resize" ->
+         |FROM fr ORDER BY doc_id, frame_idx""".stripMargin),
+    Gate("q_mm_resize", qMmResize,
       // resized raster index m (0-based) maps back to source byte
       // (((m//3)//8)*2*16 + ((m//3)%8)*2)*3 + m%3 — even row, even col,
       // channel preserved; weight is m+1 like the Spark loop.
@@ -1043,6 +1027,6 @@ object MultimodalOps {
          |    i -> CASE WHEN i <= n THEN ord(t[CAST(i AS INT)]) ELSE 0 END)), 0) AS BIGINT) AS checksum,
          |  CAST(coalesce(list_sum(list_transform(range(1, len(src) + 1),
          |    m -> m * CASE WHEN src[m] <= n THEN ord(t[CAST(src[m] AS INT)]) ELSE 0 END)), 0) AS BIGINT) AS wsum
-         |FROM g ORDER BY doc_id""".stripMargin,
+         |FROM g ORDER BY doc_id""".stripMargin),
   )
 }

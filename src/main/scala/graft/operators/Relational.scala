@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Fns
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Relational query core — the Spark-native rendering of the reference's
@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
   * DuckDB-oracle hash compare is stable.
   */
 object Relational {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Q1/Q13 analog — full scan + grouped aggregation (the reference's
     * documented-but-stubbed `count(vertex)` intrinsic, README.md:190-197,
     * generalized to TPC-H Q1 shape). Map-side partial aggregation + a single
@@ -781,39 +779,6 @@ object Relational {
       .orderBy("source")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_profile"         -> qProfile,
-    "q_t_closeness"     -> qTCloseness,
-    "q_dp_release"      -> qDpRelease,
-    "q_profile_wide"    -> qProfileWide,
-    "q_k_anonymity"     -> qKAnonymity,
-    "q_l_diversity"     -> qLDiversity,
-    "q_gini"            -> qGini,
-    "q_pareto"          -> qPareto,
-    "q_cum_revenue"     -> qCumRevenue,
-    "q_small_order"     -> qSmallOrder,
-    "q_anti_join"       -> qAntiJoin,
-    "q_semi_join"       -> qSemiJoin,
-    "q_decile"          -> qDecile,
-    "q_cube"            -> qCube,
-    "q1_agg"            -> q1Agg,
-    "q_ship_priority"   -> qShipPriority,
-    "q_local_volume"    -> qLocalVolume,
-    "q_point_lookup"    -> qPointLookup,
-    "q_filter_range"    -> qFilterRange,
-    "q_in_list"         -> qInList,
-    "q_projection"      -> qProjection,
-    "q_exists"          -> qExists,
-    "q_topk"            -> qTopK,
-    "q_union_groups"    -> qUnionGroups,
-    "q_count"           -> qCount,
-    "q_distinct"        -> qDistinct,
-    "q_upsert_merge"    -> qUpsertMerge,
-    "q_remove_cascade"  -> qRemoveCascade,
-    "q_property_update" -> qPropertyUpdate,
-    "q_join_agg"        -> qJoinAgg,
-  )
-
   /** DuckDB canonicalizers mirroring [[profileSpec]] exactly. */
   private val sqlProfile: String = {
     val spec: Seq[(String, String => String)] = Seq(
@@ -880,10 +845,10 @@ object Relational {
        |) ORDER BY col_name""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q_profile" -> sqlProfile,
-    "q_profile_wide" -> sqlProfileWide,
-    "q_k_anonymity" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("q_profile", qProfile, sqlProfile),
+    Gate("q_profile_wide", qProfileWide, sqlProfileWide),
+    Gate("q_k_anonymity", qKAnonymity,
       s"""WITH sizes AS (
          |  SELECT c_nationkey AS nat, c_mktsegment AS seg,
          |    CAST(floor(c_acctbal / 1000.0) AS INTEGER) AS bal_kbucket,
@@ -897,8 +862,8 @@ object Relational {
          |  ${Fns.roundPSql(
              "CAST(sum(sz) - coalesce(sum(CASE WHEN sz < k THEN sz END), 0) AS DOUBLE) / CAST(sum(sz) AS DOUBLE)",
              6)} AS frac_rows_anon
-         |FROM sizes CROSS JOIN ks GROUP BY k ORDER BY k""".stripMargin,
-    "q_dp_release" ->
+         |FROM sizes CROSS JOIN ks GROUP BY k ORDER BY k""".stripMargin),
+    Gate("q_dp_release", qDpRelease,
       s"""WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
          |n AS (SELECT source, n_docs,
          |  (CAST(CAST('0x' || substr(md5('dp_' || source), 1, 8) AS BIGINT)
@@ -908,8 +873,8 @@ object Relational {
          |  ${Fns.roundPSql(
              "CAST(n_docs AS DOUBLE) + (CASE WHEN u < 0.5 THEN 1.0 ELSE -1.0 END) * ln(1 - 2 * abs(u - 0.5))",
              6)} AS noisy_n_docs
-         |FROM n ORDER BY source""".stripMargin,
-    "q_t_closeness" ->
+         |FROM n ORDER BY source""".stripMargin),
+    Gate("q_t_closeness", qTCloseness,
       s"""WITH cell AS (
          |  SELECT c_nationkey AS nat,
          |    CAST(floor(c_acctbal / 1000.0) AS INTEGER) AS bal_kbucket,
@@ -937,8 +902,8 @@ object Relational {
          |  ${Fns.roundPSql(
              "CAST(sum(sz) - coalesce(sum(CASE WHEN num * 10 > t20 * sz * n THEN sz END), 0) AS DOUBLE) / CAST(sum(sz) AS DOUBLE)",
              6)} AS frac_rows_close
-         |FROM cls CROSS JOIN ts GROUP BY t20 ORDER BY t""".stripMargin,
-    "q_l_diversity" ->
+         |FROM cls CROSS JOIN ts GROUP BY t20 ORDER BY t""".stripMargin),
+    Gate("q_l_diversity", qLDiversity,
       s"""WITH classes AS (
          |  SELECT c_nationkey AS nat,
          |    CAST(floor(c_acctbal / 1000.0) AS INTEGER) AS bal_kbucket,
@@ -952,8 +917,8 @@ object Relational {
          |  ${Fns.roundPSql(
              "CAST(sum(sz) - coalesce(sum(CASE WHEN ldiv < l THEN sz END), 0) AS DOUBLE) / CAST(sum(sz) AS DOUBLE)",
              6)} AS frac_rows_diverse
-         |FROM classes CROSS JOIN ls GROUP BY l ORDER BY l""".stripMargin,
-    "q_gini" ->
+         |FROM classes CROSS JOIN ls GROUP BY l ORDER BY l""".stripMargin),
+    Gate("q_gini", qGini,
       """WITH rev AS (
         |  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
         |  FROM orders GROUP BY 1),
@@ -963,8 +928,8 @@ object Relational {
         |  floor((2.0::DOUBLE * CAST(six AS DOUBLE) / (CAST(n_cust AS DOUBLE) * CAST(sx AS DOUBLE))
         |    - (CAST(n_cust AS DOUBLE) + 1) / CAST(n_cust AS DOUBLE)) * 1000000 + 0.5)
         |    / 1000000 AS gini
-        |FROM m""".stripMargin,
-    "q_pareto" ->
+        |FROM m""".stripMargin),
+    Gate("q_pareto", qPareto,
       """WITH rev AS (
         |  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
         |  FROM orders GROUP BY 1),
@@ -976,8 +941,8 @@ object Relational {
         |  floor(CAST(sum(r.rev) AS DOUBLE) / CAST(t.total AS DOUBLE) * 1000000 + 0.5)
         |    / 1000000 AS top_share
         |FROM r, t WHERE r.rk <= t.n_cust // 10
-        |GROUP BY t.n_cust, t.total""".stripMargin,
-    "q_cum_revenue" ->
+        |GROUP BY t.n_cust, t.total""".stripMargin),
+    Gate("q_cum_revenue", qCumRevenue,
       """WITH daily AS (
         |  SELECT o_orderpriority,
         |    datediff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS day_idx,
@@ -992,8 +957,8 @@ object Relational {
         |SELECT o_orderpriority, day_idx,
         |  CAST(rev AS DOUBLE) AS day_rev, CAST(cum AS DOUBLE) AS cum_rev,
         |  floor(CAST(cum AS DOUBLE) / CAST(tot AS DOUBLE) * 1000000 + 0.5) / 1000000 AS cum_share
-        |FROM w ORDER BY 1, 2""".stripMargin,
-    "q_small_order" ->
+        |FROM w ORDER BY 1, 2""".stripMargin),
+    Gate("q_small_order", qSmallOrder,
       """WITH pa AS (
         |  SELECT l_partkey AS p_key,
         |    sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty_sum,
@@ -1002,8 +967,8 @@ object Relational {
         |SELECT count(*) AS n_lines,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
         |FROM lineitem JOIN pa ON l_partkey = p_key
-        |WHERE CAST(l_quantity AS DECIMAL(18,2)) * qty_n * 5 < qty_sum""".stripMargin,
-    "q_anti_join" ->
+        |WHERE CAST(l_quantity AS DECIMAL(18,2)) * qty_n * 5 < qty_sum""".stripMargin),
+    Gate("q_anti_join", qAntiJoin,
       """SELECT c_nationkey, count(*) AS n_custs,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
         |FROM customer
@@ -1012,16 +977,16 @@ object Relational {
         |      > (SELECT sum(CAST(c_acctbal AS DECIMAL(18,2))) FROM customer WHERE c_acctbal > 0.0)
         |  AND NOT EXISTS (SELECT 1 FROM orders
         |    WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_semi_join" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_semi_join", qSemiJoin,
       """SELECT o_orderpriority, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |  WHERE l_orderkey = o_orderkey
         |    AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_decile" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_decile", qDecile,
       """WITH ranked AS (
         |  SELECT o_orderpriority, o_totalprice,
         |    ntile(10) OVER (PARTITION BY o_orderpriority
@@ -1031,8 +996,8 @@ object Relational {
         |  min(o_totalprice) AS lo, max(o_totalprice) AS hi,
         |  floor(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
         |        / count(*) * 10000 + 0.5) / 10000 AS avg_price
-        |FROM ranked GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_ship_priority" ->
+        |FROM ranked GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Gate("q_ship_priority", qShipPriority,
       """SELECT l_orderkey,
         |  epoch(o_orderdate)::BIGINT AS o_orderdate, o_orderpriority,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
@@ -1043,8 +1008,8 @@ object Relational {
         |  AND o_orderdate < TIMESTAMP '1995-03-15'
         |  AND l_shipdate > TIMESTAMP '1995-03-15'
         |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q_local_volume" ->
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
+    Gate("q_local_volume", qLocalVolume,
       """SELECT n_name,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
@@ -1054,8 +1019,8 @@ object Relational {
         |JOIN supplier ON l_suppkey = s_suppkey
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE c_nationkey = s_nationkey
-        |GROUP BY 1 ORDER BY revenue DESC, n_name""".stripMargin,
-    "q_cube" ->
+        |GROUP BY 1 ORDER BY revenue DESC, n_name""".stripMargin),
+    Gate("q_cube", qCube,
       """SELECT
         |  CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL' ELSE l_returnflag END AS rf,
         |  CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL' ELSE l_linestatus END AS ls,
@@ -1064,69 +1029,69 @@ object Relational {
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem
         |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY gid, rf, ls""".stripMargin,
-    "q1_agg" ->
+        |ORDER BY gid, rf, ls""".stripMargin),
+    Gate("q1_agg", q1Agg,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
         |  floor(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) * 10000 + 0.5) / 10000 AS avg_qty,
         |  count(*) AS cnt
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_point_lookup" ->
-      "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey = 42",
-    "q_filter_range" ->
+        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Gate("q_point_lookup", qPointLookup,
+      "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey = 42"),
+    Gate("q_filter_range", qFilterRange,
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
         |WHERE l_quantity >= 30.0
         |  AND l_shipdate >= TIMESTAMP '1995-01-01'
         |  AND l_shipdate <  TIMESTAMP '1996-01-01'
         |  AND (l_returnflag = 'R' OR l_discount > 0.05)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_in_list" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Gate("q_in_list", qInList,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE c_mktsegment IN ('BUILDING', 'AUTOMOBILE') ORDER BY c_custkey""".stripMargin,
-    "q_projection" ->
-      "SELECT p_partkey, p_name FROM part ORDER BY p_partkey",
-    "q_exists" ->
+        |WHERE c_mktsegment IN ('BUILDING', 'AUTOMOBILE') ORDER BY c_custkey""".stripMargin),
+    Gate("q_projection", qProjection,
+      "SELECT p_partkey, p_name FROM part ORDER BY p_partkey"),
+    Gate("q_exists", qExists,
       """SELECT event_type, count(*) AS cnt FROM events
         |WHERE props IS NOT NULL AND value IS NOT NULL
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_topk" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_topk", qTopK,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "q_union_groups" ->
+        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin),
+    Gate("q_union_groups", qUnionGroups,
       """SELECT 'region' AS grp, r_name AS name FROM region
         |UNION ALL SELECT 'nation' AS grp, n_name AS name FROM nation
-        |ORDER BY grp, name""".stripMargin,
-    "q_count" ->
-      "SELECT count(*) AS cnt FROM lineitem",
-    "q_distinct" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem ORDER BY 1, 2",
-    "q_upsert_merge" ->
+        |ORDER BY grp, name""".stripMargin),
+    Gate("q_count", qCount,
+      "SELECT count(*) AS cnt FROM lineitem"),
+    Gate("q_distinct", qDistinct,
+      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem ORDER BY 1, 2"),
+    Gate("q_upsert_merge", qUpsertMerge,
       """SELECT c_custkey, 'upserted#' || CAST(c_custkey AS VARCHAR) AS c_name,
         |       0 AS c_nationkey, 0.0 AS c_acctbal, 'UPSERTED' AS c_mktsegment
         |FROM customer WHERE c_custkey <= 10
         |UNION ALL
         |SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
         |FROM customer WHERE c_custkey > 10
-        |ORDER BY c_custkey""".stripMargin,
-    "q_remove_cascade" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Gate("q_remove_cascade", qRemoveCascade,
       """SELECT o_orderstatus, count(*) AS cnt,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders
         |WHERE o_custkey NOT IN (SELECT c_custkey FROM customer WHERE c_nationkey = 3)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_property_update" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_property_update", qPropertyUpdate,
       """SELECT CASE WHEN p_size > 40 THEN 'Brand#XL' ELSE p_brand END AS p_brand,
         |       count(*) AS cnt
-        |FROM part GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_join_agg" ->
+        |FROM part GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_join_agg", qJoinAgg,
       """SELECT n_name,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
         |  count(*) AS n_orders
         |FROM orders
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
   )
 }

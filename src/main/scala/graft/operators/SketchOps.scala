@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.{Fns, Kmv}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sketch operators — deterministic cardinality estimation at sketch-sized
@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions._
   * is oracle-gateable where HyperLogLog is not).
   */
 object SketchOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Micros per day — the activity grain being counted. private[graft] so
     * the spec pinning q_kmv_overlap's data precondition counts at the same
     * grain the query does. */
@@ -368,16 +366,8 @@ object SketchOps {
   def ddsketchOf(df: DataFrame, key: String, value: String): DataFrame =
     ddReport(ddBuckets(df, key, value), key)
 
-  val queries: Map[String, Q] = Map(
-    "q_kmv_distinct" -> qKmvDistinct,
-    "q_kmv_overlap"  -> qKmvOverlap,
-    "q_cms_topk"     -> qCmsTopk,
-    "q_hll_distinct" -> qHllDistinct,
-    "q_ddsketch"     -> qDdsketch,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_ddsketch" -> {
+  val gates: Seq[Gate] = Seq(
+    Gate("q_ddsketch", qDdsketch, {
       val g = s"$DD_GAMMA::DOUBLE"
       val qArr = DD_QS.map(q => s"$q::DOUBLE").mkString("[", ", ", "]")
       s"""WITH lx AS (
@@ -413,8 +403,8 @@ object SketchOps {
          |  exact,
          |  ${Fns.roundPSql("abs(est0 - CAST(exact AS DOUBLE)) / CAST(exact AS DOUBLE)", 6)} AS rel_err
          |FROM est ORDER BY lang, q""".stripMargin
-    },
-    "q_kmv_distinct" ->
+    }),
+    Gate("q_kmv_distinct", qKmvDistinct,
       s"""WITH h AS (
          |  SELECT DISTINCT event_type,
          |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR) || '_' ||
@@ -429,8 +419,8 @@ object SketchOps {
          |    THEN ${Fns.roundPSql(s"${Kmv.EST_NUM} / CAST(r.h AS DOUBLE)", 4)}
          |    ELSE NULL END AS kmv_est
          |FROM r JOIN ex ON r.event_type = ex.event_type
-         |WHERE rn = ${Kmv.K} ORDER BY r.event_type""".stripMargin,
-    "q_kmv_overlap" ->
+         |WHERE rn = ${Kmv.K} ORDER BY r.event_type""".stripMargin),
+    Gate("q_kmv_overlap", qKmvOverlap,
       s"""WITH h AS (
          |  SELECT DISTINCT event_type AS shard,
          |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR) || '_' ||
@@ -454,8 +444,8 @@ object SketchOps {
          |    THEN ${Fns.roundPSql(
              "CAST((SELECT c FROM inter) AS DOUBLE) / CAST((SELECT c FROM un) AS DOUBLE)", 4)}
          |    ELSE NULL END AS kmv_jaccard_est,
-         |  (SELECT c FROM ex) AS n_overlap_hashes""".stripMargin,
-    "q_hll_distinct" -> {
+         |  (SELECT c FROM ex) AS n_overlap_hashes""".stripMargin),
+    Gate("q_hll_distinct", qHllDistinct, {
       // identical register math in integer arithmetic; the α·m² and
       // threshold doubles are embedded from the same Scala constants
       // (shortest round-trip repr → identical bits after parse)
@@ -485,8 +475,8 @@ object SketchOps {
                 |    THEN -${Kmv.HASH_SPACE} * ln(1.0::DOUBLE - e_raw / ${Kmv.HASH_SPACE})
                 |    ELSE e_raw END""".stripMargin, 4)} AS hll_est
          |FROM f ORDER BY event_type""".stripMargin
-    },
-    "q_cms_topk" -> {
+    }),
+    Gate("q_cms_topk", qCmsTopk, {
       val toksLower = TextOps.sqlTokensLower
       def bucket(hExpr: String, i: Int) =
         s"(($hExpr * ${CMS_A(i)} + ${CMS_B(i)}) % $CMS_P) % $CMS_W"
@@ -507,6 +497,6 @@ object SketchOps {
          |SELECT p.w AS term, p.freq, CAST(min(c.bsum) AS BIGINT) AS cms_est
          |FROM p JOIN cms c USING (row_i, bucket)
          |GROUP BY 1, 2 ORDER BY p.freq DESC, term""".stripMargin
-    },
+    }),
   )
 }

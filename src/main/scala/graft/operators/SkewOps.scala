@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Fns
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation building blocks (SURVEY §4 / the brief's "salting for
@@ -71,8 +71,6 @@ object SkewOps {
 
   // ---- gated queries -------------------------------------------------------
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Salt fan-out for the gated queries. 8 spreads a hot key over a quarter
     * of the 32 local cores; production tunes this to the observed skew. */
   val SALTS = 8
@@ -104,20 +102,15 @@ object SkewOps {
       .select(col("c_mktsegment"), array_join(col("c_name_list"), "|").as("names"))
       .orderBy("c_mktsegment")
 
-  val queries: Map[String, Q] = Map(
-    "q_salted_join"    -> qSaltedJoin,
-    "q_salted_collect" -> qSaltedCollect,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_salted_join" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("q_salted_join", qSaltedJoin,
       """SELECT l_suppkey AS suppkey, s_name,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  count(*) AS cnt
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1, 2 ORDER BY suppkey""".stripMargin,
-    "q_salted_collect" ->
+        |GROUP BY 1, 2 ORDER BY suppkey""".stripMargin),
+    Gate("q_salted_collect", qSaltedCollect,
       """SELECT c_mktsegment, string_agg(c_name, '|' ORDER BY c_name) AS names
-        |FROM customer GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
+        |FROM customer GROUP BY 1 ORDER BY c_mktsegment""".stripMargin),
   )
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.Tables
 import graft.functions.Fns
 import graft.sources.Sources
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,8 +18,6 @@ import org.apache.spark.sql.types._
   * (and the reference's JSON-document row model rendered columnar).
   */
 object SourceOps {
-  type Q = (SparkSession, String) => DataFrame
-
   val nationCsvSchema: StructType = StructType(Seq(
     StructField("n_nationkey", IntegerType),
     StructField("n_name", StringType),
@@ -148,17 +146,9 @@ object SourceOps {
       .orderBy("zv", "event_id")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_zorder"         -> qZorder,
-    "q_csv_roundtrip"   -> qCsvRoundtrip,
-    "q_jsonl_roundtrip" -> qJsonlRoundtrip,
-    "q_orc_roundtrip"   -> qOrcRoundtrip,
-    "q_json_props"      -> qJsonProps,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
     // z-value: the same 2*Z_BITS shift/mask terms over disjoint bits
-    "q_zorder" -> {
+    Gate("q_zorder", qZorder, {
       val hi = (1 << Z_BITS) - 1
       val zTerms = (0 until Z_BITS).map { i =>
         s"(((un >> $i) & 1) << ${2 * i}) + (((hn >> $i) & 1) << ${2 * i + 1})"
@@ -177,26 +167,26 @@ object SourceOps {
          |  FROM b, r)
          |SELECT event_id, u, h, CAST($zTerms AS BIGINT) AS zv
          |FROM sct ORDER BY zv, event_id""".stripMargin
-    },
-    "q_csv_roundtrip" ->
+    }),
+    Gate("q_csv_roundtrip", qCsvRoundtrip,
       """SELECT n_regionkey, count(*) AS n_nations, min(n_name) AS first_name
-        |FROM nation GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_jsonl_roundtrip" ->
+        |FROM nation GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_jsonl_roundtrip", qJsonlRoundtrip,
       """SELECT source, count(*) AS n_docs,
         |  CAST(sum(length(text)) AS BIGINT) AS total_chars,
         |  min(doc_id) AS min_doc,
         |  CAST('0x' || substr(md5(min(text)), 1, 8) AS BIGINT) AS min_text_h
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_orc_roundtrip" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_orc_roundtrip", qOrcRoundtrip,
       """SELECT lang, count(*) AS n_docs,
         |  CAST(sum(length(text)) AS BIGINT) AS total_chars,
         |  min(doc_id) AS min_doc,
         |  CAST('0x' || substr(md5(min(text)), 1, 8) AS BIGINT) AS min_text_h
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_json_props" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_json_props", qJsonProps,
       """SELECT event_type, count(*) AS cnt,
         |  CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |  max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
   )
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Fns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,8 +24,6 @@ import org.apache.spark.sql.functions._
   *    are bounded by per-bucket density, never |A|×|B|.
   */
 object TemporalOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Range-join half-window in microseconds (±24 h — sized to the
     * testdata's ~1 click/user/2 days density; at 100 TB the bucket count
     * scales with the time span, not the row count). */
@@ -191,18 +189,11 @@ object TemporalOps {
       .orderBy("user_id", "day")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_asof_join"  -> qAsofJoin,
-    "q_asof_forward" -> qAsofForward,
-    "q_range_join" -> qRangeJoin,
-    "q_gapfill"    -> qGapfill,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
     // the identical union+window rendering (DuckDB's native ASOF JOIN has
     // its own tie semantics; spelling the window out keeps both engines on
     // one definition)
-    "q_asof_join" ->
+    Gate("q_asof_join", qAsofJoin,
       """WITH u AS (
         |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS t_us, 0 AS kind,
         |         event_id AS ref_id, NULL::BIGINT AS probe_id
@@ -220,8 +211,8 @@ object TemporalOps {
         |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ref_us
         |  FROM u)
         |SELECT probe_id AS event_id, user_id, purchase_id, t_us - ref_us AS gap_us
-        |FROM w WHERE kind = 1 ORDER BY event_id""".stripMargin,
-    "q_asof_forward" ->
+        |FROM w WHERE kind = 1 ORDER BY event_id""".stripMargin),
+    Gate("q_asof_forward", qAsofForward,
       s"""WITH u AS (
          |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS t_us, 0 AS kind,
          |         NULL::BIGINT AS ref_id, event_id AS probe_id
@@ -241,15 +232,15 @@ object TemporalOps {
          |SELECT probe_id AS event_id, user_id,
          |  CASE WHEN nref_us - t_us <= $ASOF_TOL_US THEN nref END AS purchase_id,
          |  CASE WHEN nref_us - t_us <= $ASOF_TOL_US THEN nref_us - t_us END AS gap_us
-         |FROM w WHERE kind = 0 ORDER BY event_id""".stripMargin,
-    "q_range_join" ->
+         |FROM w WHERE kind = 0 ORDER BY event_id""".stripMargin),
+    Gate("q_range_join", qRangeJoin,
       s"""SELECT e.event_id, count(c.event_id) AS n_near_clicks
          |FROM events e LEFT JOIN events c
          |  ON c.user_id = e.user_id AND c.event_type = 'click'
          |  AND abs(epoch_us(CAST(c.ts AS TIMESTAMP)) - epoch_us(CAST(e.ts AS TIMESTAMP))) <= $RANGE_US
          |WHERE e.event_type = 'error'
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_gapfill" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_gapfill", qGapfill,
       s"""WITH obs AS (
          |  SELECT user_id,
          |    epoch_us(CAST(ts AS TIMESTAMP)) // $GAP_DAY_US AS day,
@@ -288,6 +279,6 @@ object TemporalOps {
               |       THEN fv + (nv - fv) * (CAST(day - pd AS DOUBLE)
               |                              / CAST(nd - pd AS DOUBLE))
               |       END""".stripMargin, 6)} AS interp_v
-         |FROM w ORDER BY user_id, day""".stripMargin,
+         |FROM w ORDER BY user_id, day""".stripMargin),
   )
 }

@@ -16,8 +16,6 @@ import graft.functions.Fns
   * a 100 TB corpus runs these as a single scan with zero shuffles.
   */
 object TextOps {
-  type Q = (SparkSession, String) => DataFrame
-
   private val stop = Map(
     "en" -> "(the|a|of|and|to|in)",
     "de" -> "(der|die|das|und|ist)",
@@ -882,35 +880,6 @@ object TextOps {
       .orderBy("source")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_bleu"         -> qBleu,
-    "q_dataset_card" -> qDatasetCard,
-    "q_ks_test"      -> qKsTest,
-    "q_bh_fdr"       -> qBhFdr,
-    "q_chi2"         -> qChi2,
-    "q_dup_ratio"    -> qDupRatio,
-    "q_snapshot_drift" -> qSnapshotDrift,
-    "q_len_histogram" -> qLenHistogram,
-    "q_readability"  -> qReadability,
-    "q_span_corrupt" -> qSpanCorrupt,
-    "q_fim_split"    -> qFimSplit,
-    "q_char_entropy" -> qCharEntropy,
-    "q_top_terms"    -> qTopTerms,
-    "q_pii_scrub"    -> qPiiScrub,
-    "q_doc_packing"  -> qDocPacking,
-    "q_doc_chunks"   -> qDocChunks,
-    "q_repetition"   -> qRepetition,
-    "q_gopher_rules" -> qGopherRules,
-    "q_token_count"  -> qTokenCount,
-    "q_text_quality" -> qTextQuality,
-    "q_langid"       -> qLangId,
-    "q_levenshtein"  -> qLevenshtein,
-    "q_fingerprint"  -> qFingerprint,
-    "q_corpus_stats" -> qCorpusStats,
-    "q_length_percentiles" -> qLengthPercentiles,
-    "q_quality_ensemble" -> qQualityEnsemble,
-  )
-
   // regexp whitespace trim (SQL trim strips only spaces — must match
   // Fns.wsTrim)
   private[operators] val sqlWsTrim =
@@ -952,8 +921,8 @@ object TextOps {
       |       WHEN es >= fr THEN 'es'
       |       ELSE 'fr' END""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q_ks_test" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("q_ks_test", qKsTest,
       s"""WITH docs AS (SELECT source, n_chars AS x FROM documents),
          |lens AS (SELECT x, count(*) AS c FROM docs GROUP BY 1),
          |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM lens),
@@ -978,8 +947,8 @@ object TextOps {
          |  ${Fns.roundPSql(
              "CAST(num AS DOUBLE) / (CAST(n_docs AS DOUBLE) * CAST(n AS DOUBLE))",
              6)} AS ks_d
-         |FROM d ORDER BY source""".stripMargin,
-    "q_bh_fdr" ->
+         |FROM d ORDER BY source""".stripMargin),
+    Gate("q_bh_fdr", qBhFdr,
       s"""WITH docs AS (SELECT source, n_chars AS x FROM documents),
          |lens AS (SELECT x, count(*) AS c FROM docs GROUP BY 1),
          |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM lens),
@@ -1023,8 +992,8 @@ object TextOps {
          |  ${Fns.roundPSql("ks_d", 6)} AS ks_d,
          |  ${Fns.roundPSql("p", 6)} AS p_value,
          |  CAST(CASE WHEN rk <= coalesce(kmax, 0) THEN 1 ELSE 0 END AS INT) AS reject
-         |FROM r3 ORDER BY rank""".stripMargin,
-    "q_chi2" ->
+         |FROM r3 ORDER BY rank""".stripMargin),
+    Gate("q_chi2", qChi2,
       s"""WITH cells AS (
          |  SELECT lang, source, count(*) AS o FROM documents GROUP BY 1, 2),
          |r AS (SELECT lang, CAST(sum(o) AS BIGINT) AS rt FROM cells GROUP BY 1),
@@ -1042,8 +1011,8 @@ object TextOps {
              "CAST(sum(CAST((CAST(coalesce(o, 0) AS DOUBLE) - e) * " +
                "(CAST(coalesce(o, 0) AS DOUBLE) - e) / e AS DECIMAL(28,18))) AS DOUBLE)",
              6)} AS chi2
-         |FROM term""".stripMargin,
-    "q_snapshot_drift" -> {
+         |FROM term""".stripMargin),
+    Gate("q_snapshot_drift", qSnapshotDrift, {
       def dimCtes(nm: String, catExpr: String) =
         s"""c_$nm AS (
            |  SELECT $catExpr AS cat,
@@ -1074,21 +1043,21 @@ object TextOps {
          |  UNION ALL ${dimSel("lang")}
          |  UNION ALL ${dimSel("len_mag")})
          |ORDER BY dim""".stripMargin
-    },
-    "q_dup_ratio" ->
+    }),
+    Gate("q_dup_ratio", qDupRatio,
       """SELECT source, count(*) AS n_docs,
         |  count(DISTINCT md5(text)) AS n_distinct,
         |  floor((1.0::DOUBLE - CAST(count(DISTINCT md5(text)) AS DOUBLE)
         |    / CAST(count(*) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS dup_ratio
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_len_histogram" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_len_histogram", qLenHistogram,
       s"""SELECT lang, length(text) // $HIST_BUCKET AS bucket,
          |  count(*) AS n_docs,
          |  CAST(min(length(text)) AS BIGINT) AS min_len,
          |  CAST(max(length(text)) AS BIGINT) AS max_len
-         |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+         |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // Coleman–Liau: exact integer counts per language, one double tree
-    "q_readability" ->
+    Gate("q_readability", qReadability,
       s"""WITH b AS (
          |  SELECT lang,
          |    CAST(len($sqlTokens) AS BIGINT) AS w,
@@ -1105,11 +1074,11 @@ object TextOps {
              "0.0588::DOUBLE * (100.0::DOUBLE * CAST(letters AS DOUBLE) / CAST(words AS DOUBLE)) - " +
                "0.296::DOUBLE * (100.0::DOUBLE * CAST(sentences AS DOUBLE) / CAST(words AS DOUBLE)) - " +
                "15.8::DOUBLE", 4)} AS cli
-         |FROM m ORDER BY lang""".stripMargin,
+         |FROM m ORDER BY lang""".stripMargin),
     // span corruption: same block geometry derived per (doc, k); string_agg
     // of non-empty per-block pieces == Spark's flatten+join (every piece
     // contains its sentinel, so the separators line up token-for-token)
-    "q_span_corrupt" -> {
+    Gate("q_span_corrupt", qSpanCorrupt, {
       def h(tag: String) =
         s"CAST('0x' || substr(md5('$tag' || doc_s || '_' || CAST(k AS VARCHAR)), 1, 8) AS BIGINT)"
       val B = SC_BLOCK
@@ -1144,8 +1113,8 @@ object TextOps {
          |  md5(string_agg(array_to_string(arr, ' '), ' ' ORDER BY k)) AS input_digest,
          |  md5(string_agg(array_to_string(tgt, ' '), ' ' ORDER BY k)) AS target_digest
          |FROM pc GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-    "q_fim_split" -> {
+    }),
+    Gate("q_fim_split", qFimSplit, {
       def h(tag: String) =
         s"CAST('0x' || substr(md5('$tag' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)"
       s"""WITH c AS (
@@ -1166,20 +1135,20 @@ object TextOps {
          |         substr(text, lo + 1, hi - lo)
          |    ELSE text END) AS psm_digest
          |FROM c ORDER BY doc_id""".stripMargin
-    },
-    "q_top_terms" ->
+    }),
+    Gate("q_top_terms", qTopTerms,
       s"""WITH toks AS (SELECT $sqlTokensLower AS w FROM documents),
          |t AS (SELECT unnest(w) AS term FROM toks)
          |SELECT term, count(*) AS freq FROM t
-         |GROUP BY 1 ORDER BY freq DESC, term LIMIT $TOP_TERMS""".stripMargin,
-    "q_pii_scrub" ->
+         |GROUP BY 1 ORDER BY freq DESC, term LIMIT $TOP_TERMS""".stripMargin),
+    Gate("q_pii_scrub", qPiiScrub,
       s"""SELECT doc_id,
          |  CAST(len(regexp_extract_all(text, '$EMAIL_RE')) AS INT) AS n_emails,
          |  CAST(len(regexp_extract_all(text, '$PHONE_RE')) AS INT) AS n_phones,
          |  CAST(length(regexp_replace(regexp_replace(text, '$EMAIL_RE', '<EMAIL>', 'g'),
          |    '$PHONE_RE', '<PHONE>', 'g')) AS INT) AS scrubbed_len
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_doc_packing" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    Gate("q_doc_packing", qDocPacking,
       s"""WITH t AS (
          |  SELECT doc_id, source, CAST(len($sqlTokens) AS BIGINT) AS n_toks
          |  FROM documents),
@@ -1190,8 +1159,8 @@ object TextOps {
          |  FROM t)
          |SELECT source, (cum - 1) // $PACK_CAP AS bin,
          |  count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS toks
-         |FROM c GROUP BY 1, 2 ORDER BY source, bin""".stripMargin,
-    "q_doc_chunks" ->
+         |FROM c GROUP BY 1, 2 ORDER BY source, bin""".stripMargin),
+    Gate("q_doc_chunks", qDocChunks,
       s"""WITH t AS (SELECT doc_id, $sqlTokens AS tk FROM documents),
          |c AS (
          |  SELECT doc_id, tk,
@@ -1207,8 +1176,8 @@ object TextOps {
          |SELECT doc_id, chunk_idx, start_tok,
          |  CAST(len(chunk) AS BIGINT) AS n_toks,
          |  CAST('0x' || substr(md5(array_to_string(chunk, ' ')), 1, 8) AS BIGINT) AS chunk_hash
-         |FROM w ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q_repetition" ->
+         |FROM w ORDER BY doc_id, chunk_idx""".stripMargin),
+    Gate("q_repetition", qRepetition,
       s"""WITH toks AS (SELECT doc_id, $sqlWsTrim AS t, $sqlTokens AS w FROM documents),
          |sh AS (
          |  SELECT doc_id,
@@ -1219,8 +1188,8 @@ object TextOps {
          |  FROM toks)
          |SELECT doc_id,
          |  ${Fns.roundPSql("1.0::DOUBLE - CAST(len(list_distinct(sh)) AS DOUBLE) / len(sh)", 4)} AS dup_gram_frac
-         |FROM sh ORDER BY doc_id""".stripMargin,
-    "q_char_entropy" ->
+         |FROM sh ORDER BY doc_id""".stripMargin),
+    Gate("q_char_entropy", qCharEntropy,
       s"""WITH t AS (SELECT doc_id, text, length(text) AS n,
          |  list_transform(range(1, length(text)+1), i -> text[i:i]) AS cs
          |  FROM documents WHERE length(text) > 0),
@@ -1230,8 +1199,8 @@ object TextOps {
          |  FROM t)
          |SELECT doc_id, CAST(n AS BIGINT) AS n_chars2,
          |  ${Fns.roundPSql("CAST(sum(term) AS DOUBLE)", 6)} AS h_char
-         |FROM terms GROUP BY doc_id, n ORDER BY doc_id""".stripMargin,
-    "q_gopher_rules" ->
+         |FROM terms GROUP BY doc_id, n ORDER BY doc_id""".stripMargin),
+    Gate("q_gopher_rules", qGopherRules,
       s"""WITH b AS (
          |  SELECT doc_id,
          |    $sqlGopherCols
@@ -1242,8 +1211,8 @@ object TextOps {
          |  (nsym / nc < 0.1) AS symbol_ok,
          |  (nstop >= 2) AS stopword_ok,
          |  $sqlGopherKeep AS keep
-         |FROM b ORDER BY doc_id""".stripMargin,
-    "q_corpus_stats" ->
+         |FROM b ORDER BY doc_id""".stripMargin),
+    Gate("q_corpus_stats", qCorpusStats,
       s"""WITH kept AS (
          |  SELECT min(doc_id) AS doc_id, min(text) AS text
          |  FROM documents GROUP BY md5(lower(trim(text)))),
@@ -1260,12 +1229,12 @@ object TextOps {
          |SELECT count(*) AS n_docs,
          |  CAST(sum(CAST(nw AS BIGINT)) AS BIGINT) AS total_tokens,
          |  ${Fns.roundPSql("CAST(sum(CAST(quality AS DECIMAL(18,6))) AS DOUBLE) / count(*)", 4)} AS avg_quality
-         |FROM q WHERE quality >= 0.5""".stripMargin,
-    "q_token_count" ->
+         |FROM q WHERE quality >= 0.5""".stripMargin),
+    Gate("q_token_count", qTokenCount,
       s"""SELECT doc_id, CAST(len($sqlTokens) AS INT) AS n_tokens,
          |  CAST(len(regexp_extract_all(text, '${BPE_PATTERN.replace("'", "''")}')) AS INT) AS n_bpe_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_text_quality" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    Gate("q_text_quality", qTextQuality,
       s"""WITH b AS (
          |  SELECT doc_id,
          |    CAST(len($sqlTokens) AS DOUBLE) AS n_words,
@@ -1279,16 +1248,16 @@ object TextOps {
          |  ${Fns.roundPSql("n_punct / n_chars", 4)} AS punct_ratio,
          |  ${Fns.roundPSql("n_stop / n_words", 4)} AS stopword_ratio,
          |  ${Fns.roundPSql("least(1.0, n_words / 50.0) * (1.0 - n_punct / n_chars)", 4)} AS quality
-         |FROM b ORDER BY doc_id""".stripMargin,
-    "q_langid" ->
+         |FROM b ORDER BY doc_id""".stripMargin),
+    Gate("q_langid", qLangId,
       s"""WITH s AS (
          |  SELECT doc_id, lang,
          |    $sqlLangScoreCols
          |  FROM documents)
          |SELECT doc_id, lang,
          |  $sqlPredLang AS pred_lang
-         |FROM s ORDER BY doc_id""".stripMargin,
-    "q_dataset_card" ->
+         |FROM s ORDER BY doc_id""".stripMargin),
+    Gate("q_dataset_card", qDatasetCard,
       s"""WITH b AS (
          |  SELECT doc_id, source, lang, text, md5(text) AS h,
          |    CAST(len($sqlTokens) AS BIGINT) AS ntok,
@@ -1307,8 +1276,8 @@ object TextOps {
          |  ${Fns.roundPSql(
             s"CAST(count(CASE WHEN ($sqlPredLang) = lang THEN 1 END) AS DOUBLE) / count(*)",
             6)} AS lang_match_rate
-         |FROM b GROUP BY source ORDER BY source""".stripMargin,
-    "q_quality_ensemble" ->
+         |FROM b GROUP BY source ORDER BY source""".stripMargin),
+    Gate("q_quality_ensemble", qQualityEnsemble,
       s"""WITH b AS (
          |  SELECT doc_id, source, lang, md5(text) AS h,
          |    $sqlGopherCols,
@@ -1324,17 +1293,17 @@ object TextOps {
          |         ELSE 'keep' END AS decision
          |  FROM b JOIN k USING (h))
          |SELECT source, decision, count(*) AS n_docs
-         |FROM dec GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_levenshtein" ->
+         |FROM dec GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Gate("q_levenshtein", qLevenshtein,
       """SELECT p_partkey, CAST(levenshtein(p_name, 'small gizmo') AS INT) AS dist
-        |FROM part WHERE levenshtein(p_name, 'small gizmo') <= 7 ORDER BY p_partkey""".stripMargin,
-    "q_length_percentiles" ->
+        |FROM part WHERE levenshtein(p_name, 'small gizmo') <= 7 ORDER BY p_partkey""".stripMargin),
+    Gate("q_length_percentiles", qLengthPercentiles,
       s"""SELECT source, count(*) AS n_docs,
          |  ${Fns.roundPSql("quantile_cont(length(text), 0.5)", 6)} AS p50_len,
          |  ${Fns.roundPSql("quantile_cont(length(text), 0.9)", 6)} AS p90_len,
          |  ${Fns.roundPSql("quantile_cont(length(text), 0.99)", 6)} AS p99_len
-         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_fingerprint" ->
+         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    Gate("q_fingerprint", qFingerprint,
       s"""WITH sh AS (
          |  SELECT doc_id,
          |    CASE WHEN len($sqlTokens) >= 4
@@ -1346,8 +1315,8 @@ object TextOps {
          |  list_min(list_transform(grams,
          |    g -> CAST('0x' || substr(md5(g), 1, 8) AS BIGINT))) AS fingerprint,
          |  CAST(len(grams) AS BIGINT) AS n_grams
-         |FROM sh ORDER BY doc_id""".stripMargin,
-    "q_bleu" ->
+         |FROM sh ORDER BY doc_id""".stripMargin),
+    Gate("q_bleu", qBleu,
       s"""WITH toks AS (SELECT doc_id, source, $sqlTokens AS ws FROM documents),
          |lagd AS (
          |  SELECT doc_id AS pair_id, source, ws AS ct,
@@ -1397,6 +1366,6 @@ object TextOps {
          |  ${Fns.roundPSql(
              "CAST(sum(CAST(rouge2 AS DECIMAL(28,18))) AS DOUBLE) / count(*)", 6)}
          |    AS rouge2_mean
-         |FROM sc GROUP BY source ORDER BY source""".stripMargin,
+         |FROM sc GROUP BY source ORDER BY source""".stripMargin),
   )
 }

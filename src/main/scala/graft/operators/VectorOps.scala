@@ -27,8 +27,6 @@ import org.apache.spark.sql.functions._
   * left-to-right summation — bit-reproducible in the DuckDB oracle.
   */
 object VectorOps {
-  type Q = (SparkSession, String) => DataFrame
-
   val PROBE_ID = 0L
   val TOPK = 10
   /** $near radius (squared L2) — ~2% selectivity on the testdata. */
@@ -1889,40 +1887,6 @@ object VectorOps {
       .orderBy("step")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_pca_power"      -> qPcaPower,
-    "q_pca_scores"     -> qPcaScores,
-    "q_mmr_select"     -> qMmrSelect,
-    "q_embed_cov"      -> qEmbedCov,
-    "q_knn_join"       -> qKnnJoin,
-    "q_ann_recall"     -> qAnnRecall,
-    "q_retrieval_eval" -> qRetrievalEval,
-    "q_ann_recall_kmeans" -> qAnnRecallKmeans,
-    "q_semantic_dedup" -> qSemanticDedup,
-    "q_random_projection" -> qRandomProjection,
-    "q_hybrid_search"  -> qHybridSearch,
-    "q_semantic_search" -> qSemanticSearch,
-    "q_kmeans"         -> qKmeans,
-    "q_lof"            -> qLof,
-    "q_silhouette"     -> qSilhouette,
-    "q_davies_bouldin" -> qDaviesBouldin,
-    "q_kcenter"        -> qKcenter,
-    "q_mmd_drift"      -> qMmdDrift,
-    "q_topic_terms"    -> qTopicTerms,
-    "q_knn"            -> qKnn,
-    "q_knn_cosine"     -> qKnnCosine,
-    "q_near"           -> qNear,
-    "q_ann_ivf"        -> qAnnIvf,
-    "q_ann_lsh"        -> qAnnLsh,
-    "q_ann_hnsw2"      -> qAnnHnsw2,
-    "q_embed_quantize" -> qEmbedQuantize,
-    "q_cosine_blocked" -> qCosineBlocked,
-    "q_hard_negatives" -> qHardNegatives,
-    "q_bitext_mine"    -> qBitextMine,
-    "q_pq_adc"         -> qPqAdc,
-    "q_ann_ivfpq"      -> qAnnIvfPq,
-  )
-
   // ---- DuckDB oracles ------------------------------------------------------
 
   private val sqlVecs =
@@ -2196,13 +2160,13 @@ object VectorOps {
        |  ${Fns.roundPSql("sqrt(greatest(m2 - mean_raw * mean_raw, 0.0::DOUBLE))", 6)} AS sd_pc1
        |FROM ag ORDER BY label""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q_pca_power" -> sqlPca,
-    "q_pca_scores" -> sqlPcaScores,
-    "q_mmr_select" -> sqlMmr,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_pca_power", qPcaPower, sqlPca),
+    Gate("q_pca_scores", qPcaScores, sqlPcaScores),
+    Gate("q_mmr_select", qMmrSelect, sqlMmr),
     // covariance: index table from unnest(range(max len)) so the dim is
     // data-derived (no hardcoded D to go stale on regeneration)
-    "q_embed_cov" -> {
+    Gate("q_embed_cov", qEmbedCov, {
       val D = (n: String) => s"CAST($n AS DOUBLE)"
       s"""WITH e AS (SELECT embedding::DOUBLE[] AS v FROM embeddings),
          |nn AS (SELECT count(*) AS n FROM e),
@@ -2229,8 +2193,8 @@ object VectorOps {
                s"(${D("a.sx")} / ${D("nn.n")}) * (${D("b.sx")} / ${D("nn.n")})",
              8)}) DESC, i, j
          |LIMIT $EC_TOPK""".stripMargin
-    },
-    "q_hybrid_search" ->
+    }),
+    Gate("q_hybrid_search", qHybridSearch,
       s"""WITH tk AS (SELECT doc_id, list_distinct(${TextOps.sqlTokensLower}) AS tk FROM documents),
          |q AS (SELECT tk AS qtk FROM tk WHERE doc_id = $PROBE_ID),
          |e AS ($sqlVecs), p AS (SELECT v AS pv FROM e WHERE vec_id = $PROBE_ID),
@@ -2247,8 +2211,8 @@ object VectorOps {
          |      FROM sc)
          |SELECT doc_id, ${Fns.roundPSql("lex", 6)} AS lex_sim,
          |  ${Fns.roundPSql("cos", 6)} AS cos_sim, hybrid
-         |FROM h ORDER BY hybrid DESC, doc_id LIMIT $TOPK""".stripMargin,
-    "q_semantic_search" ->
+         |FROM h ORDER BY hybrid DESC, doc_id LIMIT $TOPK""".stripMargin),
+    Gate("q_semantic_search", qSemanticSearch,
       s"""WITH e AS ($sqlVecs), p AS (SELECT v AS pv FROM e WHERE vec_id = $PROBE_ID),
          |nn AS (
          |  SELECT b.vec_id,
@@ -2258,9 +2222,9 @@ object VectorOps {
          |  ORDER BY cos_sim DESC, vec_id LIMIT $SEM_K)
          |SELECT d.doc_id, d.source, d.lang, d.n_chars, nn.cos_sim
          |FROM documents d JOIN nn ON d.doc_id = nn.vec_id
-         |ORDER BY nn.cos_sim DESC, d.doc_id""".stripMargin,
-    "q_kmeans" -> sqlKmeans,
-    "q_lof" -> {
+         |ORDER BY nn.cos_sim DESC, d.doc_id""".stripMargin),
+    Gate("q_kmeans", qKmeans, sqlKmeans),
+    Gate("q_lof", qLof, {
       def knn(src: String, qs: String, dName: String, kName: String) =
         s"""$dName AS (
            |  SELECT p.qid, b.vec_id, ${sqlDist2("b.v", "p.qv")} AS d2
@@ -2300,10 +2264,10 @@ object VectorOps {
          |  ${Fns.roundPSql("p.lrd", 6)} AS lrd,
          |  ${Fns.roundPSql("ml.mlrd / p.lrd", 6)} AS lof
          |FROM ml JOIN lrdp p ON ml.qid = p.qid ORDER BY vec_id""".stripMargin
-    },
-    "q_silhouette" -> sqlSilhouette,
-    "q_davies_bouldin" -> sqlDaviesBouldin,
-    "q_mmd_drift" -> {
+    }),
+    Gate("q_silhouette", qSilhouette, sqlSilhouette),
+    Gate("q_davies_bouldin", qDaviesBouldin, sqlDaviesBouldin),
+    Gate("q_mmd_drift", qMmdDrift, {
       def k(p: String, q: String) =
         s"exp(-$MMD_GAMMA * ${sqlDist2(p, q)})"
       s"""WITH e AS ($sqlVecs),
@@ -2334,11 +2298,11 @@ object VectorOps {
          |SELECT count(*) AS n_quads,
          |  ${Fns.roundPSql("CAST(sum(h) AS DOUBLE) / count(*)", 6)} AS mmd2
          |FROM h""".stripMargin
-    },
+    }),
     // Gonzalez picks as MATERIALIZED 1-row CTEs: step k cross-joins e to
     // every previous pick (the chain is referenced multiply — plain CTEs
     // would re-expand it per reference, the q_bradley_terry trap)
-    "q_kcenter" -> {
+    Gate("q_kcenter", qKcenter, {
       def distTo(i: Int) = sqlDist2("e.v", s"p$i.v")
       val steps = (1 until KC_K).map { k =>
         val dm = if (k == 1) distTo(0)
@@ -2359,8 +2323,8 @@ object VectorOps {
          |  SELECT 0 AS step, vec_id, 0.0::DOUBLE AS r2 FROM p0
          |  UNION ALL $rows)
          |ORDER BY step""".stripMargin
-    },
-    "q_topic_terms" ->
+    }),
+    Gate("q_topic_terms", qTopicTerms,
       s"""WITH $sqlKmeansCtes,
          |asg AS (SELECT vec_id AS doc_id, cid AS cluster FROM af),
          |toks AS (SELECT a.cluster, unnest(${TextOps.sqlTokensLower}) AS term
@@ -2375,8 +2339,8 @@ object VectorOps {
          |rk AS (SELECT *, row_number() OVER (
          |    PARTITION BY cluster ORDER BY ctfidf DESC, term) AS rn FROM sc)
          |SELECT cluster, term, tf, ctfidf FROM rk WHERE rn <= $TT_TOP
-         |ORDER BY cluster, ctfidf DESC, term""".stripMargin,
-    "q_knn_join" ->
+         |ORDER BY cluster, ctfidf DESC, term""".stripMargin),
+    Gate("q_knn_join", qKnnJoin,
       s"""WITH e AS ($sqlVecs),
          |p AS (SELECT vec_id AS query_id, v AS pv FROM e WHERE vec_id % $KJ_MOD = 0),
          |dists AS (
@@ -2388,13 +2352,13 @@ object VectorOps {
          |    PARTITION BY query_id ORDER BY dist2, vec_id) AS rn
          |  FROM dists)
          |SELECT query_id, vec_id, dist2, CAST(rn AS INT) AS rn
-         |FROM r WHERE rn <= $TOPK ORDER BY query_id, rn""".stripMargin,
-    "q_knn" ->
+         |FROM r WHERE rn <= $TOPK ORDER BY query_id, rn""".stripMargin),
+    Gate("q_knn", qKnn,
       s"""WITH e AS ($sqlVecs), p AS (SELECT v AS pv FROM e WHERE vec_id = $PROBE_ID)
          |SELECT b.vec_id, ${Fns.roundPSql(sqlDist2("b.v", "p.pv"), 6)} AS dist2
          |FROM e b, p WHERE b.vec_id <> $PROBE_ID
-         |ORDER BY dist2, vec_id LIMIT $TOPK""".stripMargin,
-    "q_retrieval_eval" -> {
+         |ORDER BY dist2, vec_id LIMIT $TOPK""".stripMargin),
+    Gate("q_retrieval_eval", qRetrievalEval, {
       val (gains, idcg, rrs) = (NDCG_GAINS, NDCG_IDCG, NDCG_RRS)
       // the metric constants embed as the SAME double literals the Spark
       // plan bakes in (shortest-repr round-trip) — no runtime log2
@@ -2429,8 +2393,8 @@ object VectorOps {
          |  ${Fns.roundPSql("coalesce(per.rr, 0)", 4)} AS mrr_at_k
          |FROM p JOIN lc USING (qlabel) LEFT JOIN per USING (query_id)
          |ORDER BY p.query_id""".stripMargin
-    },
-    "q_ann_recall" ->
+    }),
+    Gate("q_ann_recall", qAnnRecall,
       s"""WITH e AS ($sqlVecs),
          |p AS (SELECT vec_id AS query_id, v AS pv FROM e
          |  WHERE vec_id % $KJ_MOD = 0 ORDER BY query_id LIMIT $AR_QUERIES),
@@ -2470,8 +2434,8 @@ object VectorOps {
          |  ${Fns.roundPSql(
              "CAST(sum(CASE WHEN ann.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*)", 4)} AS recall
          |FROM ex LEFT JOIN ann ON ex.query_id = ann.query_id AND ex.vec_id = ann.vec_id
-         |GROUP BY ex.query_id ORDER BY ex.query_id""".stripMargin,
-    "q_ann_recall_kmeans" ->
+         |GROUP BY ex.query_id ORDER BY ex.query_id""".stripMargin),
+    Gate("q_ann_recall_kmeans", qAnnRecallKmeans,
       s"""WITH $sqlKmeansCtes,
          |p AS (SELECT vec_id AS query_id, v AS pv FROM e
          |  WHERE vec_id % $KJ_MOD = 0 ORDER BY query_id LIMIT $AR_QUERIES),
@@ -2504,8 +2468,8 @@ object VectorOps {
          |  ${Fns.roundPSql(
              "CAST(sum(CASE WHEN ann.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*)", 4)} AS recall
          |FROM ex LEFT JOIN ann ON ex.query_id = ann.query_id AND ex.vec_id = ann.vec_id
-         |GROUP BY ex.query_id ORDER BY ex.query_id""".stripMargin,
-    "q_random_projection" -> {
+         |GROUP BY ex.query_id ORDER BY ex.query_id""".stripMargin),
+    Gate("q_random_projection", qRandomProjection, {
       def sgn(j: Int) =
         s"""list_sum(list_transform(range(1, ${DIM + 1}), i ->
            |    v[i] * (CASE WHEN CAST('0x' || substr(md5('rp_' || CAST(i + $j * $DIM AS VARCHAR)), 1, 8) AS BIGINT) % 2 = 0
@@ -2523,8 +2487,8 @@ object VectorOps {
          |${(1 to RP_DIMS).map(j => s"  ${Fns.roundPSql(s"praw$j", 6)} AS p$j").mkString(",\n")},
          |  ${Fns.roundPSql(s"sqsum / $RP_DIMS / nv", 4)} AS jl_ratio
          |FROM j ORDER BY vec_id""".stripMargin
-    },
-    "q_embed_quantize" ->
+    }),
+    Gate("q_embed_quantize", qEmbedQuantize,
       s"""WITH e AS ($sqlVecs),
          |sc AS (SELECT vec_id, v,
          |  list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
@@ -2537,27 +2501,27 @@ object VectorOps {
          |  CAST(list_sum(qc) AS BIGINT) AS code_sum,
          |  ${Fns.roundPSql(
              "list_max(list_transform(range(1, len(v)+1), i -> abs(v[i] - CAST(qc[i] AS DOUBLE) * scale)))", 8)} AS max_err
-         |FROM q ORDER BY vec_id""".stripMargin,
+         |FROM q ORDER BY vec_id""".stripMargin),
     // Two-stage HNSW must agree with brute force after exact re-rank —
     // the oracle IS the brute top-k.
-    "q_ann_hnsw2" ->
+    Gate("q_ann_hnsw2", qAnnHnsw2,
       s"""WITH e AS ($sqlVecs), p AS (SELECT v AS pv FROM e WHERE vec_id = $PROBE_ID)
          |SELECT b.vec_id, ${Fns.roundPSql(sqlDist2("b.v", "p.pv"), 6)} AS dist2
          |FROM e b, p WHERE b.vec_id <> $PROBE_ID
-         |ORDER BY dist2, vec_id LIMIT $TOPK""".stripMargin,
-    "q_knn_cosine" ->
+         |ORDER BY dist2, vec_id LIMIT $TOPK""".stripMargin),
+    Gate("q_knn_cosine", qKnnCosine,
       s"""WITH e AS ($sqlVecs), p AS (SELECT v AS pv FROM e WHERE vec_id = $PROBE_ID)
          |SELECT b.vec_id,
          |  ${Fns.roundPSql(
              s"${sqlCos("b.v", "p.pv")}", 6)} AS cos_sim
          |FROM e b, p WHERE b.vec_id <> $PROBE_ID
-         |ORDER BY cos_sim DESC, vec_id LIMIT $TOPK""".stripMargin,
-    "q_near" ->
+         |ORDER BY cos_sim DESC, vec_id LIMIT $TOPK""".stripMargin),
+    Gate("q_near", qNear,
       s"""WITH e AS ($sqlVecs), p AS (SELECT v AS pv FROM e WHERE vec_id = $PROBE_ID)
          |SELECT b.vec_id, ${Fns.roundPSql(sqlDist2("b.v", "p.pv"), 6)} AS dist2
          |FROM e b, p WHERE b.vec_id <> $PROBE_ID AND ${sqlDist2("b.v", "p.pv")} < $RADIUS2
-         |ORDER BY vec_id""".stripMargin,
-    "q_ann_ivf" ->
+         |ORDER BY vec_id""".stripMargin),
+    Gate("q_ann_ivf", qAnnIvf,
       s"""WITH e AS ($sqlVecs),
          |long AS (SELECT label, i-1 AS pos, v[i] AS x FROM e, unnest(range(1, len(v)+1)) AS t(i)),
          |cent AS (
@@ -2574,8 +2538,8 @@ object VectorOps {
          |SELECT b.vec_id, ${Fns.roundPSql(sqlDist2("b.v", "p.pv"), 6)} AS dist2
          |FROM e b JOIN cells ON b.label = cells.label, p
          |WHERE b.vec_id <> $PROBE_ID
-         |ORDER BY dist2, vec_id LIMIT $TOPK""".stripMargin,
-    "q_ann_lsh" -> {
+         |ORDER BY dist2, vec_id LIMIT $TOPK""".stripMargin),
+    Gate("q_ann_lsh", qAnnLsh, {
       def planeComp(h: Int): String =
         s"CAST('0x' || substr(md5('lshp_${h}_' || CAST(i-1 AS VARCHAR)), 1, 8) AS BIGINT)" +
           " / 4294967296.0::DOUBLE - 0.5"
@@ -2594,13 +2558,13 @@ object VectorOps {
          |FROM b c JOIN probes USING (bucket), p
          |WHERE c.vec_id <> $PROBE_ID
          |ORDER BY dist2, vec_id LIMIT $TOPK""".stripMargin
-    },
+    }),
     // the pair cosine is symmetric bit-exactly (per-element products and
     // the final nrm*nrm multiply commute in IEEE doubles), so compute it
     // ONCE per undirected pair in a MATERIALIZED CTE and emit both
     // directions — halves the dominant pair-join cost (the rewrite that,
     // with the native sqlDot, brought this mirror inside the sf1 budget)
-    "q_hard_negatives" ->
+    Gate("q_hard_negatives", qHardNegatives,
       s"""WITH $sqlCosBlockCtes,
          |up AS MATERIALIZED (
          |  SELECT DISTINCT a.vec_id AS x, b.vec_id AS y,
@@ -2617,8 +2581,8 @@ object VectorOps {
          |    PARTITION BY anchor ORDER BY cos_sim DESC, negative) AS rank FROM hp)
          |SELECT anchor, CAST(rank AS INT) AS rank, negative, neg_label, cos_sim
          |FROM rk WHERE rank <= $HN_K
-         |ORDER BY anchor, rank""".stripMargin,
-    "q_bitext_mine" ->
+         |ORDER BY anchor, rank""".stripMargin),
+    Gate("q_bitext_mine", qBitextMine,
       s"""WITH $sqlCosBlockCtes,
          |lg AS (
          |  SELECT n.cell, n.bkt, n.vec_id, d.lang, n.v, n.nrm
@@ -2648,23 +2612,23 @@ object VectorOps {
          |    PARTITION BY src_doc ORDER BY margin DESC, tgt_doc) AS rn FROM mg)
          |SELECT src_doc, src_lang, tgt_doc, cos_sim, margin,
          |  margin >= $BM_T AS keep
-         |FROM rk2 WHERE rn = 1 ORDER BY src_doc""".stripMargin,
-    "q_cosine_blocked" ->
+         |FROM rk2 WHERE rn = 1 ORDER BY src_doc""".stripMargin),
+    Gate("q_cosine_blocked", qCosineBlocked,
       s"""WITH $sqlCosBlockCtes
          |SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
          |  ${Fns.roundPSql(s"${sqlDot("a.v", "b.v")} / (a.nrm * b.nrm)", 6)} AS cos_sim
          |FROM n a JOIN n b ON a.cell = b.cell AND a.bkt = b.bkt AND a.vec_id < b.vec_id
          |WHERE ${sqlDot("a.v", "b.v")} / (a.nrm * b.nrm) >= $COS_T
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin),
     // SemDeDup: the blocked pair CTEs verbatim, then the q_dedup_clusters
     // recursive component flood over the pair graph
-    "q_semantic_dedup" ->
+    Gate("q_semantic_dedup", qSemanticDedup,
       s"""WITH RECURSIVE $sqlSemDedupCtes
          |SELECT e.vec_id, coalesce(cc.cluster_id, e.vec_id) AS cluster_id,
          |  coalesce(cc.cluster_id, e.vec_id) = e.vec_id AS keep
          |FROM e LEFT JOIN cc ON e.vec_id = cc.doc_id
-         |ORDER BY e.vec_id""".stripMargin,
-    "q_pq_adc" -> {
+         |ORDER BY e.vec_id""".stripMargin),
+    Gate("q_pq_adc", qPqAdc, {
       def subDist(a: String, b: String) =
         s"""list_sum(list_transform(range(1, ${PQ_SUB + 1}),
            |      j -> ($a[s.m*$PQ_SUB + j] - $b[s.m*$PQ_SUB + j]) * ($a[s.m*$PQ_SUB + j] - $b[s.m*$PQ_SUB + j])))""".stripMargin
@@ -2692,8 +2656,8 @@ object VectorOps {
          |  ${Fns.roundPSql(sqlDist2("b.v", "p.pv"), 6)} AS exact_dist2
          |FROM agg a JOIN e b ON b.vec_id = a.vec_id CROSS JOIN p
          |ORDER BY adc_dist2, a.vec_id LIMIT $TOPK""".stripMargin
-    },
-    "q_ann_ivfpq" -> {
+    }),
+    Gate("q_ann_ivfpq", qAnnIvfPq, {
       def subDist(a: String, b: String) =
         s"""list_sum(list_transform(range(1, ${PQ_SUB + 1}),
            |      j -> ($a[s.m*$PQ_SUB + j] - $b[s.m*$PQ_SUB + j]) * ($a[s.m*$PQ_SUB + j] - $b[s.m*$PQ_SUB + j])))""".stripMargin
@@ -2733,7 +2697,7 @@ object VectorOps {
          |SELECT b.vec_id, ${Fns.roundPSql(sqlDist2("b.v", "p.pv"), 6)} AS dist2
          |FROM e b JOIN top USING (vec_id) CROSS JOIN p
          |ORDER BY dist2, vec_id LIMIT $TOPK""".stripMargin
-    },
+    }),
   )
 
 }

@@ -15,8 +15,6 @@ import org.apache.spark.sql.functions._
   * [[GraphOps]].
   */
 object WalkOps {
-  type Q = (SparkSession, String) => DataFrame
-
   val WALK_STEPS = 5
   val BIDIR_SRC = 0
   val BIDIR_DST = 14
@@ -104,13 +102,6 @@ object WalkOps {
       .select(col("s_suppkey"), GeoHash.encode(col("lon"), col("lat")).as("geohash"))
       .orderBy("s_suppkey")
 
-  val queries: Map[String, Q] = Map(
-    "q_triangles"   -> qTriangles,
-    "q_random_walk" -> qRandomWalk,
-    "q_bidir_bfs"   -> qBidirBfs,
-    "q_geohash"     -> qGeohash,
-  )
-
   // ---- DuckDB oracles ------------------------------------------------------
 
   private val sqlTop =
@@ -128,15 +119,15 @@ object WalkOps {
        |    FROM trade)
        |  WHERE rn <= ${GraphOps.TOP_PARTNERS})""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q_triangles" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("q_triangles", qTriangles,
       s"""WITH $sqlTop
          |SELECT DISTINCT ab.src AS a, ab.dst AS b, bc.dst AS c
          |FROM top ab JOIN top bc ON ab.dst = bc.src
          |JOIN top ca ON bc.dst = ca.src AND ca.dst = ab.src
          |WHERE ab.src < ab.dst AND ab.src < bc.dst
-         |ORDER BY a, b, c""".stripMargin,
-    "q_random_walk" -> {
+         |ORDER BY a, b, c""".stripMargin),
+    Gate("q_random_walk", qRandomWalk, {
       val steps = (1 to WALK_STEPS).map { t =>
         s"""w$t AS (
            |  SELECT w.start, r.dst AS node
@@ -150,18 +141,18 @@ object WalkOps {
          |w0 AS (SELECT n_nationkey AS start, n_nationkey AS node FROM nation),
          |$steps
          |SELECT start, node AS end_node FROM w$WALK_STEPS ORDER BY start""".stripMargin
-    },
-    "q_bidir_bfs" ->
+    }),
+    Gate("q_bidir_bfs", qBidirBfs,
       s"""WITH RECURSIVE $sqlTop,
          |walk(node, hop) AS (
          |  SELECT $BIDIR_SRC, 0
          |  UNION ALL
          |  SELECT t.dst, w.hop + 1 FROM walk w JOIN top t ON t.src = w.node
          |  WHERE w.hop < ${2 * BIDIR_HALF})
-         |SELECT min(hop) AS hops FROM walk WHERE node = $BIDIR_DST""".stripMargin,
-    "q_geohash" ->
+         |SELECT min(hop) AS hops FROM walk WHERE node = $BIDIR_DST""".stripMargin),
+    Gate("q_geohash", qGeohash,
       s"""SELECT s_suppkey,
          |  ${GeoHash.encodeSql("(s_suppkey * 7 % 360) - 180 + 0.5", "(s_suppkey * 11 % 170) - 85 + 0.5")} AS geohash
-         |FROM supplier ORDER BY s_suppkey""".stripMargin,
+         |FROM supplier ORDER BY s_suppkey""".stripMargin),
   )
 }

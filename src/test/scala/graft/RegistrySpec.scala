@@ -2,22 +2,23 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Three-way registry identity (r13 advice #2): the committed bench
-  * artifact, the query registry, and the oracle registry must describe the
-  * SAME gate set at every commit — the r13 close shipped a bench.json three
-  * gates behind HEAD, exactly the drift this tripwire makes impossible.
+/** Registry identity: [[SparkEntry.gates]] is the one gate registry, the
+  * `queries` and `oracleSql` maps are keyed by exactly its names, and the
+  * committed bench artifact describes the SAME gate set at every commit
+  * (a bench.json three gates behind HEAD once shipped; this tripwire makes
+  * that drift impossible).
   * Discipline it enforces: a commit that adds a gate also refreshes
   * bench.json (a 1-pass sf0.1 run suffices between closes; the close runs
   * the full 3-pass refresh).
   */
 class RegistrySpec extends AnyFunSuite {
 
-  test("every query has an oracle and every oracle has a query") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(q == o,
-      s"queries without oracle: ${(q -- o).toSeq.sorted.take(10)}; " +
-        s"oracles without query: ${(o -- q).toSeq.sorted.take(10)}")
+  test("gates have 252 distinct names, and queries and oracleSql are keyed by exactly them") {
+    val names = SparkEntry.gates.map(_.name)
+    assert(names.size == 252, s"${names.size} gates registered")
+    assert(names.distinct == names, s"duplicate gate names: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == names.toSet)
   }
 
   test("committed bench.json covers exactly the registered gate set") {

@@ -58,10 +58,6 @@ def main():
     wd_lock = threading.Lock()
     stale_interrupt = False
     for name, sql in sorted(oracle.items()):
-        # filtered Verify run (dev iteration): skip BEFORE paying the
-        # oracle's execution cost, not after
-        if not os.path.isdir(f"{out_dir}/{name}"):
-            continue
         want = None
         attempts = 0
         tq = time.time()
