@@ -326,19 +326,21 @@ class GqlEngine(spark: SparkSession, root: String,
     val pred: Column = if (r.keys.nonEmpty) keysPred(r.keys) else predColumn(df, r.where.get)
     val removedKeys = df.filter(pred).select("key_i", "key_s")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    catalog.write(db, r.group, df.filter(!coalesce(pred, lit(false))), "vertex",
-      catalog.keyTypeOf(db, r.group))
-    // S5 cascade: incident edges die with the vertex (RemovePlan.cpp:9-21)
-    catalog.edgeGroups(db).foreach { eg =>
-      val edges = catalog.read(db, eg)
-      val hitSrc = edges.join(broadcast(removedKeys),
-        edges("src_i") <=> removedKeys("key_i") && edges("src_s") <=> removedKeys("key_s"),
-        "left_anti")
-      val survivors = hitSrc.join(broadcast(removedKeys),
-        hitSrc("dst_i") <=> removedKeys("key_i") && hitSrc("dst_s") <=> removedKeys("key_s"),
-        "left_anti")
-      catalog.write(db, eg, survivors, "edge", "")
-    }
+    try {
+      catalog.write(db, r.group, df.filter(!coalesce(pred, lit(false))), "vertex",
+        catalog.keyTypeOf(db, r.group))
+      // S5 cascade: incident edges die with the vertex (RemovePlan.cpp:9-21)
+      catalog.edgeGroups(db).foreach { eg =>
+        val edges = catalog.read(db, eg)
+        val hitSrc = edges.join(broadcast(removedKeys),
+          edges("src_i") <=> removedKeys("key_i") && edges("src_s") <=> removedKeys("key_s"),
+          "left_anti")
+        val survivors = hitSrc.join(broadcast(removedKeys),
+          hitSrc("dst_i") <=> removedKeys("key_i") && hitSrc("dst_s") <=> removedKeys("key_s"),
+          "left_anti")
+        catalog.write(db, eg, survivors, "edge", "")
+      }
+    } finally removedKeys.unpersist(false)
   }
 
   /** Remove keys match either key column: a numeric text key matches the
@@ -807,7 +809,7 @@ class GqlEngine(spark: SparkSession, root: String,
     }).withColumn("skey", coalesce(col("src_s"), col("src_i").cast("string")))
       .withColumn("dkey", coalesce(col("dst_s"), col("dst_i").cast("string")))
       .select("skey", "dkey", "ecost")
-      .localCheckpoint()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // read every round
     def keyStr(v: GVal): String = v match {
       case GInt(l) => l.toString
       case GStr(s) => s
@@ -815,18 +817,19 @@ class GqlEngine(spark: SparkSession, root: String,
     }
     val spark = edges.sparkSession
     import org.apache.spark.sql.functions.{min => fmin}
-    var dist = spark.range(1).select(
+    val start = spark.range(1).select(
       lit(keyStr(mp.from)).as("node"), lit(0.0).as("cost"), lit(0).as("hops"))
-    for (_ <- 1 to rounds) {
-      val relaxed = dist.join(rel, col("node") === col("skey"))
+    // every round reads the previous one twice, so rounds are cut leaves
+    // and the answer no longer reads `rel`
+    val dist = try graft.operators.Superstep.iterate(start, rounds) { r =>
+      val relaxed = r.last.join(rel, col("node") === col("skey"))
         .select(col("dkey").as("node"), (col("cost") + col("ecost")).as("cost"),
           (col("hops") + 1).as("hops"))
-      dist = dist.unionByName(relaxed)
+      r.last.unionByName(relaxed)
         .groupBy(col("node"))
         .agg(fmin(struct(col("cost"), col("hops"))).as("best"))
         .select(col("node"), col("best.cost").as("cost"), col("best.hops").as("hops"))
-        .localCheckpoint() // lineage truncation — see GraphOps.qBfs
-    }
+    }.last finally rel.unpersist(false)
     val hit = dist.filter(col("node") === keyStr(mp.to))
     spark.range(1).select(lit(keyStr(mp.from)).as("from"), lit(keyStr(mp.to)).as("to"))
       .join(hit.select(col("cost"), col("hops")), lit(true), "left")
@@ -848,23 +851,23 @@ class GqlEngine(spark: SparkSession, root: String,
         col("dkey").as("skey"), col("skey").as("dkey"))
       case _ => norm(fwd).unionByName(
         norm(fwd).select(col("dkey").as("skey"), col("skey").as("dkey")))
-    }).filter(col("dkey").isNotNull).localCheckpoint()
+    }).filter(col("dkey").isNotNull)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // read every hop
     val origin = n.key match {
       case GInt(l) => l.toString
       case GStr(s) => s
       case other => throw new IllegalArgumentException(s"bad neighbor key $other")
     }
     val spark = edges.sparkSession
-    var reached = spark.range(1).select(lit(origin).as("node"))
-    var frontier = reached
-    for (_ <- 1 to math.max(1, n.hops)) {
-      frontier = frontier.join(rel, col("node") === col("skey"))
+    // round h: the nodes first reached at hop h (the origin is round 0);
+    // every round is a cut leaf, so the answer no longer reads `rel`
+    val reached = try graft.operators.Superstep.levels(
+        spark.range(1).select(lit(origin).as("node")), math.max(1, n.hops)) { r =>
+      r.last.join(rel, col("node") === col("skey"))
         .select(col("dkey").as("node"))
-        .join(reached, Seq("node"), "left_anti")
+        .join(r.all, Seq("node"), "left_anti")
         .distinct()
-        .localCheckpoint()
-      reached = reached.unionByName(frontier).distinct().localCheckpoint()
-    }
+    } finally rel.unpersist(false)
     // neighbors keep the original twin-column shape for downstream callers
     val keys = edges
       .select(coalesce(col("src_s"), col("src_i").cast("string")).as("node"),

@@ -70,29 +70,14 @@ object BigGraphOps {
     r.getLong(0)
   }
 
-  /** E6 at scale — min-hop BFS from the start vertex, BFS_HOPS supersteps.
-    * Each round: one hash join frontier⋈edges on node id, anti-join dedupe
-    * against everything reached, distinct. Only the NEW frontier is
-    * localCheckpoint'ed each round — `reached` stays a flat union of the
-    * ≤BFS_HOPS checkpointed frontiers, so per-round materialization is
-    * O(frontier), not O(all reached so far), and the lineage still never
-    * compounds (every union leaf is a checkpoint). */
+  /** E6 at scale — min-hop BFS from the start vertex, BFS_HOPS supersteps
+    * of [[GraphOps.bfsLevels]]: one frontier⋈edges join per round, anti-join
+    * dedupe against every level reached so far. */
   val qBfsBig: Q = (s, d) => {
     val edges = persisted(coEdges(s, d).select(col("src"), col("dst")))
-    val start = startNode(edges)
-    var frontier = s.range(1)
-      .select(lit(start).as("node"), lit(0).as("hop")).localCheckpoint()
-    var reached = frontier
-    for (h <- 1 to BFS_HOPS) {
-      frontier = frontier
-        .join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), lit(h).as("hop"))
-        .join(reached.select("node"), Seq("node"), "left_anti")
-        .distinct()
-        .localCheckpoint()
-      reached = reached.unionByName(frontier)
-    }
-    reached.groupBy(col("node")).agg(min(col("hop")).as("hops")).orderBy("node")
+    val start = s.range(1).select(lit(startNode(edges)).as("node"), lit(0).as("hop"))
+    GraphOps.bfsLevels(start, edges, BFS_HOPS)
+      .select(col("node"), col("hop").as("hops")).orderBy("node")
   }
 
   /** E4 at scale — bounded Bellman-Ford with integer edge weights:
@@ -102,16 +87,8 @@ object BigGraphOps {
   val qSsspBig: Q = (s, d) => {
     val edges = persisted(
       coEdges(s, d).select(col("src"), col("dst"), col("w").as("ecost")))
-    val start = startNode(edges)
-    var dist = s.range(1).select(lit(start).as("node"), lit(0L).as("cost"))
-    for (_ <- 1 to SSSP_ROUNDS) {
-      val relaxed = dist.join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("cost") + col("ecost")).as("cost"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint() // dist referenced 2x/round — see GraphOps.qBfs
-    }
-    dist.orderBy("node")
+    val start = s.range(1).select(lit(startNode(edges)).as("node"), lit(0L).as("cost"))
+    GraphOps.relaxRounds(start, edges, SSSP_ROUNDS).orderBy("node")
   }
 
   /** E11 at scale — PageRank, PR_ITERS synchronous iterations, damping
@@ -126,20 +103,8 @@ object BigGraphOps {
         .unionByName(edges.select(col("dst").as("node")))
         .distinct())
     val n = nodes.count().toDouble
-    val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var rank = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    for (_ <- 1 to PR_ITERS) {
-      val contrib = rank.join(edges, col("node") === col("src"))
-        .join(outDeg, "src")
-        .select(col("dst"), (col("rank") / col("deg")).as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c").cast("decimal(28,18)")).cast("double").as("in_sum"))
-      rank = nodes
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(0.15 / n) + lit(0.85) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-        .localCheckpoint() // linear chain, but keeps each round's plan flat
-    }
+    val rank = GraphOps.pagerankRounds(nodes, edges,
+      nodes.select(col("node"), lit(1.0 / n).as("rank")), PR_ITERS, lit(0.15 / n), 0.85)
     rank.select(col("node"), Fns.roundP(col("rank"), 8).as("pagerank")).orderBy("node")
   }
 
@@ -164,7 +129,7 @@ object BigGraphOps {
     * IEEE divisions on identical doubles, sums pass through
     * decimal(28,18) so aggregation order cannot perturb them, and the
     * gate pins roundP-8 values. Scale shape: identical to PageRank —
-    * node-keyed join + agg per round, localCheckpoint'ed. */
+    * node-keyed join + agg per round. */
   val qPpr: Q = (s, d) => {
     val edges = persisted(coEdges(s, d).select(col("src"), col("dst")))
     val nodes = persisted(
@@ -172,22 +137,10 @@ object BigGraphOps {
         .unionByName(edges.select(col("dst").as("node")))
         .distinct())
     val seed = startNode(edges)
-    val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var rank = nodes.select(col("node"),
-      when(col("node") === seed, lit(1.0)).otherwise(lit(0.0)).as("rank"))
-    for (_ <- 1 to PR_ITERS) {
-      val contrib = rank.join(edges, col("node") === col("src"))
-        .join(outDeg, "src")
-        .select(col("dst"), (col("rank") / col("deg")).as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c").cast("decimal(28,18)")).cast("double").as("in_sum"))
-      rank = nodes
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (when(col("node") === seed, lit(PPR_ALPHA)).otherwise(lit(0.0)) +
-            lit(1.0 - PPR_ALPHA) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-        .localCheckpoint()
-    }
+    val restart = when(col("node") === seed, lit(PPR_ALPHA)).otherwise(lit(0.0))
+    val rank = GraphOps.pagerankRounds(nodes, edges,
+      nodes.select(col("node"), when(col("node") === seed, lit(1.0)).otherwise(lit(0.0)).as("rank")),
+      PR_ITERS, restart, 1.0 - PPR_ALPHA)
     rank.filter(col("rank") > 0.0)
       .select(col("node"), Fns.roundP(col("rank"), 8).as("ppr"))
       .orderBy("node")
@@ -296,47 +249,41 @@ object BigGraphOps {
         .join(und.groupBy("a").agg(count(lit(1)).as("deg")), "a"))
     val prevEdge = und.select(col("a").as("prev"), col("b").as("cand"),
       lit(1).as("is_common"))
-    // step 1: uniform (no prev yet) — qWalkCorpus's kernel
-    var frontier = und.select(col("a").as("start")).distinct()
+    // a round is the walk frontier after step t: (start, wk, step, prev,
+    // node); step 0's prev is the start itself and is never read
+    val walks = und.select(col("a").as("start")).distinct()
       .select(col("start"),
         explode(sequence(lit(0), lit(WC_WALKS - 1))).as("wk"))
-      .select(col("start"), col("wk"), col("start").as("node"))
-    var corpus = frontier.select(col("start"), col("wk"),
-      lit(0).as("step"), col("node"))
-    val pick1 =
-      pmod(Fns.hash32(concat_ws(":", col("start"), col("wk"), lit(1))),
-        col("deg")) + 1
-    frontier = frontier.join(adj, col("node") === col("a"))
-      .filter(col("rn") === pick1)
-      .select(col("start"), col("wk"), col("node").as("prev"),
-        col("b").as("node"))
-      .localCheckpoint()
-    corpus = corpus.unionByName(
-      frontier.select(col("start"), col("wk"), lit(1).as("step"), col("node")))
-    for (t <- 2 to WC_STEPS) {
-      val wWalk = Window.partitionBy("start", "wk")
-      val cand = frontier.join(adj, col("node") === col("a"))
-        .select(col("start"), col("wk"), col("prev"), col("node"),
-          col("b").as("cand"), col("rn"))
-        .join(prevEdge, Seq("prev", "cand"), "left")
-        .withColumn("w",
-          when(col("cand") === col("prev"), lit(N2V_RET))
-            .when(col("is_common").isNotNull, lit(N2V_COMMON))
-            .otherwise(lit(N2V_FAR)))
-        .withColumn("cw", sum(col("w")).over(wWalk.orderBy("rn")))
-        .withColumn("tw", sum(col("w")).over(wWalk))
-        .withColumn("r",
-          pmod(Fns.hash32(concat_ws(":", col("start"), col("wk"), lit(t))),
-            col("tw")))
-      frontier = cand
-        .filter(col("r") >= col("cw") - col("w") && col("r") < col("cw"))
-        .select(col("start"), col("wk"), col("node").as("prev"),
-          col("cand").as("node"))
-        .localCheckpoint()
-      corpus = corpus.unionByName(
-        frontier.select(col("start"), col("wk"), lit(t).as("step"), col("node")))
+      .select(col("start"), col("wk"), lit(0).as("step"),
+        col("start").as("prev"), col("start").as("node"))
+    val corpus = Superstep.levels(walks, WC_STEPS) { r =>
+      val t = r.index
+      val cur = r.last.select(col("start"), col("wk"), col("prev"), col("node"))
+        .join(adj, col("node") === col("a"))
+      val hashT = Fns.hash32(concat_ws(":", col("start"), col("wk"), lit(t)))
+      val picked =
+        if (t == 1) // uniform first step (no prev yet) — qWalkCorpus's kernel
+          cur.filter(col("rn") === pmod(hashT, col("deg")) + 1)
+            .select(col("start"), col("wk"), col("node").as("prev"), col("b").as("node"))
+        else {
+          val wWalk = Window.partitionBy("start", "wk")
+          cur.select(col("start"), col("wk"), col("prev"), col("node"),
+              col("b").as("cand"), col("rn"))
+            .join(prevEdge, Seq("prev", "cand"), "left")
+            .withColumn("w",
+              when(col("cand") === col("prev"), lit(N2V_RET))
+                .when(col("is_common").isNotNull, lit(N2V_COMMON))
+                .otherwise(lit(N2V_FAR)))
+            .withColumn("cw", sum(col("w")).over(wWalk.orderBy("rn")))
+            .withColumn("tw", sum(col("w")).over(wWalk))
+            .withColumn("r", pmod(hashT, col("tw")))
+            .filter(col("r") >= col("cw") - col("w") && col("r") < col("cw"))
+            .select(col("start"), col("wk"), col("node").as("prev"),
+              col("cand").as("node"))
+        }
+      picked.withColumn("step", lit(t))
     }
-    corpus.orderBy("start", "wk", "step")
+    corpus.select("start", "wk", "step", "node").orderBy("start", "wk", "step")
   }
 
   /** Skip-gram context window for [[qSkipgramPairs]]. */
@@ -384,9 +331,7 @@ object BigGraphOps {
     * Each round is two shuffles both keyed on node id: votes =
     * und⋈labels grouped by (node, label), then a per-node window argmax —
     * the Pregel community-detection dataflow (GraphX's
-    * LabelPropagation.run has the same per-superstep shape). Labels are
-    * localCheckpoint'ed per round: the window+agg chain would otherwise
-    * deepen the plan linearly with rounds. */
+    * LabelPropagation.run has the same per-superstep shape). */
   /** The weighted undirected view shared by label propagation and
     * modularity — both directions of every co-purchase edge. */
   private def undWeighted(s: SparkSession, d: String): DataFrame = {
@@ -399,25 +344,19 @@ object BigGraphOps {
     * so [[qModularity]] scores the IDENTICAL rounds. */
   private def labelPropLabels(s: SparkSession, d: String): DataFrame = {
     val und = persisted(undWeighted(s, d))
-    // r16: rounds persist instead of localCheckpoint. Each round
-    // references its predecessor exactly ONCE (votes join), so the plan
-    // stays LINEAR in LP_ITERS — the ≥2-references-per-round explosion
-    // rule doesn't bite at this fixed depth — and persisted rounds keep
-    // their canonicalized plans, so q_label_prop and q_modularity (which
-    // scores the IDENTICAL rounds) share one LP execution per bench pass
-    // via CacheManager instead of running the chain twice; checkpoint
-    // RDDs got a fresh id per build and could never be shared.
-    var labels = persisted(und.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl")))
-    for (_ <- 1 to LP_ITERS) {
-      val votes = und.join(labels, col("node") === col("b"))
+    val seeds = und.select(col("a").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl"))
+    val w = Window.partitionBy(col("a")).orderBy(col("wt").desc, col("lbl").asc)
+    // each round reads its predecessor once, so the driver persists the
+    // rounds: q_modularity scores the IDENTICAL rounds and CacheManager
+    // shares the final one between the two gates
+    Superstep.iterate(seeds, LP_ITERS) { r =>
+      und.join(r.last, col("node") === col("b"))
         .groupBy(col("a"), col("lbl")).agg(sum(col("w")).as("wt"))
-      val w = Window.partitionBy(col("a")).orderBy(col("wt").desc, col("lbl").asc)
-      labels = persisted(votes.withColumn("rn", row_number().over(w))
+        .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
-        .select(col("a").as("node"), col("lbl")))
-    }
-    labels.select(col("node"), col("lbl").as("community"))
+        .select(col("a").as("node"), col("lbl"))
+    }.last.select(col("node"), col("lbl").as("community"))
   }
 
   val qLabelProp: Q = (s, d) => labelPropLabels(s, d).orderBy("node")
@@ -529,28 +468,22 @@ object BigGraphOps {
     * re-join emitting star edges, and the round count is O(log² n)
     * REGARDLESS of diameter — the property that lets CC run over a 100 TB
     * edge set. Edges stay (high → low) oriented and deduped; fixpoint =
-    * edge set unchanged over a full round (two `except` counts on the
-    * localCheckpoint'ed frames — O(|E|) per round, same cost class as the
-    * half-rounds themselves). Returns (node, wcc_id = component min) for
-    * every vertex of `edges0`.
+    * edge set unchanged over a full round. Returns (node, wcc_id =
+    * component min) for every vertex of `edges0`.
     * Reference kin: none — the reference's component analysis is an empty
     * stub (`/root/reference/src/operand/analysis/Tarjan.cpp`, 0 bytes);
     * this completes E11's data-scale family on the weak side of q_scc_big. */
   private[graft] def ccTwoPhase(edges0: DataFrame): DataFrame = {
-    var e = edges0
+    val e0 = edges0
       .filter(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       .distinct()
-      .localCheckpoint()
-    var nE = e.count()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < CC_MAX_ROUNDS) {
+    val e = Superstep.fixpoint(e0, CC_MAX_ROUNDS, "two-phase CC") { r =>
       // large-star: every node attaches its LARGER neighbors to the min
       // of its closed neighborhood
-      val und = e.select(col("u"), col("v"))
-        .unionByName(e.select(col("v").as("u"), col("u").as("v")))
+      val und = r.last.select(col("u"), col("v"))
+        .unionByName(r.last.select(col("v").as("u"), col("u").as("v")))
       val lmin = und.groupBy(col("u")).agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("mn"), col("u")).as("m"))
       val large = und.join(lmin, "u")
@@ -560,29 +493,20 @@ object BigGraphOps {
       // small-star: every node attaches its SMALLER neighbors (and
       // itself) to the min of that down-neighborhood
       val smin = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val small = large.join(smin, "u")
+      large.join(smin, "u")
         .select(col("v").as("n"), col("m"))
         .unionByName(smin.select(col("u").as("n"), col("m")))
         .filter(col("n") =!= col("m"))
         .select(greatest(col("n"), col("m")).as("u"),
           least(col("n"), col("m")).as("v"))
         .distinct()
-        .localCheckpoint() // consumed up to 2×: the fixpoint probe + next round
-      // Fixpoint test without the former two-sided except pair: both
-      // frames are DISTINCT sets, so |small| ≠ |e| alone proves change
-      // (zero extra jobs in the shrinking early rounds — the count rides
-      // the checkpoint), and at equal sizes ONE one-sided except decides
-      // (|A|=|B| ∧ A∖B=∅ ⇒ A=B). Exact, never probabilistic — a hashed
-      // frame digest would risk a silent early stop on collision.
-      val nSmall = small.count()
-      changed = if (nSmall != nE) 1L else small.except(e).count()
-      nE = nSmall
-      e = small
-      iter += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"two-phase CC did not converge in $CC_MAX_ROUNDS rounds")
+    } { r =>
+      // both frames are DISTINCT sets, so a row-count change alone proves
+      // change (free: the count rides the round's checkpoint), and at
+      // equal sizes ONE one-sided except decides (|A|=|B| ∧ A∖B=∅ ⇒ A=B).
+      // Exact, never probabilistic — a hashed digest could stop early.
+      r.unchanged && r.last.except(r.prev).isEmpty
+    }.last
     // at the fixpoint every component is a star on its min vertex: each
     // non-root appears exactly once as u with v = root; roots only as v
     e.select(col("u").as("node"), col("v").as("wcc"))
@@ -599,64 +523,55 @@ object BigGraphOps {
   /** DataFrame-superstep SCC (Orzan coloring — the same algorithm GraphX's
     * Pregel SCC runs): outer rounds of (forward min-color propagation to
     * fixpoint) → (roots = color==self) → (backward confirmation inside the
-    * color) → remove confirmed SCCs; vertices left when the edge set
-    * drains are singletons. Built to ANSWER the r10 verdict's "evaluate
-    * retiring the GraphX RDD path for q_scc_big" — a measured comparison,
-    * not a guess (PERF.md r11 row, SccDfSpec parity vs the gate).
-    * Every inner fixpoint is count-probed on localCheckpoint'ed frames
-    * (the iterative-loop rule); supersteps are node-keyed joins like
-    * every DF graph gate here, so the comparison isolates exactly the
-    * per-superstep cost difference between the two execution paths. */
+    * color) → remove confirmed SCCs' edges; vertices never confirmed when
+    * the edge set drains are singletons. Built to ANSWER the r10 verdict's
+    * "evaluate retiring the GraphX RDD path for q_scc_big" — a measured
+    * comparison, not a guess (PERF.md r11 row, SccDfSpec parity vs the
+    * gate). Supersteps are node-keyed joins like every DF graph gate here,
+    * so the comparison isolates exactly the per-superstep cost difference
+    * between the two execution paths. An edge set that has not drained
+    * after `maxRounds` outer rounds throws. */
   private[graft] def dfScc(edges0: DataFrame, maxRounds: Int = SCC_ITERS): DataFrame = {
-    val sess = edges0.sparkSession
-    var edges = edges0.select(col("src"), col("dst")).distinct().localCheckpoint()
-    var verts = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
-    var confirmed: DataFrame =
-      sess.emptyDataFrame.select(lit(0L).as("node"), lit(0L).as("scc_id")).limit(0)
-    var round = 0
-    while (round < maxRounds && edges.count() > 0) {
-      // forward min-color propagation to fixpoint
-      var color = verts.select(col("node"), col("node").as("color")).localCheckpoint()
-      var changed = 1L
-      while (changed > 0) {
-        val prop = color.join(edges, col("node") === col("src"))
+    def ends(e: DataFrame) = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct()
+    val edges = edges0.select(col("src"), col("dst")).distinct()
+    val confirmed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    Superstep.fixpoint(edges, maxRounds, "DataFrame SCC") { outer =>
+      val e = outer.last
+      // a round moves a color at least one hop: ≤ |V| ≤ 2|E| rounds
+      val cap = (2 * outer.rows.last + 1).min(Int.MaxValue).toInt
+      val color = Superstep.fixpoint(
+          ends(e).select(col("node"), col("node").as("color")), cap, "SCC coloring") { r =>
+        val prop = r.last.join(e, col("node") === col("src"))
           .groupBy(col("dst").as("n")).agg(min(col("color")).as("pc"))
-        val nc = color.join(prop, col("node") === col("n"), "left")
+        r.last.join(prop, col("node") === col("n"), "left")
           .select(col("node"),
             least(col("color"), coalesce(col("pc"), col("color"))).as("color"))
-          .localCheckpoint()
-        changed = nc.join(color.withColumnRenamed("color", "old"), "node")
-          .filter(col("color") =!= col("old")).count()
-        color = nc
-      }
+      } { r =>
+        r.last.join(r.prev.withColumnRenamed("color", "old"), "node")
+          .filter(col("color") =!= col("old")).isEmpty
+      }.last
       // backward confirmation: from each root r, walk edges in reverse
       // while staying inside color r — the reached set IS SCC(r)
-      var conf = color.filter(col("color") === col("node"))
-        .select(col("node"), col("node").as("scc_id")).localCheckpoint()
-      var grew = 1L
-      while (grew > 0) {
-        val step = edges.join(conf, col("dst") === col("node"))
+      val conf = Superstep.fixpoint(
+          color.filter(col("color") === col("node"))
+            .select(col("node"), col("node").as("scc_id")), cap, "SCC confirmation") { r =>
+        val step = e.join(r.last, col("dst") === col("node"))
           .select(col("src").as("node"), col("scc_id"))
           .join(color, "node")
           .filter(col("color") === col("scc_id"))
           .select(col("node"), col("scc_id"))
-        val next = conf.unionByName(step).distinct().localCheckpoint()
-        grew = next.count() - conf.count()
-        conf = next
-      }
-      confirmed = confirmed.unionByName(conf)
-      verts = verts.join(conf.select(col("node")), Seq("node"), "left_anti")
-        .localCheckpoint()
-      edges = edges
-        .join(verts.select(col("node").as("src")), Seq("src"))
-        .join(verts.select(col("node").as("dst")), Seq("dst"))
-        .select(col("src"), col("dst")).localCheckpoint()
-      round += 1
-    }
-    // drained graph: every remaining vertex is its own singleton SCC
-    confirmed.unionByName(verts.select(col("node"), col("node").as("scc_id")))
+        r.last.unionByName(step).distinct()
+      }(_.unchanged).last
+      confirmed += conf
+      val done = conf.select("node")
+      e.join(done.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
+        .join(done.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti")
+        .select(col("src"), col("dst"))
+    }(_.rows.last == 0L)
+    val scc = confirmed.reduce(_ unionByName _)
+    scc.unionByName(ends(edges).join(scc.select("node"), Seq("node"), "left_anti")
+      .select(col("node"), col("node").as("scc_id")))
   }
 
   /** Triangle counting + global closure at data scale — the motif gate
@@ -748,10 +663,8 @@ object BigGraphOps {
     *
     * Scale shape: each round is two hash joins of the edge set against
     * the (shrinking) survivor set plus one node-keyed count — all keyed
-    * on vertex ids that scale with the data, no driver-side graph. The
-    * survivor set is localCheckpoint'ed per round (it is referenced
-    * twice per round — both join sides — the PERF.md iterative-loop
-    * rule); the early-break test rides the count the loop needs anyway.
+    * on vertex ids that scale with the data, no driver-side graph; the
+    * early-break test rides the count of the round's materialization.
     * This synchronous-peel dataflow is how distributed k-core runs at
     * real scale (each round is a Pregel superstep); the O(rounds) bound
     * is the graph's degeneracy ordering depth, not its size. */
@@ -764,21 +677,17 @@ object BigGraphOps {
     val und = persisted(
       e.select(col("src").as("a"), col("dst").as("b"))
         .unionByName(e.select(col("dst").as("a"), col("src").as("b"))))
-    var alive = und.select(col("a").as("node")).distinct().localCheckpoint()
-    var nAlive = alive.count()
-    var done = nAlive == 0L
-    for (_ <- 1 to KCORE_ROUNDS if !done) {
-      alive = und
-        .join(alive.select(col("node").as("a")), Seq("a"))
-        .join(alive.select(col("node").as("b")), Seq("b"))
+    // the peel only shrinks the survivor set, so an unchanged count is
+    // the fixpoint: every further round is identity
+    val alive = Superstep.iterateUntil(
+        und.select(col("a").as("node")).distinct(), KCORE_ROUNDS) { r =>
+      und
+        .join(r.last.select(col("node").as("a")), Seq("a"))
+        .join(r.last.select(col("node").as("b")), Seq("b"))
         .groupBy(col("a")).agg(count(lit(1)).as("dg"))
         .filter(col("dg") >= k)
         .select(col("a").as("node"))
-        .localCheckpoint()
-      val n = alive.count()
-      done = n == nAlive // fixpoint: every further round is identity
-      nAlive = n
-    }
+    }(_.unchanged).last
     und
       .join(alive.select(col("node").as("a")), Seq("a"))
       .join(alive.select(col("node").as("b")), Seq("b"))
@@ -814,19 +723,16 @@ object BigGraphOps {
     * the canonical src<dst edge list, each triangle counted once) over
     * the SURVIVING edge set, a 3-way row-local explode crediting the
     * triangle's edges, one (a,b)-keyed support agg, and the peel
-    * filter; localCheckpoint per round (the frame feeds 3 joins next
-    * round), driver early-exit at fixpoint so the result equals the
+    * filter; early exit at fixpoint so the result equals the
     * oracle's full [[TRUSS_ROUNDS]] unroll (further rounds are
     * identity). The oracle unrolls with MATERIALIZED CTEs — each round
     * references the previous 3×, so default inlining would expand
     * 3^rounds-fold (the q_kcore_big lesson). Output is the per-node
     * incident truss degree, node-ordered. */
   val qTruss: Q = (s, d) => {
-    var t = coEdges(s, d)
-      .select(col("src").as("a"), col("dst").as("b")).localCheckpoint()
-    var nEdges = t.count()
-    var done = nEdges == 0L
-    for (_ <- 1 to TRUSS_ROUNDS if !done) {
+    val t = Superstep.iterateUntil(
+        coEdges(s, d).select(col("src").as("a"), col("dst").as("b")), TRUSS_ROUNDS) { r =>
+      val t = r.last
       val tri = t
         .join(t.select(col("a").as("b"), col("b").as("c")), Seq("b"))
         .join(t.select(col("a").as("a2"), col("b").as("c2")),
@@ -838,14 +744,10 @@ object BigGraphOps {
           struct(col("a").as("x"), col("c").as("y")))).as("e"))
         .groupBy(col("e.x").as("a"), col("e.y").as("b"))
         .agg(count(lit(1)).as("sup"))
-      t = t.join(sup, Seq("a", "b"))
+      t.join(sup, Seq("a", "b"))
         .filter(col("sup") >= TRUSS_K - 2)
         .select(col("a"), col("b"))
-        .localCheckpoint()
-      val n = t.count()
-      done = n == nEdges // fixpoint: every further round is identity
-      nEdges = n
-    }
+    }(_.unchanged).last // fixpoint: every further round is identity
     t.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("deg_truss"))
       .orderBy("node")
@@ -867,9 +769,8 @@ object BigGraphOps {
     *
     * Scale shape: the BFS state is pivots×nodes (pivots is a constant),
     * one (pivot, node)-keyed hash join + anti-join dedupe per superstep
-    * — [[qBfsBig]]'s dataflow with a pivot key rode along; only the new
-    * frontier is localCheckpoint'ed per round. The pivot list is a
-    * CENT_PIVOTS-row collect (the startNode scalar precedent). */
+    * — [[qBfsBig]]'s dataflow with a pivot key rode along. The pivot
+    * list is a CENT_PIVOTS-row collect (the startNode scalar precedent). */
   val qHarmonicBig: Q = (s, d) => {
     val e = coEdges(s, d)
     val und = persisted(
@@ -880,19 +781,10 @@ object BigGraphOps {
       .collect().map(_.getLong(0)).toSeq
     require(pivots.nonEmpty, "co-purchase graph has no nodes")
     import s.implicits._
-    var frontier = pivots.toDF("pivot")
+    val start = pivots.toDF("pivot")
       .select(col("pivot"), col("pivot").as("node"), lit(0).as("hop"))
-      .localCheckpoint()
-    var reached = frontier
-    for (h <- 1 to CENT_HOPS) {
-      frontier = frontier
-        .join(und, col("node") === col("a"))
-        .select(col("pivot"), col("b").as("node"), lit(h).as("hop"))
-        .join(reached.select("pivot", "node"), Seq("pivot", "node"), "left_anti")
-        .distinct()
-        .localCheckpoint()
-      reached = reached.unionByName(frontier)
-    }
+    val reached = GraphOps.bfsLevels(start,
+      und.select(col("a").as("src"), col("b").as("dst")), CENT_HOPS, Seq("pivot"))
     reached.filter(col("hop") > 0)
       .groupBy("node")
       .agg(count(lit(1)).as("n_reached"),
@@ -961,50 +853,17 @@ object BigGraphOps {
   /** Double-sweep hop budget — bounds both BFS passes (and the oracle's
     * recursive unrolls) like every superstep gate here. Profiled at
     * sf0.1: each superstep costs ~0.9 s of FIXED local-mode latency
-    * (scheduler + localCheckpoint; the same wall time with 1-row and
+    * (scheduler + lineage cut; the same wall time with 1-row and
     * 3k-row frontiers, and restructuring the round from two shuffles to
     * one moved nothing), so the hop budget IS the query's price — 8
     * keeps the bound useful while the 2×H rounds stay ~60% of the r10
-    * 12-hop cost. On a real cluster the per-round floor amortizes over
-    * partitions and H would be raised, not the dataflow changed —
-    * env-overridable (SPARK_GRAFT_DS_HOPS) so a cluster run restores the
-    * deeper sweep without a code change; the oracle SQL interpolates the
-    * same val, so both engines always share the bound. */
-  val DS_HOPS = sys.env.getOrElse("SPARK_GRAFT_DS_HOPS", "8").toInt
-
-  /** Hop-bounded multi-round BFS over an undirected edge frame (a, b):
-    * min-hop distances from `start`, [[DS_HOPS]] supersteps of
-    * frontier⋈edges + anti-join dedupe ([[qBfsBig]]'s dataflow, reused
-    * for both sweeps). This shape was re-adjudicated in r16 after the
-    * q_diameter warm-time flag: the gate is overhead-dominated (tiny
-    * frontiers × ~0.3 s fixed per-job latency, data-volume-free), and
-    * three restructures all measured AT-OR-WORSE same-host (fused
-    * min-flag agg replacing distinct+anti 6.1 s vs 5.4–6.0 s baseline;
-    * frontier-drain early exit 5.7 s — at shipped SFs ecc hits the hop
-    * CAP so zero rounds drain and the per-round isEmpty probe is pure
-    * added latency; AQE-off 6.5 s). The r14→r15 2× was host drift, not
-    * plan — see PERF.md r16 and the bench canary. */
-  private def undBfs(s: SparkSession, und: DataFrame, start: Long): DataFrame = {
-    var frontier = s.range(1)
-      .select(lit(start).as("node"), lit(0).as("hop")).localCheckpoint()
-    var reached = frontier
-    for (h <- 1 to DS_HOPS) {
-      // Broadcast the frontier into the expansion join — a single-source
-      // BFS frontier is ≪ the edge set at any scale (the standard Pregel
-      // small-frontier path; AQE would pick this dynamically, pinning it
-      // saves the exchange stage every round). distinct BEFORE the
-      // anti-join so both run on the same node-keyed exchange and the
-      // anti probe sees each candidate once.
-      frontier = und
-        .join(broadcast(frontier.select(col("node"))), col("a") === col("node"))
-        .select(col("b").as("node")).distinct()
-        .join(reached.select("node"), Seq("node"), "left_anti")
-        .select(col("node"), lit(h).as("hop"))
-        .localCheckpoint()
-      reached = reached.unionByName(frontier)
-    }
-    reached.groupBy(col("node")).agg(min(col("hop")).as("hop"))
-  }
+    * 12-hop cost. The oracle SQL interpolates the same val, so both
+    * engines always share the bound. The sweep is [[GraphOps.bfsLevels]]
+    * — its broadcast frontier and distinct-before-anti shape were
+    * re-adjudicated in r16 after the q_diameter warm-time flag: three
+    * restructures (fused min-flag agg, frontier-drain early exit, AQE
+    * off) all measured at-or-worse (PERF.md r16). */
+  val DS_HOPS = 8
 
   /** Double-sweep diameter lower bound (Magnien, Latapy & Habib, JEA
     * 2009 — the standard cheap diameter estimator: BFS from an arbitrary
@@ -1030,8 +889,11 @@ object BigGraphOps {
       val r = dists.orderBy(desc("hop"), col("node")).limit(1).head()
       (r.getLong(0), r.getInt(1))
     }
-    val (far1, ecc1) = farthest(undBfs(s, und, start))
-    val (far2, ecc2) = farthest(undBfs(s, und, far1))
+    val sweep = (from: Long) => GraphOps.bfsLevels(
+      s.range(1).select(lit(from).as("node"), lit(0).as("hop")),
+      und.select(col("a").as("src"), col("b").as("dst")), DS_HOPS)
+    val (far1, ecc1) = farthest(sweep(start))
+    val (far2, ecc2) = farthest(sweep(far1))
     s.range(1).select(
       lit(start).as("start"), lit(far1).as("far1"), lit(ecc1).as("ecc1"),
       lit(far2).as("far2"), lit(ecc2).as("diameter_lb"))
@@ -1088,8 +950,8 @@ object BigGraphOps {
     * gate on arithmetic. The truncated form is also the scale-correct
     * one: full spectral Katz needs a solve, while the truncated index is
     * KATZ_ITERS node-keyed join+agg supersteps over the edge set —
-    * PageRank's exact dataflow shape (localCheckpoint per round, edges
-    * persisted once). Reference kin: E11 degrees
+    * PageRank's exact dataflow shape (edges persisted once). Reference
+    * kin: E11 degrees
     * (/root/reference/src/operand/analysis/DegreeCentrality.cpp) — Katz
     * is degree's walk-depth generalization (k=1 IS in-degree+1). */
   val qKatz: Q = (s, d) => {
@@ -1098,18 +960,17 @@ object BigGraphOps {
       edges.select(col("src").as("node"))
         .unionByName(edges.select(col("dst").as("node")))
         .distinct())
-    var x = nodes.select(col("node"), lit(1L).cast("decimal(38,0)").as("score"))
-    for (_ <- 1 to KATZ_ITERS) {
-      val in = x.join(edges, col("node") === col("src"))
+    val x = Superstep.iterate(
+        nodes.select(col("node"), lit(1L).cast("decimal(38,0)").as("score")), KATZ_ITERS) { r =>
+      val in = r.last.join(edges, col("node") === col("src"))
         .groupBy(col("dst"))
         .agg(sum(col("score")).as("in_sum"))
-      x = nodes
+      nodes
         .join(in, col("node") === col("dst"), "left")
         .select(col("node"),
           (lit(1L).cast("decimal(38,0)") +
             coalesce(col("in_sum"), lit(0L).cast("decimal(38,0)"))).as("score"))
-        .localCheckpoint() // linear chain; keeps each round's plan flat
-    }
+    }.last
     x.select(col("node"), col("score").cast("long").as("katz")).orderBy("node")
   }
 
@@ -1136,21 +997,22 @@ object BigGraphOps {
         .unionByName(edges.select(col("dst").as("node")))
         .distinct())
     val zero = lit(0L).cast("decimal(38,0)")
-    var hub = nodes.select(col("node"), lit(1L).cast("decimal(38,0)").as("h"))
-    var auth = nodes.select(col("node"), zero.as("a"))
-    for (_ <- 1 to HITS_ITERS) {
-      val aIn = hub.join(edges, col("node") === col("src"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("in_sum"))
-      auth = nodes.join(aIn, col("node") === col("dst"), "left")
-        .select(col("node"), coalesce(col("in_sum"), zero).as("a"))
-        .localCheckpoint()
-      val hOut = auth.join(edges, col("node") === col("dst"))
-        .groupBy(col("src")).agg(sum(col("a")).as("out_sum"))
-      hub = nodes.join(hOut, col("node") === col("src"), "left")
-        .select(col("node"), coalesce(col("out_sum"), zero).as("h"))
-        .localCheckpoint()
-    }
-    auth.join(hub, Seq("node"))
+    // one round = a_k = Aᵀ·h_{k-1}, then h_k = A·a_k; the state carries both.
+    // h_k sums a_k over out-neighbors straight from the in-sums: a node
+    // without in-edges has a_k = 0 and adds nothing to an exact sum
+    Superstep.iterate(
+        nodes.select(col("node"), lit(1L).cast("decimal(38,0)").as("h"), zero.as("a")),
+        HITS_ITERS) { r =>
+      val aIn = r.last.join(edges, col("node") === col("src"))
+        .groupBy(col("dst").as("n")).agg(sum(col("h")).as("in_sum"))
+      val hOut = aIn.join(edges, col("n") === col("dst"))
+        .groupBy(col("src")).agg(sum(col("in_sum")).as("out_sum"))
+      nodes
+        .join(aIn, col("node") === col("n"), "left")
+        .join(hOut, col("node") === col("src"), "left")
+        .select(col("node"), coalesce(col("out_sum"), zero).as("h"),
+          coalesce(col("in_sum"), zero).as("a"))
+    }.last
       .select(col("node"), col("h").cast("long").as("hub"),
         col("a").cast("long").as("auth"))
       .orderBy("node")
@@ -1174,10 +1036,9 @@ object BigGraphOps {
     *
     * Plan/scale: forward = [[BC_HOPS]] rounds of frontier⋈edges hash
     * join + (root,node)-keyed count-sum with anti-join dedupe (exact
-    * longs); backward = one join + agg per level. Only frontiers/levels
-    * are localCheckpoint'ed (the PERF.md iterative-loop rule); edges
-    * persist once. Exactness: σ is all-integer; every δ and the final
-    * per-node sum aggregate decimal(28,18)-cast terms, so aggregation
+    * longs); backward = one join + agg per level; edges persist once.
+    * Exactness: σ is all-integer; every δ and the final per-node sum
+    * aggregate decimal(28,18)-cast terms, so aggregation
     * order cannot perturb a double — the oracle's unrolled MATERIALIZED
     * CTE rounds hold bit-identical state. Report: top [[BC_TOP]] by
     * (rounded bc desc, node) — deterministic under ties. */
@@ -1185,40 +1046,34 @@ object BigGraphOps {
     val edges = persisted(coEdges(s, d).select(col("src"), col("dst")))
     val roots = edges.select(col("src")).distinct()
       .orderBy("src").limit(BC_ROOTS).select(col("src").as("root"))
-    var frontier = roots
-      .select(col("root"), col("root").as("node"), lit(1L).as("sigma"))
-      .localCheckpoint()
-    var levels = Vector(frontier)
-    var reached = frontier.select("root", "node")
-    for (_ <- 1 to BC_HOPS) {
-      frontier = frontier
+    val levels = Superstep.iterate(
+        roots.select(col("root"), col("root").as("node"), lit(1L).as("sigma")), BC_HOPS) { r =>
+      r.last
         .join(edges, col("node") === col("src"))
         .select(col("root"), col("dst").as("node"), col("sigma"))
-        .join(reached, Seq("root", "node"), "left_anti")
+        .join(r.all.select("root", "node"), Seq("root", "node"), "left_anti")
         .groupBy("root", "node").agg(sum(col("sigma")).as("sigma"))
-        .localCheckpoint()
-      reached = reached.unionByName(frontier.select("root", "node"))
-      levels = levels :+ frontier
-    }
-    // backward sweep: deltas(0) always holds level l+1's δ frame
-    var deltas = Vector(levels(BC_HOPS).withColumn("delta", lit(0.0)))
-    for (l <- (BC_HOPS - 1) to 1 by -1) {
+    }.frames
+    // backward sweep, deepest level first: round i adds level l = BC_HOPS-i,
+    // whose successors are exactly the level-(l+1) rows already in the
+    // frame (a BFS edge out of level l never reaches deeper than l+1)
+    val deltas = Superstep.iterate(
+        levels(BC_HOPS).withColumn("delta", lit(0.0)), BC_HOPS - 1) { r =>
+      val l = BC_HOPS - r.index
       val contrib = levels(l).as("v")
         .join(edges, col("v.node") === col("src"))
-        .join(deltas.head.as("w"),
+        .join(r.last.as("w"),
           col("v.root") === col("w.root") && col("dst") === col("w.node"))
         .select(col("v.root").as("root"), col("v.node").as("node"),
           ((col("v.sigma") / col("w.sigma")) * (lit(1.0) + col("w.delta")))
             .cast("decimal(28,18)").as("t"))
         .groupBy("root", "node").agg(sum(col("t")).as("ts"))
-      val dl = levels(l)
+      r.last.unionByName(levels(l)
         .join(contrib, Seq("root", "node"), "left")
         .select(col("root"), col("node"), col("sigma"),
-          coalesce(col("ts").cast("double"), lit(0.0)).as("delta"))
-        .localCheckpoint()
-      deltas = dl +: deltas
-    }
-    deltas.reduce(_ unionByName _)
+          coalesce(col("ts").cast("double"), lit(0.0)).as("delta")))
+    }.last
+    deltas
       .groupBy("node")
       .agg(sum(col("delta").cast("decimal(28,18)")).as("bcsum"))
       .select(col("node"), Fns.roundP(col("bcsum").cast("double"), 6).as("bc"))
@@ -1256,20 +1111,18 @@ object BigGraphOps {
     * (order/partition-free); the per-node estimate is the q_hll_distinct
     * double tree (dyadic-exact indicator sums, α literal, ln parity);
     * N(t) decimal-sums per-node estimates. Plan: und edges persist once;
-    * each round's register frame persists, the next round is built over
-    * a lineage-truncating LogicalRDD view of it (so plans stay flat at
-    * any ANF_HOPS — the iterative-loop rule), and the previous round
-    * unpersists as soon as the readout forces the new frame. NOTE: the
-    * returned 5-row frame is a LocalTableScan (rounds execute eagerly),
-    * so the returned plan doesn't show the joins — the round shape is
-    * pinned statically via [[anfRound]] (PlanSpec) and a runtime
-    * QueryExecutionListener pin; ScaleProbe is the scaling net. */
+    * each round reads the previous registers twice, so [[Superstep]] cuts
+    * every round to a flat leaf. The curve readout collects ONE row per
+    * round eagerly ([[Superstep.readEach]]) and the driver drops each
+    * V×m register frame once the next is read, so no lazy plan keeps all
+    * ANF_HOPS frames alive at once (the first cut did, and OOM'd the 64×
+    * probe). */
   /** One HyperANF ball-growing round — the element-wise max-merge of each
     * vertex's own and in-neighbors' registers. Factored so PlanSpec can
     * pin the join+agg shape statically: [[qHyperAnf]]'s rounds execute
-    * EAGERLY (the curve readout forces each frame), so the gate's returned
-    * 5-row LocalTableScan never exposes this subtree to a plan assert
-    * (open item since r13, closed r16). Shape contract: an equi-join of
+    * eagerly (the curve readout forces each frame), so the gate's returned
+    * 5-row LocalTableScan never exposes this subtree to a plan assert.
+    * Shape contract: an equi-join of
     * the undirected edge frame against the register frame on b = node
     * (never a nested-loop), then a (node, bucket)-keyed partial+final max
     * aggregate — E·m rows in flight, ≤ m rows of state per vertex. */
@@ -1286,39 +1139,19 @@ object BigGraphOps {
       .unionByName(e.select(col("dst").as("a"), col("src").as("b")))
       .distinct())
     val nodes = und.select(col("a").as("node")).distinct()
-    // each round's V×m register frame persists only until the next round
-    // is materialized: the curve readout collects ONE row per round
-    // eagerly (the whole point of a sketch — the report is tiny), so no
-    // lazy plan keeps all ANF_HOPS frames alive at once (the first cut
-    // did, and OOM'd the 64× probe)
-    var regs = SketchOps.hllRegistersAt(
+    val regs0 = SketchOps.hllRegistersAt(
       nodes.select(col("node"),
         Fns.hash32(concat(lit("anf_"), col("node").cast("string"))).as("h")),
-      "node", ANF_BITS).persist(StorageLevel.MEMORY_AND_DISK)
-    def nOf(t: Int, r: DataFrame): (Int, Long, Double) = {
-      val row = SketchOps.hllEstimateAt(r, "node", ANF_M, ANF_ALPHA_M2)
+      "node", ANF_BITS)
+    Superstep.readEach(regs0, ANF_HOPS)(anfRound(und, _)) { regs =>
+      val row = SketchOps.hllEstimateAt(regs, "node", ANF_M, ANF_ALPHA_M2)
         .agg(count(lit(1)).as("n_nodes"),
           sum(col("hll_raw").cast("decimal(28,18)")).as("sp"))
-        .select(col("n_nodes"),
-          Fns.roundP(col("sp").cast("double"), 4).as("n_pairs"))
+        .select(col("n_nodes"), Fns.roundP(col("sp").cast("double"), 4).as("n_pairs"))
         .head()
-      (t, row.getLong(0), row.getDouble(1))
-    }
-    var handle = regs // the persisted frame the current view reads from
-    // lineage cut: a LogicalRDD over the persisted frame, so round t's
-    // plan references a flat scan instead of 2^t copies of round t-1
-    regs = s.createDataFrame(regs.rdd, regs.schema)
-    val curve = scala.collection.mutable.ArrayBuffer(nOf(0, regs))
-    for (t <- 1 to ANF_HOPS) {
-      val next = anfRound(und, regs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      curve += nOf(t, next) // forces `next`; the previous frame can go
-      handle.unpersist()
-      handle = next
-      regs = s.createDataFrame(next.rdd, next.schema)
-    }
-    handle.unpersist()
-    curve.toSeq.toDF("t", "n_nodes", "n_pairs").orderBy("t")
+      (row.getLong(0), row.getDouble(1))
+    }.zipWithIndex.map { case ((n, p), t) => (t, n, p) }
+      .toDF("t", "n_nodes", "n_pairs").orderBy("t")
   }
 
   /** Unrolled Borůvka round budget for the q_mst ORACLE — component count
@@ -1344,121 +1177,100 @@ object BigGraphOps {
     * break at the mutual-min pair, then pointer doubling to the root —
     * all node-keyed joins on component-count-sized frames), and the edge
     * set relabels. Component count at least halves per round, so rounds
-    * = O(log V) at ANY scale; per-round state is one (node → component)
-    * frame, localCheckpoint'ed (the iterative-loop lineage rule).
+    * = O(log V) at ANY scale; per-round state is the cross-edge set
+    * labeled with its endpoints' components, plus the round's chosen
+    * edges (the forest is their union).
     *
     * Oracle: the same algorithm unrolled [[MST_ROUNDS]]× with
     * MATERIALIZED per-round CTEs (each is referenced 2-3×; a plain CTE
     * chain would expand exponentially — the q_bradley_terry trap). */
   val qMst: Q = (s, d) => msfOf(coEdges(s, d)).orderBy("src", "dst")
 
-  /** Borůvka over an arbitrary (src, dst, w) frame (src < dst, unique
-    * pairs) — factored so MstSpec can drive constructed graphs and the
-    * Kruskal mirror. */
   /** Parent maps at or below this row count contract in a single task
     * (union-find over one partition — the multi-level design every
     * production CC/MST runs: distributed supersteps while the state is
     * huge, local finish once it fits an executor). 4M rows ≈ 64 MB. */
   val MST_LOCAL_CAP = 4L * 1024 * 1024
 
+  /** Borůvka over an arbitrary (src, dst, w) frame (src < dst, unique
+    * pairs) — factored so MstSpec can drive constructed graphs and the
+    * Kruskal mirror. Throws if 64 rounds leave a cross edge. */
   private[graft] def msfOf(edges0: DataFrame,
       localCap: Long = MST_LOCAL_CAP): DataFrame = {
     val sess = edges0.sparkSession
     import sess.implicits._
-    val edges = persisted(edges0.select(col("src"), col("dst"), col("w")))
-    var comp = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct()
-      .select(col("node"), col("node").as("c")).localCheckpoint()
-    var forest: DataFrame = sess.emptyDataFrame
-      .select(lit(0L).as("src"), lit(0L).as("dst"), lit(0L).as("w")).limit(0)
-    val keepAlive = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var done = false
-    var rounds = 0
-    while (!done && rounds < 64) { // safety rail only; Borůvka halves components
-      val ec = edges
-        .join(comp.select(col("node").as("src"), col("c").as("ca")), Seq("src"))
-        .join(comp.select(col("node").as("dst"), col("c").as("cb")), Seq("dst"))
-        .filter(col("ca") =!= col("cb"))
-      val cand = ec.select(col("ca").as("comp"), col("w"), col("src"),
-          col("dst"), col("cb").as("other"))
-        .unionByName(ec.select(col("cb").as("comp"), col("w"), col("src"),
-          col("dst"), col("ca").as("other")))
+    // a round's frame is the set of CROSS edges (src, dst, w) with their
+    // endpoints' current components (ca ≠ cb), plus the edges the round
+    // chose for the forest, marked ca = cb = the choosing component: it
+    // drains to empty the round after the forest spans every component
+    val rounds = Superstep.fixpoint(
+        edges0.filter(col("src") =!= col("dst"))
+          .select(col("src"), col("dst"), col("w"), col("src").as("ca"), col("dst").as("cb")),
+        64, "Borůvka MSF") { r => // 64: Borůvka halves the components per round
+      val ec = r.last.filter(col("ca") =!= col("cb"))
       // min outgoing edge per component; (w, src, dst) is already unique,
-      // `other` rides along without affecting the struct order. Persisted
-      // lazily — the count below materializes it once, every later
-      // consumer (forest, parent map) reads the cache.
-      val chosen = cand.groupBy(col("comp"))
+      // `other` rides along without affecting the struct order
+      def side(comp: String, other: String) = ec.select(
+        col(comp).as("comp"), col("w"), col("src"), col("dst"), col(other).as("other"))
+      val chosen = side("ca", "cb").unionByName(side("cb", "ca"))
+        .groupBy(col("comp"))
         .agg(min(struct(col("w"), col("src"), col("dst"), col("other"))).as("m"))
         .select(col("comp"), col("m.w").as("w"), col("m.src").as("src"),
           col("m.dst").as("dst"), col("m.other").as("other"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nPar = chosen.count() // termination probe + cache materialization
-      if (nPar == 0) { chosen.unpersist(false); done = true }
-      else {
-        keepAlive += chosen // the forest plan reads it until the final checkpoint
-        forest = forest
-          .unionByName(chosen.select(col("src"), col("dst"), col("w")).distinct())
-        // star contraction: parent = other-endpoint component; the chosen
-        // pseudo-forest has exactly one mutual-min 2-cycle per tree — break
-        // it to a root at the smaller id
-        val par = chosen
-          .join(chosen.select(col("comp").as("other"), col("other").as("pp")),
-            Seq("other"), "left")
-          .select(col("comp").as("c"),
-            when(col("pp") === col("comp"), least(col("comp"), col("other")))
-              .otherwise(col("other")).as("p"))
-        // Contract to roots. Small maps (≤ localCap) finish in ONE task —
-        // memoized pointer chasing, deterministic because the root of a
-        // tree is unique. Huge maps pointer-double distributed, one
-        // localCheckpoint per step: a LAZY doubling chain references its
-        // predecessor twice per level, and Spark traverses plans as TREES
-        // — the 2^depth plan string OOM'd the first cut (PERF.md); the
-        // per-step lineage cut is what keeps the plan linear.
-        val roots: DataFrame =
-          if (nPar <= localCap) {
-            par.select(col("c"), col("p")).as[(Long, Long)]
-              .repartition(1)
-              .mapPartitions { it =>
-                val p = new scala.collection.mutable.HashMap[Long, Long]()
-                it.foreach { case (c, pp) => p(c) = pp }
-                val root = new scala.collection.mutable.HashMap[Long, Long]()
-                def find(x: Long): Long = { // iterative: chains can be map-deep
-                  var cur = x
-                  val path = scala.collection.mutable.ArrayBuffer.empty[Long]
-                  while (!root.contains(cur) && p.getOrElse(cur, cur) != cur) {
-                    path += cur
-                    cur = p(cur)
-                  }
-                  val r = root.getOrElse(cur, cur)
-                  path.foreach(root(_) = r)
-                  r
+      // star contraction: parent = other-endpoint component; the chosen
+      // pseudo-forest has exactly one mutual-min 2-cycle per tree — break
+      // it to a root at the smaller id
+      val par = chosen
+        .join(chosen.select(col("comp").as("other"), col("other").as("pp")),
+          Seq("other"), "left")
+        .select(col("comp").as("c"),
+          when(col("pp") === col("comp"), least(col("comp"), col("other")))
+            .otherwise(col("other")).as("p"))
+      // Contract to roots. Parent maps (≤ 2 × cross edges entries) within
+      // localCap finish in ONE task — memoized pointer chasing,
+      // deterministic because the root of a tree is unique. Huge maps
+      // pointer-double distributed: 2^k jumps cover the longest chain.
+      val bound = 2 * r.rows.last
+      val roots: DataFrame =
+        if (bound <= localCap) {
+          par.select(col("c"), col("p")).as[(Long, Long)]
+            .repartition(1)
+            .mapPartitions { it =>
+              val p = new scala.collection.mutable.HashMap[Long, Long]()
+              it.foreach { case (c, pp) => p(c) = pp }
+              val root = new scala.collection.mutable.HashMap[Long, Long]()
+              def find(x: Long): Long = { // iterative: chains can be map-deep
+                var cur = x
+                val path = scala.collection.mutable.ArrayBuffer.empty[Long]
+                while (!root.contains(cur) && p.getOrElse(cur, cur) != cur) {
+                  path += cur
+                  cur = p(cur)
                 }
-                p.keysIterator.map(c => (c, find(c))).toList.iterator
+                val r = root.getOrElse(cur, cur)
+                path.foreach(root(_) = r)
+                r
               }
-              .toDF("c", "p")
-          } else {
-            var ptr = par.localCheckpoint()
-            var depth = 1L
-            while (depth < nPar) { // 2^k covers the longest possible chain
-              ptr = ptr
-                .join(ptr.select(col("c").as("p"), col("p").as("p2")),
-                  Seq("p"), "left")
-                .select(col("c"), coalesce(col("p2"), col("p")).as("p"))
-                .localCheckpoint()
-              depth *= 2
+              p.keysIterator.map(c => (c, find(c))).toList.iterator
             }
-            ptr
-          }
-        comp = comp.join(roots, Seq("c"), "left")
-          .select(col("node"), coalesce(col("p"), col("c")).as("c"))
-          .localCheckpoint()
-        rounds += 1
-      }
-    }
-    val out = forest.localCheckpoint() // eager — materialize before unpersist
-    keepAlive.foreach(_.unpersist(false))
-    out
+            .toDF("c", "p")
+        } else
+          Superstep.iterate(par, Iterator.iterate(1L)(_ * 2).takeWhile(_ < bound).size) { d =>
+            d.last
+              .join(d.last.select(col("c").as("p"), col("p").as("p2")), Seq("p"), "left")
+              .select(col("c"), coalesce(col("p2"), col("p")).as("p"))
+          }.last
+      ec.join(roots.select(col("c").as("ca"), col("p").as("ra")), Seq("ca"), "left")
+        .join(roots.select(col("c").as("cb"), col("p").as("rb")), Seq("cb"), "left")
+        .select(col("src"), col("dst"), col("w"),
+          coalesce(col("ra"), col("ca")).as("ca"), coalesce(col("rb"), col("cb")).as("cb"))
+        .filter(col("ca") =!= col("cb"))
+        .unionByName(chosen.select(col("src"), col("dst"), col("w"),
+          col("comp").as("ca"), col("comp").as("cb")))
+    }(_.rows.last == 0L)
+    // the forest: every round's chosen edges, read off the cut round frames
+    rounds.frames.tail.map(_.filter(col("ca") === col("cb")))
+      .reduce(_ unionByName _)
+      .select(col("src"), col("dst"), col("w")).distinct()
   }
 
   // ---- DuckDB oracles ------------------------------------------------------

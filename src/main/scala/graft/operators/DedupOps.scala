@@ -206,11 +206,10 @@ object DedupOps {
     *
     * Scale shape: the min-label propagation loop runs ONLY over documents
     * that appear in some pair (O(dups), a vanishing fraction of a 100 TB
-    * corpus), one hash-shuffle per superstep with map-side min combine,
-    * `localCheckpoint` truncating the plan per round (the iterative-loop
-    * lineage trap — PERF.md). The full corpus joins in once at the end for
+    * corpus), one hash-shuffle per superstep with map-side min combine
+    * ([[minLabelComponents]]). The full corpus joins in once at the end for
     * the singleton fill. Components are near-dup clusters with tiny
-    * diameter, so the loop converges in a few supersteps; a 20-round cap
+    * diameter, so the loop converges in a few supersteps; a 50-round cap
     * guards pathological chains. */
   val qDedupClusters: Q = (s, d) => {
     val pairs = minhashVerifiedPairs(s, d).select("doc_a", "doc_b")
@@ -228,7 +227,7 @@ object DedupOps {
       .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster_id"))
       .withColumn("keep", col("cluster_id") === col("doc_id"))
       .orderBy("doc_id")
-    edges.unpersist() // labels are checkpointed; the output plan no longer reads edges
+    edges.unpersist() // labels are a cut leaf; the output plan no longer reads edges
     out
   }
 
@@ -237,40 +236,27 @@ object DedupOps {
     * hold BOTH directions of each undirected pair (and be persisted by the
     * caller — it is re-joined every superstep). Returns (doc_id, cluster)
     * for every vertex touched by an edge, cluster = min vertex id in the
-    * component. One hash-shuffle per superstep with map-side min combine,
-    * `localCheckpoint` truncating lineage per round; components are
-    * near-dup clusters with tiny diameter, so the loop converges in a few
-    * supersteps — a 50-round cap guards pathological chains, and
-    * non-convergence throws rather than ship a split component. */
-  private[operators] def minLabelComponents(edges: DataFrame): DataFrame = {
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("cluster", col("doc_id"))
-      .localCheckpoint()
-    val MAX_SUPERSTEPS = 50
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < MAX_SUPERSTEPS) {
+    * component. One hash-shuffle per superstep with map-side min combine;
+    * components are near-dup clusters with tiny diameter, so the loop
+    * converges in a few supersteps — a 50-round cap guards pathological
+    * chains, and non-convergence throws rather than ship a split
+    * component (a truncated propagation would keep transitive dups). */
+  private[operators] def minLabelComponents(edges: DataFrame): DataFrame =
+    Superstep.fixpoint(
+        edges.select(col("src").as("doc_id")).distinct()
+          .select(col("doc_id"), col("doc_id").as("cluster"), col("doc_id").as("old")),
+        50, "cluster propagation") { r =>
       val nbrMin = edges
-        .join(labels.select(col("doc_id").as("src"), col("cluster").as("nc")), "src")
+        .join(r.last.select(col("doc_id").as("src"), col("cluster").as("nc")), "src")
         .groupBy(col("dst").as("doc_id"))
         .agg(min(col("nc")).as("nmin"))
-      val stepped = labels
+      r.last
         .join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cluster").as("old"),
-          least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
-        .localCheckpoint() // consumed twice below; truncates loop lineage
-      changed = stepped.filter(col("cluster") =!= col("old")).count()
-      labels = stepped.select("doc_id", "cluster")
-      iter += 1
-    }
-    // a truncated propagation would split one true component into several
-    // clusters and keep transitive duplicates — fail loudly, never ship a
-    // silently-unconverged assignment
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"cluster propagation did not converge in $MAX_SUPERSTEPS supersteps")
-    labels
-  }
+        .select(col("doc_id"),
+          least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"),
+          col("cluster").as("old"))
+    }(_.last.filter(col("cluster") =!= col("old")).isEmpty)
+      .last.select("doc_id", "cluster")
 
   /** Deterministic stratified sampling — the "mix corpora at per-source
     * rates" knob of a training pipeline. The keep decision is pure column

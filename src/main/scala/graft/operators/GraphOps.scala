@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Fns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -106,79 +106,96 @@ object GraphOps {
       .orderBy("n_nationkey")
   }
 
-  /** E6 — BFS: minimum hop count from SRC_NATION over the thinned directed
-    * graph, bounded at MAX_HOPS. Iterative frontier expansion — each round
-    * is one hash join frontier⋈edges keyed on node id (Pregel superstep
-    * shape; swap for GraphX Pregel at cluster scale). */
-  val qBfs: Q = (s, d) => {
-    // Persist the (tiny) edge relation: the frontier loop references it once
-    // per hop and Spark would otherwise re-run the 4-table derivation each
-    // round. Same pattern at scale — edges are the loop-invariant.
-    val edges = topEdges(s, d).select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var reached = s.range(1).select(
-      lit(SRC_NATION).cast("int").as("node"), lit(0).as("hop"))
-    for (h <- 1 to MAX_HOPS) {
-      val next = reached.filter(col("hop") === h - 1)
-        .join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), lit(h).as("hop"))
-        .join(reached.select("node"), Seq("node"), "left_anti")
-        .distinct()
-      // localCheckpoint truncates lineage: `reached` is referenced 3x per
-      // round, so an unbroken plan grows 3^h copies of the base tree and
-      // Catalyst analysis time explodes (measured seconds of driver time).
-      // At cluster scale this is a reliable checkpoint every k supersteps.
-      reached = reached.unionByName(next).localCheckpoint()
+  /** Min-hop BFS levels over an (src, dst) edge frame, the superstep every
+    * BFS-shaped gate shares: round h joins the frontier to the edges and
+    * keeps, per `keys` (e.g. a pivot id), the nodes no earlier level
+    * reached; distinct runs before the anti-join so both share one
+    * node-keyed exchange. A frontier whose exact row count (from its
+    * checkpoint) fits the session's broadcast threshold is broadcast — the
+    * Pregel small-frontier path, and the planner's own rule had it exact
+    * statistics; a larger one shuffles. `start` is (keys…, node, hop = 0);
+    * returns every level unioned, each node once per key at its first hop. */
+  private[operators] def bfsLevels(start: DataFrame, edges: DataFrame, hops: Int,
+      keys: Seq[String] = Nil): DataFrame = {
+    val id = (keys :+ "node").map(col)
+    val threshold = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      edges.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    Superstep.levels(start, hops) { r =>
+      val frontier = r.last.select(id: _*)
+      val bytes = r.rows.last * (8 + frontier.schema.defaultSize) // 8: row header
+      edges.join(if (r.rows.last >= 0 && bytes <= threshold) broadcast(frontier) else frontier,
+          col("src") === col("node"))
+        .select(keys.map(col) :+ col("dst").as("node"): _*).distinct()
+        .join(r.all.select(id: _*), keys :+ "node", "left_anti")
+        .withColumn("hop", lit(r.index))
     }
-    reached.groupBy(col("node")).agg(min(col("hop")).as("hops")).orderBy("node")
   }
 
-  /** E4 — min-cost path (the reference's `min()` walk query): bounded
-    * Bellman-Ford over the thinned graph, cost = 1/cnt per edge, SSSP_ROUNDS
-    * relaxation rounds. Each round: dist⋈edges (hash join on node id) then
-    * min-combine per node — the Pregel SSSP dataflow. Costs accumulate
-    * left-to-right along each path, so DuckDB's recursive oracle reproduces
-    * the doubles exactly. */
-  val qSssp: Q = (s, d) => {
-    val edges = topEdges(s, d).select(col("src"), col("dst"), col("cost").as("ecost"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = s.range(1).select(
-      lit(SRC_NATION).cast("int").as("node"), lit(0.0).as("cost"))
-    for (_ <- 1 to SSSP_ROUNDS) {
-      val relaxed = dist.join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("cost") + col("ecost")).as("cost"))
-      dist = dist.unionByName(relaxed)
+  /** Bounded Bellman-Ford: `rounds` rounds of dist⋈edges then min-combine
+    * per node (the Pregel SSSP dataflow) over (node, cost) and (src, dst,
+    * ecost). */
+  private[operators] def relaxRounds(start: DataFrame, edges: DataFrame, rounds: Int): DataFrame =
+    Superstep.iterate(start, rounds) { r =>
+      r.last
+        .unionByName(r.last.join(edges, col("node") === col("src"))
+          .select(col("dst").as("node"), (col("cost") + col("ecost")).as("cost")))
         .groupBy(col("node")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint() // dist referenced 2x/round — see qBfs note
-    }
-    dist.select(col("node"), Fns.roundP(col("cost"), 8).as("cost")).orderBy("node")
-  }
+    }.last
 
-  /** E11 — PageRank, PR_ITERS synchronous iterations, damping 0.85, over
-    * the thinned graph. Contributions are summed through exact decimals so
-    * the shuffle order can't perturb the ranks (oracle parity); each
-    * iteration is one join + one aggregation, the standard dataflow
-    * PageRank that scales by partitioning on node id. */
-  val PR_ITERS = 5
-  val qPagerank: Q = (s, d) => {
-    val edges = topEdges(s, d).select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = Tables.nation(s, d).select(col("n_nationkey").as("node"))
+  /** Power-iteration PageRank rounds over (node, rank): contributions
+    * decimal-summed so the shuffle order can't perturb the ranks, then
+    * rank = restart + damping × in-sum per node (`restart` may read
+    * `node`). One join + one aggregation per round. */
+  private[operators] def pagerankRounds(nodes: DataFrame, edges: DataFrame, init: DataFrame,
+      iters: Int, restart: Column, damping: Double): DataFrame = {
     val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val n = 25.0
-    var rank = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    for (_ <- 1 to PR_ITERS) {
-      val contrib = rank.join(edges, col("node") === col("src"))
+    Superstep.iterate(init, iters) { r =>
+      val contrib = r.last.join(edges, col("node") === col("src"))
         .join(outDeg, "src")
         .select(col("dst"), (col("rank") / col("deg")).as("c"))
         .groupBy(col("dst"))
         .agg(sum(col("c").cast("decimal(28,18)")).cast("double").as("in_sum"))
-      rank = nodes
+      nodes
         .join(contrib, col("node") === col("dst"), "left")
         .select(col("node"),
-          (lit(0.15 / n) + lit(0.85) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-    }
-    rank.select(col("node"), Fns.roundP(col("rank"), 8).as("pagerank")).orderBy("node")
+          (restart + lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
+    }.last
+  }
+
+  /** Edge relation of the walks, persisted: every round re-reads it and
+    * Spark would otherwise re-run the 4-table derivation each round. */
+  private[operators] def walkEdges(s: SparkSession, d: String, cols: Column*): DataFrame =
+    topEdges(s, d).select(cols: _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** E6 — BFS: minimum hop count from SRC_NATION over the thinned directed
+    * graph, bounded at MAX_HOPS ([[bfsLevels]]). */
+  val qBfs: Q = (s, d) =>
+    bfsLevels(s.range(1).select(lit(SRC_NATION).cast("int").as("node"), lit(0).as("hop")),
+      walkEdges(s, d, col("src"), col("dst")), MAX_HOPS)
+      .select(col("node"), col("hop").as("hops")).orderBy("node")
+
+  /** E4 — min-cost path (the reference's `min()` walk query): bounded
+    * Bellman-Ford over the thinned graph, cost = 1/cnt per edge, SSSP_ROUNDS
+    * relaxation rounds. Costs accumulate left-to-right along each path, so
+    * DuckDB's recursive oracle reproduces the doubles exactly. */
+  val qSssp: Q = (s, d) => {
+    val edges = walkEdges(s, d, col("src"), col("dst"), col("cost").as("ecost"))
+    val start = s.range(1).select(lit(SRC_NATION).cast("int").as("node"), lit(0.0).as("cost"))
+    relaxRounds(start, edges, SSSP_ROUNDS)
+      .select(col("node"), Fns.roundP(col("cost"), 8).as("cost")).orderBy("node")
+  }
+
+  /** E11 — PageRank, PR_ITERS synchronous iterations, damping 0.85, over
+    * the thinned graph ([[pagerankRounds]]) — the standard dataflow
+    * PageRank that scales by partitioning on node id. */
+  val PR_ITERS = 5
+  val qPagerank: Q = (s, d) => {
+    val nodes = Tables.nation(s, d).select(col("n_nationkey").as("node"))
+    val n = 25.0
+    pagerankRounds(nodes, topEdges(s, d).select(col("src"), col("dst")),
+      nodes.select(col("node"), lit(1.0 / n).as("rank")), PR_ITERS, lit(0.15 / n), 0.85)
+      .select(col("node"), Fns.roundP(col("rank"), 8).as("pagerank")).orderBy("node")
   }
 
   /** E11 — strongly connected components: scc_id(v) = min node m with
@@ -188,20 +205,16 @@ object GraphOps {
     * 25-node thinned graph CLOSURE_ROUNDS=5 covers diameter ≤ 2^5. */
   val CLOSURE_ROUNDS = 5
   val qScc: Q = (s, d) => {
-    val edges = topEdges(s, d).select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val self = Tables.nation(s, d)
       .select(col("n_nationkey").as("src"), col("n_nationkey").as("dst"))
-    var reach = self.unionByName(edges).distinct().localCheckpoint()
-    for (_ <- 1 to CLOSURE_ROUNDS) {
-      val hop = reach.select(col("src"), col("dst").as("mid"))
-        .join(reach.select(col("src").as("mid"), col("dst")), "mid")
+    val reach = Superstep.iterate(
+        self.unionByName(walkEdges(s, d, col("src"), col("dst"))).distinct(),
+        CLOSURE_ROUNDS) { r =>
+      val hop = r.last.select(col("src"), col("dst").as("mid"))
+        .join(r.last.select(col("src").as("mid"), col("dst")), "mid")
         .select(col("src"), col("dst"))
-      // squaring references reach twice per round: without lineage
-      // truncation the plan doubles every round (2^5 copies) and driver
-      // planning dominates wall time (measured 20s+ for 625 rows).
-      reach = reach.unionByName(hop).distinct().localCheckpoint()
-    }
+      r.last.unionByName(hop).distinct()
+    }.last
     val back = reach.select(col("src").as("dst"), col("dst").as("src"))
     reach.join(back, Seq("src", "dst")) // mutual reachability
       .groupBy(col("src").as("node"))

@@ -275,8 +275,8 @@ object ModelOps {
     * order of magnitude while leaving merge counts essentially unchanged
     * (a merge the floor could flip would be supported only by dropped
     * hapaxes). 1 on testdata = admit everything, so the gate frame is
-    * byte-identical; raise via SPARK_GRAFT_BPE_MINFREQ on a real corpus. */
-  val BPE_MINFREQ = sys.env.getOrElse("SPARK_GRAFT_BPE_MINFREQ", "1").toLong
+    * byte-identical; raise it here for a real corpus. */
+  val BPE_MINFREQ = 1L
 
   /** End-of-word marker symbol (Sennrich, Haddow & Birch, "Neural Machine
     * Translation of Rare Words with Subword Units", ACL 2016 — the
@@ -296,13 +296,10 @@ object ModelOps {
     * aggregation — one (token)-keyed shuffle with map-side combine; every
     * production BPE trainer reduces to word counts first for exactly this
     * reason (the merge loop's cost must not depend on corpus size). The
-    * merge loop then runs on the vocab-bounded (word, symbols, freq)
-    * frame: per round one pair-explode + agg (vocab-bounded), a 1-row
-    * argmax collect (the learned merge IS the result), and a row-local
-    * fold rewrite, localCheckpoint'ed so the per-round plan stays flat
-    * (PERF.md iterative-loop rule). At 100 TB the vocab table is millions
-    * of rows — still executor-trivial; nothing in the loop touches the
-    * corpus again. */
+    * merge loop then runs on the driver over the [[BPE_MINFREQ]]-floored
+    * (word, symbols, freq) table: per round a pair count, the argmax
+    * (the learned merge IS the result) and a greedy rewrite; nothing in
+    * the loop touches the corpus again. */
   val qBpeMerges: Q = (s, d) => {
     import s.implicits._
     bpeLearn(s, d)._1
@@ -746,7 +743,7 @@ object ModelOps {
   /** Same policy floor as [[BPE_MINFREQ]] for the driver-side word-
     * frequency collect (1 on testdata = admit everything → gate frame is
     * byte-identical; raise on a real corpus). */
-  val UNI_MINFREQ = sys.env.getOrElse("SPARK_GRAFT_UNI_MINFREQ", "1").toLong
+  val UNI_MINFREQ = 1L
 
   /** Double → BigDecimal exactly as Spark's `cast(x as decimal(28,18))`
     * executes it (Decimal(double) via Double.toString, then

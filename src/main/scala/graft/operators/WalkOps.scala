@@ -67,24 +67,12 @@ object WalkOps {
     * explosion of a single 2k-hop BFS — the classic meet-in-the-middle
     * plan, each superstep one hash join. */
   val qBidirBfs: Q = (s, d) => {
-    val edges = topEdges(s, d).select("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def bfs(start: Int, reversed: Boolean): DataFrame = {
-      val e = if (reversed) edges.select(col("dst").as("src"), col("src").as("dst")) else edges
-      var reached = Tables.nation(s, d).limit(1)
-        .select(lit(start).cast("int").as("node"), lit(0).as("hop"))
-      for (h <- 1 to BIDIR_HALF) {
-        val next = reached.filter(col("hop") === h - 1)
-          .join(e, col("node") === col("src"))
-          .select(col("dst").as("node"), lit(h).as("hop"))
-          .join(reached.select("node"), Seq("node"), "left_anti")
-          .distinct()
-        // lineage truncation — reached is referenced 3x per round (see
-        // GraphOps.qBfs note on exponential plan growth)
-        reached = reached.unionByName(next).localCheckpoint()
-      }
-      reached.groupBy("node").agg(min("hop").as("hop"))
-    }
+    val edges = GraphOps.walkEdges(s, d, col("src"), col("dst"))
+    def bfs(start: Int, reversed: Boolean): DataFrame =
+      GraphOps.bfsLevels(
+        s.range(1).select(lit(start).cast("int").as("node"), lit(0).as("hop")),
+        if (reversed) edges.select(col("dst").as("src"), col("src").as("dst")) else edges,
+        BIDIR_HALF)
     val fwd = bfs(BIDIR_SRC, reversed = false).select(col("node"), col("hop").as("hf"))
     val bwd = bfs(BIDIR_DST, reversed = true).select(col("node"), col("hop").as("hb"))
     fwd.join(bwd, "node")

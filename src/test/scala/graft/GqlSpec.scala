@@ -112,6 +112,19 @@ class GqlSpec extends AnyFunSuite {
     assert(count(e, "{query: 'e', in: 'ga'};") == 1)
   }
 
+  private def cachedEntries: Int = org.apache.spark.sql.graftbridge.CacheEntries(spark)
+
+  test("remove vertex with an edge cascade leaves no cached entry behind") {
+    val e = freshEngine()
+    e.exec("{create: 'ga', group: ['g', ['g', 'e', 'g']]};")
+    e.exec("{upset: 'g', vertex: [['a'], ['b'], ['c']]};")
+    e.exec("{upset: 'e', edge: [['a', ->, 'b'], ['b', ->, 'c']]};")
+    val before = cachedEntries
+    assert(e.exec("{remove: 'g', vertex: ['a']};").head.status == "REMOVE SUCCESS")
+    assert(count(e, "{query: 'e', in: 'ga'};") == 1)
+    assert(cachedEntries <= before, s"remove left ${cachedEntries - before} cached entries")
+  }
+
   test("multi-group scan, show, ast, dump round-trip") {
     val e = freshEngine()
     e.exec("{create: 'ga', group: ['g', 'h']};")
@@ -176,6 +189,31 @@ class GqlSpec extends AnyFunSuite {
     assert(count(e, "{query: 'e', in: 'ga', where: {id: 'a', ->: *, neighbor: 1}};") == 1) // b
     assert(count(e, "{query: 'e', in: 'ga', where: {id: 'a', ->: *, neighbor: 2}};") == 2) // b, c
     assert(count(e, "{query: 'e', in: 'ga', where: {id: 'a', ->: *, neighbor: 3}};") == 3) // b, c, d
+  }
+
+  test("undirected neighbors on a cycle: origin excluded, each neighbor once") {
+    val e = freshEngine()
+    e.exec("{create: 'ga', group: [['g', 'e', 'g']]};")
+    e.exec("{upset: 'e', edge: [['a', ->, 'b'], ['b', ->, 'c'], ['c', ->, 'd'], ['d', ->, 'e'], ['e', ->, 'a']]};")
+    def nbrs(hops: Int): Seq[String] =
+      e.query(s"{query: 'e', in: 'ga', where: {id: 'a', --: *, neighbor: $hops}};")
+        .collect().map(_.getAs[String]("neighbor_s")).toSeq.sorted
+    val before = cachedEntries
+    assert(nbrs(1) == Seq("b", "e"))
+    assert(nbrs(2) == Seq("b", "c", "d", "e"))
+    assert(cachedEntries == before, "a neighbor query left a cached entry")
+  }
+
+  test("min-cost path takes the cheaper route with more hops") {
+    val e = freshEngine()
+    e.exec("{create: 'ga', group: [['g', 'e', 'g']]};")
+    e.exec("{upset: 'e', edge: [['s', ->: {w: 9}, 't'], ['s', ->: {w: 1}, 'x'], " +
+      "['x', ->: {w: 1}, 'y'], ['y', ->: {w: 1}, 't']]};")
+    val before = cachedEntries
+    val row = e.query("{query: 'e', in: 'ga', where: ['s', ->: min('w'), 't']};").collect().head
+    assert(row.getAs[Double]("cost") == 3.0)
+    assert(row.getAs[Int]("hops") == 3)
+    assert(cachedEntries == before, "a min-path query left a cached entry")
   }
 
   test("dump preserves edge properties (min-cost walk survives replay)") {

@@ -23,4 +23,13 @@ class SccDfSpec extends AnyFunSuite {
     // a real decomposition, not all-singletons
     assert(df.values.toSet.size < df.size)
   }
+
+  test("dfScc throws when the round cap leaves edges undrained") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 3L)).toDF("src", "dst")
+    // round 1 confirms {1, 2}; the 3⇄4 cycle is still there at the cap
+    intercept[IllegalStateException](BigGraphOps.dfScc(edges, maxRounds = 1).collect())
+    val full = BigGraphOps.dfScc(edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(full == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
+  }
 }

@@ -1,0 +1,29 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Rules about the main sources enforced in code rather than prose. */
+class SourceLintSpec extends AnyFunSuite {
+  private val main = Paths.get("src", "main")
+
+  private def sources: Seq[Path] = {
+    assert(Files.isDirectory(main), s"run from the repository root (no $main)")
+    val walk = Files.walk(main)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("only the superstep driver cuts lineage with localCheckpoint") {
+    val offenders = for {
+      f <- sources if f.getFileName.toString != "Superstep.scala"
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("localCheckpoint(")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "iterate through graft.operators.Superstep instead:\n" + offenders.mkString("\n"))
+  }
+}
