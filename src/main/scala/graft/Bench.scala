@@ -35,6 +35,14 @@ import java.nio.file.{Files, Paths}
   * entry in `errors` — a failure must not read as a fast success.
   */
 object Bench {
+  /** `s` as a JSON string literal. */
+  private[graft] def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(Some(sfDir))
@@ -46,16 +54,9 @@ object Bench {
     // that table's queries to `errors` entries in the artifact, not kill
     // the run before bench.json exists (rounds 8–9 had NO bench signal
     // because a Tables.events schema assumption threw right here).
-    noop(spark.range(1000).selectExpr("sum(id)").toDF())
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings").foreach { t =>
-      try noop(spark.read.parquet(s"$sfDir/$t.parquet"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warm-up failed for $t: ${e.getMessage}") }
+    Tables.warm(spark, sfDir).foreach { case (t, e) =>
+      System.err.println(s"[bench] warm-up failed for $t: ${e.getMessage}")
     }
-    try noop(Tables.events(spark, sfDir)) // schema-adaptive ts normalization
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] warm-up failed for events: ${e.getMessage}") }
     noop(spark.range(500)
       .selectExpr("md5(concat('w', id)) AS h", "split(concat('a b c d e f ', id), ' ') AS t")
       .selectExpr("conv(substring(h, 1, 8), 16, 10) AS x", "size(t) AS n",
@@ -150,12 +151,6 @@ object Bench {
         val n = passTimes.count(_.exists { case (k, v) => k == name && v < 0 })
         name -> s"threw in $n/$passes passes: ${errorMsgs(name)}"
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     // ms precision everywhere: full double reprs overflowed the driver's
     // tail capture in round 10 (BENCH_r10 parsed:null, 68/188 values
     // visible) — 1 ms resolution loses nothing a min-of-3 can claim

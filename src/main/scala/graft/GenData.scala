@@ -57,7 +57,7 @@ object GenData {
     val nVec = (20000 * sf).toLong
 
     def w(df: DataFrame, name: String): Unit = {
-      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+      df.write.mode("overwrite").parquet(Tables.path(outDir, name))
       println(s"[gen] $name done")
     }
 

@@ -1,26 +1,57 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 
-/** Linear-scaling probe (dev tool, like [[Explain]]): replicate the input
-  * tables N× with shifted keys into /tmp and time one representative query
-  * per operator family at each multiple. The "would this survive 100×"
-  * question answered empirically instead of by plan inspection alone —
-  * a super-linear curve here means a shuffle/candidate structure that will
-  * not hold at 100 TB.
+import graft.operators.{Gate, SkewOps}
+
+/** The probe CLI (dev tool): what a gate's plan is, what it costs, and how
+  * that cost grows with its input.
   *
-  * Replication shifts the entity keys (doc_id / user_id / event_id /
-  * l_orderkey) so per-entity state grows in COUNT, not in size — each copy
-  * is a disjoint population, which is how a bigger day of real traffic
-  * looks. Tables not scaled by a probe (dims) are copied 1×. The minhash
-  * family is deliberately absent: replicating identical texts manufactures
-  * Θ(mult²) true near-dup pairs per document — a worst-case dup corpus, not
-  * a bigger one (its scaling story is the banded candidate bound, PERF.md).
+  * {{{
+  * runMain graft.Probe explain <sfDir> [gate...]        plan + cost (every gate when none named)
+  * runMain graft.Probe scale   <sfDir> <m,m,..> [g,g,..] cost on m× replicas of sfDir
+  * runMain graft.Probe skew    <sfDir> <m,m,..>         unsalted vs salted hot-key join
+  * }}}
+  *
+  * Every measurement is one pass: `clearCache`, a cold run, then a warm run
+  * reusing whatever the cold run persisted. A run reports frame-build
+  * seconds (statement-style gates write while BUILDING, and the iterative
+  * gates do all their work there, so exec-only timing would hide their
+  * cost), execution seconds (plan + run through the noop sink) and, over
+  * both, the Spark jobs, stages, tasks, summed task seconds and the max and
+  * median task seconds — the split that tells fixed per-job latency ×
+  * round count apart from data volume, and a straggler apart from a slow
+  * stage. Wall time on local[N] understates a straggler (the other cores
+  * absorb the remaining partitions while one grinds the hot key); on a
+  * cluster the stage ends when its last task does, so max/median is the
+  * number that predicts cluster behavior.
+  *
+  * Each pass prints `[time] <gate> [<m>x] cold|warm …`; a gate that throws
+  * prints `[error] <gate> <m>x <message>` and the remaining gates still
+  * run. The last line is one JSON object with every run and every error,
+  * and the probe exits 1 after stopping Spark when anything failed.
+  *
+  * At each multiple the session's AQE initial partition count is re-pointed
+  * at the directory the gates read ([[Session.scaledInitialPartitions]]),
+  * and every table is warmed ([[Tables.warm]]) before the first pass.
   */
-object ScaleProbe {
-  val PROBES = Seq(
+object Probe {
+  /** Replicas shift the entity keys (doc_id / user_id / event_id /
+    * l_orderkey / o_orderkey / o_custkey) so per-entity state grows in
+    * COUNT, not in size — each copy is a disjoint population, which is how
+    * a bigger day of real traffic looks; dims are copied 1×. The minhash
+    * family is deliberately absent: replicating identical texts
+    * manufactures Θ(mult²) true near-dup pairs per document — a worst-case
+    * dup corpus, not a bigger one (its scaling story is the banded
+    * candidate bound, PERF.md). */
+  val SCALE_PROBES: Seq[String] = Seq(
     "q1_agg",           // scan + partial/final agg (lineitem)
     "q_window_agg",     // time-window agg (events)
     "q_sessionize",     // window-function-by-user (events)
@@ -273,126 +304,13 @@ object ScaleProbe {
     // manufactures Θ(mult²) REAL pairs (the minhash argument, in vector space);
     // their scaling story is the per-cell blocked-join bound (PERF.md)
 
-  def main(rawArgs: Array[String]): Unit = {
-    // --cold: clear the CacheManager before EVERY timed run, so a gate
-    // whose plan persists an intermediate frame (q_cdc_chunks,
-    // q_suffix_dup — CacheManager dedups the identical sub-plan across
-    // calls) re-pays its full pipeline at each multiplier and the time
-    // curve needs no "rides the persisted result" footnote. Default
-    // (warm) keeps the historical min-of-2 semantics.
-    val cold = rawArgs.contains("--cold")
-    val args = rawArgs.filterNot(_ == "--cold")
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val mults = if (args.length > 1) args(1).split(",").map(_.toInt).toSeq
-                else Seq(1, 4, 8)
-    // optional third arg: comma-separated probe subset (dev iteration on
-    // one family without re-timing all 44)
-    val probes = if (args.length > 2) PROBES.filter(args(2).split(",").toSet)
-                 else PROBES
-    val spark = Session.local(Some(sfDir))
-    import Session.noop
-    noop(spark.range(1000).selectExpr("sum(id)").toDF())
-
-    // cache key includes the SOURCE dir: a probe against a different SF
-    // must rebuild, not silently reuse another input's replicas
-    // v2: orders replicates with shifted custkeys (k-core probe) — new dirs
-    val srcTag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val results = mults.map { m =>
-      val dir = s"/tmp/graft_scale_v2_${srcTag}_$m"
-      if (!Files.exists(Paths.get(dir, "_built"))) build(spark, sfDir, m, dir)
-      // SF-scaled AQE fan-out, re-pointed at THIS multiple's replica dir
-      // (runtime SQLConf — the probe's whole point is partition posture
-      // that tracks input size; see Session.scaledInitialPartitions)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Session.scaledInitialPartitions(dir, Session.defaultCpus).toString)
-      // warm every table through the noop sink (parquet footers + codegen)
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "documents", "embeddings")
-        .foreach(t => noop(spark.read.parquet(s"$dir/$t.parquet")))
-      noop(Tables.events(spark, dir))
-      val times = probes.map { name =>
-        def once(): Double = {
-          if (cold) spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          noop(SparkEntry.queries(name)(spark, dir))
-          (System.nanoTime() - t0) / 1e9
-        }
-        val t = math.min(once(), once())
-        spark.catalog.clearCache()
-        println(f"SCALE $m%dx $name%-18s $t%.2f s${if (cold) " (cold)" else ""}")
-        name -> t
-      }
-      m -> times.toMap
-    }.toMap
-
-    val json = probes.map { q =>
-      val per = mults.map(m => s""""${m}": ${f"${results(m)(q)}%.3f"}""").mkString(",")
-      s""""$q":{$per}"""
-    }.mkString(",")
-    println(s"""{"probe":"scale","mode":"${if (cold) "cold" else "warm"}","sf":"$sfDir","mults":[${mults.mkString(",")}],"queries":{$json}}""")
-    spark.stop()
-  }
-
-  /** Write mult disjoint key-shifted copies of the scaled tables (and one
-    * copy of the rest) under dir. Events keep whatever ts physical type
-    * the source stores (nanos-long under the legacy conf, or micros
-    * timestamp) so Tables.events' schema-adaptive branch is exercised
-    * identically at every multiple. */
-  // (shared by PairScaleProbe for its unscaled tables)
-  def build(s: SparkSession, src: String, mult: Int, dir: String): Unit = {
-    def copies(df: DataFrame, shift: (DataFrame, Int) => DataFrame): DataFrame =
-      (0 until mult).map(i => shift(df, i)).reduce(_ unionAll _)
-    copies(s.read.parquet(s"$src/documents.parquet"),
-      (d, i) => d.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    copies(s.read.parquet(s"$src/events.parquet"),
-      (d, i) => d.withColumn("event_id", col("event_id") + lit(i * 100000000L))
-                 .withColumn("user_id", col("user_id") + lit(i * 1000000L)))
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    copies(s.read.parquet(s"$src/lineitem.parquet"),
-      (d, i) => d.withColumn("l_orderkey", col("l_orderkey") + lit(i * 100000000L)))
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    // copy 0 keeps vec_ids 0..K-1, so probe/init vectors exist at every mult
-    copies(s.read.parquet(s"$src/embeddings.parquet"),
-      (d, i) => d.withColumn("vec_id", col("vec_id") + lit(i * 10000000L)))
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    // orders: shifted custkeys land in the SAME (week, priority) cohorts, so
-    // the co-purchase chains get mult× longer — edge count grows linearly
-    // while per-node degree stays ≈ 2×cohort-memberships (the right "bigger
-    // day of traffic" shape for the k-core peel)
-    copies(s.read.parquet(s"$src/orders.parquet"),
-      (d, i) => d.withColumn("o_orderkey", col("o_orderkey") + lit(i * 100000000L))
-                 .withColumn("o_custkey", col("o_custkey") + lit(i * 10000000L)))
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    Seq("region", "nation", "customer", "supplier", "part")
-      .foreach(t => s.read.parquet(s"$src/$t.parquet")
-        .write.mode("overwrite").parquet(s"$dir/$t.parquet"))
-    Files.createFile(Paths.get(dir, "_built"))
-  }
-}
-
-/** Scale probe for the blocked PAIR-EXPANSION family (entity match,
-  * PPJoin Jaccard pairs, the IVF-cell cosine trio) — the operators whose
-  * candidate volume the plain [[ScaleProbe]] replication would distort:
-  * key-shifted IDENTICAL payloads manufacture Θ(mult²) TRUE near-dup
-  * pairs (cos = 1 / Jaccard = 1 / levenshtein = 0 across copies), a
-  * worst-case dup corpus rather than a bigger day of traffic. Here every
-  * copy is a DISJOINT population:
-  *  - customer: custkeys shift AND c_name is re-derived from the shifted
-  *    key, so cross-copy names differ in their digit prefix (nation
-  *    blocks still grow ×mult — the stressor the block cap answers);
-  *  - documents: every token gets a per-copy suffix — within-copy
-  *    shingle/dup structure is isomorphic to the original, cross-copy
-  *    Jaccard is 0 (disjoint vocabularies);
-  *  - embeddings: copies >0 add deterministic per-component noise at
-  *    ~3× the component σ (sin-hash, no RNG), so cross-copy cosines sit
-  *    far below COS_T while labels — and so the FIXED cell count the
-  *    sub-bucket cap answers — are preserved.
-  * A sub-quadratic time curve here is the evidence the r10 verdict asked
-  * for: pair volume provably stops growing quadratically. */
-object PairScaleProbe {
-  val PROBES = Seq(
+  /** The blocked PAIR-EXPANSION family, whose candidate volume key-shifted
+    * replicas would distort: IDENTICAL payloads manufacture Θ(mult²) TRUE
+    * near-dup pairs (cos = 1 / Jaccard = 1 / levenshtein = 0 across
+    * copies). These run on [[Disjoint]] replicas, and a sub-quadratic time
+    * curve there is the evidence that pair volume stops growing
+    * quadratically. */
+  val PAIR_PROBES: Seq[String] = Seq(
     "q_entity_match",    // nation blocks ×mult → ER_BLOCK_CAP path
     "q_jaccard_pairs",   // PPJoin prefix-filtered pairs, disjoint vocabs
     "q_cosine_blocked",  // fixed cells ×mult → CELL_CAP sub-buckets
@@ -400,88 +318,284 @@ object PairScaleProbe {
     "q_semantic_dedup",  // blocked pairs + min-label component flood
     "q_bitext_mine")     // blocked cross-lang pairs + two k-NN pool windows
 
+  /** How a replica multiplies an SF dir: each `scaled` table is written as
+    * `mult` unioned copies, copy `i` transformed by its function; every
+    * other table is copied once. */
+  final case class Recipe(tag: String, scaled: Map[String, (DataFrame, Int) => DataFrame])
+
+  private def shift(keys: (String, Long)*)(d: DataFrame, i: Int): DataFrame =
+    keys.foldLeft(d) { case (acc, (k, by)) => acc.withColumn(k, col(k) + lit(i * by)) }
+
+  /** Key-shifted copies. Orders shift custkeys too: the shifted customers
+    * land in the SAME (week, priority) cohorts, so co-purchase chains grow
+    * mult× longer — edge count grows linearly while per-node degree stays
+    * ≈ 2×cohort-memberships (the k-core peel's bigger day of traffic).
+    * Copy 0 keeps vec_ids 0..K-1, so probe/init vectors exist at every
+    * mult. */
+  val KeyShifted: Recipe = Recipe("shifted", Map(
+    "documents" -> shift("doc_id" -> 10000000L),
+    "events" -> shift("event_id" -> 100000000L, "user_id" -> 1000000L),
+    "lineitem" -> shift("l_orderkey" -> 100000000L),
+    "embeddings" -> shift("vec_id" -> 10000000L),
+    "orders" -> shift("o_orderkey" -> 100000000L, "o_custkey" -> 10000000L)))
+
   /** Per-component jitter amplitude for embedding copies — uniform via a
     * sin-hash in [−0.6, 0.6): noise σ ≈ 0.35 vs component σ ≈ 0.125, so
     * cos(original, jittered) ≈ 0.34 < COS_T = 0.45. */
-  val JITTER = 0.6
+  private val JITTER = 0.6
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val mults = if (args.length > 1) args(1).split(",").map(_.toInt).toSeq
-                else Seq(1, 16, 64)
-    val probes = if (args.length > 2) PROBES.filter(args(2).split(",").toSet)
-                 else PROBES
-    val spark = Session.local(Some(sfDir))
-    import Session.noop
-    noop(spark.range(1000).selectExpr("sum(id)").toDF())
+  /** Disjoint-population copies for [[PAIR_PROBES]]:
+    *  - customer: custkeys shift AND c_name is re-derived from the shifted
+    *    key, so cross-copy names differ in their digit prefix (nation
+    *    blocks still grow ×mult — the stressor the block cap answers);
+    *  - documents: every token of copy i > 0 gets the suffix `~i` —
+    *    within-copy shingle/dup structure is isomorphic to the original,
+    *    cross-copy Jaccard is 0 (disjoint vocabularies);
+    *  - embeddings: copies > 0 add deterministic per-component noise at
+    *    ~3× the component σ (sin-hash, no RNG), so cross-copy cosines sit
+    *    far below COS_T while labels — and so the FIXED cell count the
+    *    sub-bucket cap answers — are preserved. */
+  val Disjoint: Recipe = Recipe("disjoint", Map(
+    "customer" -> ((d, i) => shift("c_custkey" -> 10000000L)(d, i)
+      .withColumn("c_name", format_string("Customer#%09d", col("c_custkey")))),
+    "documents" -> ((d, i) =>
+      if (i == 0) d
+      else shift("doc_id" -> 10000000L)(d, i).withColumn("text",
+        array_join(transform(split(col("text"), " "), t => concat(t, lit(s"~$i"))), " "))),
+    "embeddings" -> ((d, i) =>
+      if (i == 0) d
+      else shift("vec_id" -> 10000000L)(d, i).withColumn("embedding", expr(
+        s"""transform(embedding, (x, j) -> cast(x + $JITTER *
+           |  ((sin(vec_id * 12.9898 + j * 78.233 + $i * 37.719) * 43758.5453)
+           |   - floor(sin(vec_id * 12.9898 + j * 78.233 + $i * 37.719) * 43758.5453)
+           |   - 0.5) * 2 as float))""".stripMargin)))))
 
-    val srcTag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val results = mults.map { m =>
-      val dir = s"/tmp/graft_pair_v1_${srcTag}_$m"
-      if (!Files.exists(Paths.get(dir, "_built"))) build(spark, sfDir, m, dir)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Session.scaledInitialPartitions(dir, Session.defaultCpus).toString)
-      Seq("customer", "documents", "embeddings", "nation")
-        .foreach(t => noop(spark.read.parquet(s"$dir/$t.parquet")))
-      val times = probes.map { name =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          noop(SparkEntry.queries(name)(spark, dir))
-          (System.nanoTime() - t0) / 1e9
-        }
-        // COLD is the scaling signal here: three of the five queries end
-        // in a persist of their final pair frame, so a min-of-2 would
-        // time pass 2's re-sort of the cache, not the pair scan
-        val cold = once()
-        val warm = once()
-        spark.catalog.clearCache()
-        println(f"PAIRSCALE $m%dx $name%-18s cold $cold%.2f s  warm $warm%.2f s")
-        name -> cold
+  /** The `mult`× replica of `src` under `root` (default `java.io.tmpdir`),
+    * built once: the dir name carries the recipe, the source and the mult,
+    * and a `_built` marker is written last, so an interrupted build is
+    * redone. Events are copied raw (a NANOS ts as the long the legacy conf
+    * reads it as), so [[Tables.events]]' schema-adaptive branch is
+    * exercised identically at every multiple. */
+  def replica(spark: SparkSession, src: String, recipe: Recipe, mult: Int,
+      root: String = System.getProperty("java.io.tmpdir")): String = {
+    val srcTag = Paths.get(src).toAbsolutePath.normalize.toString
+      .replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
+    val dir = Paths.get(root, s"graft_${recipe.tag}_${srcTag}_$mult").toString
+    if (!Files.exists(Paths.get(dir, "_built"))) {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      Tables.names.foreach { t =>
+        val df = spark.read.parquet(Tables.path(src, t))
+        recipe.scaled.get(t).fold(df)(f => (0 until mult).map(f(df, _)).reduce(_ unionAll _))
+          .write.mode("overwrite").parquet(Tables.path(dir, t))
       }
-      m -> times.toMap
-    }.toMap
-
-    val json = probes.map { q =>
-      val per = mults.map(m => s""""${m}": ${f"${results(m)(q)}%.3f"}""").mkString(",")
-      s""""$q":{$per}"""
-    }.mkString(",")
-    println(s"""{"probe":"pairscale","sf":"$sfDir","mults":[${mults.mkString(",")}],"queries":{$json}}""")
-    spark.stop()
+      Files.createFile(Paths.get(dir, "_built"))
+    }
+    dir
   }
 
-  def build(s: SparkSession, src: String, mult: Int, dir: String): Unit = {
-    def copies(df: DataFrame, shift: (DataFrame, Int) => DataFrame): DataFrame =
-      (0 until mult).map(i => shift(df, i)).reduce(_ unionAll _)
-    copies(s.read.parquet(s"$src/customer.parquet"),
-      (d, i) => d.withColumn("c_custkey", col("c_custkey") + lit(i * 10000000L))
-                 .withColumn("c_name", format_string("Customer#%09d", col("c_custkey"))))
-      .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    copies(s.read.parquet(s"$src/documents.parquet"),
-      (d, i) => {
-        val shifted = d.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))
-        if (i == 0) shifted
-        else shifted.withColumn("text",
-          array_join(transform(split(col("text"), " "),
-            t => concat(t, lit(s"~$i"))), " "))
-      })
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    copies(s.read.parquet(s"$src/embeddings.parquet"),
-      (d, i) => {
-        val shifted = d.withColumn("vec_id", col("vec_id") + lit(i * 10000000L))
-        if (i == 0) shifted
-        else shifted.withColumn("embedding", expr(
-          s"""transform(embedding, (x, j) -> cast(x + $JITTER *
-             |  ((sin(vec_id * 12.9898 + j * 78.233 + $i * 37.719) * 43758.5453)
-             |   - floor(sin(vec_id * 12.9898 + j * 78.233 + $i * 37.719) * 43758.5453)
-             |   - 0.5) * 2 as float))""".stripMargin))
-      })
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Seq("region", "nation", "supplier", "part", "orders", "lineitem", "events")
-      .foreach { t =>
-        if (t == "events") s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.read.parquet(s"$src/$t.parquet")
-          .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+  /** Jobs, stages and task durations of every action since the last [[take]]. */
+  private final class Meter extends SparkListener {
+    private var jobs, stages = 0
+    private val taskMs = mutable.ArrayBuffer.empty[Long]
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized { stages += 1 }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      synchronized { if (e.taskInfo != null) taskMs += e.taskInfo.duration }
+    /** Drain the (asynchronous) listener bus, then return and reset the
+      * counters: (jobs, stages, sorted task ms). */
+    def take(spark: SparkSession): (Int, Int, Array[Long]) = {
+      ListenerBusBridge.drain(spark.sparkContext)
+      synchronized {
+        val out = (jobs, stages, taskMs.toArray.sorted)
+        jobs = 0; stages = 0; taskMs.clear()
+        out
       }
-    Files.createFile(Paths.get(dir, "_built"))
+    }
+  }
+
+  /** The cost of one run. */
+  final case class Run(buildS: Double, execS: Double, jobs: Int, stages: Int, tasks: Int,
+      taskS: Double, taskMaxS: Double, taskMedS: Double) {
+    override def toString: String =
+      f"build $buildS%.3f s  exec $execS%.3f s  jobs $jobs  stages $stages  tasks $tasks  " +
+        f"task $taskS%.3f s"
+    def json: String =
+      f"""{"build_s":$buildS%.3f,"exec_s":$execS%.3f,"jobs":$jobs,"stages":$stages,""" +
+        f""""tasks":$tasks,"task_s":$taskS%.3f,"task_max_s":$taskMaxS%.3f,""" +
+        f""""task_med_s":$taskMedS%.3f}"""
+  }
+
+  /** Everything one probe invocation measured: the (cold, warm) runs per
+    * gate and multiple, and each failure, in the order they happened. The
+    * listener stays registered on `spark` until [[close]]. */
+  final class Report(spark: SparkSession, probe: String, sfDir: String, mults: Seq[Int]) {
+    val runs = mutable.LinkedHashMap.empty[(String, Int), (Run, Run)]
+    val errors = mutable.LinkedHashMap.empty[(String, Int), String]
+    private val meter = new Meter
+    spark.sparkContext.addSparkListener(meter)
+
+    private def run(mk: () => DataFrame): (DataFrame, Run) = {
+      meter.take(spark)
+      val tb = System.nanoTime()
+      val df = mk()
+      val t0 = System.nanoTime()
+      Session.noop(df)
+      val t1 = System.nanoTime()
+      val (jobs, stages, ms) = meter.take(spark)
+      df -> Run((t0 - tb) / 1e9, (t1 - t0) / 1e9, jobs, stages, ms.length, ms.sum / 1e3,
+        ms.lastOption.getOrElse(0L) / 1e3, if (ms.isEmpty) 0.0 else ms(ms.length / 2) / 1e3)
+    }
+
+    /** One pass of `gate` at `mult`; `show` sees the cold run's frame before
+      * the `[time]` lines print. A throw is reported, not propagated. */
+    def pass(gate: String, mult: Int, show: DataFrame => Unit = _ => ())(mk: () => DataFrame): Unit =
+      try {
+        spark.catalog.clearCache()
+        val (df, cold) = run(mk)
+        val (_, warm) = run(mk)
+        runs((gate, mult)) = (cold, warm)
+        show(df)
+        val label = if (probe == "explain") gate else s"$gate ${mult}x"
+        println(s"[time] $label cold $cold")
+        println(s"[time] $label warm $warm")
+      } catch { case e: Throwable => fail(gate, mult, e) }
+
+    /** Print `[error] <gate> <mult>x <message>` and keep it for the JSON line. */
+    def fail(gate: String, mult: Int, e: Throwable): Unit = {
+      val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+        .getOrElse(e.getClass.getName).take(300)
+      println(s"[error] $gate ${mult}x $msg")
+      errors((gate, mult)) = msg
+    }
+
+    def close(): Unit = spark.sparkContext.removeSparkListener(meter)
+
+    /** `{"probe", "sf", "mults", "gates": {gate: {mult: {cold, warm}}}, "errors": {gate: {mult: msg}}}` */
+    def json: String = {
+      def byGate[V](m: mutable.LinkedHashMap[(String, Int), V])(v: V => String): String =
+        m.keys.map(_._1).toSeq.distinct.map { g =>
+          Bench.jstr(g) + m.collect { case ((`g`, k), x) => s""""$k":${v(x)}""" }
+            .mkString(":{", ",", "}")
+        }.mkString("{", ",", "}")
+      s"""{"probe":"$probe","sf":${Bench.jstr(sfDir)},"mults":${mults.mkString("[", ",", "]")},""" +
+        s""""gates":${byGate(runs) { case (c, w) => s"""{"cold":${c.json},"warm":${w.json}}""" }},""" +
+        s""""errors":${byGate(errors)(Bench.jstr)}}"""
+    }
+  }
+
+  /** Re-point AQE's initial partition count at `dir` and warm its tables. */
+  private def at(spark: SparkSession, dir: String): Unit = {
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+      Session.scaledInitialPartitions(dir, spark.sparkContext.defaultParallelism).toString)
+    Tables.warm(spark, dir).foreach { case (t, e) =>
+      System.err.println(s"[probe] warm-up failed for $t: ${e.getMessage}")
+    }
+  }
+
+  /** Each gate's formatted physical plan and one pass, on `sfDir` itself. */
+  def explain(spark: SparkSession, sfDir: String, gates: Seq[Gate]): Report = {
+    val r = new Report(spark, "explain", sfDir, Seq(1))
+    at(spark, sfDir)
+    gates.foreach { g =>
+      r.pass(g.name, 1, df => { println(s"===== ${g.name} ====="); df.explain("formatted") })(
+        () => g.run(spark, sfDir))
+    }
+    r
+  }
+
+  /** One pass per probe gate per multiple, each gate on the replica its
+    * family needs: [[Disjoint]] for [[PAIR_PROBES]], [[KeyShifted]] else. */
+  def scale(spark: SparkSession, sfDir: String, mults: Seq[Int], gates: Seq[String],
+      root: String = System.getProperty("java.io.tmpdir")): Report = {
+    val r = new Report(spark, "scale", sfDir, mults)
+    for {
+      m <- mults
+      (recipe, names) <- Seq(KeyShifted -> gates.filterNot(PAIR_PROBES.contains),
+        Disjoint -> gates.filter(PAIR_PROBES.contains)) if names.nonEmpty
+    } try {
+      val dir = replica(spark, sfDir, recipe, m, root)
+      at(spark, dir)
+      names.foreach(n => r.pass(n, m)(() => SparkEntry.queries(n)(spark, dir)))
+    } catch { case e: Throwable => names.foreach(r.fail(_, m, e)) }
+    r
+  }
+
+  /** What salting buys under a manufactured hot key, measured instead of
+    * asserted: lineitem ⋈ supplier with every row whose l_orderkey ≡ 0
+    * (mod 5) — exactly 20% of the fact — reassigned to ONE hot supplier,
+    * then the q_salted_join rollup, on the key-shifted replica at each
+    * multiple:
+    *   - `unsalted`: plain equi-join with the same shuffle_hash hint the
+    *     salted path uses (broadcast would hide the skew — and at 100 TB
+    *     the dim doesn't broadcast), so the hot key's rows all land on one
+    *     reducer — the straggler;
+    *   - `salted`: [[SkewOps.saltedJoin]], hot key spread over SALTS
+    *     reducers.
+    * Both aggregates are collected and compared before any timing — the
+    * probe refuses to time two computations that disagree. AQE's skew-join
+    * mitigation would partially rescue the unsalted run, so it is turned
+    * off on `spark` to isolate what SALTING buys. */
+  def skew(spark: SparkSession, sfDir: String, mults: Seq[Int]): Report = {
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+    val r = new Report(spark, "skew", sfDir, mults)
+    mults.foreach { m =>
+      try {
+        val dir = replica(spark, sfDir, KeyShifted, m)
+        at(spark, dir)
+        val dim = Tables.supplier(spark, dir)
+          .select(col("s_suppkey").as("suppkey"), col("s_name"))
+        val hot = dim.agg(min(col("suppkey"))).head().getLong(0)
+        val fact = Tables.lineitem(spark, dir)
+          .select(col("l_suppkey").as("suppkey"), col("l_orderkey"), col("l_quantity"))
+          .withColumn("suppkey",
+            when(pmod(col("l_orderkey"), lit(5)) === 0, lit(hot)).otherwise(col("suppkey")))
+        def rollup(joined: DataFrame): DataFrame = joined
+          .groupBy(col("suppkey"), col("s_name"))
+          .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
+            count(lit(1)).as("cnt"))
+        val unsalted = rollup(fact.join(dim.hint("shuffle_hash"), Seq("suppkey")))
+        val salted = rollup(SkewOps.saltedJoin(fact, dim, "suppkey", "l_orderkey", SkewOps.SALTS))
+        def rows(df: DataFrame) = df.collect().map(r =>
+          (r.getLong(0), r.getString(1), r.getDouble(2), r.getLong(3))).sortBy(_._1)
+        require(rows(unsalted).sameElements(rows(salted)),
+          s"salted and unsalted joins disagree at ${m}x — probe void")
+        r.pass("unsalted", m)(() => unsalted)
+        r.pass("salted", m)(() => salted)
+      } catch { case e: Throwable => r.fail("skew", m, e) }
+    }
+    r
+  }
+
+  def main(args: Array[String]): Unit = {
+    def mults(s: String) = {
+      val ms = s.split(",").map(_.toInt).toSeq
+      require(ms.forall(_ > 0), s"multiples must be positive: $s")
+      ms
+    }
+    // resolve every argument before Spark starts
+    val probe: SparkSession => Report = args.toSeq match {
+      case Seq("explain", sf, names @ _*) =>
+        val gates = if (names.isEmpty) SparkEntry.gates else names.map(SparkEntry.gate)
+        explain(_, sf, gates)
+      case Seq("scale", sf, ms, rest @ _*) if rest.size <= 1 =>
+        val gates = rest.headOption.fold(SCALE_PROBES ++ PAIR_PROBES)(_.split(",").toSeq)
+        val unknown = gates.filterNot((SCALE_PROBES ++ PAIR_PROBES).contains)
+        require(unknown.isEmpty, s"not a scale probe: ${unknown.mkString(", ")}")
+        val m = mults(ms)
+        scale(_, sf, m, gates)
+      case Seq("skew", sf, ms) =>
+        val m = mults(ms)
+        skew(_, sf, m)
+      case _ =>
+        System.err.println("usage: graft.Probe explain <sfDir> [gate...] | " +
+          "scale <sfDir> <m,m,..> [gate,gate,..] | skew <sfDir> <m,m,..>")
+        sys.exit(2)
+    }
+    val spark = Session.local(Some(args(1)))
+    val report = probe(spark)
+    println(report.json)
+    spark.stop()
+    if (report.errors.nonEmpty) sys.exit(1)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The one way this repo opens a Spark session. Every main and the test
   * suite build through [[local]], so the confs that gate hashes and timings
   * depend on are set in one place. A caller that needs something else
-  * changes it on the returned session (SkewProbe turns AQE's skew join off,
+  * changes it on the returned session (`Probe skew` turns AQE's skew join off,
   * the GQL CLIs lower the log level).
   */
 object Session {

@@ -10,8 +10,34 @@ import org.apache.spark.sql.functions._
   * Catalyst gets full pushdown/pruning on the parquet source.
   */
 object Tables {
+  /** The ten tables of an SF dir, in the order GenData writes them. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Where table `name` lives under `dir` — the one place the layout is spelled. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.parquet(path(dir, name))
+
+  /** Warm the JVM and every table of `dir`: a `range(1000)` sum, then each
+    * table through its loader into the noop sink (cold parquet-footer reads
+    * and codegen otherwise charge seconds to whichever query scans a table
+    * first). Each table warms inside its own try, so a broken loader
+    * degrades only the queries that read it; the failures are returned. */
+  def warm(spark: SparkSession, dir: String): Seq[(String, Throwable)] = {
+    Session.noop(spark.range(1000).selectExpr("sum(id)").toDF())
+    names.flatMap { t =>
+      val load: (SparkSession, String) => DataFrame = t match {
+        case "events" => events
+        case "documents" => documents
+        case "embeddings" => embeddings
+        case _ => apply(_, _, t)
+      }
+      try { Session.noop(load(spark, dir)); None }
+      catch { case e: Throwable => Some(t -> e) }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

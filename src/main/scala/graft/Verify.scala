@@ -19,7 +19,7 @@ object Verify {
     // vertex count ≤ 2^MST_ROUNDS. The Spark side converges at any scale,
     // so an undersized constant would otherwise surface as a confusing
     // hash mismatch. Make the bound violation explicit here, where the
-    // oracle is about to be compared (the bench/ScaleProbe paths have no
+    // oracle is about to be compared (the bench/probe paths have no
     // oracle and must not pay or trip this check). Runs inside q_mst's own
     // try so a violation fails THAT gate loudly, never the whole dump.
     def mstOracleBoundCheck(): Unit = {

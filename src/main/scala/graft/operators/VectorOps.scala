@@ -718,7 +718,7 @@ object VectorOps {
     * geometry. Any regeneration of the corpus changes this. */
   private def centroidBlobPath(d: String): java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
-    val src = Paths.get(d, "embeddings.parquet")
+    val src = Paths.get(Tables.path(d, "embeddings"))
     val sig = new StringBuilder(src.toAbsolutePath.normalize.toString)
     if (Files.isDirectory(src)) {
       val st = Files.list(src)

@@ -26,4 +26,14 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "iterate through graft.operators.Superstep instead:\n" + offenders.mkString("\n"))
   }
+
+  test("only Tables spells a table's parquet path") {
+    val offenders = for {
+      f <- sources if f.getFileName.toString != "Tables.scala"
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(".parquet\"")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "use Tables.path(dir, name) instead:\n" + offenders.mkString("\n"))
+  }
 }

@@ -41,7 +41,7 @@ def main():
     con = duckdb.connect()
     for t in TABLES:
         # driver testdata ships single files; Spark-written replicas
-        # (ScaleProbe dirs) are part-file DIRECTORIES -> glob them
+        # (Probe replica dirs) are part-file DIRECTORIES -> glob them
         path = f"{sf_dir}/{t}.parquet"
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
