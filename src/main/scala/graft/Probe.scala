@@ -394,7 +394,7 @@ object Probe {
   }
 
   /** Jobs, stages and task durations of every action since the last [[take]]. */
-  private final class Meter extends SparkListener {
+  private[graft] final class Meter extends SparkListener {
     private var jobs, stages = 0
     private val taskMs = mutable.ArrayBuffer.empty[Long]
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }

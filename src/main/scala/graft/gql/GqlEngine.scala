@@ -835,51 +835,63 @@ class GqlEngine(spark: SparkSession, root: String,
       .join(hit.select(col("cost"), col("hops")), lit(true), "left")
   }
 
-  /** E2 neighbor query: project the other endpoint of matching edges,
-    * expanded to `hops` orders (frontier join per hop, origin and already-
-    * reached nodes excluded). */
+  /** E2 neighbor query: the nodes reached from the origin within `hops`
+    * hops (at least one), origin excluded, each in every `(neighbor_i,
+    * neighbor_s)` twin form under which it appears in the group.
+    *
+    * Each hop is one filtered scan of the edge group (SURVEY E2's
+    * `edges.filter(src === v || ...)`): a matching edge's near end must be
+    * in the frontier and its far end not yet seen; `->` and `<-` follow
+    * directed edges forward or backward, `--` follows every edge both
+    * ways. The scan's new far ends are collected and become the next
+    * hop's literal filter; an empty frontier ends the walk early. One more
+    * scan maps the reached node strings to their twin forms. So a k-hop
+    * query runs at most k + 1 jobs, persists nothing and shuffles
+    * nothing. The driver holds only the reached set, and may: that set is
+    * the answer, returned as a local frame. */
   private def neighborQuery(edges: DataFrame, n: Neighbor): DataFrame = {
-    // normalized (skey -> dkey) relation honoring the pattern direction
-    val fwd = edges.select(col("src_i"), col("src_s"), col("dst_i"), col("dst_s"), col("directed"))
-    def norm(df: DataFrame) = df
-      .withColumn("skey", coalesce(col("src_s"), col("src_i").cast("string")))
-      .withColumn("dkey", coalesce(col("dst_s"), col("dst_i").cast("string")))
-      .select("skey", "dkey")
-    val rel = (n.dir match {
-      case "->" => norm(fwd.filter(col("directed")))
-      case "<-" => norm(fwd.filter(col("directed"))).select(
-        col("dkey").as("skey"), col("skey").as("dkey"))
-      case _ => norm(fwd).unionByName(
-        norm(fwd).select(col("dkey").as("skey"), col("skey").as("dkey")))
-    }).filter(col("dkey").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // read every hop
     val origin = n.key match {
       case GInt(l) => l.toString
       case GStr(s) => s
       case other => throw new IllegalArgumentException(s"bad neighbor key $other")
     }
-    val spark = edges.sparkSession
-    // round h: the nodes first reached at hop h (the origin is round 0);
-    // every round is a cut leaf, so the answer no longer reads `rel`
-    val reached = try graft.operators.Superstep.levels(
-        spark.range(1).select(lit(origin).as("node")), math.max(1, n.hops)) { r =>
-      r.last.join(rel, col("node") === col("skey"))
-        .select(col("dkey").as("node"))
-        .join(r.all, Seq("node"), "left_anti")
-        .distinct()
-    } finally rel.unpersist(false)
-    // neighbors keep the original twin-column shape for downstream callers
-    val keys = edges
-      .select(coalesce(col("src_s"), col("src_i").cast("string")).as("node"),
-        col("src_i").as("neighbor_i"), col("src_s").as("neighbor_s"))
-      .unionByName(edges.select(
-        coalesce(col("dst_s"), col("dst_i").cast("string")).as("node"),
-        col("dst_i").as("neighbor_i"), col("dst_s").as("neighbor_s")))
-      .distinct()
-    reached.filter(col("node") =!= origin)
-      .join(keys, "node")
-      .select("neighbor_i", "neighbor_s")
-      .distinct()
+    val src = coalesce(col("src_s"), col("src_i").cast("string"))
+    val dst = coalesce(col("dst_s"), col("dst_i").cast("string"))
+    // (near end, far end) of each way an edge can be walked
+    val (walkable, ways) = n.dir match {
+      case "->" => (edges.filter(col("directed")), Seq(src -> dst))
+      case "<-" => (edges.filter(col("directed")), Seq(dst -> src))
+      case _ => (edges, Seq(src -> dst, dst -> src))
+    }
+    val seen = scala.collection.mutable.LinkedHashSet(origin)
+    var frontier = Seq(origin)
+    var hop = 0
+    while (hop < math.max(1, n.hops) && frontier.nonEmpty) {
+      val known = seen.toSeq
+      val step = ways.map { case (near, far) =>
+        near.isin(frontier: _*) && far.isNotNull && !far.isin(known: _*)
+      }
+      val found = walkable.filter(step.reduce(_ || _))
+        .select(ways.zip(step).map { case ((_, far), hit) => when(hit, far) }: _*)
+        .collect().flatMap(r => (0 until r.length).map(r.getString)).filter(_ != null)
+      frontier = found.distinct.toSeq
+      seen ++= frontier
+      hop += 1
+    }
+    val reached = seen.toSeq.tail
+    val iType = edges.schema("src_i").dataType
+    val sType = edges.schema("src_s").dataType
+    val ends = Seq(src -> struct(col("src_i"), col("src_s")),
+      dst -> struct(col("dst_i").cast(iType), col("dst_s").cast(sType)))
+    val hits = ends.map { case (key, _) => key.isin(reached: _*) }
+    val twins: Seq[Row] =
+      if (reached.isEmpty) Nil
+      else edges.filter(hits.reduce(_ || _))
+        .select(ends.zip(hits).map { case ((_, twin), hit) => when(hit, twin) }: _*)
+        .collect().toSeq.flatMap(r => (0 until r.length).filterNot(r.isNullAt).map(r.getStruct))
+        .distinct
+    val schema = StructType(Seq(StructField("neighbor_i", iType), StructField("neighbor_s", sType)))
+    spark.createDataFrame(twins.asJava, schema)
   }
 
   // ---- dump (S8) -----------------------------------------------------------

@@ -1,10 +1,15 @@
 package graft.gql
 
 import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.TimeUnit
+
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types._
 
 import Ast._
@@ -24,9 +29,20 @@ import Ast._
   * `key_i`/`key_s` twin columns; the group's key type is fixed by first
   * write and a mismatched upsert fails the statement
   * (UpsetPlan.cpp:94-121 semantics).
+  *
+  * Schema memo: a version directory is immutable once written, so its
+  * parquet schema never changes and [[read]] need infer it (a Spark job)
+  * only once. The memo holds one entry per `(db, group)`, the current
+  * version's schema; [[write]] replaces it with the schema it just wrote
+  * and [[drop]] clears the db's entries. Each entry also carries the
+  * directory's file key and mtime, so a directory re-made under the same
+  * path (drop and re-create, or another engine writing on the same root)
+  * is inferred afresh. That makes the memo exact, not a heuristic cache.
   */
 class GraphCatalog(spark: SparkSession, val root: String) {
   import GraphCatalog._
+
+  private val schemas = mutable.HashMap.empty[(String, String), Memo]
 
   private def dbPath(db: String): Path = Paths.get(root, db)
   private def metaPath(db: String): Path = dbPath(db).resolve("meta")
@@ -58,6 +74,7 @@ class GraphCatalog(spark: SparkSession, val root: String) {
       Files.deleteIfExists(p)
     }
     if (Files.exists(dbPath(db))) rm(dbPath(db))
+    schemas.filterInPlace { case ((d, _), _) => d != db }
   }
 
   def listGraphs(): Seq[String] =
@@ -89,7 +106,16 @@ class GraphCatalog(spark: SparkSession, val root: String) {
     val meta = readMeta(db)
     meta.groups.get(group) match {
       case Some(g) if g.version > 0 =>
-        spark.read.parquet(dataDir(db, group, g.version).toString)
+        val dir = dataDir(db, group, g.version)
+        val stamp = stampOf(dir)
+        val schema = schemas.get((db, group)) match {
+          case Some(m) if m.version == g.version && m.stamp == stamp => m.schema
+          case _ =>
+            val s = spark.read.parquet(dir.toString).schema
+            schemas((db, group)) = Memo(g.version, stamp, s)
+            s
+        }
+        spark.read.schema(schema).parquet(dir.toString)
       case Some(g) =>
         val kind = if (g.kind != "unknown") g.kind else if (kindHint.nonEmpty) kindHint else "vertex"
         val schema = if (kind == "edge") edgeBaseSchema else vertexBaseSchema
@@ -102,13 +128,25 @@ class GraphCatalog(spark: SparkSession, val root: String) {
   private def dataDir(db: String, group: String, v: Int): Path =
     dbPath(db).resolve(group).resolve(s"v$v")
 
+  private def stampOf(dir: Path): (AnyRef, Long) = {
+    val a = Files.readAttributes(dir, classOf[BasicFileAttributes])
+    (a.fileKey, a.lastModifiedTime.to(TimeUnit.NANOSECONDS))
+  }
+
+  /** The memoized schema of a group's current version (test hook). */
+  private[graft] def memoizedSchemas: Map[(String, String), StructType] =
+    schemas.map { case (k, m) => k -> m.schema }.toMap
+
   /** Replace a group's contents with `df` (written as the next version,
     * pointer flipped in meta). */
   def write(db: String, group: String, df: DataFrame, kind: String, keyType: String): Unit = {
     val meta = readMeta(db)
     val g = meta.groups.getOrElse(group, GroupMeta(group))
     val next = g.version + 1
-    df.write.mode("overwrite").parquet(dataDir(db, group, next).toString)
+    val dir = dataDir(db, group, next)
+    df.write.mode("overwrite").parquet(dir.toString)
+    // the files hold df's schema; a parquet read makes every field nullable
+    schemas((db, group)) = Memo(next, stampOf(dir), SchemaBridge.asNullable(df.schema))
     meta.groups(group) = g.copy(
       version = next,
       kind = if (g.kind == "unknown") kind else g.kind,
@@ -229,6 +267,9 @@ object GraphCatalog {
     declaredProps: Seq[String] = Nil,
     index: Seq[String] = Nil,
     from: String = "", to: String = "")
+
+  /** A group version's schema and the stamp of the directory it was read from. */
+  private case class Memo(version: Int, stamp: (AnyRef, Long), schema: StructType)
 
   case class Meta(name: String) {
     val groups = scala.collection.mutable.LinkedHashMap[String, GroupMeta]()

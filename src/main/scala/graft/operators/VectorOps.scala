@@ -1564,14 +1564,16 @@ object VectorOps {
     // three consumers (probes, rank scan, label counts) — persist or the
     // corpus re-scans per branch (no cross-branch CSE)
     val v = vecs(s, d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val probes = broadcast(v.filter(pmod(col("vec_id"), lit(KJ_MOD)) === 0)
+    // hinted only where it is a join's build side: the final left join
+    // preserves it, and Spark cannot broadcast a left join's preserved side
+    val probes = v.filter(pmod(col("vec_id"), lit(KJ_MOD)) === 0)
       .select(col("vec_id").as("query_id"), col("v").as("pv"), col("label").as("qlabel"))
-      .orderBy("query_id").limit(AR_QUERIES))
+      .orderBy("query_id").limit(AR_QUERIES)
     val relCounts = v.groupBy(col("label").as("qlabel")).agg(count(lit(1)).as("lcnt"))
     val (gains, idcg, rrs) = (NDCG_GAINS, NDCG_IDCG, NDCG_RRS)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("dist2"), col("vec_id"))
-    val top = v.crossJoin(probes)
+    val top = v.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("qlabel"), col("vec_id"), col("label"),
         Fns.roundP(VectorExprs.dist2(col("v"), col("pv")), 6).as("dist2"))

@@ -204,6 +204,120 @@ class GqlSpec extends AnyFunSuite {
     assert(cachedEntries == before, "a neighbor query left a cached entry")
   }
 
+  /** Neighbour rows as sorted `neighbor_i|neighbor_s` strings, asserting
+    * the query left no CacheManager entry behind. */
+  private def nbrRows(e: GqlEngine, where: String): Seq[String] = {
+    val before = cachedEntries
+    val rows = e.query(s"{query: 'e', in: 'ga', where: $where};").collect()
+      .map(r => s"${r.get(0)}|${r.get(1)}").toSeq.sorted
+    assert(cachedEntries == before, s"neighbor query $where left a cached entry")
+    rows
+  }
+
+  // The literals in the four cases below are the answers of the earlier
+  // frontier-join implementation (Superstep.levels), pinned verbatim.
+  test("neighbor semantics: `<-` follows directed edges backwards only") {
+    val e = freshEngine()
+    e.exec("{create: 'ga', group: [['g', 'e', 'g']]};")
+    e.exec("{upset: 'e', edge: [['a', ->, 'b'], ['c', ->, 'b'], ['b', ->, 'd'], ['d', --, 'f']]};")
+    assert(nbrRows(e, "{id: 'b', <-: *, neighbor: 1}") == Seq("null|a", "null|c"))
+    assert(nbrRows(e, "{id: 'd', <-: *, neighbor: 2}") == Seq("null|a", "null|b", "null|c"))
+    assert(nbrRows(e, "{id: 'f', <-: *, neighbor: 1}") == Nil)
+    // hops below 1 walk one hop
+    assert(nbrRows(e, "{id: 'd', <-: *, neighbor: 0}") == Seq("null|b"))
+  }
+
+  test("neighbor semantics: a 3-hop query on a 2-edge chain stops when the frontier empties") {
+    val e = freshEngine()
+    e.exec("{create: 'ga', group: [['g', 'e', 'g']]};")
+    e.exec("{upset: 'e', edge: [['x', ->, 'y'], ['y', ->, 'z']]};")
+    assert(nbrRows(e, "{id: 'x', ->: *, neighbor: 3}") == Seq("null|y", "null|z"))
+  }
+
+  test("neighbor semantics: 3-hop `--` on a 5-cycle excludes the origin, each neighbor once") {
+    val e = freshEngine()
+    e.exec("{create: 'ga', group: [['g', 'e', 'g']]};")
+    e.exec("{upset: 'e', edge: [['a', ->, 'b'], ['b', ->, 'c'], ['c', ->, 'd'], ['d', ->, 'e'], ['e', ->, 'a']]};")
+    assert(nbrRows(e, "{id: 'a', --: *, neighbor: 3}") == Seq("null|b", "null|c", "null|d", "null|e"))
+  }
+
+  test("neighbor semantics: endpoints mixing 5 and '5' return both twin forms") {
+    val e = freshEngine()
+    e.exec("{create: 'ga', group: [['g', 'e', 'g']]};")
+    assert(e.exec("{upset: 'e', edge: [[1, ->, 5], ['5', ->, 7], [1, ->, '5'], [7, --, '8']]};")
+      .head.status == "UPSET SUCCESS")
+    assert(nbrRows(e, "{id: 1, ->: *, neighbor: 2}") == Seq("5|null", "7|null", "null|5"))
+    assert(nbrRows(e, "{id: '5', --: *, neighbor: 1}") == Seq("1|null", "7|null"))
+    assert(nbrRows(e, "{id: 7, <-: *, neighbor: 1}") == Seq("5|null", "null|5"))
+    assert(nbrRows(e, "{id: '8', --: *, neighbor: 3}") == Seq("1|null", "5|null", "7|null", "null|5"))
+    assert(nbrRows(e, "{id: 5, ->: *, neighbor: 1}") == Seq("7|null"))
+  }
+
+  test("a read of an unchanged group runs no job; a 2-hop neighbor query at most 3") {
+    val e = freshEngine()
+    e.exec("{create: 'ga', group: [['g', 'e', 'g']]};")
+    e.exec("{upset: 'e', edge: [['a', ->, 'b'], ['b', ->, 'c'], ['c', ->, 'd'], ['b', ->, 'e']]};")
+    e.catalog.read("ga", "e")
+    val meter = new Probe.Meter
+    spark.sparkContext.addSparkListener(meter)
+    try {
+      meter.take(spark)
+      e.catalog.read("ga", "e")
+      assert(meter.take(spark)._1 == 0, "a re-read of an unchanged group ran a job")
+      val rows = e.query("{query: 'e', in: 'ga', where: {id: 'a', ->: *, neighbor: 2}};").collect()
+      assert(rows.map(_.getAs[String]("neighbor_s")).sorted.toSeq == Seq("b", "c", "e"))
+      val jobs = meter.take(spark)._1
+      assert(jobs <= 3, s"a 2-hop neighbor query ran $jobs jobs")
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
+
+  test("catalog schema memo equals parquet inference after every write kind") {
+    val e = freshEngine()
+    val c = e.catalog
+    def inferred(db: String, g: String) = spark.read.parquet(java.nio.file.Paths.get(
+      c.root, db, g, s"v${c.versionOf(db, g)}").toString).schema
+    def exact(gs: String*): Unit = gs.foreach { g =>
+      assert(c.memoizedSchemas.get(("ga", g)).contains(inferred("ga", g)), s"memo of '$g'")
+      assert(c.read("ga", g).schema == inferred("ga", g))
+    }
+    assert(e.exec("{create: 'ga', group: [{g: ['name', 'v'], index: ['v']}, ['g', 'e', 'g']]};")
+      .head.status == "CREATE SUCCESS")
+    val writes = Seq(
+      "{upset: 'g', vertex: [[1, {name: 'a', x: 1}], [2, {name: 'b'}], [3]]};" -> Seq("g"),
+      "{upset: 'g', property: {y: 2.5}, where: {id: 1}};" -> Seq("g"),
+      "{upset: 'g', vertex: [[3, {v: [0.1, 0.2, 0.3]}], [4, {v: [1, 2, 3]}]]};" -> Seq("g"),
+      "{upset: 'e', edge: [[1, ->: {w: 2}, 2], [2, --, 3], [3, ->, 4]]};" -> Seq("e"),
+      "{remove: 'g', vertex: [1]};" -> Seq("g", "e"))
+    writes.foreach { case (stmt, groups) =>
+      assert(e.exec(stmt).head.status.endsWith("SUCCESS"), stmt)
+      exact(groups: _*)
+    }
+    assert(count(e, "{query: 'e', in: 'ga'};") == 2)
+    // the resident-leak guard: one entry per group, however many versions
+    (1 to 20).foreach(i => e.exec(s"{upset: 'g', vertex: [[${10 + i}, {name: 'n$i'}]]};"))
+    assert(c.memoizedSchemas.keySet == Set(("ga", "g"), ("ga", "e")))
+    exact("g")
+
+    // drop and re-create under the same name, written at the same version
+    assert(e.exec("{create: 'gb', group: [{h: ['p']}]};").head.status == "CREATE SUCCESS")
+    e.exec("{upset: 'h', vertex: [[1, {p: 1}]]};")
+    assert(c.read("gb", "h").columns.toSeq == Seq("key_i", "key_s", "p"))
+    e.exec("{drop: 'gb'};")
+    assert(!c.memoizedSchemas.keySet.exists(_._1 == "gb"))
+    e.exec("{create: 'gb', group: [{h: ['q']}]};")
+    e.exec("{upset: 'h', vertex: [[1, {q: 'x'}]]};")
+    assert(c.versionOf("gb", "h") == 1)
+    assert(c.read("gb", "h").columns.toSeq == Seq("key_i", "key_s", "q"))
+    // another engine re-makes the directory: the stamp forces re-inference
+    val other = new GqlEngine(spark, c.root)
+    other.exec("{drop: 'gb'};")
+    other.exec("{create: 'gb', group: [{h: ['r']}]};")
+    other.exec("{upset: 'h', vertex: [[1, {r: 2.5}]]};")
+    assert(c.versionOf("gb", "h") == 1)
+    assert(c.read("gb", "h").schema == inferred("gb", "h"))
+    assert(c.read("gb", "h").collect().map(_.getAs[Double]("r")).toSeq == Seq(2.5))
+  }
+
   test("min-cost path takes the cheaper route with more hops") {
     val e = freshEngine()
     e.exec("{create: 'ga', group: [['g', 'e', 'g']]};")

@@ -36,4 +36,16 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "use Tables.path(dir, name) instead:\n" + offenders.mkString("\n"))
   }
+
+  test("every GQL group read goes through the catalog's schema memo") {
+    val gql = main.resolve(Paths.get("scala", "graft", "gql"))
+    assert(sources.exists(_.startsWith(gql)), s"no sources under $gql")
+    val offenders = for {
+      f <- sources if f.startsWith(gql) && f.getFileName.toString != "GraphCatalog.scala"
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("read.parquet(") || line.contains("read.schema(")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "read a group with GraphCatalog.read instead:\n" + offenders.mkString("\n"))
+  }
 }
