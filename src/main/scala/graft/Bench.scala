@@ -35,7 +35,8 @@ import java.nio.file.{Files, Paths}
   * entry in `errors` — a failure must not read as a fast success.
   */
 object Bench {
-  /** `s` as a JSON string literal. */
+  /** `s` as a JSON string literal. Every control character is escaped: a
+    * raw tab or CR in oracle SQL would make `json.load` fail. */
   private[graft] def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"

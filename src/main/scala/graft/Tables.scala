@@ -64,13 +64,17 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = apply(s, d, "events")
+    eventsTs(apply(s, d, "events"))
+  }
+  /** An events frame, batch or streaming, with `ts` as the session
+    * TIMESTAMP whatever its on-disk type ([[events]] lists the three). */
+  def eventsTs(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, TimestampType}
     df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampType => df
+      case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampType => df
       case _ => // TIMESTAMP_NTZ: naive micros == UTC instants (session tz is UTC)
-        df.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
+        df.withColumn("ts", col("ts").cast(TimestampType))
     }
   }
   /** Documents with the id/count columns normalized to LONG. The casts are

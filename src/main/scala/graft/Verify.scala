@@ -54,19 +54,8 @@ object Verify {
       sinceClear += 1
       if (sinceClear >= CLEAR_EVERY) { spark.catalog.clearCache(); sinceClear = 0 }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = gates.map(g => s"${q(g.name)}: ${q(g.oracle)}").mkString("{", ",", "}")
+    import Bench.jstr
+    val json = gates.map(g => s"${jstr(g.name)}: ${jstr(g.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -14,12 +14,16 @@ import graft.functions.VectorExprs
   * [[GraphCatalog]]; Catalyst does analyze/optimize/physical. Statements in
   * a script run sequentially with mutations visible to later statements
   * (reference interleaves parse and execution — gql.y:152-156).
+  *
+  * The walk rule, one definition ([[walk]]) for every traversal — neighbour
+  * hops, multi-edge matches, min-cost walks and `[a, ->, b]` edge patterns:
+  * `->` walks directed edges from `src` to `dst`, `<-` walks directed edges
+  * from `dst` to `src`, and `--` walks every edge, directed or not, both
+  * ways (SURVEY §7.4 #3). So `->` and `<-` never cross an edge stored as
+  * `--`. A walk names a node by one string ([[nodeCol]]): its text key, or
+  * its int key printed, so `5` and `'5'` are one node to a walk.
   */
-class GqlEngine(spark: SparkSession, root: String,
-                val knnOverFetch: Int = GqlEngine.KNN_OVER_FETCH,
-                val knnMinFetch: Int = GqlEngine.KNN_MIN_FETCH) {
-  require(knnOverFetch >= 1, s"knnOverFetch must be >= 1 (got $knnOverFetch)")
-  require(knnMinFetch >= 1, s"knnMinFetch must be >= 1 (got $knnMinFetch)")
+class GqlEngine(spark: SparkSession, root: String) {
   val catalog = new GraphCatalog(spark, root)
 
   /** One statement's outcome: a status line (CREATE SUCCESS / error), an
@@ -183,61 +187,72 @@ class GqlEngine(spark: SparkSession, root: String,
 
   // ---- mutations -----------------------------------------------------------
 
-  private def keyOf(v: GVal): (Option[Long], Option[String], String) = v match {
-    case GInt(l) => (Some(l), None, "int")
-    case GStr(s) => (None, Some(s), "str")
+  /** A key's `(_i, _s)` base-column values. */
+  private def keyOf(v: GVal): Seq[Any] = v match {
+    case GInt(l) => Seq(l, null)
+    case GStr(s) => Seq(null, s)
     case other => throw new IllegalArgumentException(s"bad key $other")
   }
 
   private def upsetVertex(u: UpsetVertex): Unit = {
     val db = requireDb(u.group)
-    // dedupe the batch by key, last one wins — two rows for the same key in
-    // one upsert must collapse to the later row or the merge-on-key
-    // invariant (one row per key) breaks for every later anti-join
-    val rowsByKey = scala.collection.mutable.LinkedHashMap[(Option[Long], Option[String]), (GVal, GObj)]()
-    u.rows.foreach { case r @ (key, _) =>
-      val (ki, ks, _) = keyOf(key)
-      rowsByKey((ki, ks)) = r
-    }
-    val batchRows = rowsByKey.values.toSeq
-    // infer batch schema from values; widen long→double on conflict
-    val colTypes = scala.collection.mutable.LinkedHashMap[String, DataType]()
-    batchRows.foreach { case (_, props) =>
-      props.fields.foreach { case (k, v) =>
-        val t = sparkType(v)
-        colTypes(k) = colTypes.get(k).map(widen(_, t)).getOrElse(t)
-      }
-    }
+    val rows = u.rows.map { case (key, props) => (keyOf(key), props.fields) }
     val established = catalog.keyTypeOf(db, u.group)
-    val batchKeyTypes = batchRows.map(r => keyOf(r._1)._3).distinct
+    val batchKeyTypes = rows.map(r => if (r._1.head == null) "str" else "int").distinct
     if (batchKeyTypes.length > 1)
       throw new IllegalArgumentException("mixed key types in one upsert batch")
     val kt = batchKeyTypes.head
     if (established.nonEmpty && established != kt)
       throw new IllegalArgumentException(
         s"key type mismatch: group '${u.group}' keys are $established, got $kt")
-    val schema = StructType(GraphCatalog.vertexBaseSchema.fields ++
-      colTypes.map { case (k, t) => StructField(k, settle(t)) })
-    val rows: Seq[Row] = batchRows.map { case (key, props) =>
-      val (ki, ks, _) = keyOf(key)
-      val pm = props.fields.toMap
-      Row.fromSeq(
-        Seq[Any](ki.map(Long.box).orNull, ks.orNull) ++
-          colTypes.map { case (k, t) => pm.get(k).map(sparkValue(_, t)).orNull }.toSeq)
-    }
-    val batch = spark.createDataFrame(rows.asJava, schema)
-    val old = catalog.read(db, u.group)
-    // merge-on-key: new rows win, unmatched old rows survive (S2)
-    val aligned = alignSchemas(old, batch)
-    val merged = aligned._2.unionByName(
-      aligned._1.join(broadcast(batch.select(col("key_i"), col("key_s"))),
-        keyJoinCond(aligned._1, batch), "left_anti"),
-      allowMissingColumns = true)
-    catalog.write(db, u.group, merged, "vertex", kt)
+    upsert(db, u.group, "vertex", kt, GraphCatalog.vertexBaseSchema, rows)
   }
 
-  private def keyJoinCond(old: DataFrame, batch: DataFrame): Column =
-    (old("key_i") <=> batch("key_i")) && (old("key_s") <=> batch("key_s"))
+  private def upsetEdge(u: UpsetEdge): Unit = {
+    val db = requireDb(u.group)
+    val rows = u.edges.map { case (from, dir, props, to) =>
+      // `<-` stored as reversed `->` (UpsetPlan.cpp:227-230); `--` undirected
+      val (f, t, directed) = dir match {
+        case "<-" => (to, Some(from), true)
+        case "->" => (Some(from), to, true)
+        case _ => (Some(from), to, false)
+      }
+      (keyOf(f.get) ++ t.map(keyOf).getOrElse(Seq(null, null)) :+ directed,
+        props.toSeq.flatMap(_.fields))
+    }
+    upsert(db, u.group, "edge", "", GraphCatalog.edgeBaseSchema, rows)
+  }
+
+  /** Merge-on-key upsert (S2) of `rows` — (base-column values, properties)
+    * — into a vertex or edge group: a vertex is identified by its key, an
+    * edge by its endpoints and direction. The batch dedupes on the base
+    * columns, last row wins: two rows for one id must collapse to the later
+    * one, or the one-row-per-id invariant breaks for every later anti-join.
+    * Property types are inferred from the values (long widens to double on
+    * conflict). New rows win; unmatched old rows survive. */
+  private def upsert(db: String, group: String, kind: String, keyType: String,
+                     base: StructType, rows: Seq[(Seq[Any], Seq[(String, GVal)])]): Unit = {
+    val byId = scala.collection.mutable.LinkedHashMap[Seq[Any], Seq[(String, GVal)]]()
+    rows.foreach { case (id, props) => byId(id) = props }
+    val colTypes = scala.collection.mutable.LinkedHashMap[String, DataType]()
+    byId.values.foreach(_.foreach { case (k, v) =>
+      val t = sparkType(v)
+      colTypes(k) = colTypes.get(k).map(widen(_, t)).getOrElse(t)
+    })
+    val schema = StructType(base.fields ++
+      colTypes.map { case (k, t) => StructField(k, settle(t)) })
+    val batch = spark.createDataFrame(byId.toSeq.map { case (id, props) =>
+      val pm = props.toMap
+      Row.fromSeq(id ++ colTypes.map { case (k, t) => pm.get(k).map(sparkValue(_, t)).orNull })
+    }.asJava, schema)
+    val (old, fresh) = alignSchemas(catalog.read(db, group, kindHint = kind), batch)
+    val ids = base.fieldNames.toSeq
+    val merged = fresh.unionByName(
+      old.join(broadcast(batch.select(ids.map(col): _*)),
+        ids.map(c => old(c) <=> batch(c)).reduce(_ && _), "left_anti"),
+      allowMissingColumns = true)
+    catalog.write(db, group, merged, kind, keyType)
+  }
 
   /** Align old/new column types (cast new numerics to the established
     * type); returns (old, new) with compatible schemas. */
@@ -257,51 +272,6 @@ class GqlEngine(spark: SparkSession, root: String,
       }
     }
     (o, b)
-  }
-
-  private def upsetEdge(u: UpsetEdge): Unit = {
-    val db = requireDb(u.group)
-    val colTypes = scala.collection.mutable.LinkedHashMap[String, DataType]()
-    u.edges.foreach { case (_, _, props, _) =>
-      props.toSeq.flatMap(_.fields).foreach { case (k, v) =>
-        val t = sparkType(v)
-        colTypes(k) = colTypes.get(k).map(widen(_, t)).getOrElse(t)
-      }
-    }
-    val schema = StructType(GraphCatalog.edgeBaseSchema.fields ++
-      colTypes.map { case (k, t) => StructField(k, settle(t)) })
-    val rows: Seq[Row] = u.edges.map { case (from, dir, props, to) =>
-      // `<-` stored as reversed `->` (UpsetPlan.cpp:227-230); `--` undirected
-      val (f, t2, directed) = dir match {
-        case "<-" => (to, Some(from), true)
-        case "->" => (Some(from), to, true)
-        case _ => (Some(from), to, false)
-      }
-      val (fi, fs, _) = keyOf(f.get)
-      val (ti, ts) = t2.map(keyOf).map(k => (k._1, k._2)).getOrElse((None, None))
-      val pm = props.map(_.fields.toMap).getOrElse(Map.empty[String, GVal])
-      Row.fromSeq(
-        Seq[Any](fi.map(Long.box).orNull, fs.orNull,
-          ti.map(Long.box).orNull, ts.orNull, directed) ++
-          colTypes.map { case (k, t) => pm.get(k).map(sparkValue(_, t)).orNull }.toSeq)
-    }
-    // same in-batch dedupe as vertices: the edge id is (endpoints,
-    // direction) after normalization, last occurrence wins
-    val dedupedRows = {
-      val m = scala.collection.mutable.LinkedHashMap[Seq[Any], Row]()
-      rows.foreach(r => m(r.toSeq.take(5)) = r)
-      m.values.toSeq
-    }
-    val batch = spark.createDataFrame(dedupedRows.asJava, schema)
-    val old = catalog.read(db, u.group, kindHint = "edge")
-    val aligned = alignSchemas(old, batch)
-    // edges append (id = endpoints+direction); duplicate edge = replace
-    val merged = aligned._2.unionByName(
-      aligned._1.join(broadcast(batch.select("src_i", "src_s", "dst_i", "dst_s", "directed")),
-        Seq("src_i", "src_s", "dst_i", "dst_s", "directed").map(c =>
-          aligned._1(c) <=> batch(c)).reduce(_ && _), "left_anti"),
-      allowMissingColumns = true)
-    catalog.write(db, u.group, merged, "edge", "")
   }
 
   private def upsetProperty(u: UpsetProperty): Unit = {
@@ -363,6 +333,43 @@ class GqlEngine(spark: SparkSession, root: String,
     catalog.write(db, r.group, df.filter(!coalesce(pred, lit(false))), "edge", "")
   }
 
+  // ---- node keys and the walk rule ------------------------------------------
+
+  /** The node an edge end or vertex key names, as one string: the text key,
+    * or the int key printed (`end` is `src`, `dst` or `key`). */
+  private def nodeCol(end: String): Column =
+    coalesce(col(s"${end}_s"), col(s"${end}_i").cast("string"))
+
+  /** The node a literal key names, in [[nodeCol]]'s form. */
+  private def nodeStr(v: GVal): String = v match {
+    case GInt(l) => l.toString
+    case GStr(s) => s
+    case GDatetime(e) => e.toString
+    case other => throw new IllegalArgumentException(s"bad node key $other")
+  }
+
+  /** `end`'s key equals `v` in its own typed column; `*` matches any key. */
+  private def keyIs(end: String, v: GVal): Column = v match {
+    case GStar => lit(true)
+    case GInt(l) => col(s"${end}_i") === l
+    case GStr(s) => col(s"${end}_s") === s
+    case other => throw new IllegalArgumentException(s"bad key $other")
+  }
+
+  /** One direction of the walk rule (class doc): whether only directed edges
+    * qualify, and the (near, far) end prefixes each qualifying edge is
+    * walked by. */
+  private case class Walk(directedOnly: Boolean, ways: Seq[(String, String)]) {
+    def edgesOf(edges: DataFrame): DataFrame =
+      if (directedOnly) edges.filter(col("directed")) else edges
+  }
+
+  private def walk(dir: String): Walk = dir match {
+    case "->" => Walk(directedOnly = true, Seq("src" -> "dst"))
+    case "<-" => Walk(directedOnly = true, Seq("dst" -> "src"))
+    case _ => Walk(directedOnly = false, Seq("src" -> "dst", "dst" -> "src"))
+  }
+
   // ---- query ---------------------------------------------------------------
 
   private var lastDb: Option[String] = None
@@ -400,32 +407,13 @@ class GqlEngine(spark: SparkSession, root: String,
     lastDb = Some(db)
     q.target match {
       case AllGroups =>
+        // walks and matches run over the union of every edge group
+        def edges = unionOf(db, catalog.edgeGroups(db), "edge groups")
         q.where match {
-          case Some(mp: MinPath) =>
-            // walk over the union of every edge group; keep the cost
-            // property when any group carries it (missing -> null -> the
-            // per-edge default applies)
-            val eg = catalog.edgeGroups(db)
-            if (eg.isEmpty) throw new IllegalArgumentException(s"no edge groups in '$db'")
-            val base = Seq("src_i", "src_s", "dst_i", "dst_s", "directed")
-            val keep = base ++ mp.costProp.toSeq
-            val edges = eg.map { g =>
-              val df = catalog.read(db, g)
-              df.select(keep.map(c =>
-                if (df.columns.contains(c)) col(c)
-                else lit(null).cast("double").as(c)): _*)
-            }.reduce(_ unionByName _)
-            minPathQuery(edges, mp)
-          case Some(mo: Motif) =>
-            // match over the union of every edge group
-            val eg = catalog.edgeGroups(db)
-            if (eg.isEmpty) throw new IllegalArgumentException(s"no edge groups in '$db'")
-            val edges = eg.map(catalog.read(db, _))
-              .reduce(_.unionByName(_, allowMissingColumns = true))
-            motifQuery(db, edges, mo)
+          case Some(mp: MinPath) => minPathQuery(edges, mp)
+          case Some(mo: Motif) => motifQuery(db, edges, mo)
           case where =>
-            val dfs = catalog.groups(db).map(g => catalog.read(db, g))
-            val all = dfs.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+            val all = unionOf(db, catalog.groups(db), "groups")
             where.map(p => all.filter(predColumn(all, p))).getOrElse(all)
         }
       case GroupTarget(g) =>
@@ -443,6 +431,12 @@ class GqlEngine(spark: SparkSession, root: String,
         val base = q.where.map(p => df.filter(predColumn(df, p))).getOrElse(df)
         base.select(props.filter(base.columns.contains).map(col): _*)
     }
+  }
+
+  /** `groups` of `db` as one frame; a property a group lacks reads null. */
+  private def unionOf(db: String, groups: Seq[String], what: String): DataFrame = {
+    if (groups.isEmpty) throw new IllegalArgumentException(s"no $what in '$db'")
+    groups.map(catalog.read(db, _)).reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** Number of distinct HNSW index generations (one per (db, group, prop,
@@ -473,7 +467,7 @@ class GqlEngine(spark: SparkSession, root: String,
     * HNSW.cpp:134-165): deterministic hash-repartition of the group, each
     * partition builds — or RELOADS — a partition-local
     * [[graft.vector.Hnsw]] and surrenders its local top-`want`
-    * (want = max(k·knnOverFetch, knnMinFetch)) candidate ids; the driver
+    * (want = max(k·KNN_OVER_FETCH, KNN_MIN_FETCH)) candidate ids; the driver
     * merge moves only PARTS×want ids (bounded regardless of group size —
     * the group itself is never collected), and the exact codegen'd re-rank
     * keeps k. Partition indexes persist beside the catalog version they
@@ -498,7 +492,7 @@ class GqlEngine(spark: SparkSession, root: String,
       catalog.keyTypeOf(db, group) == "int"
     if (!useIndex) brute
     else {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
+      import java.nio.file.{Files, Paths}
       val ver = catalog.versionOf(db, group)
       val dim = knn.vec.length
       val dir = Paths.get(root, db, group)
@@ -522,12 +516,12 @@ class GqlEngine(spark: SparkSession, root: String,
             n.startsWith(s".hnsw_${knn.prop}_d")
         }.toSeq.foreach(Files.deleteIfExists(_))
       finally stale.close()
-      val want = math.max(knn.k * knnOverFetch, knnMinFetch)
+      val want = math.max(knn.k * GqlEngine.KNN_OVER_FETCH, GqlEngine.KNN_MIN_FETCH)
       val pvec = knn.vec.toArray
       val dirStr = dir.toString
       import spark.implicits._
       // stage 1: per-partition build-or-load + local search. Each task
-      // touches only its partition; blobs are written via temp + atomic
+      // touches only its partition; blobs are published via temp + atomic
       // move so a re-run can never observe a half-written index.
       val ids: Array[Long] = df.filter(col(knn.prop).isNotNull)
         .select(col("key_i"), col(knn.prop).cast("array<double>"))
@@ -548,12 +542,9 @@ class GqlEngine(spark: SparkSession, root: String,
               rows.foreach { case (id, vec) =>
                 if (vec != null && vec.length == dim) h.add(id, vec.toArray)
               }
-              // "tmp" prefix keeps half-written files out of the
+              // publish's "tmp" prefix keeps half-written files out of the
               // generation namespace the hnswIndexCount hook scans
-              val tmp = Files.createTempFile(Paths.get(dirStr), s"tmp$gen$pid", ".tmp")
-              h.save(tmp.toString)
-              Files.move(tmp, file, StandardCopyOption.REPLACE_EXISTING)
-              graft.vector.Hnsw.cachePut(file.toString, h)
+              h.publish(file)
               h
             }
           idx.search(pvec, want, ef = math.max(4 * want, 256)).map(_._1).iterator
@@ -643,11 +634,7 @@ class GqlEngine(spark: SparkSession, root: String,
           }.reduce(_ && _)
         case None => lit(false)
       }
-      case IdEq(k) => k match {
-        case GInt(l) => col("key_i") === l
-        case GStr(s) => col("key_s") === s
-        case other => throw new IllegalArgumentException(s"bad id $other")
-      }
+      case IdEq(k) => keyIs("key", k)
       case Exists(prop) => propCol(prop).map(_.isNotNull).getOrElse(lit(false))
       case And(ps) => ps.map(predColumn(df, _)).reduceOption(_ && _).getOrElse(lit(true))
       case Or(ps) => ps.map(predColumn(df, _)).reduceOption(_ || _).getOrElse(lit(false))
@@ -663,22 +650,11 @@ class GqlEngine(spark: SparkSession, root: String,
           }
         case None => lit(false)
       }
-      case EdgePattern(from, dir, to) =>
-        def endpoint(iCol: String, sCol: String, v: GVal): Column = v match {
-          case GStar => lit(true)
-          case GInt(l) => col(iCol) === l
-          case GStr(s) => col(sCol) === s
-          case other => throw new IllegalArgumentException(s"bad endpoint $other")
-        }
-        dir match {
-          case "->" => col("directed") &&
-            endpoint("src_i", "src_s", from) && endpoint("dst_i", "dst_s", to)
-          case "<-" => col("directed") &&
-            endpoint("src_i", "src_s", to) && endpoint("dst_i", "dst_s", from)
-          case _ => // `--`: either endpoint order (SURVEY §7.4 #3)
-            (endpoint("src_i", "src_s", from) && endpoint("dst_i", "dst_s", to)) ||
-              (endpoint("src_i", "src_s", to) && endpoint("dst_i", "dst_s", from))
-        }
+      case EdgePattern(from, dir, to) => // an edge walked from `from` to `to`
+        val w = walk(dir)
+        val hit = w.ways.map { case (near, far) => keyIs(near, from) && keyIs(far, to) }
+          .reduce(_ || _)
+        if (w.directedOnly) col("directed") && hit else hit
       case n: Neighbor =>
         throw new IllegalArgumentException("neighbor predicate handled at query level")
       case k: Knn =>
@@ -696,56 +672,41 @@ class GqlEngine(spark: SparkSession, root: String,
     * (src/operand/match/CTreeStrategy.cpp), so the semantics are defined
     * here, E10-style, and pinned by GqlSpec (see [[Ast.MotifV]]).
     *
-    * Plan: one chain of equi-joins over the edge relation — each hop
-    * projects its (normalized string key) endpoints to the hop's variable
-    * names and joins the accumulated binding frame on the variables already
-    * bound (Catalyst picks broadcast/shuffle; hops with no shared variable
-    * cross-join, which is the definitional product of disconnected pattern
-    * components). Concrete keys filter before the join; `{...}` attribute
-    * slots semi-join against a broadcast frame of matching vertex keys;
-    * per-hop `distinct` keeps parallel edges from multiplying intermediate
-    * rows. Result: DISTINCT bindings, one string column per variable in
+    * Each hop follows the walk rule (class doc). Plan: one chain of
+    * equi-joins over the edge relation — each hop projects its node-string
+    * endpoints to the hop's variable names and joins the accumulated
+    * binding frame on the variables already bound (Catalyst picks
+    * broadcast/shuffle; hops with no shared variable cross-join, which is
+    * the definitional product of disconnected pattern components).
+    * Concrete keys filter before the join; `{...}` attribute slots
+    * semi-join against a broadcast frame of matching vertex keys; per-hop
+    * `distinct` keeps parallel edges from multiplying intermediate rows.
+    * Result: DISTINCT bindings, one string column per variable in
     * first-appearance order; a pattern with no variables returns one row
     * `(matched: combination count over distinct endpoint pairs per hop)`.
     */
   private def motifQuery(db: String, edges: DataFrame, m: Motif): DataFrame = {
     require(m.edges.nonEmpty, "empty match pattern")
-    def keyStr(v: GVal): String = v match {
-      case GInt(l) => l.toString
-      case GStr(s) => s
-      case GDatetime(e) => e.toString
-      case other => throw new IllegalArgumentException(s"bad pattern key $other")
-    }
     // vertex keys satisfying an attribute condition — a condition slot
     // matches a vertex of ANY group whose attributes satisfy the predicate
     // (missing attributes are null → no match, as everywhere else)
     def condKeys(p: Pred): DataFrame = {
-      val vgs = catalog.groups(db)
-        .filter(g => catalog.groupKind(db, g).contains("vertex"))
-      if (vgs.isEmpty) throw new IllegalArgumentException(s"no vertex groups in '$db'")
-      val all = vgs.map(catalog.read(db, _))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      all.filter(predColumn(all, p))
-        .select(coalesce(col("key_s"), col("key_i").cast("string")).as("__ck"))
-        .distinct()
+      val all = unionOf(db, catalog.groups(db)
+        .filter(g => catalog.groupKind(db, g).contains("vertex")), "vertex groups")
+      all.filter(predColumn(all, p)).select(nodeCol("key").as("__ck")).distinct()
     }
     var acc: Option[DataFrame] = None
     val varOrder = scala.collection.mutable.LinkedHashSet.empty[String]
     m.edges.foreach { e =>
       val base = e.cond.map(p => edges.filter(predColumn(edges, p))).getOrElse(edges)
-      val f = coalesce(col("src_s"), col("src_i").cast("string"))
-      val t = coalesce(col("dst_s"), col("dst_i").cast("string"))
-      var rel = e.dir match {
-        case "->" => base.filter(col("directed")).select(f.as("__f"), t.as("__t"))
-        case "<-" => base.filter(col("directed")).select(t.as("__f"), f.as("__t"))
-        case _ => // either endpoint order, directed or not (EdgePattern's `--`)
-          base.select(f.as("__f"), t.as("__t"))
-            .unionByName(base.select(t.as("__f"), f.as("__t")))
-      }
+      val w = walk(e.dir)
+      var rel = w.ways.map { case (near, far) =>
+        w.edgesOf(base).select(nodeCol(near).as("__f"), nodeCol(far).as("__t"))
+      }.reduce(_ unionByName _)
       def bindEnd(v: MotifV, c: String): Option[String] = v match {
         case MVar(n) => varOrder += n; Some(n)
         case MAny => None
-        case MKey(k) => rel = rel.filter(col(c) === keyStr(k)); None
+        case MKey(k) => rel = rel.filter(col(c) === nodeStr(k)); None
         case MCond(p) =>
           rel = rel.join(broadcast(condKeys(p).withColumnRenamed("__ck", c)),
             Seq(c), "left_semi")
@@ -781,44 +742,27 @@ class GqlEngine(spark: SparkSession, root: String,
   /** E4 — min-cost path walk `[a, ->: min('cost'), b]`: bounded
     * Bellman-Ford over the edge group (the reference parses this and
     * returns success without doing anything — PathPlan.cpp:15-17). Edge
-    * cost = the named property (default 1 = hop count); `<-` walks the
-    * stored edges reversed; `--` both directions. Returns one row
-    * (from, to, cost, hops) — null cost when unreachable within the
-    * relaxation bound. */
+    * cost = the named property (default 1 = hop count); the walk follows
+    * the walk rule (class doc), so `->` and `<-` cross directed edges
+    * only. Returns one row (from, to, cost, hops) — null cost when
+    * unreachable within the relaxation bound. */
   private def minPathQuery(edges: DataFrame, mp: MinPath): DataFrame = {
     val rounds = 15
-    def keyCol(v: GVal, iCol: String, sCol: String): Column = v match {
-      case GInt(l) => col(iCol) === l
-      case GStr(s) => col(sCol) === s
-      case other => throw new IllegalArgumentException(s"min() needs concrete endpoints, got $other")
-    }
     val costExpr = mp.costProp match {
       // edges lacking the property (mixed groups) cost the unit default
       case Some(p) if edges.columns.contains(p) =>
         coalesce(col(p).cast("double"), lit(1.0))
       case _ => lit(1.0)
     }
-    val fwd = edges.select(col("src_i"), col("src_s"), col("dst_i"), col("dst_s"),
-      costExpr.as("ecost"))
-    val rev = edges.select(col("dst_i").as("src_i"), col("dst_s").as("src_s"),
-      col("src_i").as("dst_i"), col("src_s").as("dst_s"), costExpr.as("ecost"))
-    val rel = (mp.dir match {
-      case "->" => fwd
-      case "<-" => rev
-      case _ => fwd.unionByName(rev)
-    }).withColumn("skey", coalesce(col("src_s"), col("src_i").cast("string")))
-      .withColumn("dkey", coalesce(col("dst_s"), col("dst_i").cast("string")))
-      .select("skey", "dkey", "ecost")
+    val w = walk(mp.dir)
+    val rel = w.ways.map { case (near, far) =>
+      w.edgesOf(edges)
+        .select(nodeCol(near).as("skey"), nodeCol(far).as("dkey"), costExpr.as("ecost"))
+    }.reduce(_ unionByName _)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // read every round
-    def keyStr(v: GVal): String = v match {
-      case GInt(l) => l.toString
-      case GStr(s) => s
-      case other => throw new IllegalArgumentException(s"bad endpoint $other")
-    }
-    val spark = edges.sparkSession
+    val (from, to) = (nodeStr(mp.from), nodeStr(mp.to))
     import org.apache.spark.sql.functions.{min => fmin}
-    val start = spark.range(1).select(
-      lit(keyStr(mp.from)).as("node"), lit(0.0).as("cost"), lit(0).as("hops"))
+    val start = spark.range(1).select(lit(from).as("node"), lit(0.0).as("cost"), lit(0).as("hops"))
     // every round reads the previous one twice, so rounds are cut leaves
     // and the answer no longer reads `rel`
     val dist = try graft.operators.Superstep.iterate(start, rounds) { r =>
@@ -830,8 +774,8 @@ class GqlEngine(spark: SparkSession, root: String,
         .agg(fmin(struct(col("cost"), col("hops"))).as("best"))
         .select(col("node"), col("best.cost").as("cost"), col("best.hops").as("hops"))
     }.last finally rel.unpersist(false)
-    val hit = dist.filter(col("node") === keyStr(mp.to))
-    spark.range(1).select(lit(keyStr(mp.from)).as("from"), lit(keyStr(mp.to)).as("to"))
+    val hit = dist.filter(col("node") === to)
+    spark.range(1).select(lit(from).as("from"), lit(to).as("to"))
       .join(hit.select(col("cost"), col("hops")), lit(true), "left")
   }
 
@@ -841,28 +785,17 @@ class GqlEngine(spark: SparkSession, root: String,
     *
     * Each hop is one filtered scan of the edge group (SURVEY E2's
     * `edges.filter(src === v || ...)`): a matching edge's near end must be
-    * in the frontier and its far end not yet seen; `->` and `<-` follow
-    * directed edges forward or backward, `--` follows every edge both
-    * ways. The scan's new far ends are collected and become the next
+    * in the frontier and its far end not yet seen, walked by the walk rule
+    * (class doc). The scan's new far ends are collected and become the next
     * hop's literal filter; an empty frontier ends the walk early. One more
     * scan maps the reached node strings to their twin forms. So a k-hop
     * query runs at most k + 1 jobs, persists nothing and shuffles
     * nothing. The driver holds only the reached set, and may: that set is
     * the answer, returned as a local frame. */
   private def neighborQuery(edges: DataFrame, n: Neighbor): DataFrame = {
-    val origin = n.key match {
-      case GInt(l) => l.toString
-      case GStr(s) => s
-      case other => throw new IllegalArgumentException(s"bad neighbor key $other")
-    }
-    val src = coalesce(col("src_s"), col("src_i").cast("string"))
-    val dst = coalesce(col("dst_s"), col("dst_i").cast("string"))
-    // (near end, far end) of each way an edge can be walked
-    val (walkable, ways) = n.dir match {
-      case "->" => (edges.filter(col("directed")), Seq(src -> dst))
-      case "<-" => (edges.filter(col("directed")), Seq(dst -> src))
-      case _ => (edges, Seq(src -> dst, dst -> src))
-    }
+    val origin = nodeStr(n.key)
+    val w = walk(n.dir)
+    val ways = w.ways.map { case (near, far) => nodeCol(near) -> nodeCol(far) }
     val seen = scala.collection.mutable.LinkedHashSet(origin)
     var frontier = Seq(origin)
     var hop = 0
@@ -871,7 +804,7 @@ class GqlEngine(spark: SparkSession, root: String,
       val step = ways.map { case (near, far) =>
         near.isin(frontier: _*) && far.isNotNull && !far.isin(known: _*)
       }
-      val found = walkable.filter(step.reduce(_ || _))
+      val found = w.edgesOf(edges).filter(step.reduce(_ || _))
         .select(ways.zip(step).map { case ((_, far), hit) => when(hit, far) }: _*)
         .collect().flatMap(r => (0 until r.length).map(r.getString)).filter(_ != null)
       frontier = found.distinct.toSeq
@@ -881,8 +814,8 @@ class GqlEngine(spark: SparkSession, root: String,
     val reached = seen.toSeq.tail
     val iType = edges.schema("src_i").dataType
     val sType = edges.schema("src_s").dataType
-    val ends = Seq(src -> struct(col("src_i"), col("src_s")),
-      dst -> struct(col("dst_i").cast(iType), col("dst_s").cast(sType)))
+    val ends = Seq(nodeCol("src") -> struct(col("src_i"), col("src_s")),
+      nodeCol("dst") -> struct(col("dst_i").cast(iType), col("dst_s").cast(sType)))
     val hits = ends.map { case (key, _) => key.isin(reached: _*) }
     val twins: Seq[Row] =
       if (reached.isEmpty) Nil
@@ -978,11 +911,11 @@ class GqlEngine(spark: SparkSession, root: String,
 }
 
 object GqlEngine {
-  /** Default index-route candidate over-fetch factor (×k) before the exact
+  /** Index-route candidate over-fetch factor (×k) before the exact
     * re-rank — the recall-insurance margin (see knnQuery). */
   val KNN_OVER_FETCH = 4
-  /** Default floor on the over-fetched candidate count, so small-k probes
-    * still carry a meaningful margin. */
+  /** Floor on the over-fetched candidate count, so small-k probes still
+    * carry a meaningful margin. */
   val KNN_MIN_FETCH = 50
   /** Partitions for the declared-index KNN scatter — the executor-partition
     * count at cluster scale; locally sized like

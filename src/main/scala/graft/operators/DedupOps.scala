@@ -975,7 +975,7 @@ object DedupOps {
     * at any corpus size. Testdata blocks (≤ ~650 at sf0.1) stay under
     * the default cap, so gate outputs are unchanged while the capped
     * branch stays live (EntityMatchSpec forces it with a small cap). */
-  val ER_BLOCK_CAP = sys.env.getOrElse("SPARK_GRAFT_ER_BLOCK_CAP", "2000").toInt
+  val ER_BLOCK_CAP = 2000
   /** Sorted-neighborhood window width inside over-cap blocks. */
   val ER_W = 8
   /** Sort-key prefix that sub-partitions an over-cap block's window (the

@@ -295,7 +295,7 @@ object VectorOps {
     * dataflow is bit-identical to the uncapped blocked join, so parity-
     * scale gate hashes are unchanged while the bound stays a live branch
     * (CosineBlockingSpec forces it with a small cap). */
-  val CELL_CAP = sys.env.getOrElse("SPARK_GRAFT_CELL_CAP", "1000").toInt
+  val CELL_CAP = 1000
   /** Max sub-bucket bits (2^8 sub-buckets ≈ 256× over-cap headroom;
     * raise alongside CELL_CAP for larger clusters). */
   val CELL_MAXB = 8

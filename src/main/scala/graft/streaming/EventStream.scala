@@ -19,8 +19,8 @@ import org.apache.spark.sql.types._
 object EventStream {
 
   /** Streaming read of an events parquet directory with `ts` normalized to
-    * the session TIMESTAMP regardless of the on-disk physical type — the
-    * same nanos-long vs micros-timestamp branch as [[graft.Tables.events]]
+    * the session TIMESTAMP regardless of the on-disk physical type by
+    * [[graft.Tables.eventsTs]], the rule [[graft.Tables.events]] applies
     * (the testdata's `ts` type has shifted across generations). The file
     * streaming source requires an explicit schema, so the on-disk type is
     * probed with a batch footer read of the directory first. */
@@ -35,13 +35,7 @@ object EventStream {
       StructField("event_type", StringType),
       StructField("value", DoubleType),
       StructField("props", StringType)))
-    val df = s.readStream.schema(schema).options(options).parquet(dir)
-    tsType match {
-      case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampType => df
-      case _ => // TIMESTAMP_NTZ: naive micros == UTC instants (session tz is UTC)
-        df.withColumn("ts", col("ts").cast(TimestampType))
-    }
+    graft.Tables.eventsTs(s.readStream.schema(schema).options(options).parquet(dir))
   }
 
   case class UserSessions(user_id: Long, n_sessions: Long, n_events: Long)

@@ -247,9 +247,8 @@ object VectorIngest {
     * restricts the build to those cells (the erase path's rebuild, where
     * only affected cells change — at 100 TB an erasure touches a handful
     * of blobs, never the index). Blob per cell at `indexDir/cell=<c>.hnsw`,
-    * written tmp + atomic move so a reader can never observe a
-    * half-written index; insertion order sorted by vec_id so the graph is
-    * reproducible from the cell's contents. Cells restricted-to but ABSENT
+    * written by [[graft.vector.Hnsw.publish]]; insertion order sorted by
+    * vec_id so the graph is reproducible from the cell's contents. Cells restricted-to but ABSENT
     * from the store get their blob DELETED (a fully-erased cell must not
     * keep serving from a stale blob).
     *
@@ -260,7 +259,7 @@ object VectorIngest {
     * stopped, like [[IngestMaintenance]]. */
   def buildCellIndexes(s: SparkSession, storeDir: String, indexDir: String,
                        cells: Seq[Long] = Nil): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     import s.implicits._
     Files.createDirectories(Paths.get(indexDir))
     val all = s.read.parquet(storeDir)
@@ -275,11 +274,7 @@ object VectorIngest {
           val sorted = rows.sortBy(_._2)
           val h = new graft.vector.Hnsw(sorted.head._3.length)
           sorted.foreach { case (_, id, vec) => h.add(id, vec.toArray) }
-          val file = Paths.get(indexDir, s"cell=$cell.hnsw")
-          val tmp = Files.createTempFile(Paths.get(indexDir), s"tmpcell$cell", ".tmp")
-          h.save(tmp.toString)
-          Files.move(tmp, file, StandardCopyOption.REPLACE_EXISTING)
-          graft.vector.Hnsw.cachePut(file.toString, h)
+          h.publish(Paths.get(indexDir, s"cell=$cell.hnsw"))
           cell
         }
       }.collect().toSet // ≤ |cells| longs — the bounded build manifest

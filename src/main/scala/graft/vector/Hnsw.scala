@@ -162,6 +162,18 @@ class Hnsw(val dim: Int, val m: Int = 8, val efConstruction: Int = 64) extends S
     try out.writeObject(this)
     finally out.close()
   }
+
+  /** Save as `file`, the one way a blob is written: to a
+    * `tmp<file name>…tmp` temp file in the same directory, then one atomic
+    * move over `file`, so a reader never sees a half-written index. The
+    * published index is then resident ([[Hnsw.cachePut]]). */
+  def publish(file: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val tmp = Files.createTempFile(file.getParent, s"tmp${file.getFileName}", ".tmp")
+    save(tmp.toString)
+    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE)
+    Hnsw.cachePut(file.toString, this)
+  }
 }
 
 object Hnsw {

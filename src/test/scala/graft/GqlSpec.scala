@@ -253,6 +253,32 @@ class GqlSpec extends AnyFunSuite {
     assert(nbrRows(e, "{id: 5, ->: *, neighbor: 1}") == Seq("7|null"))
   }
 
+  test("one walk rule: `->` and `<-` cross directed edges only, `--` every edge both ways") {
+    val e = freshEngine()
+    e.exec("{create: 'ga', group: [['g', 'e', 'g']]};")
+    e.exec("{upset: 'e', edge: [['a', --, 'b'], ['c', ->, 'd']]};")
+    // (cost, hops) of the min-cost walk, None when unreachable
+    def minPath(from: String, dir: String, to: String): Option[(Double, Int)] = {
+      val r = e.query(s"{query: 'e', in: 'ga', where: ['$from', $dir: min('w'), '$to']};")
+        .collect().head
+      if (r.isNullAt(r.fieldIndex("cost"))) None
+      else Some((r.getAs[Double]("cost"), r.getAs[Int]("hops")))
+    }
+    for (dir <- Seq("->", "<-"); (x, y) <- Seq(("a", "b"), ("b", "a")))
+      assert(minPath(x, dir, y).isEmpty, s"$x $dir $y crossed an undirected edge")
+    assert(minPath("a", "--", "b") == Some((1.0, 1)))
+    assert(minPath("b", "--", "a") == Some((1.0, 1)))
+    assert(minPath("c", "->", "d") == Some((1.0, 1)))
+    assert(minPath("d", "<-", "c") == Some((1.0, 1)))
+    // `->` neighbours and `->` min-cost walks reach the same nodes
+    val nodes = Seq("a", "b", "c", "d")
+    for (x <- nodes) {
+      val nbrs = nbrRows(e, s"{id: '$x', ->: *, neighbor: 3}").map(_.stripPrefix("null|"))
+      assert(nbrs == nodes.filter(y => y != x && minPath(x, "->", y).nonEmpty),
+        s"`->` neighbours of $x disagree with min-cost reachability")
+    }
+  }
+
   test("a read of an unchanged group runs no job; a 2-hop neighbor query at most 3") {
     val e = freshEngine()
     e.exec("{create: 'ga', group: [['g', 'e', 'g']]};")
@@ -483,42 +509,31 @@ class GqlSpec extends AnyFunSuite {
       "same-named generations in different groups collapsed to one")
   }
 
-  test("KNN over-fetch margin is engine-tunable, with brute fallback under k (r6 advice)") {
-    val root = java.nio.file.Files.createTempDirectory("gql").toString
-    // the tightest legal margin: the index surrenders exactly k candidates,
-    // so the exact re-rank has zero slack — the boundary the default
-    // 4k/50 margin exists to stay away from
-    val tight = new GqlEngine(spark, root, knnOverFetch = 1, knnMinFetch = 1)
-    tight.exec("{create: 'vdb', group: [{vg: ['v'], index: ['v']}, {bg: ['v']}]};")
+  test("KNN index route agrees with brute, with brute fallback under k (r6 advice)") {
+    val e = freshEngine()
+    e.exec("{create: 'vdb', group: [{vg: ['v'], index: ['v']}, {bg: ['v']}]};")
     val rows = (0 until 40)
       .map(i => s"[$i, {v: [${i % 8}.5, ${i / 8}.5]}]").mkString(", ")
-    tight.exec(s"{upset: 'vg', vertex: [$rows]};")
-    tight.exec(s"{upset: 'bg', vertex: [$rows]};")
-    def topk(e: GqlEngine, g: String, k: Int): Seq[Long] =
+    e.exec(s"{upset: 'vg', vertex: [$rows]};")
+    e.exec(s"{upset: 'bg', vertex: [$rows]};")
+    def topk(g: String, k: Int): Seq[Long] =
       e.query(s"{query: '$g', in: 'vdb', where: {v: {limit: $k, $$near: [3.2, 2.1]}}};")
         .select("key_i").collect().map(_.getLong(0)).toSeq
-    // at-margin probe: exactly k candidates fetched; on this 40-point
-    // fixed grid HNSW recall is exhaustive, so it still matches brute
-    assert(topk(tight, "vg", 5) == topk(tight, "bg", 5),
-      "k-exact fetch diverged from brute on a corpus HNSW covers fully")
     // k beyond the group size: the index can only surrender 40 candidates
     // < k, so the engine must fall back to the exact brute path and
     // return every vertex, not a short answer
-    assert(topk(tight, "vg", 60).length == 40,
+    assert(topk("vg", 60).length == 40,
       "candidate set < k must fall back to brute, not return short")
-    // a widened margin changes candidate count, never the answer
-    val wide = new GqlEngine(spark, root, knnOverFetch = 16, knnMinFetch = 200)
-    assert(topk(wide, "vg", 5) == topk(tight, "bg", 5))
+    // on this 40-point fixed grid HNSW recall is exhaustive, so the
+    // indexed group's top-k matches the unindexed group's brute top-k
+    assert(topk("vg", 5) == topk("bg", 5))
     // a wrong-dimension probe builds an EMPTY index; the brute fallback
     // must NOT kick in there (Dist2's prefix fold would rank 2-dim
     // vectors against a 3-dim probe) — the result is empty, not garbage
-    val wrongDim = tight
+    val wrongDim = e
       .query("{query: 'vg', in: 'vdb', where: {v: {limit: 5, $near: [1.0, 2.0, 3.0]}}};")
       .count()
     assert(wrongDim == 0, s"wrong-dimension probe must return empty, got $wrongDim rows")
-    // nonsensical margins are rejected at construction
-    intercept[IllegalArgumentException](new GqlEngine(spark, root, knnOverFetch = 0))
-    intercept[IllegalArgumentException](new GqlEngine(spark, root, knnMinFetch = 0))
   }
 
   test("parameterized lambda bound evaluates per row as a closure UDF (Q11)") {
