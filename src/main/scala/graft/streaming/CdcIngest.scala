@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Change-data-capture merge ingest — the reference's upset/remove
@@ -28,10 +26,9 @@ import org.apache.spark.sql.types._
   * store ∪ changes. At 100 TB the store side is partition-pruned to
   * the doc partitions the batch touches (the deleteDocs posture) and
   * the swap becomes the catalog's atomic pointer flip; the merge
-  * dataflow is unchanged. Crash safety reuses the compaction swap
-  * discipline: merged store staged fully at `<dir>.compact`, live dir
-  * aside, staged in — interrupted swaps repaired on next batch (and by
-  * [[IngestMaintenance.repairSwap]] callers). */
+  * dataflow is unchanged. Crash safety is compaction's staged swap
+  * ([[IngestMaintenance.swapIn]]): an interrupted swap is repaired by
+  * the next batch. */
 object CdcIngest {
 
   val changeSchema: StructType = StructType(Seq(
@@ -68,36 +65,23 @@ object CdcIngest {
 
   /** Start the merge stream: reads change-event parquet files from
     * `srcDir` (file-at-a-time, so multi-batch folding is exercised) and
-    * maintains `storeDir` as the latest-wins table. */
+    * maintains `storeDir` as the latest-wins table. It runs until stopped
+    * (Spark's default processing-time trigger), unlike the drain-and-stop
+    * ingests. */
   def start(s: SparkSession, srcDir: String, storeDir: String,
-            ckptDir: String): StreamingQuery = {
-    val changes = s.readStream.schema(changeSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    changes.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(s, storeDir, batch)
-      }
-      .start()
-  }
+            ckptDir: String): StreamingQuery =
+    Ledger.run(Ledger.files(s, changeSchema, srcDir), ckptDir, Trigger.ProcessingTime(0L)) {
+      (batch, _) => applyBatch(s, storeDir, batch)
+    }
 
   /** One merge application — also the unit the spec calls directly. */
   def applyBatch(s: SparkSession, storeDir: String, batch: DataFrame): Unit = {
     IngestMaintenance.repairSwap(storeDir)
-    val store = Paths.get(storeDir)
     val current =
-      if (Files.exists(store)) s.read.parquet(storeDir)
+      if (Ledger.exists(s, storeDir)) s.read.parquet(storeDir)
       else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(changeSchema.filterNot(_.name == "op"))
           .add(StructField("op", StringType)))
-    val merged = mergeChanges(current, batch)
-    val staging = Paths.get(storeDir + ".compact")
-    IngestMaintenance.deleteTree(staging)
-    merged.write.parquet(staging.toString)
-    val old = Paths.get(storeDir + ".old")
-    IngestMaintenance.deleteTree(old)
-    if (Files.exists(store)) Files.move(store, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(staging, store, StandardCopyOption.ATOMIC_MOVE)
-    IngestMaintenance.deleteTree(old)
+    IngestMaintenance.swapIn(storeDir)(mergeChanges(current, batch).write.parquet(_))
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incremental DEDUPED corpus ingest — the missing end of the dedup story:
@@ -11,7 +12,7 @@ import org.apache.spark.sql.types._
   * ([[EventStream.dedupedEventsOf]]); this builds the PERSISTENT corpus a
   * training pipeline actually accumulates, exactly-once across restarts.
   *
-  * Shape: a file stream of document batches → `foreachBatch`:
+  * Shape: a file stream of document batches ([[Ledger.run]]), per batch:
   *   1. within-batch exact dedup on the content key (md5 of normalized
   *      text — the same key as q_dedup_exact, 32 bytes however large the
   *      document);
@@ -41,38 +42,20 @@ object CorpusIngest {
     * novel-content docs to `corpusDir`. `checkpointDir` carries source
     * offsets so a restart resumes instead of re-reading everything. */
   def start(s: SparkSession, srcDir: String, corpusDir: String,
-            checkpointDir: String): StreamingQuery = {
-    val corpusPath = new org.apache.hadoop.fs.Path(corpusDir)
-    s.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1") // deliveries stay distinct micro-batches
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val keyed = batch
-          .withColumn("ck", contentKey(col("text")))
-          // within-batch winner: smallest doc_id per content key, chosen
-          // deterministically (same rule as the batch exact dedup)
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("ck")).orderBy(col("doc_id"))))
-          .filter(col("rn") === 1).drop("rn")
-        val fs = corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val novel =
-          if (!fs.exists(corpusPath)) keyed
-          else {
-            // probe only the key column of the existing corpus — at scale
-            // this is a narrow scan of a bucketed column, not a table read
-            val seen = spark.read.parquet(corpusDir).select("ck")
-            keyed.join(seen, Seq("ck"), "left_anti")
-          }
-        novel.write.mode("append").parquet(corpusDir)
-      }
-      .start()
-  }
+            checkpointDir: String): StreamingQuery =
+    Ledger.run(Ledger.files(s, docSchema, srcDir), checkpointDir) { (batch, _) =>
+      Ledger.withoutKeys(batchWinners(batch), corpusDir, "ck")
+        .write.mode("append").parquet(corpusDir)
+    }
+
+  /** The within-batch winner of the exact-dedup rule: per content key
+    * `ck` (added here), the row with the smallest doc_id — the batch exact
+    * dedup's deterministic choice, so a replayed batch picks the same rows. */
+  private def batchWinners(batch: DataFrame): DataFrame =
+    batch.withColumn("ck", contentKey(col("text")))
+      .withColumn("rn",
+        row_number().over(Window.partitionBy(col("ck")).orderBy(col("doc_id"))))
+      .filter(col("rn") === 1).drop("rn")
 
   /** Streaming NEAR-DUP (fuzzy) ingest — the incremental form of the
     * MinHash-LSH batch dedup ([[graft.operators.DedupOps.qMinhashDedup]]),
@@ -103,85 +86,69 @@ object CorpusIngest {
     *      rebalance — the same split as the curated mix;
     *   5. survivors append to the corpus AND their (doc_id, sh, bands)
     *      rows to the signature store.
-    * All writes land in per-batch-id overwrite dirs; the store read
-    * filters to strictly-earlier batches — replay recomputes an identical
-    * batch (the [[startCurated]] exactly-once protocol). At 100 TB the
-    * store is band-key-bucketed parquet, so the candidate join is
-    * key-local; the shingle-set column is the verify cost and caps at the
+    * Exactly-once is [[Ledger]]'s protocol: the corpus, signature and
+    * seen stores are all per-batch-id dirs. At 100 TB the store is
+    * band-key-bucketed parquet, so the candidate join is key-local; the shingle-set column is the verify cost and caps at the
     * document's distinct K-grams (a production store may swap exact
     * verify for signature-lane agreement to shed it — noted, not hidden). */
   def startFuzzy(s: SparkSession, srcDir: String, corpusDir: String,
                  checkpointDir: String, seenDir: String,
                  sigDir: String): StreamingQuery = {
     import graft.operators.DedupOps
-    s.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val spark = batch.sparkSession
-        val keyed = batch
-          .withColumn("ck", contentKey(col("text")))
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("ck")).orderBy(col("doc_id"))))
-          .filter(col("rn") === 1).drop("rn")
-        val fresh = Ledger.withoutSeen(spark, keyed, seenDir, bid, "ck")
-        // doc_id collision with the store = feed bug; reject BEFORE the
-        // ledger write and the near-dup check, so the store key stays
-        // unique AND the rejected doc's content is not marked seen (a
-        // later delivery under a correct id must still be ingestable)
-        val store =
-          if (!Ledger.exists(spark, sigDir)) None
-          else Some(spark.read.parquet(sigDir)
-            .filter(col("batch") < bid)
-            .select("doc_id", "sh", "bands"))
-        // novel feeds the ledger write, the signatures, and the corpus
-        // write — persist, or the anti-join re-runs per consumer
-        val novel = store.fold(fresh)(st =>
-            fresh.join(st.select("doc_id"), Seq("doc_id"), "left_anti"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (!novel.isEmpty) {
-            val sig = DedupOps.signaturesOf(novel.select(col("doc_id"), col("text")))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Ledger.run(Ledger.files(s, docSchema, srcDir), checkpointDir) { (batch, bid) =>
+      val spark = batch.sparkSession
+      val fresh = Ledger.withoutKeys(batchWinners(batch), seenDir, "ck", Some(bid))
+      // doc_id collision with the store = feed bug; reject BEFORE the
+      // ledger write and the near-dup check, so the store key stays
+      // unique AND the rejected doc's content is not marked seen (a
+      // later delivery under a correct id must still be ingestable)
+      val store =
+        if (!Ledger.exists(spark, sigDir)) None
+        else Some(spark.read.parquet(sigDir)
+          .filter(col("batch") < bid)
+          .select("doc_id", "sh", "bands"))
+      // novel feeds the ledger write, the signatures, and the corpus
+      // write — persist, or the anti-join re-runs per consumer
+      val novel = store.fold(fresh)(st =>
+          fresh.join(st.select("doc_id"), Seq("doc_id"), "left_anti"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        if (!novel.isEmpty) {
+          val sig = DedupOps.signaturesOf(novel.select(col("doc_id"), col("text")))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            // storeSurvivors feeds both sides of the within-batch pair
+            // join, both verify joins, and the kept anti-join (5
+            // consumers; no cross-branch CSE)
+            val storeSurvivors = (
+              store match {
+                case None => sig
+                case Some(st) => sig.join(
+                  DedupOps.nearPairs(st, sig, requireLess = false)
+                    .select(col("doc_b").as("doc_id")).distinct(),
+                  Seq("doc_id"), "left_anti")
+              }
+            ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
-              // storeSurvivors feeds both sides of the within-batch pair
-              // join, both verify joins, and the kept anti-join (5
-              // consumers; no cross-branch CSE)
-              val storeSurvivors = (
-                store match {
-                  case None => sig
-                  case Some(st) => sig.join(
-                    DedupOps.nearPairs(st, sig, requireLess = false)
-                      .select(col("doc_b").as("doc_id")).distinct(),
-                    Seq("doc_id"), "left_anti")
-                }
-              ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              val dropped = DedupOps.nearPairs(storeSurvivors, storeSurvivors,
+                requireLess = true)
+                .select(col("doc_b").as("doc_id")).distinct()
+              val kept = storeSurvivors
+                .join(dropped, Seq("doc_id"), "left_anti")
+                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
               try {
-                val dropped = DedupOps.nearPairs(storeSurvivors, storeSurvivors,
-                  requireLess = true)
-                  .select(col("doc_b").as("doc_id")).distinct()
-                val kept = storeSurvivors
-                  .join(dropped, Seq("doc_id"), "left_anti")
-                  .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                try {
-                  novel.join(kept.select("doc_id"), Seq("doc_id"))
-                    .write.mode("overwrite").parquet(s"$corpusDir/batch=$bid")
-                  kept.select("doc_id", "sh", "bands")
-                    .write.mode("overwrite").parquet(s"$sigDir/batch=$bid")
-                  novel.select("ck")
-                    .write.mode("overwrite").parquet(s"$seenDir/batch=$bid")
-                } finally kept.unpersist()
-              } finally storeSurvivors.unpersist()
-            } finally sig.unpersist()
-          }
-        } finally novel.unpersist()
-      }
-      .start()
+                novel.join(kept.select("doc_id"), Seq("doc_id"))
+                  .write.mode("overwrite").parquet(s"$corpusDir/batch=$bid")
+                kept.select("doc_id", "sh", "bands")
+                  .write.mode("overwrite").parquet(s"$sigDir/batch=$bid")
+                novel.select("ck")
+                  .write.mode("overwrite").parquet(s"$seenDir/batch=$bid")
+              } finally kept.unpersist()
+            } finally storeSurvivors.unpersist()
+          } finally sig.unpersist()
+        }
+      } finally novel.unpersist()
+    }
   }
 
   /** Streaming CLASSIFIED ingest — the deployed form of
@@ -210,41 +177,19 @@ object CorpusIngest {
     val term = termQ.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pri = priQ.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     term.count(); pri.count() // materialize once, before the first batch
-    val corpusPath = new org.apache.hadoop.fs.Path(corpusDir)
-    s.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val keyed = batch
-          .withColumn("ck", contentKey(col("text")))
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("ck")).orderBy(col("doc_id"))))
-          .filter(col("rn") === 1).drop("rn")
-        val fs = corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val novel =
-          if (!fs.exists(corpusPath)) keyed
-          else {
-            val seen = spark.read.parquet(corpusDir).select("ck")
-            keyed.join(seen, Seq("ck"), "left_anti")
-          }
-        val tokTf = novel
-          .select(col("doc_id"),
-            graft.functions.Fns.tokens(lower(col("text"))).as("tk"))
-          .select(col("doc_id"), explode(col("tk")).as("w"))
-          .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-        val preds = ModelOps.nbPredict(tokTf, term, pri)
-        novel
-          .join(preds, Seq("doc_id"), "left")
-          .withColumn("pred", coalesce(col("pred"), lit("und")))
-          .write.mode("append").partitionBy("pred").parquet(corpusDir)
-      }
-      .start()
+    Ledger.run(Ledger.files(s, docSchema, srcDir), checkpointDir) { (batch, _) =>
+      val novel = Ledger.withoutKeys(batchWinners(batch), corpusDir, "ck")
+      val tokTf = novel
+        .select(col("doc_id"),
+          graft.functions.Fns.tokens(lower(col("text"))).as("tk"))
+        .select(col("doc_id"), explode(col("tk")).as("w"))
+        .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
+      val preds = ModelOps.nbPredict(tokTf, term, pri)
+      novel
+        .join(preds, Seq("doc_id"), "left")
+        .withColumn("pred", coalesce(col("pred"), lit("und")))
+        .write.mode("append").partitionBy("pred").parquet(corpusDir)
+    }
   }
 
   /** Streaming DECONTAMINATED ingest — the deployed form of
@@ -268,33 +213,11 @@ object CorpusIngest {
                           checkpointDir: String, benchDir: String): StreamingQuery = {
     import graft.operators.CorpusOps
     val mask = CorpusOps.bloomMaskOf(s.read.parquet(benchDir))
-    val corpusPath = new org.apache.hadoop.fs.Path(corpusDir)
-    s.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val keyed = batch
-          .withColumn("ck", contentKey(col("text")))
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("ck")).orderBy(col("doc_id"))))
-          .filter(col("rn") === 1).drop("rn")
-          .filter(!CorpusOps.bloomHit(CorpusOps.gramsOf(col("text")), mask))
-        val fs = corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val novel =
-          if (!fs.exists(corpusPath)) keyed
-          else {
-            val seen = spark.read.parquet(corpusDir).select("ck")
-            keyed.join(seen, Seq("ck"), "left_anti")
-          }
-        novel.write.mode("append").parquet(corpusDir)
-      }
-      .start()
+    Ledger.run(Ledger.files(s, docSchema, srcDir), checkpointDir) { (batch, _) =>
+      val clean = batchWinners(batch)
+        .filter(!CorpusOps.bloomHit(CorpusOps.gramsOf(col("text")), mask))
+      Ledger.withoutKeys(clean, corpusDir, "ck").write.mode("append").parquet(corpusDir)
+    }
   }
 
   /** Streaming corpus CURATION — the streaming twin of the batch
@@ -302,7 +225,7 @@ object CorpusIngest {
     * with the exactly-once dedup above so the whole curation story
     * (dedup → budget mix) runs incrementally:
     *
-    *   1. within-batch dedup + anti-join vs the corpus (as [[start]]);
+    *   1. within-batch dedup + anti-join vs the seen ledger;
     *   2. the NOVEL docs' per-source token counts append to `statsDir`
     *      (n_sources rows per batch — the running totals a long-lived
     *      ingest accumulates);
@@ -313,15 +236,10 @@ object CorpusIngest {
     *      ([[graft.operators.DedupOps.mixKeepTest]], same `mix_` hash)
     *      decides which novel docs join the corpus.
     *
-    * Exactly-once across re-delivery AND crash-replay: every write lands
-    * in a per-batch-id subdirectory with OVERWRITE (`<dir>/batch=<id>`,
-    * read back through partition discovery), and novelty is judged
-    * against the SEEN ledger of strictly-earlier batches — not against
-    * the kept corpus, which would resurrect mix-DROPPED re-deliveries.
-    * A replayed batch therefore recomputes from identical inputs
-    * (earlier-batch ledger + its own deterministic keep test) and
-    * overwrites its own output dirs byte-for-byte: no loss, no dup, no
-    * stats double-count, regardless of where the previous attempt died.
+    * Exactly-once across re-delivery AND crash-replay is [[Ledger]]'s
+    * protocol. Novelty is judged against the SEEN ledger, not against
+    * the kept corpus, which would resurrect mix-DROPPED re-deliveries;
+    * the keep test is deterministic, so a replay keeps the same docs.
     * Early admissions are not revisited as rates drift — the streaming
     * trade; the mix converges as totals stabilize, and a batch
     * qCorpusMix pass re-balances exactly when needed (documented, not
@@ -330,53 +248,39 @@ object CorpusIngest {
                    checkpointDir: String, statsDir: String,
                    seenDir: String): StreamingQuery = {
     import graft.operators.DedupOps
-    s.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val spark = batch.sparkSession
-        val keyed = batch
-          .withColumn("ck", contentKey(col("text")))
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("ck")).orderBy(col("doc_id"))))
-          .filter(col("rn") === 1).drop("rn")
-        val novel = Ledger.withoutSeen(spark, keyed, seenDir, bid, "ck")
-        // novel feeds the ledger, the stats, and the keep filter — persist,
-        // or the anti-join re-runs per consumer (no cross-branch CSE)
-        val toks = novel.withColumn("n_toks",
-          size(graft.functions.Fns.tokens(col("text"))).cast("long"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (!toks.isEmpty) {
-            toks.groupBy("source").agg(sum("n_toks").as("toks"))
-              .write.mode("overwrite").parquet(s"$statsDir/batch=$bid")
-            // refreshed rate table: totals over every batch INCLUDING this
-            // one (qCorpusMix's rates-from-the-data-seen semantics)
-            val totals = spark.read.parquet(statsDir)
-              .groupBy("source").agg(sum("toks").as("t_src"))
-            val grand = totals.agg(sum("t_src").as("t_total"),
-              count(lit(1)).as("n_src"))
-            toks
-              .join(broadcast(totals), "source")
-              .crossJoin(broadcast(grand))
-              .filter(DedupOps.mixKeepTest(
-                pmod(graft.functions.Fns.hash32(
-                  concat(lit("mix_"), col("doc_id").cast("string"))),
-                  lit(DedupOps.SAMPLE_SPACE)),
-                col("n_src"), col("t_src"), col("t_total")))
-              .select("ck", "doc_id", "text", "lang", "source", "n_chars", "n_toks")
-              .write.mode("overwrite").parquet(s"$corpusDir/batch=$bid")
-            toks.select("ck")
-              .write.mode("overwrite").parquet(s"$seenDir/batch=$bid")
-          }
-        } finally toks.unpersist()
-      }
-      .start()
+    Ledger.run(Ledger.files(s, docSchema, srcDir), checkpointDir) { (batch, bid) =>
+      val spark = batch.sparkSession
+      val novel = Ledger.withoutKeys(batchWinners(batch), seenDir, "ck", Some(bid))
+      // novel feeds the ledger, the stats, and the keep filter — persist,
+      // or the anti-join re-runs per consumer (no cross-branch CSE)
+      val toks = novel.withColumn("n_toks",
+        size(graft.functions.Fns.tokens(col("text"))).cast("long"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        if (!toks.isEmpty) {
+          toks.groupBy("source").agg(sum("n_toks").as("toks"))
+            .write.mode("overwrite").parquet(s"$statsDir/batch=$bid")
+          // refreshed rate table: totals over every batch INCLUDING this
+          // one (qCorpusMix's rates-from-the-data-seen semantics)
+          val totals = spark.read.parquet(statsDir)
+            .groupBy("source").agg(sum("toks").as("t_src"))
+          val grand = totals.agg(sum("t_src").as("t_total"),
+            count(lit(1)).as("n_src"))
+          toks
+            .join(broadcast(totals), "source")
+            .crossJoin(broadcast(grand))
+            .filter(DedupOps.mixKeepTest(
+              pmod(graft.functions.Fns.hash32(
+                concat(lit("mix_"), col("doc_id").cast("string"))),
+                lit(DedupOps.SAMPLE_SPACE)),
+              col("n_src"), col("t_src"), col("t_total")))
+            .select("ck", "doc_id", "text", "lang", "source", "n_chars", "n_toks")
+            .write.mode("overwrite").parquet(s"$corpusDir/batch=$bid")
+          toks.select("ck")
+            .write.mode("overwrite").parquet(s"$seenDir/batch=$bid")
+        }
+      } finally toks.unpersist()
+    }
   }
 
   /** Streaming DRIFT MONITOR — the per-batch production form of the
@@ -390,55 +294,46 @@ object CorpusIngest {
     * — add-λ smoothed over the category union, per-dim terms
     * decimal-summed — lands as a report row per dimension.
     *
-    * Exactly-once: counts and report for batch b live in overwrite dirs
-    * keyed by batch id, and the baseline reads ONLY batches < b, so a
-    * replayed batch recomputes byte-identical outputs (the
-    * [[startCurated]] protocol). State is bounded by construction:
-    * O(categories) rows per batch, never documents. The first batch has
+    * Exactly-once is [[Ledger]]'s protocol: counts and report are
+    * per-batch-id dirs, and the baseline reads ONLY batches < b. State is
+    * bounded by construction: O(categories) rows per batch, never
+    * documents. The first batch has
     * no baseline — its kl_bits is NULL with n_base = 0, not a divide-
     * by-zero artifact. */
   def startDriftMonitor(s: SparkSession, srcDir: String, countsDir: String,
                         reportDir: String, checkpointDir: String): StreamingQuery = {
     import graft.operators.TextOps.{DRIFT_LAMBDA, driftDims}
-    s.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val spark = batch.sparkSession
-        val cnts = driftDims.map { case (nm, c) =>
-          batch.groupBy(c.as("cat")).agg(count(lit(1)).as("n"))
-            .select(lit(nm).as("dim"), col("cat"), col("n"))
-        }.reduce(_ unionByName _)
-        cnts.withColumn("batch_id", lit(bid))
-          .write.mode("overwrite").parquet(s"$countsDir/batch=$bid")
-        // baseline: STRICTLY earlier batches only — replay-stable
-        val base = spark.read.parquet(countsDir)
-          .filter(col("batch_id") < bid)
-          .groupBy("dim", "cat").agg(sum("n").as("nb"))
-        val joined = cnts.withColumnRenamed("n", "na")
-          .join(base, Seq("dim", "cat"), "full_outer")
-          .na.fill(0L, Seq("na", "nb"))
-        val tot = joined.groupBy("dim")
-          .agg(sum("na").as("ta"), sum("nb").as("tb"), count(lit(1)).as("k"))
-        val D = (cn: String) => col(cn).cast("double")
-        joined.join(tot, "dim")
-          .withColumn("pa",
-            (D("na") + lit(DRIFT_LAMBDA)) / (D("ta") + lit(DRIFT_LAMBDA) * D("k")))
-          .withColumn("pb",
-            (D("nb") + lit(DRIFT_LAMBDA)) / (D("tb") + lit(DRIFT_LAMBDA) * D("k")))
-          .withColumn("term",
-            (col("pa") * log2(col("pa") / col("pb"))).cast("decimal(18,12)"))
-          .groupBy("dim")
-          .agg(max("k").as("n_cats"), max("ta").as("n_batch"), max("tb").as("n_base"),
-            graft.functions.Fns.roundP(
-              when(max("tb") > 0, sum(col("term")).cast("double")), 6).as("kl_bits"))
-          .withColumn("batch_id", lit(bid))
-          .write.mode("overwrite").parquet(s"$reportDir/batch=$bid")
-      }
-      .start()
+    Ledger.run(Ledger.files(s, docSchema, srcDir), checkpointDir) { (batch, bid) =>
+      val spark = batch.sparkSession
+      val cnts = driftDims.map { case (nm, c) =>
+        batch.groupBy(c.as("cat")).agg(count(lit(1)).as("n"))
+          .select(lit(nm).as("dim"), col("cat"), col("n"))
+      }.reduce(_ unionByName _)
+      cnts.withColumn("batch_id", lit(bid))
+        .write.mode("overwrite").parquet(s"$countsDir/batch=$bid")
+      // baseline: STRICTLY earlier batches only — replay-stable
+      val base = spark.read.parquet(countsDir)
+        .filter(col("batch_id") < bid)
+        .groupBy("dim", "cat").agg(sum("n").as("nb"))
+      val joined = cnts.withColumnRenamed("n", "na")
+        .join(base, Seq("dim", "cat"), "full_outer")
+        .na.fill(0L, Seq("na", "nb"))
+      val tot = joined.groupBy("dim")
+        .agg(sum("na").as("ta"), sum("nb").as("tb"), count(lit(1)).as("k"))
+      val D = (cn: String) => col(cn).cast("double")
+      joined.join(tot, "dim")
+        .withColumn("pa",
+          (D("na") + lit(DRIFT_LAMBDA)) / (D("ta") + lit(DRIFT_LAMBDA) * D("k")))
+        .withColumn("pb",
+          (D("nb") + lit(DRIFT_LAMBDA)) / (D("tb") + lit(DRIFT_LAMBDA) * D("k")))
+        .withColumn("term",
+          (col("pa") * log2(col("pa") / col("pb"))).cast("decimal(18,12)"))
+        .groupBy("dim")
+        .agg(max("k").as("n_cats"), max("ta").as("n_batch"), max("tb").as("n_base"),
+          graft.functions.Fns.roundP(
+            when(max("tb") > 0, sum(col("term")).cast("double")), 6).as("kl_bits"))
+        .withColumn("batch_id", lit(bid))
+        .write.mode("overwrite").parquet(s"$reportDir/batch=$bid")
+    }
   }
 }

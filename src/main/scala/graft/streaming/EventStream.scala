@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming rendering of the events pipeline (SURVEY.md §7.1
@@ -402,24 +402,24 @@ object EventStream {
     * answer where exact distinct-state grows with the key space. Register
     * math and estimator are the gate's own [[SketchOps.hllRegisters]] /
     * [[SketchOps.hllEstimate]], so monitor and gate cannot diverge.
-    *
-    * Exactly-once: per-batch overwrite dirs (the
-    * [[graft.streaming.CorpusIngest.startDriftMonitor]] protocol) — a
-    * replayed batch recomputes byte-identical registers and report.
-    * State is bounded by construction: ≤ m=1024 rows per (group, batch),
-    * never keys.
-    *
-    * Per-batch work is O(1) in delivered batches (r12 advice): each
-    * batch max-merges its registers into the PREVIOUS batch's cumulative
-    * register snapshot (`_cum/batch=N` — the `_` prefix keeps Spark's
-    * file listing from mixing snapshots into a wholesale read of the
-    * per-batch store) instead of re-aggregating every batch dir, so a
-    * long-lived stream reads two bounded frames per trigger, not O(B)
-    * dirs. HLL union is associative, so fold-forward ≡ max over all
-    * batches ≤ bid, and replay determinism holds: a re-delivered batch
-    * merges against the same finished prev snapshot (strictly < bid — a
-    * half-written own snapshot from a crashed attempt is skipped) and
-    * overwrites identical bytes. */
+    * Registers and report follow [[Ledger]]'s exactly-once protocol
+    * through [[foldRegisters]]. State is bounded by construction: ≤
+    * m=1024 rows per (group, batch), never keys. */
+  def startCardinalityMonitor(s: SparkSession, srcDir: String, regDir: String,
+                              reportDir: String, checkpointDir: String): StreamingQuery = {
+    import graft.operators.SketchOps
+    Ledger.run(rawEvents(s, srcDir, Map("maxFilesPerTrigger" -> "1")), checkpointDir) {
+      (batch, bid) =>
+        val regs = SketchOps.hllRegisters(SketchOps.hllHashes(batch), "event_type")
+        val merged = foldRegisters(regs, regDir, bid, Seq("event_type", "bucket"), "r", max)
+        SketchOps.hllEstimate(merged, "event_type")
+          .select(col("event_type"), col("v_zero"),
+            graft.functions.Fns.roundP(col("hll_raw"), 4).as("hll_est"))
+          .withColumn("batch_id", lit(bid))
+          .write.mode("overwrite").parquet(s"$reportDir/batch=$bid")
+    }
+  }
+
   /** Streaming latency-quantile monitor — the p50/p90/p99 dashboard a
     * serving pipeline keeps over a latency-like measure (`value` here),
     * riding the SAME mergeable-register discipline as
@@ -429,77 +429,45 @@ object EventStream {
     * folds forward by plain SUM (counts are sum-mergeable exactly as HLL
     * registers are max-mergeable), and each trigger emits the quantile
     * report from the merged registers. State is O(types × log_γ range)
-    * rows regardless of stream length; a long-lived stream reads two
-    * bounded frames per trigger, not O(B) batch dirs. Replay determinism:
-    * a re-delivered batch merges against the newest FINISHED snapshot
-    * strictly before it and overwrites identical bytes (StreamingSpec
-    * proves stream ≡ batch and byte-identical crash replay). */
+    * rows regardless of stream length (StreamingSpec proves stream ≡
+    * batch and byte-identical crash replay). */
   def startLatencyMonitor(s: SparkSession, srcDir: String, bucketDir: String,
-                          reportDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                          reportDir: String, checkpointDir: String): StreamingQuery = {
     import graft.operators.SketchOps
-    rawEvents(s, srcDir, Map("maxFilesPerTrigger" -> "1"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val spark = batch.sparkSession
+    Ledger.run(rawEvents(s, srcDir, Map("maxFilesPerTrigger" -> "1")), checkpointDir) {
+      (batch, bid) =>
         val regs = SketchOps.ddBuckets(batch, "event_type", "value")
-        regs.withColumn("batch_id", lit(bid))
-          .write.mode("overwrite").parquet(s"$bucketDir/batch=$bid")
-        val prevBid = Option(new java.io.File(s"$bucketDir/_cum").list()).toSeq
-          .flatten.filter(_.startsWith("batch="))
-          .map(_.stripPrefix("batch=").toLong).filter(_ < bid)
-          .sorted.lastOption
-        val cum = prevBid match {
-          case Some(pb) =>
-            spark.read.parquet(s"$bucketDir/_cum/batch=$pb")
-              .unionByName(regs.select(col("event_type"), col("i"), col("bc")))
-              .groupBy("event_type", "i").agg(sum("bc").as("bc"))
-          case None => regs.select(col("event_type"), col("i"), col("bc"))
-        }
-        cum.write.mode("overwrite").parquet(s"$bucketDir/_cum/batch=$bid")
-        val merged = spark.read.parquet(s"$bucketDir/_cum/batch=$bid")
+        val merged = foldRegisters(regs, bucketDir, bid, Seq("event_type", "i"), "bc", sum)
         SketchOps.ddReport(merged, "event_type")
           .withColumn("batch_id", lit(bid))
           .write.mode("overwrite").parquet(s"$reportDir/batch=$bid")
-      }
-      .start()
+    }
   }
 
-  def startCardinalityMonitor(s: SparkSession, srcDir: String, regDir: String,
-                              reportDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SketchOps
-    rawEvents(s, srcDir, Map("maxFilesPerTrigger" -> "1"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val spark = batch.sparkSession
-        val regs = SketchOps.hllRegisters(SketchOps.hllHashes(batch), "event_type")
-        regs.withColumn("batch_id", lit(bid))
-          .write.mode("overwrite").parquet(s"$regDir/batch=$bid")
-        // newest FINISHED cumulative snapshot strictly before this batch
-        val prevBid = Option(new java.io.File(s"$regDir/_cum").list()).toSeq
-          .flatten.filter(_.startsWith("batch="))
-          .map(_.stripPrefix("batch=").toLong).filter(_ < bid)
-          .sorted.lastOption
-        val cum = prevBid match {
-          case Some(pb) =>
-            spark.read.parquet(s"$regDir/_cum/batch=$pb")
-              .unionByName(regs.select(col("event_type"), col("bucket"), col("r")))
-              .groupBy("event_type", "bucket").agg(max("r").as("r"))
-          case None => regs.select(col("event_type"), col("bucket"), col("r"))
-        }
-        cum.write.mode("overwrite").parquet(s"$regDir/_cum/batch=$bid")
-        val merged = spark.read.parquet(s"$regDir/_cum/batch=$bid")
-        SketchOps.hllEstimate(merged, "event_type")
-          .select(col("event_type"), col("v_zero"),
-            graft.functions.Fns.roundP(col("hll_raw"), 4).as("hll_est"))
-          .withColumn("batch_id", lit(bid))
-          .write.mode("overwrite").parquet(s"$reportDir/batch=$bid")
-      }
-      .start()
+  /** One monitor batch's register fold: writes the batch's registers to
+    * `dir/batch=<bid>`, merges them (`merge` over `reg`, per `keys`) into
+    * the newest cumulative snapshot strictly before `bid`, writes that to
+    * `dir/_cum/batch=<bid>` and returns it read back. The `_` prefix keeps
+    * Spark's file listing from mixing snapshots into a wholesale read of
+    * the per-batch store. Per-batch work is O(1) in delivered batches:
+    * two bounded frames per trigger, never O(B) batch dirs. The merge is
+    * associative, so fold-forward ≡ merging every batch ≤ bid, and a
+    * replayed batch merges against the same finished snapshot (a
+    * half-written own snapshot from a crashed attempt is skipped) and
+    * overwrites identical bytes. */
+  private def foldRegisters(regs: DataFrame, dir: String, bid: Long, keys: Seq[String],
+                            reg: String, merge: Column => Column): DataFrame = {
+    val spark = regs.sparkSession
+    regs.withColumn("batch_id", lit(bid))
+      .write.mode("overwrite").parquet(s"$dir/batch=$bid")
+    val own = regs.select((keys :+ reg).map(col): _*)
+    val cum = Ledger.batchIds(spark, s"$dir/_cum").filter(_ < bid).maxOption match {
+      case Some(pb) =>
+        spark.read.parquet(s"$dir/_cum/batch=$pb").unionByName(own)
+          .groupBy(keys.map(col): _*).agg(merge(col(reg)).as(reg))
+      case None => own
+    }
+    cum.write.mode("overwrite").parquet(s"$dir/_cum/batch=$bid")
+    spark.read.parquet(s"$dir/_cum/batch=$bid")
   }
 }

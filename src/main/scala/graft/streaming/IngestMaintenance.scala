@@ -29,13 +29,11 @@ import org.apache.spark.sql.functions._
   * fanning every task across every cell.
   *
   * Run it with the ingest STOPPED (it is a maintenance pass, not a
-  * concurrent operation). The swap is staged — consolidated copy fully
-  * written to `<dir>.compact`, live dir aside to `<dir>.old`, copy moved
-  * in, old deleted — and every entry point begins by REPAIRING an
-  * interrupted swap (a crash between the moves leaves no live dir; the
-  * complete staged copy, or failing that the old dir, is restored).
-  * Local-filesystem moves; on an object store the swap step becomes the
-  * catalog's atomic pointer flip. */
+  * concurrent operation). The whole-directory staged swap ([[swapIn]])
+  * and the leaf erase ([[eraseLeaves]]) are the crash-safe rewrites here
+  * and in [[CdcIngest]]; every entry point first repairs an interrupted
+  * swap ([[repairSwap]]). Local-filesystem moves; on an object store the
+  * swap step becomes the catalog's atomic pointer flip. */
 object IngestMaintenance {
 
   /** Compact data dir(s) + their shared seen-ledger consistently:
@@ -53,12 +51,12 @@ object IngestMaintenance {
     // again; that second pass is a no-op)
     dataDirs.foreach(repairSwap)
     repairSwap(seenDir)
-    val ledgered = batchIds(Paths.get(seenDir))
+    val ledgered = Ledger.batchIds(s, seenDir)
     for (dataDir <- dataDirs) {
       // batch=-1 is by construction ledgered data from a previous
       // compaction (its ledger twin may be mid-compaction) — never
       // "unledgered"
-      val unledgered = (batchIds(Paths.get(dataDir)) -- ledgered).filter(_ >= 0)
+      val unledgered = (Ledger.batchIds(s, dataDir) -- ledgered).filter(_ >= 0)
       compact(s, dataDir, targetFileRows, keepInPlace = unledgered)
     }
     compact(s, seenDir, targetFileRows)
@@ -97,12 +95,6 @@ object IngestMaintenance {
       if (keepInPlace.isEmpty) df0
       else df0.filter(!col("batch").isin(keepInPlace.toSeq: _*))
     val secondary = inferSecondaryPartitions(src)
-    val staging = Paths.get(dir + ".compact")
-    // a crashed earlier run may have left a PARTIAL staging copy — clear
-    // it on every path, including the nothing-to-do return, so a
-    // surviving <dir>.compact is always a complete store (the repairSwap
-    // invariant)
-    deleteTree(staging)
     val rows = df.count()
     if (rows == 0) return // nothing ledgered to consolidate
     val nFiles = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
@@ -144,19 +136,30 @@ object IngestMaintenance {
         out.repartition(nFiles,
           secondary.map(col) :+ pmod(hash(dataCols: _*), lit(perCell)): _*)
       }
-    val writer = repartitioned.write.mode("overwrite")
-    (if (secondary.nonEmpty) writer.partitionBy(secondary: _*) else writer)
-      .parquet(staging.resolve("batch=-1").toString)
-    // carry excluded (unledgered) batch dirs into the staged copy so the
-    // swap preserves them byte-for-byte
-    for (b <- keepInPlace) {
-      val from = src.resolve(s"batch=$b")
-      if (Files.exists(from)) copyTree(from, staging.resolve(s"batch=$b"))
+    swapIn(dir) { staging =>
+      val writer = repartitioned.write.mode("overwrite")
+      (if (secondary.nonEmpty) writer.partitionBy(secondary: _*) else writer)
+        .parquet(s"$staging/batch=-1")
+      // carry excluded (unledgered) batch dirs into the staged copy so the
+      // swap preserves them byte-for-byte
+      for (b <- keepInPlace) {
+        val from = src.resolve(s"batch=$b")
+        if (Files.exists(from)) copyTree(from, Paths.get(staging, s"batch=$b"))
+      }
     }
-    // staged swap: old aside → new in → old gone
-    val old = Paths.get(dir + ".old")
+  }
+
+  /** The whole-directory staged swap: `stage` writes a complete copy at
+    * `<dir>.compact`; then the live dir moves aside to `<dir>.old`, the
+    * copy moves in and `.old` is deleted. The copy is complete before
+    * the first move, so [[repairSwap]] can always finish an interrupted
+    * swap. */
+  private[streaming] def swapIn(dir: String)(stage: String => Unit): Unit = {
+    val (src, staging, old) = swapPaths(dir)
+    deleteTree(staging)
+    stage(staging.toString)
     deleteTree(old)
-    Files.move(src, old, StandardCopyOption.ATOMIC_MOVE)
+    if (Files.exists(src)) Files.move(src, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(staging, src, StandardCopyOption.ATOMIC_MOVE)
     deleteTree(old)
   }
@@ -171,65 +174,12 @@ object IngestMaintenance {
     * key stays ledgered, so a later re-delivery of the same bytes cannot
     * silently resurrect erased data — the correct failure direction for
     * an erasure obligation (re-adding erased content must be an explicit
-    * new decision, not a replay artifact).
-    *
-    * Crash safety: survivors stage OUTSIDE the store (`<dir>.delstage`,
-    * so partition discovery can never see a half-written twin), each
-    * affected partition swaps via move-aside (`<dir>.delold`), and every
-    * run begins by restoring any batch dir stranded aside by a crash
-    * between moves. Deletion is idempotent — a rerun with the same ids
-    * re-deletes whatever the interrupted run left. */
+    * new decision, not a replay artifact). Crash safety is
+    * [[eraseLeaves]]' at batch grain; deletion is idempotent — a rerun
+    * with the same ids re-deletes whatever the interrupted run left. */
   def deleteDocs(s: SparkSession, dataDir: String, idCol: String,
-                 ids: Seq[Long]): Long = {
-    repairSwap(dataDir)
-    val src = Paths.get(dataDir)
-    if (!Files.exists(src) || ids.isEmpty) return 0L
-    val stage = Paths.get(dataDir + ".delstage")
-    val aside = Paths.get(dataDir + ".delold")
-    // restore partitions stranded between the two moves of a crashed run:
-    // the aside copy is the complete pre-delete original — prefer it and
-    // let this run re-delete from identical inputs
-    if (Files.exists(aside)) {
-      val st = Files.list(aside)
-      try st.iterator().asScala.filter(p => Files.isDirectory(p)).foreach { p =>
-        val live = src.resolve(p.getFileName.toString)
-        if (!Files.exists(live))
-          Files.move(p, live, StandardCopyOption.ATOMIC_MOVE)
-      } finally st.close()
-    }
-    deleteTree(aside)
-    deleteTree(stage)
-    val df = s.read.parquet(dataDir)
-    require(df.columns.contains("batch"), s"$dataDir is not a per-batch ingest dir")
-    val victims = col(idCol).isin(ids: _*)
-    // the id predicate pushes into the parquet scan — this is a pruned
-    // read, not a store read
-    val affected = df.filter(victims)
-      .select(col("batch").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    val secondary = inferSecondaryPartitions(src)
-    var deleted = 0L
-    for (b <- affected.sorted) {
-      val bdir = src.resolve(s"batch=$b")
-      val part = s.read.parquet(bdir.toString)
-      val surv = part.filter(!victims)
-      val (nAll, nSurv) = (part.count(), surv.count())
-      deleted += nAll - nSurv
-      val staged = stage.resolve(s"batch=$b")
-      if (nSurv > 0) {
-        val writer = surv.write.mode("overwrite")
-        (if (secondary.nonEmpty) writer.partitionBy(secondary: _*) else writer)
-          .parquet(staged.toString)
-      }
-      Files.createDirectories(aside)
-      Files.move(bdir, aside.resolve(s"batch=$b"), StandardCopyOption.ATOMIC_MOVE)
-      if (nSurv > 0)
-        Files.move(staged, bdir, StandardCopyOption.ATOMIC_MOVE)
-    }
-    deleteTree(aside)
-    deleteTree(stage)
-    deleted
-  }
+                 ids: Seq[Long]): Long =
+    eraseLeaves(s, dataDir, Seq("batch"), idCol, ids)()._1
 
   /** Right-to-be-forgotten deletion for the VECTOR store
     * ([[VectorIngest]]'s `batch=<b>/cell=<c>` layout): erase every row
@@ -253,69 +203,90 @@ object IngestMaintenance {
     *
     * The seen-ledger stays untouched for the same reason as
     * [[deleteDocs]]: a re-delivery of erased content must not silently
-    * resurrect it. Crash safety mirrors deleteDocs at leaf grain —
-    * survivors stage outside the store (`<dir>.delstage`), each leaf
-    * swaps via move-aside (`<dir>.delold`), and every run begins by
-    * restoring leaves stranded between the two moves. */
+    * resurrect it. Crash safety is [[eraseLeaves]]' at leaf grain. */
   def deleteVecs(s: SparkSession, storeDir: String, ids: Seq[Long],
                  indexDir: Option[String] = None,
                  idCol: String = "vec_id"): Long = {
-    repairSwap(storeDir)
-    val src = Paths.get(storeDir)
-    if (!Files.exists(src) || ids.isEmpty) return 0L
-    val stage = Paths.get(storeDir + ".delstage")
-    val aside = Paths.get(storeDir + ".delold")
-    // restore leaves stranded between the two moves of a crashed run: the
-    // aside copy is the complete pre-delete original — prefer it and let
-    // this run re-delete from identical inputs
-    if (Files.exists(aside)) {
-      val bs = Files.list(aside)
-      try bs.iterator().asScala.filter(Files.isDirectory(_)).foreach { b =>
-        val cs = Files.list(b)
-        try cs.iterator().asScala.filter(Files.isDirectory(_)).foreach { c =>
-          val live = src.resolve(b.getFileName.toString)
-            .resolve(c.getFileName.toString)
-          if (!Files.exists(live)) {
-            Files.createDirectories(live.getParent)
-            Files.move(c, live, StandardCopyOption.ATOMIC_MOVE)
-          }
-        } finally cs.close()
-      } finally bs.close()
+    val (deleted, leaves) = eraseLeaves(s, storeDir, Seq("batch", "cell"), idCol, ids) {
+      hit => for (dir <- indexDir; c <- hit.map(_(1)).distinct) VectorIngest.dropCellBlob(dir, c)
+    }
+    // rebuild affected cells' blobs from the erased store (cells now
+    // empty get their blob deleted by the restricted build's manifest)
+    val cellsHit = leaves.map(_(1)).distinct.sorted
+    for (dir <- indexDir if cellsHit.nonEmpty)
+      VectorIngest.buildCellIndexes(s, storeDir, dir, cellsHit)
+    deleted
+  }
+
+  /** Erase the rows whose `idCol` is in `ids` from a per-batch store,
+    * rewriting only the leaf partitions `levels` deep (`batch`, or
+    * `batch`/`cell`) that hold a victim; partition levels below the leaf
+    * are preserved. `beforeRewrite` sees the affected leaves (their
+    * `levels` values) before the first rewrite. Returns the deleted row
+    * count and the affected leaves.
+    *
+    * Crash safety: survivors stage OUTSIDE the store (`<dir>.delstage`,
+    * so partition discovery can never see a half-written twin), each
+    * affected leaf swaps via move-aside (`<dir>.delold`), and every run
+    * begins by restoring the leaves a crash stranded aside between the
+    * two moves — the aside copy is the complete pre-delete original, so
+    * the run re-deletes from identical inputs. */
+  private def eraseLeaves(s: SparkSession, dir: String, levels: Seq[String],
+                          idCol: String, ids: Seq[Long])
+                         (beforeRewrite: Seq[Seq[Long]] => Unit = _ => ())
+      : (Long, Seq[Seq[Long]]) = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    repairSwap(dir)
+    val src = Paths.get(dir)
+    if (!Files.exists(src) || ids.isEmpty) return (0L, Nil)
+    val (stage, aside) = (Paths.get(dir + ".delstage"), Paths.get(dir + ".delold"))
+    val stranded =
+      if (!Files.exists(aside)) Nil
+      else {
+        val st = Files.walk(aside, levels.size)
+        try st.iterator().asScala.filter(p => p != aside && Files.isDirectory(p) &&
+          aside.relativize(p).getNameCount == levels.size).toList
+        finally st.close()
+      }
+    for (p <- stranded) {
+      val live = src.resolve(aside.relativize(p))
+      if (!Files.exists(live)) {
+        Files.createDirectories(live.getParent)
+        Files.move(p, live, StandardCopyOption.ATOMIC_MOVE)
+      }
     }
     deleteTree(aside)
     deleteTree(stage)
-    val df = s.read.parquet(storeDir)
-    require(df.columns.contains("batch") && df.columns.contains("cell"),
-      s"$storeDir is not a batch/cell-partitioned vector store")
+    val df = s.read.parquet(dir)
+    require(levels.forall(df.columns.contains),
+      s"$dir is not partitioned by ${levels.mkString("/")}")
     val victims = col(idCol).isin(ids: _*)
-    // pushed-down id predicate: a pruned read finds the affected leaves
-    val affected: Array[(Long, Long)] = df.filter(victims)
-      .select(col("batch").cast("long"), col("cell").cast("long")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val cellsHit = affected.map(_._2).distinct.sorted
-    // 1. tombstone affected cells' blobs (see ordering note above)
-    for (dir <- indexDir; c <- cellsHit) {
-      val file = Paths.get(dir, s"cell=$c.hnsw")
-      Files.deleteIfExists(file)
-      graft.vector.Hnsw.evictCached(file.toString)
-    }
-    // 2. rewrite affected leaves with survivors
+    // the id predicate pushes into the parquet scan — this is a pruned
+    // read, not a store read
+    val affected = df.filter(victims)
+      .select(levels.map(col(_).cast("long")): _*).distinct()
+      .collect().map(r => levels.indices.map(r.getLong)).toSeq.sorted
+    val below = inferSecondaryPartitions(src).drop(levels.size - 1)
+    beforeRewrite(affected)
     var deleted = 0L
-    for ((b, c) <- affected.sortBy(identity)) {
-      val leaf = src.resolve(s"batch=$b").resolve(s"cell=$c")
+    for (leafKey <- affected) {
+      val rel = levels.zip(leafKey).map { case (l, v) => s"$l=$v" }.mkString("/")
+      val (leaf, staged, asideLeaf) = (src.resolve(rel), stage.resolve(rel), aside.resolve(rel))
       val part = s.read.parquet(leaf.toString)
       val surv = part.filter(!victims)
       val (nAll, nSurv) = (part.count(), surv.count())
       deleted += nAll - nSurv
-      val staged = stage.resolve(s"batch=$b").resolve(s"cell=$c")
-      if (nSurv > 0) surv.write.mode("overwrite").parquet(staged.toString)
-      val asideLeaf = aside.resolve(s"batch=$b").resolve(s"cell=$c")
+      if (nSurv > 0) {
+        val writer = surv.write.mode("overwrite")
+        (if (below.nonEmpty) writer.partitionBy(below: _*) else writer)
+          .parquet(staged.toString)
+      }
       Files.createDirectories(asideLeaf.getParent)
       Files.move(leaf, asideLeaf, StandardCopyOption.ATOMIC_MOVE)
       if (nSurv > 0) {
         Files.createDirectories(leaf.getParent)
         Files.move(staged, leaf, StandardCopyOption.ATOMIC_MOVE)
-      } else if (isEmptyDir(leaf.getParent)) {
+      } else if (leaf.getParent != src && isEmptyDir(leaf.getParent)) {
         // a batch whose last cell was fully erased leaves an empty
         // batch=<b> shell — remove it or partition discovery chokes
         Files.deleteIfExists(leaf.getParent)
@@ -323,12 +294,12 @@ object IngestMaintenance {
     }
     deleteTree(aside)
     deleteTree(stage)
-    // 3. rebuild affected cells' blobs from the erased store (cells now
-    // empty get their blob deleted by the restricted build's manifest)
-    for (dir <- indexDir if cellsHit.nonEmpty)
-      VectorIngest.buildCellIndexes(s, storeDir, dir, cellsHit)
-    deleted
+    (deleted, affected)
   }
+
+  /** The live dir of a staged swap, its staged copy and its aside copy. */
+  private def swapPaths(dir: String): (Path, Path, Path) =
+    (Paths.get(dir), Paths.get(dir + ".compact"), Paths.get(dir + ".old"))
 
   private def isEmptyDir(p: Path): Boolean =
     Files.isDirectory(p) && {
@@ -336,33 +307,19 @@ object IngestMaintenance {
       try !st.iterator().hasNext finally st.close()
     }
 
-  /** Restore a complete store if a previous swap died between its moves:
-    * the staged copy is only ever moved aside once COMPLETE, so prefer
-    * it, then the old dir. */
+  /** Finish a [[swapIn]] that a crash interrupted. With no live dir, the
+    * staged copy (moved in only once COMPLETE) is restored, or failing
+    * that the old dir. With a live dir, a leftover `.compact` (the swap
+    * had not begun its moves) or `.old` (it had finished them) is stale
+    * and deleted. */
   private[streaming] def repairSwap(dir: String): Unit = {
-    val src = Paths.get(dir)
-    if (Files.exists(src)) return
-    val staging = Paths.get(dir + ".compact")
-    val old = Paths.get(dir + ".old")
-    if (Files.exists(staging)) {
+    val (src, staging, old) = swapPaths(dir)
+    if (Files.exists(src)) { deleteTree(staging); deleteTree(old) }
+    else if (Files.exists(staging)) {
       Files.move(staging, src, StandardCopyOption.ATOMIC_MOVE)
       deleteTree(old)
-    } else if (Files.exists(old)) {
-      Files.move(old, src, StandardCopyOption.ATOMIC_MOVE)
-    }
+    } else if (Files.exists(old)) Files.move(old, src, StandardCopyOption.ATOMIC_MOVE)
   }
-
-  private def batchIds(src: Path): Set[Long] =
-    if (!Files.exists(src)) Set.empty
-    else {
-      val st = Files.list(src)
-      try st.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("batch="))
-        .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-        .toSet
-      finally st.close()
-    }
 
   /** Partition levels BELOW batch=, read off directory names across ALL
     * batch dirs (an empty or degenerate batch dir cannot flatten the
@@ -408,7 +365,7 @@ object IngestMaintenance {
     } finally st.close()
   }
 
-  private[streaming] def deleteTree(p: Path): Unit =
+  private def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
       val st = Files.walk(p)
       try st.sorted(java.util.Comparator.reverseOrder())

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incremental VECTOR-STORE ingest — the streaming end of the
@@ -19,9 +19,8 @@ import org.apache.spark.sql.types._
   *      centroids ([[graft.operators.VectorOps.assignCells]] — the
   *      identical argmin arithmetic the k-means gate pins, zero
   *      exchange);
-  *   3. append to `storeDir/batch=<bid>` partitioned by cell, with the
-  *      per-batch-id overwrite protocol of [[CorpusIngest.startCurated]]
-  *      — re-delivery and crash-replay recompute identical batches.
+  *   3. write to `storeDir/batch=<bid>` partitioned by cell, under
+  *      [[Ledger]]'s exactly-once protocol.
   * The centroids are FIXED for the ingest's lifetime (the IVF contract:
   * re-clustering is a batch rebuild, not an incremental drift — cells
   * must mean the same thing for every stored vector or the pruned scan
@@ -65,96 +64,87 @@ object VectorIngest {
     require(dedupCosine.isEmpty || centroids.size >= 2,
       "cosine dedup needs >= 2 centroids (2-probe cell blocking)")
     import graft.operators.VectorOps
-    s.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val spark = batch.sparkSession
-        // same-vec_id rows within a delivery are identical payloads;
-        // dropDuplicates is deterministic over them, so replay rebuilds
-        // the same batch
-        val keyed = batch.dropDuplicates("vec_id")
-        // novel feeds isEmpty, the store write, and the ledger write —
-        // persist, or the anti-join re-runs per consumer
-        val novel = Ledger.withoutSeen(spark, keyed, seenDir, bid, "vec_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (!novel.isEmpty) {
-            // label rides THROUGH the argmin (assignCells passes input
-            // columns along) — a projection, not a join-back shuffle
-            val assignedPlain = VectorOps.assignCells(
-              novel.select(col("vec_id"),
-                col("embedding").cast("array<double>").as("v"), col("label")),
-              centroids, probes = if (dedupCosine.isDefined) 2 else 1)
-            // multi-consumer ONLY on the dedup path (cells collect,
-            // store-check join, within-batch self-join, write); the plain
-            // path writes once — persisting it would be pure overhead
-            val assigned =
-              if (dedupCosine.isDefined)
-                assignedPlain.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              else assignedPlain
-            try {
-              val kept = dedupCosine match {
-                case None => assigned
-                case Some(t) =>
-                  def probed(df: DataFrame): DataFrame = df.select(
-                    col("vec_id"), col("v"),
-                    explode(array(col("cid"), col("cid2"))).as("cell"))
-                  val storeSurvivors =
-                    if (!Ledger.exists(spark, storeDir)) assigned
-                    else {
-                      // ≤ 2·k cell ids to the driver → a static isin
-                      // filter the scan prunes partitions on
-                      val cells = assigned
-                        .select(explode(array(col("cid"), col("cid2"))).as("c"))
-                        .distinct().collect().map(_.getLong(0))
-                      val cand = spark.read.parquet(storeDir)
-                        .filter(col("batch") < bid)
-                        .filter(col("cell").isin(cells: _*))
-                        .select(col("v").as("sv"), col("cell").cast("long").as("cell"))
-                      val rejected = probed(assigned).join(cand, "cell")
-                        .filter(VectorOps.cosSim(col("v"), col("sv")) >= t)
-                        .select("vec_id").distinct()
-                      assigned.join(rejected, Seq("vec_id"), "left_anti")
-                    }
-                  val pa = probed(storeSurvivors)
-                  // fully renamed right side — same-named columns from a
-                  // shared lineage would trip ambiguous-self-join checks
-                  val pb = pa.select(col("vec_id").as("vec_b"),
-                    col("v").as("vb"), col("cell").as("cell_b"))
-                  val dropped = pa.join(pb,
-                      col("cell") === col("cell_b") && col("vec_id") < col("vec_b") &&
-                        VectorOps.cosSim(col("v"), col("vb")) >= t)
-                    .select(col("vec_b").as("vec_id")).distinct()
-                  storeSurvivors.join(dropped, Seq("vec_id"), "left_anti")
-              }
-              // an all-rejected dedup batch writes NO store dir (an empty
-              // batch=<bid> with no cell= level would poison partition
-              // discovery and layout inference); the ledger still records
-              // every judged vec_id — replay recomputes the same skip.
-              // Only the dedup path can go empty here (the plain path's
-              // kept ≡ novel, already checked), so the plain path skips
-              // the extra action.
-              val keptCols = kept
-                .select(col("vec_id"), col("v"), col("label"), col("cid").as("cell"))
-              // PQ encode rides the same row-local batch scan (an HOF
-              // projection, no extra action or shuffle)
-              val keptOut = pqCodebook.fold(keptCols)(cb =>
-                VectorOps.withPqCodes(keptCols, cb))
-              if (dedupCosine.isEmpty || !keptOut.isEmpty)
-                keptOut.write.mode("overwrite").partitionBy("cell")
-                  .parquet(s"$storeDir/batch=$bid")
-              novel.select("vec_id")
-                .write.mode("overwrite").parquet(s"$seenDir/batch=$bid")
-            } finally assigned.unpersist()
-          }
-        } finally novel.unpersist()
-      }
-      .start()
+    Ledger.run(Ledger.files(s, vecSchema, srcDir), checkpointDir) { (batch, bid) =>
+      val spark = batch.sparkSession
+      // same-vec_id rows within a delivery are identical payloads;
+      // dropDuplicates is deterministic over them, so replay rebuilds
+      // the same batch. novel feeds isEmpty, the store write, and the
+      // ledger write — persist, or the anti-join re-runs per consumer
+      val novel = Ledger
+        .withoutKeys(batch.dropDuplicates("vec_id"), seenDir, "vec_id", Some(bid))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        if (!novel.isEmpty) {
+          // label rides THROUGH the argmin (assignCells passes input
+          // columns along) — a projection, not a join-back shuffle
+          val assignedPlain = VectorOps.assignCells(
+            novel.select(col("vec_id"),
+              col("embedding").cast("array<double>").as("v"), col("label")),
+            centroids, probes = if (dedupCosine.isDefined) 2 else 1)
+          // multi-consumer ONLY on the dedup path (cells collect,
+          // store-check join, within-batch self-join, write); the plain
+          // path writes once — persisting it would be pure overhead
+          val assigned =
+            if (dedupCosine.isDefined)
+              assignedPlain.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            else assignedPlain
+          try {
+            val kept = dedupCosine match {
+              case None => assigned
+              case Some(t) =>
+                def probed(df: DataFrame): DataFrame = df.select(
+                  col("vec_id"), col("v"),
+                  explode(array(col("cid"), col("cid2"))).as("cell"))
+                val storeSurvivors =
+                  if (!Ledger.exists(spark, storeDir)) assigned
+                  else {
+                    // ≤ 2·k cell ids to the driver → a static isin
+                    // filter the scan prunes partitions on
+                    val cells = assigned
+                      .select(explode(array(col("cid"), col("cid2"))).as("c"))
+                      .distinct().collect().map(_.getLong(0))
+                    val cand = spark.read.parquet(storeDir)
+                      .filter(col("batch") < bid)
+                      .filter(col("cell").isin(cells: _*))
+                      .select(col("v").as("sv"), col("cell").cast("long").as("cell"))
+                    val rejected = probed(assigned).join(cand, "cell")
+                      .filter(VectorOps.cosSim(col("v"), col("sv")) >= t)
+                      .select("vec_id").distinct()
+                    assigned.join(rejected, Seq("vec_id"), "left_anti")
+                  }
+                val pa = probed(storeSurvivors)
+                // fully renamed right side — same-named columns from a
+                // shared lineage would trip ambiguous-self-join checks
+                val pb = pa.select(col("vec_id").as("vec_b"),
+                  col("v").as("vb"), col("cell").as("cell_b"))
+                val dropped = pa.join(pb,
+                    col("cell") === col("cell_b") && col("vec_id") < col("vec_b") &&
+                      VectorOps.cosSim(col("v"), col("vb")) >= t)
+                  .select(col("vec_b").as("vec_id")).distinct()
+                storeSurvivors.join(dropped, Seq("vec_id"), "left_anti")
+            }
+            // an all-rejected dedup batch writes NO store dir (an empty
+            // batch=<bid> with no cell= level would poison partition
+            // discovery and layout inference); the ledger still records
+            // every judged vec_id — replay recomputes the same skip.
+            // Only the dedup path can go empty here (the plain path's
+            // kept ≡ novel, already checked), so the plain path skips
+            // the extra action.
+            val keptCols = kept
+              .select(col("vec_id"), col("v"), col("label"), col("cid").as("cell"))
+            // PQ encode rides the same row-local batch scan (an HOF
+            // projection, no extra action or shuffle)
+            val keptOut = pqCodebook.fold(keptCols)(cb =>
+              VectorOps.withPqCodes(keptCols, cb))
+            if (dedupCosine.isEmpty || !keptOut.isEmpty)
+              keptOut.write.mode("overwrite").partitionBy("cell")
+                .parquet(s"$storeDir/batch=$bid")
+            novel.select("vec_id")
+              .write.mode("overwrite").parquet(s"$seenDir/batch=$bid")
+          } finally assigned.unpersist()
+        }
+      } finally novel.unpersist()
+    }
   }
 
   /** Streaming ANN RECALL MONITOR — the online counterpart of the
@@ -178,13 +168,12 @@ object VectorIngest {
     *      candidates read from ONLY the routed cells' partitions
     *      (driver-collected cell list → isin pushdown → partition-pruned
     *      scan), same top-k window;
-    *   4. per-query recall report lands at `monitorDir/batch=<bid>` via
-    *      the per-batch-id overwrite protocol — crash replay and
-    *      re-delivery rewrite byte-identical registers.
+    *   4. per-query recall report lands at `monitorDir/batch=<bid>`
+    *      under [[Ledger]]'s exactly-once protocol.
     * Run the monitor AT OR BEHIND the ingest (batch `bid`'s store prefix
     * must exist when the monitor scores it — the spec runs ingest to
     * completion first; a live deployment chains it after the ingest's
-    * own foreachBatch or on a lagged trigger).
+    * own batch body or on a lagged trigger).
     *
     * Scale: both sides are one scan each of a bounded-probe corpus
     * (exact: crossJoin with ≤ AR_QUERIES broadcast probes; ANN: pruned
@@ -195,48 +184,40 @@ object VectorIngest {
                          centroids: Seq[(Int, Seq[Double])]): StreamingQuery = {
     require(centroids.size >= 2, "recall monitor needs >= 2 centroids (2-probe)")
     import graft.operators.VectorOps
-    s.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val spark = batch.sparkSession
-        val probes = broadcast(batch.dropDuplicates("vec_id")
-          .filter(pmod(col("vec_id"), lit(VectorOps.KJ_MOD)) === 0)
-          .select(col("vec_id").as("query_id"),
-            col("embedding").cast("array<double>").as("pv"))
-          .orderBy("query_id").limit(VectorOps.AR_QUERIES))
-        val out = s"$monitorDir/batch=$bid"
-        if (!Ledger.exists(spark, storeDir)) {
-          // store not yet started: an empty register keeps the batch-id
-          // sequence replayable instead of leaving a hole
-          probes.limit(0)
-            .select(col("query_id"), lit(0L).as("n_hit"), lit(0.0).as("recall"))
-            .coalesce(1).write.mode("overwrite").parquet(out)
-        } else {
-          val visible = spark.read.parquet(storeDir)
-            .filter(col("batch") <= bid)
-            .select(col("vec_id"), col("v"), col("cell").cast("long"))
-          val exact = VectorOps.recallTopk(visible.crossJoin(probes))
-          // routing: the ingest's own 2-probe argmin over the probe set
-          val route = VectorOps.assignCells(
-              probes.select(col("query_id"), col("pv").as("v")), centroids, probes = 2)
-            .select(col("query_id"), col("v").as("pv"),
-              explode(array(col("cid"), col("cid2"))).as("cell"))
-          // ≤ 2·AR_QUERIES cell ids to the driver → partition-pruned scan
-          val cellIds = route.select("cell").distinct().collect().map(_.getLong(0))
-          val ann = VectorOps.recallTopk(
-            visible.filter(col("cell").isin(cellIds: _*))
-              .join(broadcast(route.drop("pv")), "cell")
-              .join(probes, "query_id"))
-          VectorOps.recallReport(exact, ann)
-            .coalesce(1).write.mode("overwrite").parquet(out)
-        }
+    Ledger.run(Ledger.files(s, vecSchema, srcDir), checkpointDir) { (batch, bid) =>
+      val spark = batch.sparkSession
+      val probes = broadcast(batch.dropDuplicates("vec_id")
+        .filter(pmod(col("vec_id"), lit(VectorOps.KJ_MOD)) === 0)
+        .select(col("vec_id").as("query_id"),
+          col("embedding").cast("array<double>").as("pv"))
+        .orderBy("query_id").limit(VectorOps.AR_QUERIES))
+      val out = s"$monitorDir/batch=$bid"
+      if (!Ledger.exists(spark, storeDir)) {
+        // store not yet started: an empty register keeps the batch-id
+        // sequence replayable instead of leaving a hole
+        probes.limit(0)
+          .select(col("query_id"), lit(0L).as("n_hit"), lit(0.0).as("recall"))
+          .coalesce(1).write.mode("overwrite").parquet(out)
+      } else {
+        val visible = spark.read.parquet(storeDir)
+          .filter(col("batch") <= bid)
+          .select(col("vec_id"), col("v"), col("cell").cast("long"))
+        val exact = VectorOps.recallTopk(visible.crossJoin(probes))
+        // routing: the ingest's own 2-probe argmin over the probe set
+        val route = VectorOps.assignCells(
+            probes.select(col("query_id"), col("pv").as("v")), centroids, probes = 2)
+          .select(col("query_id"), col("v").as("pv"),
+            explode(array(col("cid"), col("cid2"))).as("cell"))
+        // ≤ 2·AR_QUERIES cell ids to the driver → partition-pruned scan
+        val cellIds = route.select("cell").distinct().collect().map(_.getLong(0))
+        val ann = VectorOps.recallTopk(
+          visible.filter(col("cell").isin(cellIds: _*))
+            .join(broadcast(route.drop("pv")), "cell")
+            .join(probes, "query_id"))
+        VectorOps.recallReport(exact, ann)
+          .coalesce(1).write.mode("overwrite").parquet(out)
       }
-      .start()
+    }
   }
 
   /** Build (or refresh) one persisted [[graft.vector.Hnsw]] blob per IVF
@@ -279,11 +260,14 @@ object VectorIngest {
         }
       }.collect().toSet // ≤ |cells| longs — the bounded build manifest
     // tombstone blobs of restricted-to cells that no longer exist
-    for (c <- cells if !built.contains(c)) {
-      val file = Paths.get(indexDir, s"cell=$c.hnsw")
-      Files.deleteIfExists(file)
-      graft.vector.Hnsw.evictCached(file.toString)
-    }
+    cells.filterNot(built).foreach(dropCellBlob(indexDir, _))
+  }
+
+  /** Delete cell `c`'s blob under `indexDir` and evict its resident copy. */
+  private[streaming] def dropCellBlob(indexDir: String, c: Long): Unit = {
+    val file = java.nio.file.Paths.get(indexDir, s"cell=$c.hnsw")
+    java.nio.file.Files.deleteIfExists(file)
+    graft.vector.Hnsw.evictCached(file.toString)
   }
 
   /** ANN serving read over the cell-blob index: per probed cell, the

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.operators.VectorOps
-import graft.streaming.{IngestMaintenance, VectorIngest}
+import graft.streaming.{CdcIngest, IngestMaintenance, VectorIngest}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -146,6 +146,73 @@ class IngestMaintenanceSpec extends AnyFunSuite {
       s"u spans: z ${meanSpan(bz, 0)} vs plain ${meanSpan(bp, 0)}")
     assert(meanSpan(bz, 1) < meanSpan(bp, 1) * 0.7,
       s"h spans: z ${meanSpan(bz, 1)} vs plain ${meanSpan(bp, 1)}")
+  }
+
+  test("an interrupted whole-directory swap is repaired by compact and by the CDC merge") {
+    import spark.implicits._
+    import java.nio.file.{Path, StandardCopyOption}
+    def copyTree(from: Path, to: Path): Unit = {
+      val st = Files.walk(from)
+      try st.iterator().forEachRemaining { p =>
+        val dest = to.resolve(from.relativize(p))
+        if (Files.isDirectory(p)) Files.createDirectories(dest)
+        else Files.copy(p, dest, StandardCopyOption.REPLACE_EXISTING)
+      } finally st.close()
+    }
+    def swapDirs(dir: String) = (Paths.get(dir), Paths.get(dir + ".compact"), Paths.get(dir + ".old"))
+    val root = Files.createTempDirectory("graft-swap")
+
+    // through compact: a complete staged copy plus the old dir (died
+    // between the two moves), then the old dir alone (died before the
+    // staged copy was complete)
+    val store = s"$root/store"
+    for (b <- 0 to 1)
+      (0 until 50).map(i => (b * 100L + i, s"t$b-$i")).toDF("doc_id", "text")
+        .write.parquet(s"$store/batch=$b")
+    def rows() = spark.read.parquet(store).select(col("doc_id"), col("text"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val before = rows()
+    val (live, staged, old) = swapDirs(store)
+    IngestMaintenance.compact(spark, store)
+    copyTree(live, staged)
+    Files.move(live, old)
+    IngestMaintenance.compact(spark, store)
+    assert(Files.exists(live) && !Files.exists(staged) && !Files.exists(old),
+      "the staged copy was not moved in, or .old was kept")
+    assert(rows() == before, "repair from the staged copy changed rows")
+    Files.move(live, old)
+    IngestMaintenance.compact(spark, store)
+    assert(Files.exists(live) && !Files.exists(old), "the old dir was not restored")
+    assert(rows() == before, "repair from the old dir changed rows")
+
+    // through the CDC merge: strand the store after batch 2 (merged copy
+    // staged, pre-merge store aside), then aside alone after batch 3; the
+    // next batch must merge onto the restored store each time
+    val batches = Seq(
+      Seq((1L, "U", 1L, "a1", 10L), (2L, "U", 2L, "b1", 10L)),
+      Seq((3L, "U", 1L, "a2", 20L), (4L, "D", 2L, null: String, 20L),
+        (9L, "U", 4L, "d1", 20L)), // doc 4 shows whether batch 2 survived
+      Seq((5L, "U", 3L, "c1", 30L), (6L, "U", 1L, "a3", 30L)),
+      Seq((7L, "U", 2L, "b2", 40L), (8L, "D", 3L, null: String, 40L)))
+      .map(_.toDF("cid", "op", "doc_id", "text", "ts"))
+    def table(dir: String) = CdcIngest.table(spark, dir)
+      .select("doc_id", "text", "ts", "cid").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    val (ref, cdc) = (s"$root/cdc_ref", s"$root/cdc")
+    batches.foreach(CdcIngest.applyBatch(spark, ref, _))
+    val (cLive, cStaged, cOld) = swapDirs(cdc)
+    CdcIngest.applyBatch(spark, cdc, batches(0))
+    copyTree(cLive, Paths.get(s"$root/cdc_pre"))
+    CdcIngest.applyBatch(spark, cdc, batches(1))
+    Files.move(cLive, cStaged)
+    Files.move(Paths.get(s"$root/cdc_pre"), cOld)
+    CdcIngest.applyBatch(spark, cdc, batches(2))
+    assert(!Files.exists(cStaged) && !Files.exists(cOld))
+    Files.move(cLive, cOld)
+    CdcIngest.applyBatch(spark, cdc, batches(3))
+    assert(Files.exists(cLive) && !Files.exists(cOld))
+    assert(table(cdc) == table(ref), "a repaired CDC store diverged from an uninterrupted run")
+    assert(table(ref) == Set((1L, "a3", 30L, 6L), (2L, "b2", 40L, 7L), (4L, "d1", 20L, 9L)))
   }
 
   test("deleteDocs erases exactly the victims, rewrites only affected partitions") {

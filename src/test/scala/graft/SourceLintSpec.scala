@@ -37,6 +37,17 @@ class SourceLintSpec extends AnyFunSuite {
       "use Tables.path(dir, name) instead:\n" + offenders.mkString("\n"))
   }
 
+  test("only Ledger starts a micro-batch stream") {
+    val ledger = Paths.get("streaming", "Ledger.scala")
+    val offenders = for {
+      f <- sources if !f.endsWith(ledger)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("foreachBatch") || line.contains(".trigger(")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "start the stream with graft.streaming.Ledger.run instead:\n" + offenders.mkString("\n"))
+  }
+
   test("every GQL group read goes through the catalog's schema memo") {
     val gql = main.resolve(Paths.get("scala", "graft", "gql"))
     assert(sources.exists(_.startsWith(gql)), s"no sources under $gql")
